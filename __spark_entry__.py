@@ -2015,310 +2015,8 @@ def _top_users_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return counted.orderBy(F.col("posts").desc(), F.col("user_id").asc()).limit(50)
 
 
-#: Round-4 driver window (VERDICT r3 items 1-2): the driver records
-#: exactly the FIRST 50 registered queries per round, so queries()
-#: moves these to the front. Composition: the one ever-red driver row
-#: (approx_distinct_users, r1 `no_oracle` — its oracle has existed
-#: since round 2 and passes locally), the three new round-4 front-door
-#: queries (sink round-trip / topology submit / spout stream), the
-#: judge-named round-3 determinism-risk class, then the rest of the
-#: round-3 third-wave additions newest-first. All 50 came back green
-#: in CORRECTNESS_r04.json; cumulative distinct driver-green coverage
-#: after round 4 is 198 of the 341 registered (49+49+50+50 green rows
-#: with zero overlap — the r1 red approx_distinct_users banked in r4,
-#: the r2 red events_twap_daily in r3; verified by set union over
-#: CORRECTNESS_r01–r04).
-_R4_DRIVER_WINDOW = [
-    "approx_distinct_users",
-    "crane_sink_roundtrip",
-    "topology_submit_wordcount",
-    "stream_spout_wordcount",
-    "events_voptimal_histogram",
-    "ab_sprt_sequential",
-    "events_isotonic_hourly",
-    "events_hill_tail_index",
-    "orders_littles_law",
-    "media_phash_dct",
-    "events_pacf",
-    "events_hw_backtest",
-    "lineitem_two_way_anova",
-    "events_bollinger_bands",
-    "events_spectral_entropy",
-    "part_price_index",
-    "events_entropy_rate",
-    "embedding_kcenter_coreset",
-    "doc_kneser_ney_bigrams",
-    "stream_holt_winters",
-    "events_holt_winters",
-    "embedding_bq_recall",
-    "embedding_matryoshka_recall",
-    "stream_sax_daily",
-    "events_matrix_profile",
-    "event_sequential_patterns",
-    "events_hurst_exponent",
-    "events_dtw_distance",
-    "customer_part_hits",
-    "doc_dsir_importance",
-    "user_countmin_heavy_hitters",
-    "events_sax_daily",
-    "events_t_closeness",
-    "value_histogram_sketch_quantiles",
-    "events_l_diversity",
-    "sql_frontdoor_q19",
-    "doc_weighted_reservoir_sample",
-    "events_winsorized_stats",
-    "hll_rolling_7d_users",
-    "doc_substring_dedup_spans",
-    "hll_register_distinct_users",
-    "weighted_median_part_size",
-    "doc_chunk_overlap",
-    "embedding_semantic_dedup",
-    "purchase_click_balance",
-    "lineitem_measures_unpivot",
-    "zorder_events_scan",
-    "stream_enriched_revenue",
-    "stream_user_stats",
-    "stream_dedup_watermark",
-]
-
-#: Remaining never-driver-checked queries after round 4, in the
-#: planned rotation order for the NEXT rounds' windows (newest
-#: additions first — they carry the most determinism risk). Round 5
-#: took [:50] (= `_R5_DRIVER_WINDOW` below, all 50 green in
-#: CORRECTNESS_r05.json), round 6 takes [50:100]
-#: (= `_R6_DRIVER_WINDOW`), round 7 [100:150]
-#: (= `_R7_DRIVER_WINDOW`), round 8 the final 37 ([150:187]). Any
-#: query added in a later round goes to the FRONT of its round's
-#: window (the 14 round-5 additions sit at [50:64]; the 23 round-6
-#: additions sit at [100:123]; the 7 round-7 additions at
-#: [150:157]).
-_ROTATION_BACKLOG = [
-    # round-4 additions first: newest code carries the most risk
-    "lineitem_shipmode_priority",
-    "orders_business_day_latency",
-    "target_encoding_kfold",
-    "woe_iv_binning",
-    "user_geohash_rollup",
-    "markov_attribution",
-    "doc_perplexity_buckets",
-    "lasso_coordinate_descent",
-    "als_ranking_metrics",
-    "events_hbos_outliers",
-    "shapley_attribution",
-    "events_rbo_daily_topk",
-    "media_frame_samples",
-    "stream_heavy_hitters",
-    "doc_containment_pairs",
-    "dedup_sorted_neighborhood",
-    "events_heavy_hitters",
-    "order_snapshot_diff",
-    "events_gapfill_decay",
-    "events_anomaly_zscore",
-    "status_priority_grouping_sets",
-    "sales_cube",
-    "stream_kmv_distinct_users",
-    "part_inventory_balance",
-    "event_type_stationary",
-    "customer_record_linkage",
-    "conversion_latency",
-    "session_entry_exit",
-    "hourly_profile",
-    "cumulative_unique_users",
-    "daily_order_dispersion",
-    "fulfillment_latency_monthly",
-    "stream_session_entry_exit",
-    "rolling_7d_distinct_users",
-    "brand_return_shrinkage",
-    "linear_attribution",
-    "part_hierarchy_rollup",
-    "user_activity_streaks",
-    "part_association_rules",
-    "orderkey_gap_audit",
-    "orders_nested_rollup",
-    "copurchase_components",
-    "nation_revenue_yoy",
-    "media_audio_silence",
-    "feature_standardize_split",
-    "doc_tokenizer_fertility",
-    "orders_duplicate_payments",
-    "events_binseg_changepoint",
-    "part_triple_itemsets",
-    "join_skew_report",
-    # --- round-6 window starts here, i.e. backlog[50:100]
-    #     (round-5 additions first: newest code carries the most
-    #     determinism risk) ---
-    "events_ljung_box",
-    "lineitem_hotelling_t2",
-    "stream_max_drawdown",
-    "customer_uplift_two_model",
-    "events_pot_gpd_tail",
-    "events_circular_stats",
-    "events_turning_points",
-    "stream_kalman_level",
-    "repl_session_wordcount",
-    "events_kalman_level",
-    "events_harmonic_regression",
-    "events_max_drawdown",
-    "events_dp_noisy_counts",
-    "lineitem_calibration_curve",
-    "orders_backlog_timeline",
-    "part_abc_xyz",
-    "customer_decile_migration",
-    "ivm_join_delta",
-    "doc_textrank_keywords",
-    "copurchase_adamic_adar",
-    "fk_integrity_audit",
-    "consistent_hash_reshard",
-    "weighted_jaccard_pairs",
-    "filtered_cosine_topk",
-    "jsonl_corrupt_scan",
-    "value_percentiles_disc",
-    "user_bot_scores",
-    "doc_pad_waste",
-    "supplier_window_matrix",
-    "dedup_banding_sweep",
-    "dedup_banding_recall",
-    "media_audio_energy",
-    "embedding_mmr_rerank",
-    "copurchase_cheapest_path",
-    "copurchase_kcore",
-    "copurchase_communities",
-    "events_k_anonymity",
-    "revenue_rolling_7d",
-    "media_video_neardup",
-    "doc_rake_keyphrases",
-    "supplier_skyline",
-    "ab_test_purchase_value",
-    "orders_quality_checks",
-    "embedding_pca_top2",
-    "embedding_kmeans_clusters",
-    "supplier_scd2_commission",
-    "embedding_pca_top",
-    "session_incident_overlap",
-    "embedding_hard_negatives",
-    "media_ahash_neardup",
-    # --- round-7 window starts here, i.e. backlog[100:150]
-    #     (round-6 additions first: newest code carries the most
-    #     determinism risk) ---
-    "events_mann_kendall",
-    "events_kruskal_wallis",
-    "events_page_hinkley",
-    "embedding_mmd_shift",
-    "lineitem_return_auc",
-    "events_ar2_yule_walker",
-    "doc_charclass_audit",
-    "doc_vocab_coverage",
-    "doc_stylometry_burrows",
-    "stream_page_hinkley",
-    "events_dispersion_index",
-    "events_welch_ttest",
-    "customer_ipw_ate",
-    "doc_gopher_filter_report",
-    "events_kanon_ladder",
-    "stream_ar2_yule_walker",
-    "doc_lang_confusion",
-    "dedup_family_histogram",
-    "copurchase_modularity",
-    "events_watermark_lateness",
-    "events_partition_checksums",
-    "embedding_knn_eval",
-    "orders_ca_trend",
-    "purchase_next_click_asof",
-    "stream_upsert_user_totals",
-    "events_downsample_ltob",
-    "dedup_canonical",
-    "doc_hybrid_rrf_search",
-    "value_trend_by_type",
-    "event_sequence_motifs",
-    "incremental_revenue_maintenance",
-    "user_geo_neighbor_pairs",
-    "kmv_user_overlap",
-    "events_pattern_search",
-    "events_props_variant",
-    "stream_purchase_click_outer",
-    "doc_blocklist_filter",
-    "schema_evolution_scan",
-    "copurchase_bfs_hops",
-    "distinct_users_sketch_rollup",
-    "orders_cdc_merge",
-    "format_roundtrip_scan",
-    "brand_revenue_pareto",
-    "customer_rfm_segments",
-    "events_rolling_median",
-    "doc_ngram_diversity",
-    "doc_corpus_card",
-    "doc_skipgram_negatives",
-    "doc_inverted_index",
-    "doc_domain_cap",
-    # --- round-8 window starts here, i.e. backlog[150:187]
-    #     (37 names: the 7 round-7 additions at the FRONT, then the
-    #     30 precleared names; the original 7-name remainder now
-    #     sits at [180:187] after the 23 round-6 insertions at
-    #     [100:123] and the 7 round-7 insertions here) ---
-    "events_cvm_drift",
-    "orders_gk_gamma",
-    "events_pinball_eval",
-    "doc_simpson_diversity",
-    "stream_cvm_drift",
-    "supplier_revenue_theil",
-    "copurchase_neighbor_jaccard",
-    "brand_revenue_bloom",
-    "doc_bm25_search",
-    "corpus_mixture_weights",
-    "doc_stratified_sample",
-    "doc_split_counts",
-    "doc_decontaminate",
-    "doc_hash_embeddings",
-    "stream_sliding_window",
-    "orders_table_profile",
-    "events_value_histogram",
-    "corpus_curation_pipeline",
-    "returned_item_losses",
-    "fuzzy_part_matches",
-    "events_sliding_window",
-    "weekly_retention",
-    "conversion_funnel",
-    "doc_bpe_tokenize",
-    "doc_bpe_merges",
-    "doc_bpe_pair_counts",
-    "copurchase_triangles",
-    "pq_topk",
-    "rp_topk",
-    "late_supplier_orders",
-    "large_volume_customers",
-    "top_supplier",
-    "customer_order_distribution",
-    "market_share",
-    "volume_shipping",
-    "bracket_revenue",
-    "promo_revenue_ratio",
-    # --- round-8 capability waves: appended AFTER the closing
-    #     37-name window (VERDICT r7 item 5 — a mid-window insert
-    #     would shift the [150:187] positions); these are the
-    #     round-9 driver window front (see _R8_ADDITIONS) ---
-    "events_anderson_darling",
-    "events_cliffs_delta",
-    "events_variance_ratio",
-    "events_daypart_jonckheere",
-    "stream_ks_drift",
-    "events_brown_forsythe",
-    "events_friedman_type_ranks",
-    "orders_somers_d",
-    "copurchase_rich_club",
-    "doc_length_lognormal",
-    "doc_flesch_reading_ease",
-    "media_scene_cuts",
-    "user_gap_weibull",
-    "nation_trade_balance",
-    "stream_anderson_darling",
-    "orders_fulfillment_gamma",
-    "copurchase_degree_powerlaw",
-    "embedding_intrinsic_dim",
-    "media_frame_entropy",
-    "dedup_source_shift",
-    # --- round-9 additions: appended AFTER the round-9 window
-    #     ([187:207]) so the banked positions never shift; these are
-    #     the round-10 driver window front (see _R9_ADDITIONS) ---
+#: The 50 names `queries()` registers first, in this order.
+DRIVER_HEAD = [
     "events_mood_median",
     "stream_cliffs_delta",
     "events_page_trend",
@@ -2328,149 +2026,6 @@ _ROTATION_BACKLOG = [
     "stream_mood_median",
     "ivf_nprobe_sweep",
     "events_ansari_bradley",
-]
-
-#: Names added AFTER the rotation closed (round 8 onward): they live
-#: at the END of the backlog, behind the [150:187] closing window,
-#: and form the round-9 driver window front. The rotation-invariants
-#: test pins backlog[187:] to exactly this list so post-rotation
-#: additions can never silently displace the banked positions.
-_R8_ADDITIONS = [
-    "events_anderson_darling",
-    "events_cliffs_delta",
-    "events_variance_ratio",
-    "events_daypart_jonckheere",
-    "stream_ks_drift",
-    "events_brown_forsythe",
-    "events_friedman_type_ranks",
-    "orders_somers_d",
-    "copurchase_rich_club",
-    "doc_length_lognormal",
-    "doc_flesch_reading_ease",
-    "media_scene_cuts",
-    "user_gap_weibull",
-    "nation_trade_balance",
-    "stream_anderson_darling",
-    "orders_fulfillment_gamma",
-    "copurchase_degree_powerlaw",
-    "embedding_intrinsic_dim",
-    "media_frame_entropy",
-    "dedup_source_shift",
-]
-
-#: Round-9 additions (pinned like _R8_ADDITIONS): appended at the
-#: END of the backlog behind the round-9 window, registered behind
-#: the 50-name head, pre-cleared at sf0.001/0.01/0.1 in this round's
-#: committed sweeps — the round-10 driver window front.
-_R9_ADDITIONS = [
-    "events_mood_median",
-    "stream_cliffs_delta",
-    "events_page_trend",
-    "events_theil_u",
-    "doc_vocab_richness",
-    "doc_source_kl",
-    "stream_mood_median",
-    "ivf_nprobe_sweep",
-    "events_ansari_bradley",
-]
-
-#: Round-5 driver window (VERDICT r4 item 1, historical record): the
-#: first 50 backlog names — the 12 round-4 capability additions led,
-#: then round-3 additions that had never held a driver row. All 50
-#: came back green in CORRECTNESS_r05.json; cumulative distinct
-#: driver-green coverage after round 5 is 248 of 355 (verified by
-#: set union over CORRECTNESS_r01–r05).
-_R5_DRIVER_WINDOW = _ROTATION_BACKLOG[:50]
-
-#: Round-6 driver window (VERDICT r5 item 1): backlog[50:100] — the
-#: 14 round-5 additions lead (newest code, highest determinism risk:
-#: Kalman fold, IRLS uplift, GPD tail, Ljung-Box), then the
-#: orders_backlog_timeline wave of round-3 third-wave names. After
-#: this round, cumulative distinct driver-green coverage is 298 of
-#: 355 (378 after the round-6 additions); round 7 takes [100:150],
-#: round 8 the rest.
-_R6_DRIVER_WINDOW = _ROTATION_BACKLOG[50:100]
-
-#: Round-7 driver window (VERDICT r6 item 1): backlog[100:150] — the
-#: 23 round-6 additions lead (newest code, highest determinism risk:
-#: Mann-Kendall, Kruskal-Wallis, MMD shift, watermark lateness …
-#: orders_ca_trend, all swept green at sf0.01 AND sf0.1 in round 6),
-#: then 27 names pre-cleared in `ORACLE_SF01_R78_PRECLEAR.txt`.
-#: After this round, cumulative distinct driver-green coverage is
-#: 348 of 385; round 8 takes the final 37 ([150:187]: the 7
-#: round-7 additions, swept at sf0.01 AND sf0.1 this round, then 30
-#: names pre-cleared in ORACLE_SF01_R78_PRECLEAR.txt).
-_R7_DRIVER_WINDOW = _ROTATION_BACKLOG[100:150]
-
-#: Round-8 driver window (VERDICT r7 item 1, THE gating edit): the
-#: final 37 never-driver-checked names — `_ROTATION_BACKLOG[150:187]`
-#: (the 7 round-7 additions first, then the 30 names pre-cleared at
-#: sf0.1 in `ORACLE_SF01_R78_PRECLEAR.txt`). After the driver banks
-#: these, cumulative distinct driver-green coverage is 385/385 —
-#: every registered query holds a driver CORRECTNESS row.
-_R8_DRIVER_WINDOW = _ROTATION_BACKLOG[150:187]
-
-#: The driver checks the FIRST 50 registered names, so the 13 slots
-#: behind the 37 are deliberate RE-checks, chosen for evidence
-#: value: the 5 drift queries whose plans/oracles changed this round
-#: (the ADVICE-r7 `ts IS NOT NULL` class fix + the integral-div
-#: chunk key), the 3 reference flagship queries as smoke anchors,
-#: and 5 round-7-window names from the 1-ulp-risk statistics class
-#: (three of them the round-7 ambient bench movers, so the driver
-#: re-times them on its own clock too).
-_R8_WINDOW_FILL = [
-    "events_ks_test",
-    "events_psi_drift",
-    "events_type_jsd",
-    "events_drift_chi2",
-    "events_watermark_lateness",
-    "q1_wordcount",
-    "q2_top_users",
-    "q3_host_report",
-    "events_ar2_yule_walker",
-    "doc_charclass_audit",
-    "copurchase_modularity",
-    "embedding_mmd_shift",
-    "events_welch_ttest",
-]
-
-#: Round-9 driver window (VERDICT r8 item 1, THE gating edit): the
-#: 20 round-8 additions (`_ROTATION_BACKLOG[187:207]` =
-#: `_R8_ADDITIONS`) — the only registered names without a driver
-#: CORRECTNESS row. All 20 were pre-cleared in round 8's committed
-#: sweeps at sf0.01 AND sf0.1 (`ORACLE_LOCAL_r08.txt`,
-#: `ORACLE_SF01_r08.txt`), re-verified by the round-8 judge's own
-#: full 405/405 sweep, and each statistic is fuzz-tested against an
-#: independent pure-Python replay (`tests/test_round8_fuzz.py`).
-#: After the driver banks these, cumulative distinct driver-green
-#: coverage is 405/405 — the rotation story closes completely.
-_R9_DRIVER_WINDOW = _ROTATION_BACKLOG[187:207]
-
-#: Round-10 driver window (VERDICT r9 item 8, THE gating edit): the
-#: 9 round-9 capability additions (`_ROTATION_BACKLOG[207:216]`
-#: = `_R9_ADDITIONS`) — the only registered names without a driver
-#: CORRECTNESS row. All 9 were pre-cleared at sf0.01 AND sf0.1 in
-#: round 9's committed sweeps (`ORACLE_LOCAL_r09.txt`,
-#: `ORACLE_SF01_r09.txt`) and re-verified green in this round's
-#: from-scratch sf0.01 sweep. After the driver banks these,
-#: cumulative distinct driver-green coverage is 414/414.
-_R10_DRIVER_WINDOW = _ROTATION_BACKLOG[207:216]
-
-#: The driver checks the FIRST 50 registered names, so the 41 slots
-#: behind the 9 are deliberate RE-checks, chosen for evidence value:
-#: every query whose physical plan changed in THIS round's
-#: optimizations (the IVF/PQ/k-means Arrow-fold family and its five
-#: assignment consumers, the two Arrow probe-join kernels, the
-#: semantic-dedup gram prune, orders_table_profile's NDV rewrite,
-#: the CC-fixpoint revert beneficiaries), every round-9-optimized
-#: query (ALS fan-out, attribution pair, n-gram let-binding family),
-#: the 3 reference flagships as smoke anchors, the four round-9
-#: ambient bench movers the driver should re-time on its own clock
-#: (pricing_summary, dedup_minhash_lsh, doc_stats, simhash), and the
-#: measured-rejection paths whose code carries new comments but must
-#: stay byte-identical in results (BPE pair, substring spans, PCA,
-#: stream soak).
-_R10_WINDOW_FILL = [
     "ivf_index_topk",
     "pq_topk",
     "ivfpq_topk",
@@ -2514,74 +2069,12 @@ _R10_WINDOW_FILL = [
     "doc_chunk_overlap",
 ]
 
-#: The driver checks the FIRST 50 registered names, so the 30 slots
-#: behind the 20 are deliberate RE-checks, chosen for evidence
-#: value: the four round-8 ambient bench movers (the driver re-times
-#: them on its own clock — VERDICT r8 item 6), the 3 reference
-#: flagships as smoke anchors, the full drift/rank-statistic family
-#: (the 1-ulp-risk class the new window's AD/Cliff's/Friedman/
-#: Somers' statistics belong to — several share the
-#: `halfsplit_value_cells` scan with them), the two queries whose
-#: overflow guards changed this round via `ad_from_cells`'s sibling
-#: fix (events_cvm_drift, stream_cvm_drift), two streaming twins,
-#: and the probe-capped kNN evaluator (embedding_intrinsic_dim's
-#: closest relative).
-_R9_WINDOW_FILL = [
-    "markov_attribution",
-    "stream_kalman_level",
-    "profile_events",
-    "customer_value_deciles",
-    "q1_wordcount",
-    "q2_top_users",
-    "q3_host_report",
-    "events_ks_test",
-    "events_cvm_drift",
-    "stream_cvm_drift",
-    "events_psi_drift",
-    "events_type_jsd",
-    "events_drift_chi2",
-    "events_mannwhitney_u",
-    "events_kruskal_wallis",
-    "events_welch_ttest",
-    "events_dow_anova",
-    "events_mann_kendall",
-    "events_ar2_yule_walker",
-    "embedding_mmd_shift",
-    "copurchase_modularity",
-    "events_watermark_lateness",
-    "orders_gk_gamma",
-    "supplier_revenue_theil",
-    "stream_page_hinkley",
-    "stream_ar2_yule_walker",
-    "embedding_knn_eval",
-    "doc_simpson_diversity",
-    "events_pinball_eval",
-    "copurchase_neighbor_jaccard",
-]
-
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registration order is the driver's check order: the driver
-    records exactly the first 50 registered queries each round, so
-    `_R10_DRIVER_WINDOW` (the 9 round-9 additions,
-    = `_ROTATION_BACKLOG[207:216]` = `_R9_ADDITIONS` — the only
-    names without a driver CORRECTNESS row, pre-cleared at sf0.01
-    and sf0.1 in round 9's committed sweeps) is moved to the front,
-    followed by `_R10_WINDOW_FILL` (41 deliberate re-checks: every
-    query whose physical plan changed in this round's optimizations,
-    the round-9-optimized set, the reference flagships, the four
-    round-9 ambient bench movers, and the measured-rejection paths).
-    After the driver banks this window, cumulative distinct
-    driver-green coverage is 414/414 — every registered query holds
-    a driver CORRECTNESS row (rounds 1-9 hash-verified 405 distinct
-    queries: CORRECTNESS_r01–r09, set union). Any query added from
-    round 9 on goes directly behind the 50-name head so the NEXT
-    round's window catches it. Every registered query, windowed or
-    not, still runs in the local exact-oracle harness
-    (`python -m tests.oracle`) at sf0.01 and sf0.1 every round."""
+    """Every registered query by name. The external correctness runner
+    records the first 50 registered names, so `DRIVER_HEAD` comes first;
+    the rest follow in the order of the literal below."""
     q = {
-        # --- round-3 driver window (positions 1-50 in round 3;
-        #     all 50 driver-green in CORRECTNESS_r03.json) ---
         "events_twap_daily": analytics.events_twap_daily,
         "events_cusum_changepoint": analytics.events_cusum_changepoint,
         "supplier_delivery_otif": analytics.supplier_delivery_otif,
@@ -2632,8 +2125,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_greedy_coverage": pipeline.doc_greedy_coverage,
         "approx_value_percentiles": analytics.approx_value_percentiles,
         "stream_soak_lineitem_state": streaming_parity.stream_soak_lineitem_state,
-        # --- already driver-green in r1/r2, or queued for a
-        #     later window; all run in the local exact harness ---
         "stream_wordcount": streaming_parity.stream_wordcount_docs,
         "stream_host_report": streaming_parity.stream_host_report_events,
         "stream_dedup_exact": streaming_parity.stream_dedup_exact_docs,
@@ -2910,13 +2401,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_voptimal_histogram": analytics.events_voptimal_histogram,
         "events_hill_tail_index": analytics.events_hill_tail_index,
         "orders_littles_law": analytics.orders_littles_law,
-        # --- round-4 additions: reference front doors that were
-        #     pytest-only (VERDICT r3 items 4-6) ---
         "crane_sink_roundtrip": reference.crane_sink_roundtrip,
         "topology_submit_wordcount": topology.topology_submit_wordcount,
         "stream_spout_wordcount": streaming_parity.stream_spout_wordcount,
-        # --- round-4 capability wave (scheduled at the FRONT of the
-        #     round-5 driver window via _ROTATION_BACKLOG) ---
         "lineitem_shipmode_priority": analytics.lineitem_shipmode_priority,
         "orders_business_day_latency": analytics.orders_business_day_latency,
         "target_encoding_kfold": analytics.target_encoding_kfold,
@@ -2929,8 +2416,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_hbos_outliers": analytics.events_hbos_outliers,
         "shapley_attribution": analytics.shapley_attribution,
         "events_rbo_daily_topk": analytics.events_rbo_daily_topk,
-        # --- round-5 capability wave (FRONT of the round-6 driver
-        #     window via _ROTATION_BACKLOG) ---
         "events_ljung_box": analytics.events_ljung_box,
         "lineitem_hotelling_t2": analytics.lineitem_hotelling_t2,
         "stream_max_drawdown": streaming_parity.stream_max_drawdown,
@@ -2945,8 +2430,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_max_drawdown": analytics.events_max_drawdown,
         "events_dp_noisy_counts": analytics.events_dp_noisy_counts,
         "lineitem_calibration_curve": analytics.lineitem_calibration_curve,
-        # --- round-6 capability wave (FRONT of the round-7 driver
-        #     window via _ROTATION_BACKLOG) ---
         "events_mann_kendall": analytics.events_mann_kendall,
         "events_kruskal_wallis": analytics.events_kruskal_wallis,
         "events_page_hinkley": analytics.events_page_hinkley,
@@ -2970,8 +2453,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_partition_checksums": analytics.events_partition_checksums,
         "embedding_knn_eval": pipeline.embedding_knn_eval,
         "orders_ca_trend": analytics.orders_ca_trend,
-        # --- round-7 capability wave (FRONT of the round-8 driver
-        #     window via _ROTATION_BACKLOG) ---
         "events_cvm_drift": analytics.events_cvm_drift,
         "orders_gk_gamma": analytics.orders_gk_gamma,
         "events_pinball_eval": analytics.events_pinball_eval,
@@ -2981,9 +2462,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "copurchase_neighbor_jaccard": (
             analytics.copurchase_neighbor_jaccard
         ),
-        # --- round-8 capability wave (appended AFTER the closing
-        #     window per VERDICT r7 item 5; backlog[187:] = the
-        #     round-9 driver window front) ---
         "events_anderson_darling": analytics.events_anderson_darling,
         "events_cliffs_delta": analytics.events_cliffs_delta,
         "events_variance_ratio": analytics.events_variance_ratio,
@@ -3014,11 +2492,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_intrinsic_dim": pipeline.embedding_intrinsic_dim,
         "media_frame_entropy": pipeline.media_frame_entropy,
         "dedup_source_shift": pipeline.dedup_source_shift,
-        # --- round-9 capability wave: appended BEHIND the 50-name
-        #     head (VERDICT r8 item 4 — never a mid-window insert);
-        #     these names are also appended at the END of
-        #     _ROTATION_BACKLOG (= _R9_ADDITIONS) and form the
-        #     round-10 driver window front ---
         "events_mood_median": analytics.events_mood_median,
         "stream_cliffs_delta": streaming_parity.stream_cliffs_delta,
         "events_page_trend": analytics.events_page_trend,
@@ -3029,9 +2502,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ivf_nprobe_sweep": pipeline.ivf_nprobe_sweep,
         "events_ansari_bradley": analytics.events_ansari_bradley,
     }
-    head = {n: q[n] for n in _R10_DRIVER_WINDOW + _R10_WINDOW_FILL}
-    assert len(head) == 50, f"driver window must be 50, got {len(head)}"
-    return head | {n: f for n, f in q.items() if n not in head}
+    return {n: q[n] for n in DRIVER_HEAD} | q
 
 
 def _bpe_rounds_cte(n_merges: int = 20) -> str:

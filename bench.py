@@ -31,6 +31,10 @@ committed record get one extra sample before the record is written,
 and the record is stamped `hot_window` either way (VERDICT r9
 item 4: a hot 32-core window became round 9's comparison baseline).
 
+Each detail record is stamped with `cpus`, `sf` and `git_sha`; "the
+last committed record" below always means the newest one taken at the
+same core count and scale factor.
+
 `--changed-since` re-measures only queries whose normalized
 optimized-plan fingerprint differs from the last committed
 BENCH_DETAIL record (plus the 20 slowest prior rows and the
@@ -339,19 +343,37 @@ def _plan_hash(fn, name: str, spark, sf_dir: str, skip_build: bool = False):
     return "plan:" + hashlib.sha256(p.encode()).hexdigest()[:16], False
 
 
-def _latest_detail(repo_root: str):
-    """Most recent committed BENCH_DETAIL_r{N}.json, or None."""
+def _latest_detail(repo_root: str, cpus: int, sf):
+    """Most recent committed BENCH_DETAIL_r{N}.json taken at the same
+    core count and scale factor, or None. Records without a `cpus`
+    stamp never match: an 8-core record is no baseline for a 32-core
+    run."""
     import re
 
-    best, best_n = None, -1
-    for f in os.listdir(repo_root):
-        m = re.match(r"BENCH_DETAIL_r(\d+)\.json$", f)
-        if m and int(m.group(1)) > best_n:
-            best_n, best = int(m.group(1)), f
-    if best is None:
+    numbered = sorted(
+        (int(m.group(1)), f)
+        for f in os.listdir(repo_root)
+        if (m := re.match(r"BENCH_DETAIL_r(\d+)\.json$", f))
+    )
+    for _, f in reversed(numbered):
+        with open(os.path.join(repo_root, f)) as fh:
+            rec = json.load(fh)
+        if rec.get("cpus") == cpus and rec.get("sf") == sf:
+            return rec
+    return None
+
+
+def _git_sha(repo_root: str):
+    """HEAD commit of the checkout being benched, or None outside git."""
+    import subprocess
+
+    try:
+        return subprocess.run(
+            ["git", "rev-parse", "HEAD"], cwd=repo_root,
+            capture_output=True, text=True, check=True,
+        ).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
         return None
-    with open(os.path.join(repo_root, best)) as fh:
-        return json.load(fh)
 
 
 def _round_number(repo_root: str) -> int:
@@ -403,7 +425,9 @@ def main() -> None:
     plan_hashes: dict[str, str] = {}
     build_executes: set[str] = set()
     carried: dict[str, float] = {}
-    prev = _latest_detail(repo_root) or {}
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    prev = _latest_detail(repo_root, cpus, sf_val) or {}
     prev_timings_all = prev.get("queries", {})
     if changed_since and not arg_names:
         # Re-measure only queries whose (normalized) optimized plan
@@ -512,8 +536,6 @@ def main() -> None:
                 resampled.append(name)
     timings.update(carried)
 
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     headline = set(HEADLINE)
     flagships = [
         "q1_wordcount", "q2_top_users", "q3_host_report",
@@ -533,9 +555,11 @@ def main() -> None:
                 if ran:
                     build_executes.add(n)
         _write_detail(
-            os.path.dirname(os.path.abspath(__file__)),
+            repo_root,
             {
                 "sf": sf_val,
+                "cpus": cpus,
+                "git_sha": _git_sha(repo_root),
                 "n_queries": len(timings),
                 "n_measured": n_measured,
                 "carried": sorted(carried),

@@ -485,7 +485,10 @@ def neighbor_jaccard(
                 & (F.col("a.u") < F.col("b.u")),
             )
             .select(
-                (F.shiftleft(F.col("a.u"), 32) + F.col("b.u")).alias("p")
+                (
+                    F.shiftleft(F.col("a.u").cast("long"), 32)
+                    + F.col("b.u")
+                ).alias("p")
             )
         )
         common_p = pairs.groupBy("p").agg(
@@ -494,7 +497,10 @@ def neighbor_jaccard(
         existing_p = (
             und.where(F.col("src") < F.col("dst"))
             .select(
-                (F.shiftleft(F.col("src"), 32) + F.col("dst")).alias("p")
+                (
+                    F.shiftleft(F.col("src").cast("long"), 32)
+                    + F.col("dst")
+                ).alias("p")
             )
             .distinct()
         )
@@ -514,11 +520,17 @@ def neighbor_jaccard(
                 (F.col("a.w") == F.col("b.w"))
                 & (F.col("a.u") < F.col("b.u")),
             )
-            .select(F.col("a.u").alias("u"), F.col("b.u").alias("v"))
+            .select(
+                F.col("a.u").cast("long").alias("u"),
+                F.col("b.u").cast("long").alias("v"),
+            )
         )
         existing = (
             und.where(F.col("src") < F.col("dst"))
-            .select(F.col("src").alias("u"), F.col("dst").alias("v"))
+            .select(
+                F.col("src").cast("long").alias("u"),
+                F.col("dst").cast("long").alias("v"),
+            )
             .distinct()
         )
         common = pairs.groupBy("u", "v").agg(

@@ -1406,11 +1406,13 @@ def orders_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     stats = row.select(F.explode(F.array(*entries)).alias("s")).select("s.*")
     return (
-        stats.join(F.broadcast(nd), stats.col_name == nd._c)
+        # left join: an all-NULL column has no NDV row, and keeps its
+        # profile row with n_distinct = 0
+        stats.join(F.broadcast(nd), stats.col_name == nd._c, "left")
         .select(
             "col_name",
             "n_nulls",
-            F.col("_nd").alias("n_distinct"),
+            F.coalesce(F.col("_nd"), F.lit(0)).alias("n_distinct"),
             "min_num",
             "max_num",
             "min_str",

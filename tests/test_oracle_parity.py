@@ -50,78 +50,11 @@ def test_entry_smoke(spark):
 
 def test_driver_window_is_fully_oracle_checked():
     """The external runner records only the FIRST 50 registered
-    queries per round (CORRECTNESS_r01 stopped at exactly 50), so the
-    rotation head must consist of queries that carry a value-hash
-    oracle — a rows-only query in the window would waste a slot."""
+    queries, so those are exactly `DRIVER_HEAD`: 50 distinct names,
+    each carrying a value-hash oracle (a rows-only query there would
+    waste a slot)."""
     head = list(QUERIES)[:50]
+    assert head == contract.DRIVER_HEAD
+    assert len(set(head)) == 50
     missing = [n for n in head if n not in ORACLES]
     assert not missing, missing
-
-
-def test_r10_rotation_invariants():
-    """Round-10 rotation bookkeeping — the round the LAST unbanked
-    names reach the driver: the first 9 registered queries are
-    exactly _R10_DRIVER_WINDOW (= _ROTATION_BACKLOG[207:216]
-    = _R9_ADDITIONS, the 9 round-9 capability additions — the only
-    names without a driver CORRECTNESS row), positions 10-50 are
-    the 41 deliberate _R10_WINDOW_FILL re-checks (already
-    driver-green in earlier rounds: every query whose physical plan
-    changed in this round's optimizations, the round-9-optimized
-    set, the reference flagships, the four round-9 ambient bench
-    movers, and the measured-rejection paths). The round-4..9
-    windows stay intact as the historical record, and backlog +
-    driver-checked partitions the registry: rounds 1-9 banked 405
-    distinct green rows (198 pre-backlog + backlog[:207]), so after
-    round 10's window every registered query holds a driver
-    CORRECTNESS row — 414/414. Queries added later APPEND to the
-    END of the backlog (and register behind the 50-name head) and
-    must extend the arithmetic below in the same commit."""
-    window = contract._R10_DRIVER_WINDOW
-    fill = contract._R10_WINDOW_FILL
-    backlog = contract._ROTATION_BACKLOG
-    names = list(QUERIES)
-    assert names[:9] == window
-    assert names[9:50] == fill
-    assert window == backlog[207:216] == contract._R9_ADDITIONS
-    assert len(set(window)) == 9
-    assert len(set(fill)) == 41
-    # fills are RE-checks: all already banked in rounds 1-9, i.e.
-    # either pre-backlog or inside the banked backlog[:207] slice
-    assert not set(fill) & set(backlog[207:])
-    # names added from round 9 on append strictly AFTER the round-8
-    # additions so the banked window positions never shift
-    assert backlog[187:207] == contract._R9_DRIVER_WINDOW
-    assert backlog[187:207] == contract._R8_ADDITIONS
-    assert len(set(backlog)) == len(backlog) == 216
-    assert set(backlog) <= set(names)
-    # historical windows stay intact
-    assert contract._R5_DRIVER_WINDOW == backlog[:50]
-    assert contract._R6_DRIVER_WINDOW == backlog[50:100]
-    assert contract._R7_DRIVER_WINDOW == backlog[100:150]
-    assert contract._R8_DRIVER_WINDOW == backlog[150:187]
-    assert len(set(contract._R4_DRIVER_WINDOW)) == 50
-    assert not set(contract._R4_DRIVER_WINDOW) & set(backlog)
-    # rounds 1-4 banked 198 names none of which are in the backlog;
-    # rounds 5-8 banked backlog[:187]; round 9 banked [187:207];
-    # round 10 banks [207:216].
-    assert len(names) == len(backlog) + 198
-    # the newest-code-first ordering of the historical windows
-    assert backlog[50:64][0] == "events_ljung_box"
-    assert backlog[100] == "events_mann_kendall"
-    assert backlog[150] == "events_cvm_drift"
-    assert backlog[187] == "events_anderson_darling"
-    assert backlog[206] == "dedup_source_shift"
-    assert backlog[207] == "events_mood_median"
-    assert backlog[215] == "events_ansari_bradley"
-    # round 10's window is fully pre-cleared at sf0.1 (round 9's
-    # committed closing sweep covered the whole 414-name surface)
-    import os
-
-    pre = os.path.join(os.path.dirname(__file__), "..",
-                       "ORACLE_SF01_r09.txt")
-    cleared = {
-        ln.split()[0]
-        for ln in open(pre)
-        if ln.strip() and not ln.startswith("#")
-    }
-    assert set(window) <= cleared

@@ -5,6 +5,9 @@ running max that replaced the low-cardinality lateness window."""
 import datetime
 import os
 
+import pytest
+
+
 def _write_events(spark, tmp_path, rows, name):
     df = spark.createDataFrame(
         rows,
@@ -219,22 +222,60 @@ def test_simpson_diversity_hand_case(spark):
     assert out["mono"]["inv_simpson"] == 1.0
 
 
-def test_neighbor_jaccard_hand_case(spark):
+@pytest.mark.parametrize(
+    "schema, base",
+    [("src int, dst int", 0), ("src long, dst long", 0), ("src int, dst int", -10)],
+    ids=["int", "long", "int_negative"],
+)
+def test_neighbor_jaccard_hand_case(spark, schema, base):
     """Square graph 1-2-3-4-1: predicted links are the two diagonals
-    with J = 2/(2+2-2) = 1.0; existing edges are excluded."""
+    with J = 2/(2+2-2) = 1.0; existing edges are excluded. INT ids
+    must pack into the long wedge key without overflowing, and both
+    the packed branch and the two-column branch (negative ids) output
+    long u/v."""
     from stream_processing_system_spark.operators.graph import (
         neighbor_jaccard,
     )
 
+    square = [(1, 2), (2, 3), (3, 4), (1, 4)]
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (1, 4)], "src long, dst long"
+        [(base + a, base + b) for a, b in square], schema
     )
-    out = neighbor_jaccard(edges).collect()
-    got = {(r["u"], r["v"]): r for r in out}
+    result = neighbor_jaccard(edges)
+    assert dict(result.dtypes)["u"] == "bigint"
+    assert dict(result.dtypes)["v"] == "bigint"
+    got = {(r["u"] - base, r["v"] - base): r for r in result.collect()}
     assert set(got) == {(1, 3), (2, 4)}
     assert got[(1, 3)]["n_common"] == 2
     assert got[(1, 3)]["n_union"] == 2
     assert got[(1, 3)]["jaccard"] == 1.0
+
+
+def test_orders_table_profile_keeps_all_null_column(spark, tmp_path):
+    """An all-NULL column has no non-NULL value to count distinct, so
+    it must keep its profile row with n_distinct = 0 instead of
+    vanishing from the NDV join."""
+    from stream_processing_system_spark.plans.analytics import (
+        orders_table_profile,
+    )
+
+    d = datetime.datetime(1995, 1, 1)
+    df = spark.createDataFrame(
+        [(1, 10, "O", 5.0, d, None), (2, 11, "F", 7.0, d, None)],
+        "o_orderkey long, o_custkey long, o_orderstatus string,"
+        " o_totalprice double, o_orderdate timestamp,"
+        " o_orderpriority string",
+    )
+    sf = str(tmp_path / "allnull")
+    os.makedirs(sf, exist_ok=True)
+    df.write.mode("overwrite").parquet(os.path.join(sf, "orders.parquet"))
+    out = {r["col_name"]: r for r in orders_table_profile(spark, sf).collect()}
+    assert len(out) == 6
+    assert out["o_orderpriority"]["n_nulls"] == 2
+    assert out["o_orderpriority"]["n_distinct"] == 0
+    assert out["o_orderpriority"]["min_str"] is None
+    assert out["o_orderkey"]["n_distinct"] == 2
+    assert out["o_orderdate"]["n_distinct"] == 1
 
 
 def test_supplier_theil_uniform_is_zero(spark, tmp_path):
