@@ -29,6 +29,7 @@ import operator
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from stream_processing_system_spark.functions import md5_prefix_long
 
@@ -382,71 +383,86 @@ def simhash_neardup_pairs(
     )
 
 
-def connected_component_labels(
-    pairs: DataFrame, nodes: DataFrame, id_col: str, max_iters: int = 25
-) -> DataFrame:
-    """Connected components over a pair list: min-label HashMin on a
-    CONTRACTING edge set, with path compression on the label table.
-    Every node starts labeled with itself; each round (1) every
-    label-graph node adopts min(self, neighbors) and that mapping is
-    pointer-jumped once, (2) node labels re-compose through the
-    mapping and then through THEMSELVES (component ← its component's
-    component — labels only decrease, so the jump is always valid
-    and compounds across rounds like classic path compression),
-    (3) the edge set is rewritten onto the current labels with
-    self-loops dropped. The two accelerations cover each other's
-    worst case: path compression alone is exponential on chains but
-    crawls on dense large-diameter graphs (a percolating
-    ε-neighborhood graph was observed to stall its wavefront);
-    contraction alone collapses dense graphs in O(log d) but gains
-    only a constant per round on paths. Together a 600-node path and
-    a globe-spanning geometric component both converge well inside
-    the default budget, and convergence is the crisp test "no
-    non-self-loop edges remain". If the loop still exits unconverged
-    a RuntimeWarning is raised rather than silently returning
-    partial labels (the transitive-closure contract of
-    dedup_transitive depends on full convergence).
+# Edge bound (directed, self-loops dropped) up to which
+# `connected_component_labels` solves the whole graph in ONE Spark task.
+# Memory cost: the union-find holds a Python dict of about 100 B per
+# integer node (string ids add their own size); 2M directed edges are
+# 1M undirected ones over at most 2M nodes, about 200 MB in one Python
+# worker. Above the bound only the distributed HashMin loop scales.
+_LOCAL_FINISH_EDGES = 2_000_000
 
-    Output: (id, component) where component = min id reachable — the
-    component's global min maps to itself forever (every label in a
-    component is a member id, all ≥ the min), contraction preserves
-    label-graph connectivity, so the single surviving label IS the
-    min.
 
-    Driver involvement per round is one scalar (the edge count,
-    returned by the same action that materializes the round's lazy
-    checkpoint — no separate emptiness probe job); no per-row
-    collection; lineage is cut with localCheckpoint so
-    the plan doesn't grow across iterations. The EDGE frames are lazy
-    (the round's count() is their materializing action — one job, no
-    separate emptiness probe); the mapping/label checkpoints stay
-    EAGER: round 9 tried making them lazy too, but under Spark's
-    default checkpointAllMarkedAncestors=false a lazy checkpoint only
-    materializes when ITS RDD is a job target — as mere ancestors of
-    the edge count they were cached but their lineage was never
-    truncated, so the per-round DAG grew and the fixpoint got SLOWER
-    (round-10 quiet paired min-of-3 at sf0.1: user_geo_dbscan 7.69 s
-    lazy vs 5.95 s eager, dedup_family_histogram 3.99 vs 3.40 —
-    reverted, VERDICT r9 item 2). Only nodes that appear
-    in an edge are iterated: an isolated node (no near-dup pair —
-    the overwhelming majority of a deduped corpus) is its own
-    component by definition and is unioned back in at the end. The
-    fixpoint loop therefore runs over the dup GRAPH, not the corpus
-    — and the edge frame shrinks geometrically as components
-    contract, so at 100 TB the per-round shuffle decays from the
-    initial pair count toward zero."""
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates()
-        .localCheckpoint(eager=False)
+def _union_find_labels(edges: DataFrame) -> DataFrame:
+    """(node, component) for every node of a symmetric edge frame, from
+    a union-find over its (src < dst) half in ONE task, checkpointed
+    once. The smaller root always wins a union, so every root is its
+    component's min id; labels keep the id type the batches arrive in."""
+
+    def union_find(batches):
+        import pyarrow as pa
+
+        parent = {}
+        id_type = None
+
+        def find(x):
+            root = x
+            while parent[root] != root:
+                root = parent[root]
+            while parent[x] != root:  # path compression
+                parent[x], x = root, parent[x]
+            return root
+
+        for batch in batches:
+            id_type = batch.schema.field(0).type
+            for a, b in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
+                ra = find(parent.setdefault(a, a))
+                rb = find(parent.setdefault(b, b))
+                if ra != rb:
+                    if rb < ra:
+                        ra, rb = rb, ra
+                    parent[rb] = ra
+        if id_type is None:
+            return
+        nodes = list(parent)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(nodes, id_type), pa.array([find(n) for n in nodes], id_type)],
+            names=["node", "component"],
+        )
+
+    node_type = edges.schema["src"].dataType
+    return (
+        edges.where(F.col("src") < F.col("dst"))
+        .coalesce(1)
+        .mapInArrow(
+            union_find,
+            StructType(
+                [StructField("node", node_type), StructField("component", node_type)]
+            ),
+        )
+        .localCheckpoint()
     )
-    # The count() both materializes the lazy checkpoint and yields the
-    # convergence scalar — one action, no separate emptiness probe
-    # (the old per-round `limit(1).count()` was a second job per
-    # round for information the materializing action already has).
-    n_edges = edges.count()
+
+
+def _hashmin_labels(edges: DataFrame, n_edges: int, max_iters: int) -> DataFrame:
+    """Distributed min-label HashMin on a contracting edge set, with
+    path compression on the label table. Every node starts labeled
+    with itself; each round (1) every label-graph node adopts
+    min(self, neighbors) and that mapping is pointer-jumped once,
+    (2) node labels re-compose through the mapping and then through
+    themselves (component <- its component's component; labels only
+    decrease, so the jump is valid and compounds across rounds like
+    classic path compression), (3) the edge set is rewritten onto the
+    current labels with self-loops dropped. Path compression alone
+    crawls on dense large-diameter graphs; contraction alone gains
+    only a constant per round on paths; together a 600-node path and
+    a globe-spanning geometric component converge well inside the
+    default budget. Converged means "no non-self-loop edges remain".
+
+    Each round runs two actions and returns one scalar: the eager
+    labels checkpoint, and the edge count that materializes the lazy
+    edge checkpoint (about 12 jobs, as AQE submits each exchange as a
+    job of its own). An unconverged exit raises a RuntimeWarning
+    rather than returning partial labels silently."""
     labels = (
         edges.select(F.col("src").alias("node"))
         .dropDuplicates()
@@ -468,14 +484,9 @@ def connected_component_labels(
                 F.least(F.col("src"), F.col("_nmin")).alias("new"),
             )
         )
-        # mapping is NOT checkpointed (round-10): it is consumed once,
-        # inside the labels job below, and m1's two uses (the hop and
-        # the jump self-join) end in the SAME groupBy exchange, which
-        # ReuseExchange dedups within that job — a separate eager
-        # checkpoint here was one more driver round trip per round
-        # for a frame whose lineage dies at the labels checkpoint
-        # anyway (3 -> 2 jobs per round; the labels job's executed
-        # plan shows the ReusedExchange nodes).
+        # The mapping is not checkpointed: it is consumed once, inside
+        # the labels job below, and m1's two uses end in the same
+        # groupBy exchange, which ReuseExchange dedups within that job.
         mapping = m1.join(
             m1.select(
                 F.col("old").alias("new"), F.col("new").alias("_new2")
@@ -500,6 +511,9 @@ def connected_component_labels(
         parents = hopped.select(
             F.col("node").alias("_pn"), F.col("component").alias("_pc")
         )
+        # Eager: under checkpointAllMarkedAncestors=false a lazy
+        # checkpoint that is only an ancestor of the edge count never
+        # truncates its lineage, and the per-round plan would grow.
         labels = (
             hopped.join(parents, hopped.component == parents._pn, "left")
             .select(
@@ -508,7 +522,9 @@ def connected_component_labels(
             )
             .localCheckpoint()
         )
-        # (3) contract the edge set through the compressed labels
+        # (3) contract the edge set through the compressed labels; the
+        # count below materializes the lazy checkpoint and is the
+        # convergence scalar in one job
         edges = (
             edges.join(
                 labels.select(F.col("node").alias("src"), F.col("component").alias("_s")),
@@ -530,24 +546,18 @@ def connected_component_labels(
         )
         n_edges = edges.count()
     # Final pointer compression: an edge (L1, L2) is dropped as soon
-    # as the LABEL TABLE knows comp(L1) == comp(L2), which can leave
-    # plain nodes still pointing at intermediate labels (a pointer
-    # forest, not yet its roots). Compress component <- its
-    # component's component to fixpoint — chains shorten
-    # exponentially, so this is a handful of rounds over the
-    # node-grain frame with a 1-scalar probe each.
+    # as the label table knows comp(L1) == comp(L2), which can leave
+    # plain nodes pointing at intermediate labels (a pointer forest,
+    # not yet its roots). Compress component <- its component's
+    # component to fixpoint; chains halve each round.
     compressed = False
     for _ in range(max_iters):
         parents = labels.select(
             F.col("node").alias("_pn"), F.col("component").alias("_pc")
         )
-        # lazy on purpose (round-10): nxt is the FIRST marked RDD the
-        # changed-count job's doCheckpoint recursion reaches (the agg
-        # RDD above it is unmarked), so — unlike the reverted round-9
-        # variant, where mapping/labels sat behind the already-marked
-        # edges and never truncated — this lazy checkpoint both
-        # materializes and cuts lineage under the same action:
-        # 2 -> 1 jobs per compression round.
+        # Lazy: nxt is the first marked RDD the changed-count job
+        # reaches, so this checkpoint both materializes and cuts
+        # lineage under that one action (one job per round).
         nxt = (
             labels.join(parents, labels.component == parents._pn, "left")
             .select(
@@ -563,9 +573,8 @@ def connected_component_labels(
         if changed == 0:
             compressed = True
             break
-    # A graph that contracts to empty exactly on round max_iters
-    # exits the loop without re-visiting the top-of-loop emptiness
-    # check — the tracked edge count covers that case for free.
+    # A graph that contracts to empty exactly on round max_iters exits
+    # the loop without re-visiting the top-of-loop emptiness check.
     if not converged and n_edges == 0:
         converged = True
     if not (converged and compressed):
@@ -575,8 +584,53 @@ def connected_component_labels(
             f"connected_component_labels: no fixpoint after {max_iters} "
             "rounds; labels may span partial components",
             RuntimeWarning,
-            stacklevel=2,
+            stacklevel=3,
         )
+    return labels
+
+
+def connected_component_labels(
+    pairs: DataFrame, nodes: DataFrame, id_col: str, max_iters: int = 25
+) -> DataFrame:
+    """Connected components over a pair list. Output: (id, component),
+    where component is the min id reachable from id and keeps the id
+    type (int, long or string).
+
+    The pairs become a symmetric edge set without self-loops, and its
+    count picks one of two paths:
+    - `n_edges <= _LOCAL_FINISH_EDGES`: one union-find task
+      (`edges.coalesce(1).mapInArrow`) labels every node in the one
+      job of its eager checkpoint, whatever the graph's diameter. The
+      bound is the scale limit of this path: about 100 B of Python
+      dict per node in a single worker.
+    - above it: the distributed HashMin loop (`_hashmin_labels`), two
+      actions per round plus one per compression round, with the edge
+      set shrinking as components contract; `max_iters` bounds both
+      loops, and an unconverged exit raises a RuntimeWarning (the
+      transitive-closure contract of dedup_transitive needs full
+      convergence).
+
+    Only nodes that appear in an edge are labeled by either path: an
+    isolated node (no pair, the overwhelming majority of a deduped
+    corpus) is its own component and is unioned back in at the end.
+    An empty pair list starts no labeling job at all."""
+    edges = (
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
+        .where(F.col("src") != F.col("dst"))
+        .dropDuplicates()
+        .localCheckpoint(eager=False)
+    )
+    # materializes the lazy checkpoint; the count picks the path
+    n_edges = edges.count()
+    if n_edges == 0:
+        labels = edges.select(
+            F.col("src").alias("node"), F.col("src").alias("component")
+        )
+    elif n_edges <= _LOCAL_FINISH_EDGES:
+        labels = _union_find_labels(edges)
+    else:
+        labels = _hashmin_labels(edges, n_edges, max_iters)
     isolated = (
         nodes.select(F.col(id_col).alias("node"))
         .join(labels.select("node"), "node", "left_anti")

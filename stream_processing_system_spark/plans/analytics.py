@@ -5096,11 +5096,11 @@ def copurchase_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def copurchase_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-component SIZE distribution of the co-purchase graph
-    (dedup.connected_component_labels — the pointer-jumping min-label
-    fixpoint — pointed at a user graph instead of a dup graph):
+    (dedup.connected_component_labels — min-label components —
+    pointed at a user graph instead of a dup graph):
     (component_size, n_components) rows, the fragmentation
     fingerprint. The oracle recomputes components with a recursive
-    transitive-closure CTE, so the iterative fixpoint is value-hash
+    transitive-closure CTE, so the components are value-hash
     verified here (dedup_transitive's own check is rows-only)."""
     from stream_processing_system_spark.operators.dedup import (
         connected_component_labels,
@@ -5816,11 +5816,11 @@ def user_geo_dbscan(
 
     Scale shape: the ε-neighborhood join is the 3×3 grid-blocked
     equi-join of `operators/geospatial.neighbor_pairs` (never
-    all-pairs); the component fixpoint is the pointer-jumping
-    min-label propagation of `dedup.connected_component_labels`,
-    running on the CORE graph only. Cluster ids are min-user-id
-    labels, fully deterministic; the oracle recomputes them with a
-    recursive transitive closure over a brute-force pair join."""
+    all-pairs); the components are the min-id labels of
+    `dedup.connected_component_labels`, run on the CORE graph only.
+    Cluster ids are min-user-id labels, fully deterministic; the
+    oracle recomputes them with a recursive transitive closure over a
+    brute-force pair join."""
     from stream_processing_system_spark.operators.dedup import (
         connected_component_labels,
     )

@@ -1,7 +1,14 @@
 """Topology submission surface + transitive (connected-components)
-dedup."""
+dedup.
+
+`connected_component_labels` has two paths chosen by edge count: one
+union-find task up to `dedup._LOCAL_FINISH_EDGES`, the distributed
+HashMin loop above it. The `cc_path` fixture runs a test on either;
+`distributed` lowers the bound to 0 so every non-empty graph loops."""
 
 from __future__ import annotations
+
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -33,7 +40,14 @@ def test_topology_unknown_app(spark):
         topology.submit(spark, "nope", "/tmp/x")
 
 
-def test_connected_components_chain(spark):
+@pytest.fixture(params=["local", "distributed"])
+def cc_path(request, monkeypatch):
+    if request.param == "distributed":
+        monkeypatch.setattr(dedup, "_LOCAL_FINISH_EDGES", 0)
+    return request.param
+
+
+def test_connected_components_chain(spark, cc_path):
     # chain 1-2-3 plus isolated 9: all of {1,2,3} collapse to 1
     pairs = spark.createDataFrame([(1, 2), (2, 3)], ["id_a", "id_b"])
     nodes = spark.createDataFrame([(1,), (2,), (3,), (9,)], ["doc_id"])
@@ -61,8 +75,13 @@ def test_dedup_transitive_collapses_chain(spark):
     }
     assert kept == {1, 50}
 
-@pytest.mark.slow  # ~42 s: 600-node path fixpoint — slow tier (r10)
-def test_cc_long_path_converges(spark):
+@pytest.mark.parametrize(
+    "cc_path",
+    # distributed: ~42 s of HashMin rounds on the worst-case diameter
+    ["local", pytest.param("distributed", marks=pytest.mark.slow)],
+    indirect=True,
+)
+def test_cc_long_path_converges(spark, cc_path):
     """Regression for the O(diameter) propagation pathology: a
     600-node PATH (worst-case diameter) must fully converge to a
     single min-label component within the default round budget —
@@ -84,7 +103,7 @@ def test_cc_long_path_converges(spark):
     assert (got["nc"], got["mn"], got["mx"]) == (1, 0, 0)
 
 
-def test_cc_two_rings(spark):
+def test_cc_two_rings(spark, cc_path):
     """Two disjoint rings label to their own minima."""
     ring1 = [(i, (i + 1) % 50) for i in range(50)]
     ring2 = [(100 + i, 100 + (i + 1) % 50) for i in range(50)]
@@ -100,3 +119,101 @@ def test_cc_two_rings(spark):
         r["component"] for r in labels.select("component").distinct().collect()
     }
     assert comps == {0, 100}
+
+
+def _replay_components(pairs, nodes):
+    """Pure-Python reference: min id of each node's component."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in nodes}
+
+
+_ID_POOLS = {
+    "int": (
+        "int",
+        list(range(-30, 30)) + [2**31 - 1, 2**31 - 2, -(2**31)],
+    ),
+    "long": ("bigint", [2**31 + k for k in range(40)] + [2**62, 2**63 - 1]),
+    "string": (
+        "string",
+        [f"d{k:02d}" for k in range(40)] + ["", "Z", "a", "é", "\uffff", "😀"],
+    ),
+}
+
+
+@pytest.fixture
+def tiny_arrow_batches(spark):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")  # the union-find sees many batches
+    yield
+    spark.conf.set(key, prev)
+
+
+@pytest.mark.parametrize("id_kind", sorted(_ID_POOLS))
+def test_cc_matches_union_find_replay(spark, cc_path, tiny_arrow_batches, id_kind):
+    """Both paths agree with a pure-Python union-find on random graphs
+    with self-loops, duplicate and reversed pairs, boundary ids and
+    isolated nodes, and keep the id type in `component`."""
+    spark_type, pool = _ID_POOLS[id_kind]
+    rng = random.Random(f"cc-{id_kind}")
+    nodes_df = spark.createDataFrame([(n,) for n in pool], f"node {spark_type}")
+    for n_pairs in (0, 12, 30):
+        pairs = [tuple(rng.sample(pool, 2)) for _ in range(n_pairs)]
+        if pairs:
+            pairs += [(a, a) for a in rng.sample(pool, 3)]
+            pairs += rng.sample(pairs, 4) + [(b, a) for a, b in rng.sample(pairs, 4)]
+            rng.shuffle(pairs)
+        pairs_df = spark.createDataFrame(
+            pairs, f"id_a {spark_type}, id_b {spark_type}"
+        )
+        out = dedup.connected_component_labels(pairs_df, nodes_df, "node")
+        assert dict(out.dtypes) == {"node": spark_type, "component": spark_type}
+        rows = out.collect()
+        assert len(rows) == len(pool)
+        got = {r["node"]: r["component"] for r in rows}
+        assert got == _replay_components(pairs, pool), (id_kind, n_pairs)
+
+
+def test_cc_empty_pairs_start_no_labeling(spark, monkeypatch):
+    """An empty pair list short-circuits on n_edges == 0: neither the
+    union-find task nor the HashMin loop is built."""
+
+    def refuse(*_):
+        raise AssertionError("labeling started on an empty edge set")
+
+    monkeypatch.setattr(dedup, "_union_find_labels", refuse)
+    monkeypatch.setattr(dedup, "_hashmin_labels", refuse)
+    pairs = spark.createDataFrame([], "id_a int, id_b int")
+    nodes = spark.createDataFrame([(7,), (2**31 - 1,)], "doc_id int")
+    out = dedup.connected_component_labels(pairs, nodes, "doc_id")
+    assert dict(out.dtypes) == {"doc_id": "int", "component": "int"}
+    assert sorted(tuple(r) for r in out.collect()) == [(7, 7), (2**31 - 1, 2**31 - 1)]
+
+
+def test_cc_small_chain_job_count(spark):
+    """A small graph costs four jobs, whatever its diameter: three for
+    the edge count (AQE submits its dedup and count exchanges as jobs
+    of their own) and one for the checkpoint of the one-task
+    union-find. The HashMin loop spent ~20 here."""
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(9)], "id_a long, id_b long")
+    nodes = spark.range(12).select(F.col("id").alias("doc_id"))
+    group = "cc-small-chain-job-count"
+    sc.setJobGroup(group, "connected_component_labels on a 10-node chain")
+    try:
+        labels = dedup.connected_component_labels(pairs, nodes, "doc_id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+    assert {r["component"] for r in labels.collect()} == {0, 10, 11}
