@@ -39,18 +39,40 @@ def _cleanup(input_dir: str) -> None:
         shutil.rmtree(base, ignore_errors=True)
 
 
+#: File-drop bytes per streaming state partition (see `_state_partitions`).
+_DROP_BYTES_PER_STATE_PARTITION = 256 * 1024
+
+
 @contextlib.contextmanager
-def _state_partitions(spark: SparkSession, n: int = 8):
-    """Pin spark.sql.shuffle.partitions to a small value for the
-    duration of a streaming-query START (the value is frozen into the
-    checkpoint at first batch): every stateful operator materializes
-    one state store PER shuffle partition PER batch, and at these
-    state sizes (10^2-10^6 keys) 32 stores are pure fixed overhead —
-    store init + commit + checkpoint fsync dominate the actual work.
-    At real scale you'd size this to cluster cores instead; it's a
-    per-QUERY knob precisely so the parity wrappers and a production
-    deployment can differ. Restores the session value on exit."""
+def _state_partitions(spark: SparkSession, input_dir: str):
+    """Size spark.sql.shuffle.partitions from the drain's input for the
+    duration of a streaming-query START. The value is frozen into the
+    checkpoint at its first batch, so it sets how many state stores
+    each stateful operator keeps. Restores the session value on exit.
+
+    Rule: ceil(bytes / _DROP_BYTES_PER_STATE_PARTITION), clamped to
+    [1, defaultParallelism]. `bytes` is the size of every file under
+    the run's scratch base, the parent of `input_dir`, so the two-input
+    join twins count both drops. The drop must be on a local scratch
+    disk that `os.walk` can read.
+
+    Why: each store pays a fixed init + commit + checkpoint cost per
+    micro-batch (and one Python-worker task for pandas state) whatever
+    its row count. The drops are 19-405 KB at sf0.01 and 0.2-4.2 MB at
+    sf0.1 (12.7 MB for the soak). On 4 cores, 256 KiB per store instead
+    of a fixed 8 stores cut `crane_stream` pass CPU from 7.7 s to 3.0 s
+    (state commit 2.6 s -> 0.12 s per pass) and kept the sf0.1 twins
+    flat or faster. The answer does not depend on the count; a larger
+    constant serializes real work on the bigger drops."""
     key = "spark.sql.shuffle.partitions"
+    base = os.path.dirname(input_dir.rstrip("/"))
+    drop = sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(base)
+        for f in files
+    )
+    n = -(-drop // _DROP_BYTES_PER_STATE_PARTITION)
+    n = max(1, min(n, spark.sparkContext.defaultParallelism))
     prev = spark.conf.get(key, None)
     spark.conf.set(key, str(n))
     try:
@@ -68,7 +90,7 @@ def stream_wordcount_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     input_dir, ckpt, run = _scratch("wc")
     docs = load_table(spark, sf_dir, "documents").select(F.col("text"))
     docs.write.mode("overwrite").text(input_dir)
-    with _state_partitions(spark):
+    with _state_partitions(spark, input_dir):
         result = jobs.stream_wordcount(spark, input_dir, ckpt, name=f"wc_{run}")
     _cleanup(input_dir)
     return result.select(F.col("word"), F.col("cnt"))
@@ -94,18 +116,10 @@ def stream_dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    with _state_partitions(spark):
-        q = (
-            keepers.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"dd_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _state_partitions(spark, input_dir):
+        drained = jobs._drain_to_table(keepers, f"dd_{run}", ckpt)
     _cleanup(input_dir)
-    return spark.table(f"dd_{run}")
+    return drained
 
 
 def stream_dedup_watermark_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -137,18 +151,12 @@ def stream_dedup_watermark_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["digest"])
         .select("digest")
     )
-    with _state_partitions(spark):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(f"ddwm_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    with _state_partitions(spark, input_dir):
+        drained = jobs._drain_to_table(
+            deduped, f"ddwm_{run}", ckpt, output_mode="append"
         )
-        q.awaitTermination()
     _cleanup(input_dir)
-    return spark.table(f"ddwm_{run}").orderBy("digest")
+    return drained.orderBy("digest")
 
 
 def stream_events_per_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,18 +182,10 @@ def stream_events_per_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    with _state_partitions(spark):
-        q = (
-            result.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"eph_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _state_partitions(spark, input_dir):
+        drained = jobs._drain_to_table(result, f"eph_{run}", ckpt)
     _cleanup(input_dir)
-    return spark.table(f"eph_{run}").orderBy("hour_start")
+    return drained.orderBy("hour_start")
 
 
 def stream_running_counts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,7 +198,7 @@ def stream_running_counts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     input_dir, ckpt, run = _scratch("rc")
     docs = load_table(spark, sf_dir, "documents").select(F.col("text"))
     docs.write.mode("overwrite").text(input_dir)
-    with _state_partitions(spark):
+    with _state_partitions(spark, input_dir):
         tbl = jobs.stream_running_counts(spark, input_dir, ckpt, name=f"rc_{run}")
     _cleanup(input_dir)
     return tbl.groupBy("key").agg(F.max("cnt").alias("cnt"))
@@ -226,7 +226,7 @@ def stream_user_stats_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema("user_id bigint, value_u bigint").parquet(
         input_dir
     )
-    with _state_partitions(spark):
+    with _state_partitions(spark, input_dir):
         drained = jobs.stream_user_stats(spark, stream, ckpt, name=f"tws_{run}")
     _cleanup(input_dir)
     return (
@@ -279,18 +279,10 @@ def stream_enriched_revenue_events(spark: SparkSession, sf_dir: str) -> DataFram
             "n_name", "n_purchases", (F.col("_s") / F.lit(10000.0)).alias("revenue")
         )
     )
-    with _state_partitions(spark):
-        q = (
-            result.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"ser_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _state_partitions(spark, input_dir):
+        drained = jobs._drain_to_table(result, f"ser_{run}", ckpt)
     _cleanup(input_dir)
-    return spark.table(f"ser_{run}").orderBy("n_name")
+    return drained.orderBy("n_name")
 
 
 def stream_reddit_top_users_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,7 +316,7 @@ def stream_reddit_top_users_events(spark: SparkSession, sf_dir: str) -> DataFram
     # k > distinct users at every SF (so nothing is cut before the
     # numeric re-rank) but small enough that the job's top-k priority
     # queue stays O(k) memory
-    with _state_partitions(spark):
+    with _state_partitions(spark, input_dir):
         drained = jobs.stream_reddit_top_users(
             spark, input_dir, ckpt, k=1_000_000, name=f"rd_{run}"
         )
@@ -355,7 +347,7 @@ def stream_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select("ts", "user_id")
     events.write.mode("overwrite").parquet(input_dir)
     stream = spark.readStream.schema("ts timestamp, user_id long").parquet(input_dir)
-    with _state_partitions(spark):
+    with _state_partitions(spark, input_dir):
         per_session = jobs.stream_session_windows(
             spark, stream, ckpt, gap="30 minutes", watermark="1 hour", name=f"ss_{run}"
         )
@@ -385,7 +377,7 @@ def stream_session_entry_exit(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(
         "ts timestamp, user_id long, event_type string, event_id long"
     ).parquet(input_dir)
-    with _state_partitions(spark):
+    with _state_partitions(spark, input_dir):
         per = jobs.stream_session_endpoints(
             spark, stream, ckpt, gap="30 minutes", watermark="1 hour",
             name=f"see_{run}",
@@ -417,18 +409,10 @@ def stream_host_report_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = stream.where(F.col("event_type") == "click")
     route = F.concat(F.col("user_id").cast("string"), F.lit(":"), F.col("props"))
     result = host_report(kept.withColumn("route", route), "user_id", F.col("route"))
-    with _state_partitions(spark):
-        q = (
-            result.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"q3_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _state_partitions(spark, input_dir):
+        drained = jobs._drain_to_table(result, f"q3_{run}", ckpt)
     _cleanup(input_dir)
-    return spark.table(f"q3_{run}")
+    return drained
 
 
 def stream_purchase_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -451,7 +435,7 @@ def stream_purchase_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = "user_id long, ts timestamp"
     purchases = spark.readStream.schema(schema).parquet(p_dir)
     clicks = spark.readStream.schema(schema).parquet(c_dir)
-    with _state_partitions(spark):
+    with _state_partitions(spark, input_dir):
         joined = jobs.stream_stream_join(
             spark, purchases, clicks, ckpt, within="1 hour", name=f"ssj_{run}"
         )
@@ -484,18 +468,10 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    with _state_partitions(spark):
-        q = (
-            result.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"slw_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _state_partitions(spark, input_dir):
+        drained = jobs._drain_to_table(result, f"slw_{run}", ckpt)
     _cleanup(input_dir)
-    return spark.table(f"slw_{run}").orderBy("window_start")
+    return drained.orderBy("window_start")
 
 
 def stream_heavy_hitters_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -538,18 +514,9 @@ def stream_heavy_hitters_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c.j", "c.b")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    with _state_partitions(spark):
-        q = (
-            cells.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"hh_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _state_partitions(spark, input_dir):
+        cell_tbl = jobs._drain_to_table(cells, f"hh_{run}", ckpt)
     _cleanup(input_dir)
-    cell_tbl = spark.table(f"hh_{run}")
     probes = (
         load_table(spark, sf_dir, "events")
         .select("user_id")
@@ -615,18 +582,10 @@ def stream_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_ticks"),
         )
     )
-    with _state_partitions(spark):
-        q = (
-            result.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"ohlc_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _state_partitions(spark, input_dir):
+        drained = jobs._drain_to_table(result, f"ohlc_{run}", ckpt)
     _cleanup(input_dir)
-    return spark.table(f"ohlc_{run}").orderBy("event_type", "day")
+    return drained.orderBy("event_type", "day")
 
 
 def stream_purchase_click_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -666,7 +625,7 @@ def stream_purchase_click_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = "user_id long, ts timestamp"
     purchases = spark.readStream.schema(schema).parquet(p_dir)
     clicks = spark.readStream.schema(schema).parquet(c_dir)
-    with _state_partitions(spark):
+    with _state_partitions(spark, input_dir):
         joined = jobs.stream_stream_join_outer(
             spark, purchases, clicks, ckpt, within="1 hour", name=f"ssjo_{run}"
         )
@@ -699,7 +658,7 @@ def stream_upsert_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("value_u"),
     )
     events.repartition(4).write.mode("overwrite").parquet(input_dir)
-    with _state_partitions(spark):
+    with _state_partitions(spark, input_dir):
         serving = jobs.stream_upsert_totals(
             spark, input_dir, ckpt, state_dir, name=f"ups_{run}"
         )
@@ -732,7 +691,7 @@ def stream_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("g"), F.col("user_id").alias("member")
     )
     events.repartition(4).write.mode("overwrite").parquet(input_dir)
-    with _state_partitions(spark):
+    with _state_partitions(spark, input_dir):
         sketch = jobs.stream_kmv_sketches(
             spark, input_dir, ckpt, state_dir, name=f"kmv_{run}", k=256
         )
@@ -810,7 +769,7 @@ def stream_soak_lineitem_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch here, so append is exact)
         batch_df.write.mode("append").parquet(out_dir)
 
-    with _state_partitions(spark):
+    with _state_partitions(spark, input_dir):
         try:
             q = (
                 per_key.writeStream.outputMode("update")
@@ -885,22 +844,14 @@ def stream_sax_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "day")
         .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("nd"))
     )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"sax_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _state_partitions(spark, input_dir):
+        drained = jobs._drain_to_table(state, f"sax_{run}", ckpt)
     _cleanup(input_dir)
     # localCheckpoint the drained snapshot (<= types x days rows): the
     # SAX tail self-joins the daily frame, and re-referencing the same
     # MemoryPlan yields conflicting attribute ids.
     daily = (
-        spark.table(f"sax_{run}")
+        drained
         .select(
             "event_type",
             "day",
@@ -951,19 +902,11 @@ def stream_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "day")
         .agg(F.sum("v").alias("cent"))
     )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"hw_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _state_partitions(spark, input_dir):
+        drained = jobs._drain_to_table(state, f"hw_{run}", ckpt)
     _cleanup(input_dir)
     daily = (
-        spark.table(f"hw_{run}")
+        drained
         .select("event_type", "day", "cent")
         .localCheckpoint(eager=True)
     )
@@ -995,19 +938,11 @@ def stream_kalman_level(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "day")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"kal_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _state_partitions(spark, input_dir):
+        drained = jobs._drain_to_table(state, f"kal_{run}", ckpt)
     _cleanup(input_dir)
     daily = (
-        spark.table(f"kal_{run}")
+        drained
         .select("event_type", "day", "c")
         .localCheckpoint(eager=True)
     )
@@ -1045,19 +980,11 @@ def stream_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "day")
         .agg(F.sum("v").alias("cent"))
     )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"mdd_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _state_partitions(spark, input_dir):
+        drained = jobs._drain_to_table(state, f"mdd_{run}", ckpt)
     _cleanup(input_dir)
     daily = (
-        spark.table(f"mdd_{run}")
+        drained
         .select("event_type", "day", "cent")
         .localCheckpoint(eager=True)
     )
@@ -1080,7 +1007,6 @@ def stream_spout_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of a pytest-only one."""
     from stream_processing_system_spark.plans.reference import wordcount
     from stream_processing_system_spark.sources import spout_source
-    from stream_processing_system_spark.streaming.jobs import _drain_to_table
 
     spout_source.register(spark)
     input_dir, ckpt, run = _scratch("spoutwc")
@@ -1092,8 +1018,8 @@ def stream_spout_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
         .select(F.col("line"))
     )
-    with _state_partitions(spark):
-        result = _drain_to_table(wordcount(lines), f"spoutwc_{run}", ckpt)
+    with _state_partitions(spark, input_dir):
+        result = jobs._drain_to_table(wordcount(lines), f"spoutwc_{run}", ckpt)
     _cleanup(input_dir)
     return result.select("word", "cnt")
 
@@ -1131,19 +1057,11 @@ def stream_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "day")
         .agg(F.sum("v").alias("cent"))
     )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"sph_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _state_partitions(spark, input_dir):
+        drained = jobs._drain_to_table(state, f"sph_{run}", ckpt)
     _cleanup(input_dir)
     daily = (
-        spark.table(f"sph_{run}")
+        drained
         .select("event_type", "day", F.expr("cent div 100").alias("x"))
         .localCheckpoint(eager=True)
     )
@@ -1182,19 +1100,11 @@ def stream_ar2_yule_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "day")
         .agg(F.sum("v").alias("cent"))
     )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"sar2_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _state_partitions(spark, input_dir):
+        drained = jobs._drain_to_table(state, f"sar2_{run}", ckpt)
     _cleanup(input_dir)
     daily = (
-        spark.table(f"sar2_{run}")
+        drained
         .select("event_type", "day", F.expr("cent div 100").alias("x"))
         .localCheckpoint(eager=True)
     )
@@ -1241,18 +1151,10 @@ def stream_cvm_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("h").alias("cb"),
         )
     )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"scvm_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _state_partitions(spark, input_dir):
+        drained = jobs._drain_to_table(state, f"scvm_{run}", ckpt)
     _cleanup(input_dir)
-    cells = spark.table(f"scvm_{run}").localCheckpoint(eager=True)
+    cells = drained.localCheckpoint(eager=True)
     return cvm_from_cells(cells, query="stream_cvm_drift")
 
 
@@ -1296,18 +1198,10 @@ def stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("h").alias("cb"),
         )
     )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"sks_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _state_partitions(spark, input_dir):
+        drained = jobs._drain_to_table(state, f"sks_{run}", ckpt)
     _cleanup(input_dir)
-    cells = spark.table(f"sks_{run}").localCheckpoint(eager=True)
+    cells = drained.localCheckpoint(eager=True)
     return ks_from_cells(cells)
 
 
@@ -1350,18 +1244,10 @@ def stream_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("h").alias("cb"),
         )
     )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"sad_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _state_partitions(spark, input_dir):
+        drained = jobs._drain_to_table(state, f"sad_{run}", ckpt)
     _cleanup(input_dir)
-    cells = spark.table(f"sad_{run}").localCheckpoint(eager=True)
+    cells = drained.localCheckpoint(eager=True)
     return ad_from_cells(cells)
 
 
@@ -1405,18 +1291,10 @@ def stream_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("h").alias("cb"),
         )
     )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"scd2_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _state_partitions(spark, input_dir):
+        drained = jobs._drain_to_table(state, f"scd2_{run}", ckpt)
     _cleanup(input_dir)
-    cells = spark.table(f"scd2_{run}").localCheckpoint(eager=True)
+    cells = drained.localCheckpoint(eager=True)
     return cliffs_from_cells(cells)
 
 
@@ -1458,16 +1336,8 @@ def stream_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("h").alias("cb"),
         )
     )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"smm_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _state_partitions(spark, input_dir):
+        drained = jobs._drain_to_table(state, f"smm_{run}", ckpt)
     _cleanup(input_dir)
-    cells = spark.table(f"smm_{run}").localCheckpoint(eager=True)
+    cells = drained.localCheckpoint(eager=True)
     return mood_from_cells(cells)

@@ -13,6 +13,9 @@ for tests and on a 1000-executor cluster unchanged:
 - shuffle.partitions defaults to the local core count; on a real
   cluster, override via `extra_conf` (rule of thumb: 2-3x total
   cores, or let AQE coalesce from a high initial value).
+- Streaming state partitions: each availableNow twin in
+  `plans/streaming_parity.py` sets its own shuffle.partitions (the
+  state-store count) from its file-drop bytes at query start.
 """
 
 from __future__ import annotations

@@ -37,9 +37,9 @@ def _drain_to_table(
 ) -> DataFrame:
     """Run an aggregated streaming DataFrame to completion
     (availableNow = the END-marker drain) into an in-memory table and
-    return it as a batch DataFrame. For production sinks swap the
-    memory format for parquet/kafka/foreachBatch — the plan is
-    unchanged."""
+    return it as a batch DataFrame, dropping the sink's temp view.
+    For production sinks swap the memory format for
+    parquet/kafka/foreachBatch — the plan is unchanged."""
     q = (
         result.writeStream.outputMode(output_mode)
         .format("memory")
@@ -49,7 +49,12 @@ def _drain_to_table(
         .start()
     )
     q.awaitTermination()
-    return result.sparkSession.table(query_name)
+    # The returned frame keeps the sink's rows through its resolved
+    # plan; the temp view would pin them in the driver for the session.
+    spark = result.sparkSession
+    table = spark.table(query_name)
+    spark.catalog.dropTempView(query_name)
+    return table
 
 
 def stream_wordcount(
@@ -174,16 +179,7 @@ def stream_stream_join(
             f"l_key = r_key AND r_ts >= l_ts AND r_ts <= l_ts + interval {within}"
         ),
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain_to_table(joined, name, checkpoint_dir, output_mode="append")
 
 
 def stream_wordcount_to_files(
@@ -376,16 +372,7 @@ def stream_running_counts(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        counts.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain_to_table(counts, name, checkpoint_dir, output_mode="update")
 
 
 def stream_stream_join_outer(
@@ -426,16 +413,7 @@ def stream_stream_join_outer(
         ),
         "leftOuter",
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain_to_table(joined, name, checkpoint_dir, output_mode="append")
 
 
 def stream_upsert_totals(

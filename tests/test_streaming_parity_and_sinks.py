@@ -3,6 +3,10 @@
 from __future__ import annotations
 
 import glob
+import os
+import threading
+
+import pytest
 
 from stream_processing_system_spark.plans import streaming_parity
 from stream_processing_system_spark.streaming import jobs
@@ -42,6 +46,80 @@ def test_stream_running_counts_matches_batch_oracle(spark, sf_dir):
 
     df = streaming_parity.stream_running_counts_docs(spark, sf_dir)
     assert_matches_oracle(df, sf_dir, contract.oracle_sql()["stream_running_counts"])
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def test_drains_leave_no_memory_sink_view(spark, sf_dir):
+    """The memory sink's catalog view pins its rows in the driver for
+    the session; a drain drops it once the result is resolved, and the
+    result still reads back oracle-exact."""
+    import __spark_entry__ as contract
+
+    before = _temp_views(spark)
+    for fn, name in (
+        (streaming_parity.stream_wordcount_docs, "stream_wordcount"),
+        (streaming_parity.stream_running_counts_docs, "stream_running_counts"),
+    ):
+        df = fn(spark, sf_dir)
+        assert _temp_views(spark) == before, name
+        assert_matches_oracle(df, sf_dir, contract.oracle_sql()[name])
+
+
+def test_state_partitions_sized_from_drop_bytes(spark, tmp_path):
+    key = "spark.sql.shuffle.partitions"
+    cap = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get(key)
+    input_dir = tmp_path / "in"
+    input_dir.mkdir()
+    (input_dir / "part-0.txt").write_text("a few words\n")
+    with streaming_parity._state_partitions(spark, str(input_dir)):
+        assert spark.conf.get(key) == "1"
+    assert spark.conf.get(key) == prev
+
+    # a sparse file: its size counts without writing the bytes
+    big = (cap + 1) * streaming_parity._DROP_BYTES_PER_STATE_PARTITION
+    with open(input_dir / "part-1.bin", "wb") as f:
+        os.truncate(f.fileno(), big)
+    with pytest.raises(RuntimeError):
+        with streaming_parity._state_partitions(spark, str(input_dir)):
+            assert spark.conf.get(key) == str(cap)
+            raise RuntimeError("drain failed")
+    assert spark.conf.get(key) == prev
+
+
+def test_stream_wordcount_docs_drains_with_one_state_store(spark, sf_dir):
+    """A small drop gets one state store, not a fixed count."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    seen: list[int] = []
+    done = threading.Event()
+
+    class _Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            ops = event.progress.stateOperators
+            if ops:
+                seen.append(ops[0].numShufflePartitions)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            done.set()
+
+    listener = _Listener()
+    spark.streams.addListener(listener)
+    try:
+        streaming_parity.stream_wordcount_docs(spark, sf_dir)
+        assert done.wait(60)
+    finally:
+        spark.streams.removeListener(listener)
+    assert seen and set(seen) == {1}, seen
 
 
 def test_stream_wordcount_to_files_foreachbatch(spark, tmp_path):
