@@ -6044,20 +6044,24 @@ def events_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicitly on both engines (the CvM precedent, ADVICE r7):
     otherwise SUM's NULL-skip vs the oracle's CASE WHEN ELSE 1
     diverge on a NULL-ts row."""
-    return ks_from_cells(halfsplit_value_cells(spark, sf_dir))
+    return ks_from_cells(halfsplit_value_cells(load_table(spark, sf_dir, "events")))
 
 
-def halfsplit_value_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+def halfsplit_value_cells(events: DataFrame) -> DataFrame:
     """The shared (event_type, cent-value, first-half count,
     second-half count) frame the two-sample drift family tests on —
-    KS / CvM / Anderson–Darling / Cliff's delta all reduce this one
-    exact-integer cell table (same fixed 2024-01-16 split, NULL ts
-    and NULL value filtered on both engines). The cell counts are a
-    mergeable monoid, which is what lets the streaming twins
-    maintain exactly this frame as aggregation state."""
-    events = load_table(spark, sf_dir, "events").where(
-        F.col("value").isNotNull() & F.col("ts").isNotNull()
-    )
+    KS / CvM / Anderson–Darling / Cliff's delta / Mood's median all
+    reduce this one exact-integer cell table (fixed 2024-01-16
+    split). `events` is any frame with (ts, event_type, value): the
+    batch plans pass the events table, the streaming twins pass
+    their file-drop stream, so the cells are defined once. The cell
+    counts are a mergeable monoid, so a streaming aggregation drains
+    to exactly the batch frame.
+
+    NULL value and NULL ts rows are filtered explicitly: SUM's
+    NULL-skip of the half indicator would drop a NULL-ts row that
+    the oracle's CASE WHEN counts into ca."""
+    events = events.where(F.col("value").isNotNull() & F.col("ts").isNotNull())
     half = (F.col("ts") >= F.lit("2024-01-16")).cast("int")
     return events.groupBy(
         "event_type",
@@ -12785,7 +12789,7 @@ def events_cvm_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     CASE WHEN counts it into ca — a latent parity divergence
     (ADVICE r7) closed by the same `ts IS NOT NULL` predicate on
     both engines."""
-    return cvm_from_cells(halfsplit_value_cells(spark, sf_dir))
+    return cvm_from_cells(halfsplit_value_cells(load_table(spark, sf_dir, "events")))
 
 
 def cvm_from_cells(
@@ -13147,7 +13151,7 @@ def events_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the BOUNDED cent-domain frame, one per-type reduce — the
     CvM plan's shape exactly; at 100 TB the post-aggregate frame
     stays |types|×|cent domain| regardless of row count."""
-    return ad_from_cells(halfsplit_value_cells(spark, sf_dir))
+    return ad_from_cells(halfsplit_value_cells(load_table(spark, sf_dir, "events")))
 
 
 def ad_from_cells(cells: DataFrame) -> DataFrame:
@@ -13242,7 +13246,7 @@ def events_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: identical to the KS plan — one bounded cell aggregate,
     one cumulative window, one per-type reduce."""
-    return cliffs_from_cells(halfsplit_value_cells(spark, sf_dir))
+    return cliffs_from_cells(halfsplit_value_cells(load_table(spark, sf_dir, "events")))
 
 
 def cliffs_from_cells(cells: DataFrame) -> DataFrame:
@@ -14177,7 +14181,7 @@ def events_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative window for the median pick, a broadcast-sized median
     join back onto the CELL frame (never the rows), one per-type
     reduce."""
-    return mood_from_cells(halfsplit_value_cells(spark, sf_dir))
+    return mood_from_cells(halfsplit_value_cells(load_table(spark, sf_dir, "events")))
 
 
 def mood_from_cells(cells: DataFrame) -> DataFrame:
@@ -14498,7 +14502,7 @@ def events_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: the KS plan's — one bounded cell aggregate, cumulative
     windows over the cent domain, one per-type reduce."""
-    cells = halfsplit_value_cells(spark, sf_dir)
+    cells = halfsplit_value_cells(load_table(spark, sf_dir, "events"))
     d38 = "decimal(38,0)"
     w_cum = (
         Window.partitionBy("event_type")

@@ -160,13 +160,25 @@ def stream_stream_join(
     within: str = "1 hour",
     watermark: str = "2 hours",
     name: str = "ss_join",
+    how: str = "inner",
 ) -> DataFrame:
-    """Stream-stream inner join with event-time bounds (capability
-    beyond the reference, which has no joins at all — SURVEY.md §2.3):
-    both sides watermarked, rows match when keys are equal AND the
-    right event lands within `within` after the left event. Watermarks
+    """Stream-stream join with event-time bounds (capability beyond
+    the reference, which has no joins at all — SURVEY.md §2.3): both
+    sides watermarked, rows match when keys are equal AND the right
+    event lands within `within` after the left event. Watermarks
     bound the join state the engine must retain — the difference
-    between a streaming join that runs forever and one that OOMs."""
+    between a streaming join that runs forever and one that OOMs.
+
+    `how="leftOuter"`: matched pairs emit as they meet; an UNMATCHED
+    left row emits with a NULL right side only after the watermark
+    passes the end of its match window (the engine must prove no
+    future right row can match before it commits the null). Spark's
+    documented caveat applies: left rows whose match window is still
+    inside the final watermark horizon when a finite stream ends never
+    emit their null-extended result. Callers wanting deterministic
+    totals must feed left rows whose windows provably close (see
+    plans/streaming_parity.stream_purchase_click_outer: it cuts the
+    output at max_ts − watermark − within − margin)."""
     l = left.withWatermark(ts_col, watermark).select(
         F.col(join_key).alias("l_key"), F.col(ts_col).alias("l_ts")
     )
@@ -178,6 +190,7 @@ def stream_stream_join(
         F.expr(
             f"l_key = r_key AND r_ts >= l_ts AND r_ts <= l_ts + interval {within}"
         ),
+        how,
     )
     return _drain_to_table(joined, name, checkpoint_dir, output_mode="append")
 
@@ -375,79 +388,36 @@ def stream_running_counts(
     return _drain_to_table(counts, name, checkpoint_dir, output_mode="update")
 
 
-def stream_stream_join_outer(
-    spark: SparkSession,
-    left: DataFrame,
-    right: DataFrame,
-    checkpoint_dir: str,
-    join_key: str = "user_id",
-    ts_col: str = "ts",
-    within: str = "1 hour",
-    watermark: str = "2 hours",
-    name: str = "ss_join_outer",
-) -> DataFrame:
-    """LEFT OUTER stream-stream join with event-time bounds: matched
-    pairs emit as they meet; an UNMATCHED left row emits with a NULL
-    right side only after the watermark passes the end of its match
-    window (the engine must prove no future right row can match
-    before it commits the null — the hardest streaming-join
-    semantic, and the one that requires watermarks to exist at all).
-
-    Spark's documented caveat applies: left rows whose match window
-    is still inside the final watermark horizon when a finite stream
-    ends never emit their null-extended result. Callers wanting
-    deterministic totals must feed left rows whose windows provably
-    close (see plans/streaming_parity.stream_purchase_click_outer:
-    it cuts the left stream at max_ts − watermark − within − margin).
-    """
-    l = left.withWatermark(ts_col, watermark).select(
-        F.col(join_key).alias("l_key"), F.col(ts_col).alias("l_ts")
-    )
-    r = right.withWatermark(ts_col, watermark).select(
-        F.col(join_key).alias("r_key"), F.col(ts_col).alias("r_ts")
-    )
-    joined = l.join(
-        r,
-        F.expr(
-            f"l_key = r_key AND r_ts >= l_ts AND r_ts <= l_ts + interval {within}"
-        ),
-        "leftOuter",
-    )
-    return _drain_to_table(joined, name, checkpoint_dir, output_mode="append")
-
-
-def stream_upsert_totals(
+def _epoch_rotated_sink(
     spark: SparkSession,
     input_dir: str,
+    schema: str,
     checkpoint_dir: str,
     state_dir: str,
-    name: str = "upsert_totals",
+    name: str,
+    merge,
 ) -> DataFrame:
-    """Streaming INCREMENTAL-VIEW-MAINTENANCE sink: each micro-batch
-    is aggregated to a per-user delta and additively merged
-    (`operators/ivm.merge_additive`) into a parquet serving table via
-    foreachBatch — the keyed-upsert pattern every streaming→OLAP
-    serving path uses, with the aggregate state living in the SINK
-    table instead of the state store (so the stream side carries no
-    streaming aggregation at all and restarts are state-free).
+    """Drain a parquet file-drop one file per micro-batch into an
+    epoch-rotated parquet serving table and return the final version.
+    `merge(batch_df, base)` builds the next serving version from the
+    micro-batch and the last committed version (`base` is None before
+    the first commit).
 
     Exactly-once: serving versions are directory-rotated
     (`serving_v{epoch}`) and a marker file records the last committed
     epoch; a replayed micro-batch (at-least-once delivery after a
     checkpoint restore) sees epoch <= committed and becomes a no-op
-    instead of double-adding — the transactional-marker idempotence
-    idiom, file-system edition. `bolt/bolt.go:286-310`'s END-marker
-    single write is the degenerate one-epoch case of this.
-
-    Returns the final serving table after the availableNow drain.
-    """
+    instead of merging twice — the transactional-marker idempotence
+    idiom, file-system edition. The marker is replaced atomically
+    (`os.replace`) only after the new version is fully written, and
+    the old version is deleted only after that commit.
+    `bolt/bolt.go:286-310`'s END-marker single write is the degenerate
+    one-epoch case of this."""
     import os
     import shutil
 
-    from stream_processing_system_spark.operators.ivm import merge_additive
-
     stream = (
-        spark.readStream.schema("user_id bigint, value_u bigint")
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(input_dir)
     )
@@ -465,17 +435,8 @@ def stream_upsert_totals(
         last = _committed()
         if epoch_id <= last:
             return  # replayed batch: already merged, skip (idempotence)
-        delta = batch_df.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n_events"), F.sum("value_u").alias("sum_u")
-        )
-        if last >= 0:
-            base = spark.read.parquet(_serving(last))
-            merged = merge_additive(
-                base, delta, keys=["user_id"], measures=["n_events", "sum_u"]
-            )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(_serving(epoch_id))
+        base = spark.read.parquet(_serving(last)) if last >= 0 else None
+        merge(batch_df, base).write.mode("overwrite").parquet(_serving(epoch_id))
         tmp = marker + ".tmp"
         with open(tmp, "w") as f:
             f.write(str(int(epoch_id)))
@@ -492,6 +453,41 @@ def stream_upsert_totals(
     )
     q.awaitTermination()
     return spark.read.parquet(_serving(_committed()))
+
+
+def stream_upsert_totals(
+    spark: SparkSession,
+    input_dir: str,
+    checkpoint_dir: str,
+    state_dir: str,
+    name: str = "upsert_totals",
+) -> DataFrame:
+    """Streaming INCREMENTAL-VIEW-MAINTENANCE sink: each micro-batch
+    is aggregated to a per-user delta and additively merged
+    (`operators/ivm.merge_additive`) into a parquet serving table via
+    foreachBatch — the keyed-upsert pattern every streaming→OLAP
+    serving path uses, with the aggregate state living in the SINK
+    table instead of the state store (so the stream side carries no
+    streaming aggregation at all and restarts are state-free).
+    Exactly-once through `_epoch_rotated_sink`'s committed-epoch
+    replay guard. Returns the final serving table after the
+    availableNow drain."""
+    from stream_processing_system_spark.operators.ivm import merge_additive
+
+    def _merge(batch_df: DataFrame, base: DataFrame | None) -> DataFrame:
+        delta = batch_df.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n_events"), F.sum("value_u").alias("sum_u")
+        )
+        if base is None:
+            return delta
+        return merge_additive(
+            base, delta, keys=["user_id"], measures=["n_events", "sum_u"]
+        )
+
+    return _epoch_rotated_sink(
+        spark, input_dir, "user_id bigint, value_u bigint", checkpoint_dir,
+        state_dir, name, _merge,
+    )
 
 
 def stream_kmv_sketches(
@@ -512,60 +508,21 @@ def stream_kmv_sketches(
     no matter how the input was micro-batched — which is exactly what
     lets the streaming query share the BATCH oracle.
 
-    Same directory-rotation + committed-epoch replay guard as
-    `stream_upsert_totals` (exactly-once on at-least-once replay).
-    Returns the final serving sketch frame (group, h, rn)."""
-    import os
-    import shutil
-
+    Exactly-once through the same `_epoch_rotated_sink` replay guard
+    as `stream_upsert_totals`. Returns the final serving sketch frame
+    (group, h, rn)."""
     from pyspark.sql import Window
 
     from stream_processing_system_spark.operators.sketch_kmv import kmv_sketch
 
-    stream = (
-        spark.readStream.schema("g string, member bigint")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(input_dir)
-    )
-    marker = os.path.join(state_dir, "_committed_epoch")
-
-    def _committed() -> int:
-        if os.path.exists(marker):
-            return int(open(marker).read().strip())
-        return -1
-
-    def _serving(epoch: int) -> str:
-        return os.path.join(state_dir, f"serving_v{epoch}")
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        last = _committed()
-        if epoch_id <= last:
-            return
-        delta = kmv_sketch(batch_df, "g", "member", k=k).select("g", "h")
-        if last >= 0:
-            base = spark.read.parquet(_serving(last)).select("g", "h")
-            merged_vals = base.unionByName(delta).distinct()
-        else:
-            merged_vals = delta
+    def _merge(batch_df: DataFrame, base: DataFrame | None) -> DataFrame:
+        vals = kmv_sketch(batch_df, "g", "member", k=k).select("g", "h")
+        if base is not None:
+            vals = base.select("g", "h").unionByName(vals).distinct()
         w = Window.partitionBy("g").orderBy("h")
-        merged = (
-            merged_vals.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-        )
-        merged.write.mode("overwrite").parquet(_serving(epoch_id))
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(int(epoch_id)))
-        os.replace(tmp, marker)
-        if last >= 0:
-            shutil.rmtree(_serving(last), ignore_errors=True)
+        return vals.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _epoch_rotated_sink(
+        spark, input_dir, "g string, member bigint", checkpoint_dir,
+        state_dir, name, _merge,
     )
-    q.awaitTermination()
-    return spark.read.parquet(_serving(_committed()))

@@ -104,53 +104,64 @@ def test_stream_session_windows(spark, tmp_path):
     assert per_user == {1: 2, 2: 1}
 
 
-def test_upsert_sink_multi_batch_and_restart_idempotent(spark, tmp_path):
-    """The IVM upsert sink must (a) actually process multiple
+@pytest.mark.parametrize("sink", ["upsert", "kmv"])
+def test_upsert_sink_multi_batch_and_restart_idempotent(spark, tmp_path, sink):
+    """An epoch-rotated serving sink (the IVM upsert and the KMV sketch
+    merge share the protocol) must (a) actually process multiple
     micro-batches (one per input file), (b) survive a restart with
-    the same checkpoint without double-adding (replay guard), and
-    (c) match the batch aggregate exactly."""
-    import os
+    the same checkpoint without merging twice (replay guard), and
+    (c) match the batch result exactly."""
+    import functools
 
-    from pyspark.sql import functions as F
-
-    from stream_processing_system_spark.streaming import jobs
+    from stream_processing_system_spark.operators.sketch_kmv import kmv_sketch
 
     input_dir = str(tmp_path / "in")
     state_dir = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
-    facts = spark.range(0, 3000).select(
-        (F.col("id") % 11).alias("user_id"),
-        (F.col("id") % 7).cast("long").alias("value_u"),
-    )
+    ids = spark.range(0, 3000)
+    if sink == "upsert":
+        facts = ids.select(
+            (F.col("id") % 11).alias("user_id"),
+            (F.col("id") % 7).cast("long").alias("value_u"),
+        )
+        run = jobs.stream_upsert_totals
+
+        def rows(df):
+            return {
+                r["user_id"]: (r["n_events"], r["sum_u"]) for r in df.collect()
+            }
+
+        want = rows(
+            facts.groupBy("user_id").agg(
+                F.count(F.lit(1)).alias("n_events"), F.sum("value_u").alias("sum_u")
+            )
+        )
+    else:
+        facts = ids.select(
+            (F.col("id") % 3).cast("string").alias("g"), F.col("id").alias("member")
+        )
+        run = functools.partial(jobs.stream_kmv_sketches, k=64)
+
+        def rows(df):
+            return sorted((r["g"], r["h"]) for r in df.collect())
+
+        want = rows(kmv_sketch(facts, "g", "member", k=64))
     facts.repartition(3).write.mode("overwrite").parquet(input_dir)
 
-    serving = jobs.stream_upsert_totals(
-        spark, input_dir, ckpt, state_dir, name="ups_t1"
-    )
+    serving = run(spark, input_dir, ckpt, state_dir, name=f"{sink}_t1")
     committed = int(open(os.path.join(state_dir, "_committed_epoch")).read())
     assert committed >= 2  # three files -> at least three micro-batches
+    assert rows(serving) == want
 
-    want = {
-        r["user_id"]: (r["n"], r["s"])
-        for r in facts.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value_u").alias("s"))
-        .collect()
-    }
-    got = {
-        r["user_id"]: (r["n_events"], r["sum_u"]) for r in serving.collect()
-    }
-    assert got == want
-
-    # restart with the SAME checkpoint: no new input -> no new epochs,
-    # totals unchanged (the replay guard also covers re-delivered
-    # epochs after a mid-run crash)
-    serving2 = jobs.stream_upsert_totals(
-        spark, input_dir, ckpt, state_dir, name="ups_t2"
-    )
-    got2 = {
-        r["user_id"]: (r["n_events"], r["sum_u"]) for r in serving2.collect()
-    }
-    assert got2 == want
+    # restart with the SAME checkpoint after losing the last batch's
+    # commit record: the engine re-delivers that epoch, and the replay
+    # guard must turn it into a no-op instead of merging it twice
+    for f in os.listdir(os.path.join(ckpt, "commits")):
+        if f.lstrip(".").split(".")[0] == str(committed):
+            os.remove(os.path.join(ckpt, "commits", f))
+    serving2 = run(spark, input_dir, ckpt, state_dir, name=f"{sink}_t2")
+    assert rows(serving2) == want
+    assert int(open(os.path.join(state_dir, "_committed_epoch")).read()) == committed
 
 
 def test_kmv_merge_associativity_across_batch_splits(spark, tmp_path):

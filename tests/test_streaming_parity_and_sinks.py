@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import glob
 import os
+import tempfile
 import threading
 
 import pytest
@@ -87,6 +88,26 @@ def test_state_partitions_sized_from_drop_bytes(spark, tmp_path):
         with streaming_parity._state_partitions(spark, str(input_dir)):
             assert spark.conf.get(key) == str(cap)
             raise RuntimeError("drain failed")
+    assert spark.conf.get(key) == prev
+
+
+def test_failed_drain_removes_scratch_and_restores_partitions(
+    spark, sf_dir, monkeypatch
+):
+    """A drain that raises still removes its scratch base (drop plus
+    checkpoint) and restores the session's shuffle partitions."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    pattern = os.path.join(tempfile.gettempdir(), "spark_graft_eph_*")
+    before = set(glob.glob(pattern))
+
+    def _fail(*args, **kwargs):
+        raise RuntimeError("drain failed")
+
+    monkeypatch.setattr(jobs, "_drain_to_table", _fail)
+    with pytest.raises(RuntimeError, match="drain failed"):
+        streaming_parity.stream_events_per_hour(spark, sf_dir)
+    assert set(glob.glob(pattern)) <= before
     assert spark.conf.get(key) == prev
 
 
