@@ -383,63 +383,47 @@ def simhash_neardup_pairs(
     )
 
 
-# Edge bound (directed, self-loops dropped) up to which
-# `connected_component_labels` solves the whole graph in ONE Spark task.
-# Memory cost: the union-find holds a Python dict of about 100 B per
-# integer node (string ids add their own size); 2M directed edges are
-# 1M undirected ones over at most 2M nodes, about 200 MB in one Python
-# worker. Above the bound only the distributed HashMin loop scales.
-_LOCAL_FINISH_EDGES = 2_000_000
+# Pair-row bound (self-loops dropped; duplicate and reversed pairs
+# count) up to which `connected_component_labels` labels the whole
+# graph in the driver. Driver cost: the union-find holds a Python dict
+# of about 100 B per node (string ids add their own size), and the
+# collected pairs take 16 B of Arrow per long pair; 1M pairs touch at
+# most 2M nodes, about 200 MB of dict plus 16 MB of Arrow. A graph
+# above the bound pays one throw-away limited collect before the
+# distributed HashMin loop, the only path that scales past it.
+_LOCAL_FINISH_PAIRS = 1_000_000
 
 
-def _union_find_labels(edges: DataFrame) -> DataFrame:
-    """(node, component) for every node of a symmetric edge frame, from
-    a union-find over its (src < dst) half in ONE task, checkpointed
-    once. The smaller root always wins a union, so every root is its
-    component's min id; labels keep the id type the batches arrive in."""
+def _union_find(pairs):
+    """(node, component) Arrow table for every node of a two-column
+    Arrow pair table, by union-find in this process. The smaller root
+    always wins a union, so every root is its component's min id and
+    the pairs need no symmetric or deduplicated form; labels keep the
+    pairs' Arrow type."""
+    import pyarrow as pa
 
-    def union_find(batches):
-        import pyarrow as pa
+    parent = {}
 
-        parent = {}
-        id_type = None
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
 
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for batch in batches:
-            id_type = batch.schema.field(0).type
-            for a, b in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
-                ra = find(parent.setdefault(a, a))
-                rb = find(parent.setdefault(b, b))
-                if ra != rb:
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-        if id_type is None:
-            return
-        nodes = list(parent)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(nodes, id_type), pa.array([find(n) for n in nodes], id_type)],
-            names=["node", "component"],
-        )
-
-    node_type = edges.schema["src"].dataType
-    return (
-        edges.where(F.col("src") < F.col("dst"))
-        .coalesce(1)
-        .mapInArrow(
-            union_find,
-            StructType(
-                [StructField("node", node_type), StructField("component", node_type)]
-            ),
-        )
-        .localCheckpoint()
+    for a, b in zip(pairs.column(0).to_pylist(), pairs.column(1).to_pylist()):
+        ra = find(parent.setdefault(a, a))
+        rb = find(parent.setdefault(b, b))
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    nodes = list(parent)
+    id_type = pairs.schema.field(0).type
+    return pa.table(
+        [pa.array(nodes, id_type), pa.array([find(n) for n in nodes], id_type)],
+        names=["node", "component"],
     )
 
 
@@ -596,41 +580,47 @@ def connected_component_labels(
     where component is the min id reachable from id and keeps the id
     type (int, long or string).
 
-    The pairs become a symmetric edge set without self-loops, and its
-    count picks one of two paths:
-    - `n_edges <= _LOCAL_FINISH_EDGES`: one union-find task
-      (`edges.coalesce(1).mapInArrow`) labels every node in the one
-      job of its eager checkpoint, whatever the graph's diameter. The
-      bound is the scale limit of this path: about 100 B of Python
-      dict per node in a single worker.
-    - above it: the distributed HashMin loop (`_hashmin_labels`), two
+    Self-loops dropped, at most `_LOCAL_FINISH_PAIRS + 1` pair rows
+    are collected to the driver as Arrow in one job, and their count
+    picks one of two paths:
+    - up to the bound: `_union_find` labels every node in the driver,
+      whatever the graph's diameter, and the labels come back as a
+      local frame. The bound is the scale limit of this path (see the
+      constant for its driver memory).
+    - above it: the pairs become a symmetric deduplicated edge set and
+      the distributed HashMin loop (`_hashmin_labels`) runs, two
       actions per round plus one per compression round, with the edge
       set shrinking as components contract; `max_iters` bounds both
       loops, and an unconverged exit raises a RuntimeWarning (the
       transitive-closure contract of dedup_transitive needs full
       convergence).
 
-    Only nodes that appear in an edge are labeled by either path: an
+    Only nodes that appear in a pair are labeled by either path: an
     isolated node (no pair, the overwhelming majority of a deduped
-    corpus) is its own component and is unioned back in at the end.
-    An empty pair list starts no labeling job at all."""
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates()
-        .localCheckpoint(eager=False)
+    corpus) is its own component and is unioned back in at the end."""
+    # both columns in the type a union of them resolves to
+    id_type = pairs.select("id_a").union(pairs.select("id_b")).schema[0].dataType
+    pairs = pairs.where(F.col("id_a") != F.col("id_b")).select(
+        F.col("id_a").cast(id_type), F.col("id_b").cast(id_type)
     )
-    # materializes the lazy checkpoint; the count picks the path
-    n_edges = edges.count()
-    if n_edges == 0:
-        labels = edges.select(
-            F.col("src").alias("node"), F.col("src").alias("component")
+    bounded = pairs.limit(_LOCAL_FINISH_PAIRS + 1).toArrow()
+    if bounded.num_rows <= _LOCAL_FINISH_PAIRS:
+        labels = pairs.sparkSession.createDataFrame(
+            _union_find(bounded),
+            StructType(
+                [StructField("node", id_type), StructField("component", id_type)]
+            ),
         )
-    elif n_edges <= _LOCAL_FINISH_EDGES:
-        labels = _union_find_labels(edges)
     else:
-        labels = _hashmin_labels(edges, n_edges, max_iters)
+        del bounded
+        edges = (
+            pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+            .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
+            .dropDuplicates()
+            .localCheckpoint(eager=False)
+        )
+        # materializes the lazy checkpoint
+        labels = _hashmin_labels(edges, edges.count(), max_iters)
     isolated = (
         nodes.select(F.col(id_col).alias("node"))
         .join(labels.select("node"), "node", "left_anti")

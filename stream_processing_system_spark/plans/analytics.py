@@ -5101,7 +5101,7 @@ def copurchase_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     (component_size, n_components) rows, the fragmentation
     fingerprint. The oracle recomputes components with a recursive
     transitive-closure CTE, so the components are value-hash
-    verified here (dedup_transitive's own check is rows-only)."""
+    verified here, as they are for dedup_transitive."""
     from stream_processing_system_spark.operators.dedup import (
         connected_component_labels,
     )

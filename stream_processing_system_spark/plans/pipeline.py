@@ -4,6 +4,12 @@ text_analysis} for the driver contract."""
 
 from __future__ import annotations
 
+import atexit
+import hashlib
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -29,6 +35,39 @@ def _embs(spark, sf_dir):
 def _query_vec(spark, sf_dir) -> DataFrame:
     """The standard 1-row query frame: embedding of vec_id 0."""
     return _embs(spark, sf_dir).where(F.col("vec_id") == 0).select("embedding")
+
+
+#: Every scratch dir a one-time fixture below wrote in this process.
+_SCRATCH_DIRS: list[str] = []
+
+
+def _scratch_dir(kind: str) -> str:
+    """A new private `spark_graft_<kind>_*` dir under the temp dir
+    (mkdtemp, mode 0700: a predictable shared path could be pre-created
+    or clobbered by another process), removed at exit by
+    `remove_scratch_caches`."""
+    path = tempfile.mkdtemp(prefix=f"spark_graft_{kind}_")
+    _SCRATCH_DIRS.append(path)
+    return path
+
+
+@atexit.register
+def remove_scratch_caches() -> None:
+    """Remove every fixture scratch dir of this process and empty the
+    caches that point into them, so a later call rebuilds."""
+    for path in _SCRATCH_DIRS:
+        shutil.rmtree(path, ignore_errors=True)
+    _SCRATCH_DIRS.clear()
+    for cache in (
+        _IVF_INDEX_CACHE,
+        _ZORDER_CACHE,
+        _PARTITIONED_CACHE,
+        _COMPACT_CACHE,
+        _FMT_CACHE,
+        _EVO_CACHE,
+        _CORRUPT_CACHE,
+    ):
+        cache.clear()
 
 
 # --- dedup ---
@@ -83,8 +122,10 @@ def dedup_incremental_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_transitive_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dedup via connected components over the
-    verified LSH pair graph (iterative — no SQL oracle; correctness
-    covered by chain-collapse unit tests)."""
+    verified LSH pair graph. The oracle (`oracle_sql()["dedup_transitive"]`)
+    recomputes signatures, band buckets, Jaccard-verified pairs and a
+    recursive transitive closure in SQL, so the kept ids are
+    value-hash verified."""
     return dedup.dedup_transitive(
         _docs(spark, sf_dir), "doc_id", "text", num_hashes=8, bands=4, threshold=0.7
     )
@@ -134,20 +175,12 @@ _IVF_INDEX_CACHE: dict[str, str] = {}
 
 def ivf_index_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted-index IVF: build the centroid-partitioned index once
-    per sf_dir (fixed scratch path, overwritten on first build in each
-    process), then answer the query via partition pruning. Same result
-    as ivf_topk (rows-only contract check; equality with the inline
-    variant is unit-tested)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
+    per sf_dir and process in a private scratch dir, then answer the
+    query via partition pruning. Same result as ivf_topk (rows-only
+    contract check; equality with the inline variant is unit-tested)."""
     path = _IVF_INDEX_CACHE.get(sf_dir)
     if path is None:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        path = os.path.join(tempfile.gettempdir(), f"spark_graft_ivf_{tag}")
-        shutil.rmtree(path, ignore_errors=True)
+        path = _scratch_dir("ivf")
         similarity.build_ivf_index(_embs(spark, sf_dir), path)
         _IVF_INDEX_CACHE[sf_dir] = path
     return similarity.ivf_index_topk(
@@ -398,20 +431,13 @@ def zorder_events_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet footer min/max stats (tests/test_layout.py asserts the
     file-level stats disjointness); the oracle hash-match here proves
     the layout rewrite changed BYTES, never values."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from stream_processing_system_spark.sources.layout import (
         write_zorder_clustered,
     )
 
     path = _ZORDER_CACHE.get(sf_dir)
     if path is None:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        path = os.path.join(tempfile.gettempdir(), f"spark_graft_zo_{tag}")
-        shutil.rmtree(path, ignore_errors=True)
+        path = _scratch_dir("zo")
         events = load_table(spark, sf_dir, "events")
         write_zorder_clustered(events, path, ["user_id", "value"], num_files=8)
         _ZORDER_CACHE[sf_dir] = path
@@ -685,16 +711,12 @@ def bucketed_revenue_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB. The oracle hash-match proves bucketing changed the
     LAYOUT, never the values.
     """
-    import hashlib
+    from urllib.parse import urlparse
 
     from stream_processing_system_spark.sources.bucketing import (
         bucketed_join,
         write_bucketed,
     )
-
-    import os
-    import shutil
-    from urllib.parse import urlparse
 
     tables = _BUCKETED_CACHE.get(sf_dir)
     if tables is None:
@@ -750,18 +772,11 @@ def partitioned_events_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     data and scanning all of it. The oracle hash-match proves the
     layout rewrite changed the directory structure, never values.
     """
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from stream_processing_system_spark.sources.bucketing import write_partitioned
 
     path = _PARTITIONED_CACHE.get(sf_dir)
     if path is None:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        path = os.path.join(tempfile.gettempdir(), f"spark_graft_pt_{tag}")
-        shutil.rmtree(path, ignore_errors=True)
+        path = _scratch_dir("pt")
         events = load_table(spark, sf_dir, "events")
         write_partitioned(events, path, ["event_type"])
         _PARTITIONED_CACHE[sf_dir] = path
@@ -820,19 +835,12 @@ def compacted_events_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     count actually drops; the oracle hash-match proves the rewrite
     changed file boundaries, never values.
     """
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from stream_processing_system_spark.sources.layout import compact_parquet
 
     path = _COMPACT_CACHE.get(sf_dir)
     if path is None:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        base = os.path.join(tempfile.gettempdir(), f"spark_graft_cp_{tag}")
+        base = _scratch_dir("cp")
         frag, path = os.path.join(base, "frag"), os.path.join(base, "compact")
-        shutil.rmtree(base, ignore_errors=True)
         events = load_table(spark, sf_dir, "events")
         events.repartition(64).write.mode("overwrite").parquet(frag)
         compact_parquet(spark, frag, path, target_file_bytes=8 * 1024 * 1024)
@@ -971,17 +979,10 @@ def format_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortest-round-trip representations; the aggregate still floors
     to integer 1e-4 units before summing, per the money-sum policy.
     """
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     paths = _FMT_CACHE.get(sf_dir)
     if paths is None:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        base = os.path.join(tempfile.gettempdir(), f"spark_graft_fmt_{tag}")
+        base = _scratch_dir("fmt")
         jpath, opath = os.path.join(base, "jsonl"), os.path.join(base, "orc")
-        shutil.rmtree(base, ignore_errors=True)
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "value"
         )
@@ -1034,16 +1035,9 @@ def schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     long-lived 100 TB table eventually needs; the mergeSchema
     footer-union is a planning-time cost, paid once per scan.
     """
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     path = _EVO_CACHE.get(sf_dir)
     if path is None:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        path = os.path.join(tempfile.gettempdir(), f"spark_graft_evo_{tag}")
-        shutil.rmtree(path, ignore_errors=True)
+        path = _scratch_dir("evo")
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "value"
         )
@@ -1306,16 +1300,9 @@ def jsonl_corrupt_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet source and the same id%7 rule, so the hash-match proves
     the parser kept every well-formed row, dropped every truncated
     one, and round-tripped the doubles exactly."""
-    import os
-    import tempfile
-
     path = _CORRUPT_CACHE.get(sf_dir)
     if path is None:
-        # per-process private dir (mkdtemp, mode 0700) — a predictable
-        # shared path under gettempdir() could be pre-created or
-        # clobbered by another user/run (ADVICE r2); the cache dict
-        # still keys by sf_dir so the fixture writes once per process
-        path = os.path.join(tempfile.mkdtemp(prefix="spark_graft_corrupt_"), "jsonl")
+        path = os.path.join(_scratch_dir("corrupt"), "jsonl")
         events = load_table(spark, sf_dir, "events").where(
             F.col("value").isNotNull()
         )

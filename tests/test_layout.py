@@ -95,6 +95,30 @@ def test_registered_compaction_reduces_file_count(spark, sf_dir):
     assert n_files < 16, f"compaction left {n_files} files"
 
 
+def test_remove_scratch_caches_deletes_fixture_dirs(spark, sf_dir):
+    """The one-time fixture copies of `plans/pipeline.py` live in
+    scratch dirs that `remove_scratch_caches` (run at exit) deletes;
+    it also empties their caches, so the next call rebuilds."""
+    import os
+
+    from stream_processing_system_spark.plans import pipeline
+
+    expected = pipeline.zorder_events_scan(spark, sf_dir).collect()
+    pipeline.jsonl_corrupt_scan(spark, sf_dir).collect()
+    dirs = [
+        pipeline._ZORDER_CACHE[sf_dir],
+        os.path.dirname(pipeline._CORRUPT_CACHE[sf_dir]),
+    ]
+    assert all(os.path.isdir(d) for d in dirs)
+
+    pipeline.remove_scratch_caches()
+    assert [d for d in dirs if os.path.exists(d)] == []
+    assert sf_dir not in pipeline._ZORDER_CACHE
+    assert sf_dir not in pipeline._CORRUPT_CACHE
+    assert pipeline.zorder_events_scan(spark, sf_dir).collect() == expected
+    assert os.path.isdir(pipeline._ZORDER_CACHE[sf_dir])
+
+
 def test_dynamic_partition_overwrite_touches_only_its_partition(spark, tmp_path):
     import os
 

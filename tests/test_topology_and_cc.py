@@ -1,10 +1,11 @@
 """Topology submission surface + transitive (connected-components)
 dedup.
 
-`connected_component_labels` has two paths chosen by edge count: one
-union-find task up to `dedup._LOCAL_FINISH_EDGES`, the distributed
-HashMin loop above it. The `cc_path` fixture runs a test on either;
-`distributed` lowers the bound to 0 so every non-empty graph loops."""
+`connected_component_labels` has two paths chosen by pair count: a
+union-find in the driver up to `dedup._LOCAL_FINISH_PAIRS`, the
+distributed HashMin loop above it. The `cc_path` fixture runs a test on
+either; `distributed` lowers the bound to 0 so every non-empty graph
+loops."""
 
 from __future__ import annotations
 
@@ -43,7 +44,7 @@ def test_topology_unknown_app(spark):
 @pytest.fixture(params=["local", "distributed"])
 def cc_path(request, monkeypatch):
     if request.param == "distributed":
-        monkeypatch.setattr(dedup, "_LOCAL_FINISH_EDGES", 0)
+        monkeypatch.setattr(dedup, "_LOCAL_FINISH_PAIRS", 0)
     return request.param
 
 
@@ -184,36 +185,79 @@ def test_cc_matches_union_find_replay(spark, cc_path, tiny_arrow_batches, id_kin
         assert got == _replay_components(pairs, pool), (id_kind, n_pairs)
 
 
+def _count_jobs(spark, group, fn):
+    """fn() run under its own job group; returns (fn(), jobs submitted)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_cc_empty_pairs_start_no_labeling(spark, monkeypatch):
-    """An empty pair list short-circuits on n_edges == 0: neither the
-    union-find task nor the HashMin loop is built."""
+    """An empty pair list is labeled by the driver path from its one
+    bounded collect: the HashMin loop is never built."""
 
     def refuse(*_):
-        raise AssertionError("labeling started on an empty edge set")
+        raise AssertionError("HashMin started on an empty pair list")
 
-    monkeypatch.setattr(dedup, "_union_find_labels", refuse)
     monkeypatch.setattr(dedup, "_hashmin_labels", refuse)
     pairs = spark.createDataFrame([], "id_a int, id_b int")
     nodes = spark.createDataFrame([(7,), (2**31 - 1,)], "doc_id int")
-    out = dedup.connected_component_labels(pairs, nodes, "doc_id")
+    out, jobs = _count_jobs(
+        spark,
+        "cc-empty-pairs",
+        lambda: dedup.connected_component_labels(pairs, nodes, "doc_id"),
+    )
+    assert jobs == 1
     assert dict(out.dtypes) == {"doc_id": "int", "component": "int"}
     assert sorted(tuple(r) for r in out.collect()) == [(7, 7), (2**31 - 1, 2**31 - 1)]
 
 
 def test_cc_small_chain_job_count(spark):
-    """A small graph costs four jobs, whatever its diameter: three for
-    the edge count (AQE submits its dedup and count exchanges as jobs
-    of their own) and one for the checkpoint of the one-task
-    union-find. The HashMin loop spent ~20 here."""
-    sc = spark.sparkContext
+    """A small graph costs one job, whatever its diameter: the bounded
+    Arrow collect of its pairs. The union-find runs in the driver and
+    its labels come back as a local frame. The HashMin loop spends ~20
+    here."""
     pairs = spark.createDataFrame([(i, i + 1) for i in range(9)], "id_a long, id_b long")
     nodes = spark.range(12).select(F.col("id").alias("doc_id"))
-    group = "cc-small-chain-job-count"
-    sc.setJobGroup(group, "connected_component_labels on a 10-node chain")
-    try:
-        labels = dedup.connected_component_labels(pairs, nodes, "doc_id")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+    labels, jobs = _count_jobs(
+        spark,
+        "cc-small-chain-job-count",
+        lambda: dedup.connected_component_labels(pairs, nodes, "doc_id"),
+    )
+    assert jobs == 1
     assert {r["component"] for r in labels.collect()} == {0, 10, 11}
+
+
+@pytest.mark.parametrize("over", [0, 1], ids=["at_bound", "over_bound"])
+def test_cc_pair_bound_picks_path(spark, monkeypatch, over):
+    """Exactly `_LOCAL_FINISH_PAIRS` pair rows (self-loops not counted,
+    duplicate and reversed pairs counted) label in the driver; one row
+    more goes through HashMin. Both agree with the replay."""
+    k = 6
+    monkeypatch.setattr(dedup, "_LOCAL_FINISH_PAIRS", k)
+    calls = []
+    hashmin = dedup._hashmin_labels
+
+    def spy(*args):
+        calls.append(args)
+        return hashmin(*args)
+
+    monkeypatch.setattr(dedup, "_hashmin_labels", spy)
+    # k rows with a reversed and a duplicate pair, plus an uncounted self-loop
+    pairs = [(1, 2), (2, 3), (3, 2), (5, 6), (7, 8), (7, 8), (4, 4)]
+    if over:
+        pairs.append((8, 10))
+    pool = list(range(1, 12))
+    out = dedup.connected_component_labels(
+        spark.createDataFrame(pairs, "id_a long, id_b long"),
+        spark.createDataFrame([(n,) for n in pool], "node long"),
+        "node",
+    )
+    got = {r["node"]: r["component"] for r in out.collect()}
+    assert got == _replay_components(pairs, pool)
+    assert len(calls) == over
