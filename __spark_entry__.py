@@ -363,14 +363,12 @@ def _ivf_trained_cte(n_centroids: int = 16, iters: int = 2, dim: int = 64) -> tu
     return ",\n        ".join(parts), f"c{iters}"
 
 
-def _semantic_dedup_oracle_sql(threshold: float = 0.4) -> str:
-    """SemDeDup in SQL: the SAME trained codebook and argmax
-    assignment as `_ivf_topk_oracle_sql`, then within-cluster pairs
-    (id_a < id_b) at ROUND(cos, 6) >= threshold mark id_b as a dup;
-    kept rows return (vec_id, centroid)."""
+def _ivf_assigned_ctes() -> str:
+    """The `_ivf_trained_cte` codebook as `c`, then `assigned`: each
+    vector's (vec_id, embedding) with its argmax-cosine `centroid`
+    (ties to the smaller cid), as the engine assigns."""
     cte, final = _ivf_trained_cte()
-    return f"""
-        WITH {cte},
+    return f"""{cte},
         c AS (SELECT cid, cvec FROM {final}),
         assigned AS (
             SELECT vec_id, embedding, cid AS centroid FROM (
@@ -382,7 +380,16 @@ def _semantic_dedup_oracle_sql(threshold: float = 0.4) -> str:
                            c.cid ASC) AS rn
                 FROM embeddings e CROSS JOIN c
             ) WHERE rn = 1
-        ), dup AS (
+        )"""
+
+
+def _semantic_dedup_oracle_sql(threshold: float = 0.4) -> str:
+    """SemDeDup in SQL: the SAME trained codebook and argmax
+    assignment as `_ivf_topk_oracle_sql`, then within-cluster pairs
+    (id_a < id_b) at ROUND(cos, 6) >= threshold mark id_b as a dup;
+    kept rows return (vec_id, centroid)."""
+    return f"""
+        WITH {_ivf_assigned_ctes()}, dup AS (
             SELECT DISTINCT b.vec_id
             FROM assigned a JOIN assigned b
               ON a.centroid = b.centroid AND a.vec_id < b.vec_id
@@ -433,21 +440,8 @@ def _ivf_topk_oracle_sql(n_centroids: int = 16, n_probe: int = 4, k: int = 10) -
     (`_ivf_trained_cte`), argmax assignment with the engine's
     (sim, -cid) tie-break, probe the query's best centroids, exact
     cosine inside."""
-    cte, final = _ivf_trained_cte()
     return f"""
-        WITH {cte},
-        c AS (SELECT cid, cvec FROM {final}),
-        assigned AS (
-            SELECT vec_id, embedding, cid AS centroid FROM (
-                SELECT e.vec_id, e.embedding, c.cid,
-                       row_number() OVER (
-                           PARTITION BY e.vec_id
-                           ORDER BY list_cosine_similarity(
-                               e.embedding::DOUBLE[], c.cvec::DOUBLE[]) DESC,
-                           c.cid ASC) AS rn
-                FROM embeddings e CROSS JOIN c
-            ) WHERE rn = 1
-        ), q AS (
+        WITH {_ivf_assigned_ctes()}, q AS (
             SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0
         ), probe AS (
             SELECT c.cid AS centroid
@@ -470,7 +464,6 @@ def _ivf_nprobe_sweep_oracle_sql(k: int = 10, probes=(1, 2, 4, 8)) -> str:
     and assignment as `_ivf_topk_oracle_sql`, one candidate top-k
     per probe budget, intersected with the brute-force cosine
     top-k (6dp-rounded sims, id tie-breaks on both engines)."""
-    cte, final = _ivf_trained_cte()
     per_probe = []
     rows = []
     for p in probes:
@@ -499,19 +492,7 @@ def _ivf_nprobe_sweep_oracle_sql(k: int = 10, probes=(1, 2, 4, 8)) -> str:
             f" CAST(n AS DOUBLE) / {float(k)} AS recall FROM h{p}"
         )
     return f"""
-        WITH {cte},
-        c AS (SELECT cid, cvec FROM {final}),
-        assigned AS (
-            SELECT vec_id, embedding, cid AS centroid FROM (
-                SELECT e.vec_id, e.embedding, c.cid,
-                       row_number() OVER (
-                           PARTITION BY e.vec_id
-                           ORDER BY list_cosine_similarity(
-                               e.embedding::DOUBLE[], c.cvec::DOUBLE[]) DESC,
-                           c.cid ASC) AS rn
-                FROM embeddings e CROSS JOIN c
-            ) WHERE rn = 1
-        ), q AS (
+        WITH {_ivf_assigned_ctes()}, q AS (
             SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0
         ), brute AS (
             SELECT e.vec_id
@@ -1175,7 +1156,6 @@ def _ivfpq_topk_oracle_sql(
     residual frame), then ADC = grid(q·cell centroid) + Σ grid
     lookups, integer shortlist, exact re-rank. PQ CTEs are
     r-prefixed to avoid colliding with the IVF training CTEs."""
-    cte, final = _ivf_trained_cte()
     width = dim // n_sub
     ctes, encs, qts = [], [], []
     for s in range(n_sub):
@@ -1227,19 +1207,7 @@ def _ivfpq_topk_oracle_sql(
     enc_join = encs[0] + "".join(f" JOIN {e} USING (vec_id)" for e in encs[1:])
     score = " + ".join(f"contrib{s}" for s in range(n_sub))
     return f"""
-        WITH {cte},
-        c AS (SELECT cid, cvec FROM {final}),
-        assigned AS (
-            SELECT vec_id, embedding, cid AS centroid FROM (
-                SELECT e.vec_id, e.embedding, c.cid,
-                       row_number() OVER (
-                           PARTITION BY e.vec_id
-                           ORDER BY list_cosine_similarity(
-                               e.embedding::DOUBLE[], c.cvec::DOUBLE[]) DESC,
-                           c.cid ASC) AS rn
-                FROM embeddings e CROSS JOIN c
-            ) WHERE rn = 1
-        ), resid AS (
+        WITH {_ivf_assigned_ctes()}, resid AS (
             SELECT a.vec_id, a.centroid,
                    list_transform(range(1, {dim + 1}),
                        i -> a.embedding[i]::DOUBLE - c.cvec[i]) AS rvec
@@ -1292,6 +1260,251 @@ _COPURCHASE_EDGES_CTE = """
         FROM bounded a
         JOIN bounded b ON a.hb = b.hb AND a.k = b.k AND a.user_id < b.user_id
     )"""
+
+
+# Shared document-dedup CTEs (engine side: `operators/dedup.py`).
+# Each shape is spelled once here; the oracles compose them.
+def _doc_tokens_cte(where: str = "") -> str:
+    """`t`: each document's whitespace tokens, empties dropped."""
+    return f"""t AS (
+        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS l
+        FROM documents{where}
+    )"""
+
+
+def _shingle_ctes(where: str = "", materialized: bool = False) -> str:
+    """`t` plus `sh`: each document's distinct 3-word shingles."""
+    m = " MATERIALIZED" if materialized else ""
+    return f"""{_doc_tokens_cte(where)}, sh AS{m} (
+        SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle
+        FROM t, UNNEST(range(1, len(l) - 1)) AS u(i)
+        WHERE len(l) >= 3
+    )"""
+
+
+#: `toks`: each document's tokens `w` with their 1-based position.
+_POSITIONAL_TOKENS_CTE = """toks AS (
+        SELECT doc_id, i AS pos, ws[i] AS w
+        FROM (
+            SELECT doc_id,
+                   list_filter(string_split(text, ' '), x -> x <> '') AS ws
+            FROM documents
+        ), UNNEST(range(1, len(ws) + 1)) AS u(i)
+    )"""
+
+#: `perframe`: the stub video decode's per-frame fingerprints, byte
+#: for byte (`operators/multimodal.py`): duration from the payload md5,
+#: frame of byte j = (j*n)//len, fingerprint (sum*31 + count) mod
+#: 1000003.
+_MEDIA_FRAME_FP_CTES = """vids AS (
+        SELECT doc_id, text,
+               ('0x' || substr(md5(text), 1, 8))::BIGINT AS h,
+               length(text) AS ln
+        FROM documents WHERE doc_id % 3 = 2
+    ), nf AS (
+        SELECT doc_id, text, ln,
+               least((1000 + h % 7200000) // 1000, 16) AS n
+        FROM vids
+    ), chars AS (
+        SELECT doc_id, n, ln, i,
+               unicode(substr(text, CAST(i + 1 AS INT), 1)) AS b
+        FROM nf, UNNEST(range(ln)) AS u(i)
+        WHERE n > 0 AND ln > 0
+    ), perframe AS (
+        SELECT doc_id, (i * n) // ln AS frame_idx,
+               (SUM(b) * 31 + COUNT(*)) % 1000003 AS fp
+        FROM chars GROUP BY doc_id, n, ln, (i * n) // ln
+    )"""
+
+#: The banding recall/sweep oracles' ground-truth document sample.
+_BANDING_SAMPLE = " WHERE doc_id < 500 AND doc_id % 2 = 0"
+
+#: The 8-word MinHash signature over `sh`: four 32-bit words from each
+#: of two salted md5 digests (`dedup.minhash_signatures`).
+_MINHASH_SIG_SELECT = """SELECT doc_id,
+           MIN(('0x' || substr(md5('0|' || shingle),  1, 8))::BIGINT) AS h0,
+           MIN(('0x' || substr(md5('0|' || shingle),  9, 8))::BIGINT) AS h1,
+           MIN(('0x' || substr(md5('0|' || shingle), 17, 8))::BIGINT) AS h2,
+           MIN(('0x' || substr(md5('0|' || shingle), 25, 8))::BIGINT) AS h3,
+           MIN(('0x' || substr(md5('1|' || shingle),  1, 8))::BIGINT) AS h4,
+           MIN(('0x' || substr(md5('1|' || shingle),  9, 8))::BIGINT) AS h5,
+           MIN(('0x' || substr(md5('1|' || shingle), 17, 8))::BIGINT) AS h6,
+           MIN(('0x' || substr(md5('1|' || shingle), 25, 8))::BIGINT) AS h7
+    FROM sh GROUP BY doc_id"""
+
+
+def _minhash_sig_cte(materialized: bool = False) -> str:
+    """`sig`: `_MINHASH_SIG_SELECT` as a CTE."""
+    m = " MATERIALIZED" if materialized else ""
+    return f"""sig AS{m} (
+    {_MINHASH_SIG_SELECT}
+    )"""
+
+
+def _lsh_cands_ctes(
+    pair: str = "a.doc_id < c.doc_id", materialized: bool = False
+) -> str:
+    """`bb`: 4 bands of 2 signature words, each md5-bucketed; `cands`:
+    distinct doc pairs sharing a (band, bucket) that satisfy `pair`."""
+    m = " MATERIALIZED" if materialized else ""
+    return f"""bb AS (
+        SELECT doc_id, b.band,
+               md5(CASE b.band
+                   WHEN 0 THEN h0::VARCHAR || '_' || h1::VARCHAR
+                   WHEN 1 THEN h2::VARCHAR || '_' || h3::VARCHAR
+                   WHEN 2 THEN h4::VARCHAR || '_' || h5::VARCHAR
+                   ELSE        h6::VARCHAR || '_' || h7::VARCHAR
+               END) AS bucket
+        FROM sig, (SELECT unnest(range(4)) AS band) b
+    ), cands AS{m} (
+        SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
+        FROM bb a JOIN bb c ON a.band = c.band AND a.bucket = c.bucket
+        WHERE {pair}
+    )"""
+
+
+def _jaccard_verify_ctes(name: str, cols: str) -> str:
+    """`sizes` and `inter` (shared shingles per candidate pair), then
+    `name`: the `cols` of the pairs with shingle Jaccard >= 0.7."""
+    return f"""sizes AS (
+        SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
+    ), inter AS (
+        SELECT p.id_a, p.id_b, count(*) AS common
+        FROM cands p
+        JOIN sh sa ON sa.doc_id = p.id_a
+        JOIN sh sb ON sb.doc_id = p.id_b AND sb.shingle = sa.shingle
+        GROUP BY p.id_a, p.id_b
+    ), {name} AS (
+        SELECT {cols}
+        FROM inter
+        JOIN sizes za ON za.doc_id = id_a
+        JOIN sizes zb ON zb.doc_id = id_b
+        WHERE common::DOUBLE / (za.n_sh + zb.n_sh - common) >= 0.7
+    )"""
+
+
+#: The MinHash-LSH verified pairs' connected components as a recursive
+#: closure (needs `WITH RECURSIVE`): `reach` holds every (node,
+#: reachable doc) pair, so MIN(r) per node is the node's component id.
+_DEDUP_COMPONENT_CTES = f"""{_shingle_ctes()}, {_minhash_sig_cte()},
+    {_lsh_cands_ctes()}, {_jaccard_verify_ctes("verified", "id_a, id_b")},
+    edges AS (
+        SELECT id_a AS src, id_b AS dst FROM verified
+        UNION ALL
+        SELECT id_b, id_a FROM verified
+    ), reach AS (
+        SELECT doc_id AS node, doc_id AS r FROM documents
+        UNION
+        SELECT rc.node, e.dst FROM reach rc JOIN edges e ON e.src = rc.r
+    )"""
+
+
+# Shared daily and half-split event series, on the same exact grids
+# as the engine's builders in `plans/analytics.py`.
+#: `_daily_whole_units`: per (type, day) cents summed, then divided to
+#: whole units (`//` truncates toward zero, as Spark's `div` does).
+_DAILY_X_CTE = """daily AS MATERIALIZED (
+        SELECT event_type, CAST(ts AS DATE) AS day,
+               CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
+                    AS BIGINT) // 100 AS x
+        FROM events WHERE value IS NOT NULL
+        GROUP BY 1, 2
+    )"""
+
+#: `_daily_centi_sums`: per (type, day) exact centi total.
+_DAILY_CENT_CTE = """daily AS (
+        SELECT event_type, CAST(ts AS DATE) AS day,
+               CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
+                    AS BIGINT) AS cent
+        FROM events WHERE value IS NOT NULL
+        GROUP BY 1, 2
+    )"""
+
+#: `_daily_counts`: per (type, day) event count, NULL values included.
+_DAILY_C_CTE = """daily AS (
+        SELECT event_type, CAST(ts AS DATE) AS day,
+               CAST(count(*) AS BIGINT) AS c
+        FROM events GROUP BY 1, 2
+    )"""
+
+#: `_daily_centi_means`: per (type, day) mean on the 1e-6 grid.
+_DAILY_DM_CTE = """daily AS (
+        SELECT event_type, CAST(ts AS DATE) AS day,
+               CAST(floor(
+                   CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
+                        * 10000 AS DOUBLE)
+                   / CAST(count(*) AS DOUBLE) + 0.5) AS BIGINT) AS dm
+        FROM events WHERE value IS NOT NULL
+        GROUP BY 1, 2
+    )"""
+
+#: `_daily_double_means`: per (type, ISO day string) mean as a double.
+_DAILY_VAL_CTE = """daily AS (
+        SELECT event_type,
+               CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
+               (CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
+                / 100.0) / CAST(COUNT(*) AS DOUBLE) AS val
+        FROM events WHERE value IS NOT NULL
+        GROUP BY 1, 2
+    )"""
+
+#: `analytics.halfsplit_value_cells`: per (type, centi value) row
+#: counts before (`ca`) and from (`cb`) the 2024-01-16 split.
+_HALFSPLIT_CELLS_CTE = """cells AS (
+        SELECT event_type,
+               CAST(floor(value * 100 + 0.5) AS BIGINT) AS v,
+               SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16'
+                        THEN 0 ELSE 1 END) AS ca,
+               SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16'
+                        THEN 1 ELSE 0 END) AS cb
+        FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
+        GROUP BY 1, 2
+    )"""
+
+
+def _cum_cells_cte(keep: str) -> str:
+    """`cum` over `cells` (`analytics._cum_cells`): the `keep` columns,
+    cumulative first/second-half counts up to each value and per-type
+    totals."""
+    return f"""cum AS (
+        SELECT event_type, {keep},
+               SUM(ca) OVER (PARTITION BY event_type ORDER BY v
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                   AS cuma,
+               SUM(cb) OVER (PARTITION BY event_type ORDER BY v
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                   AS cumb,
+               SUM(ca) OVER (PARTITION BY event_type) AS na,
+               SUM(cb) OVER (PARTITION BY event_type) AS nb
+        FROM cells
+    )"""
+
+
+def _hll_estimate_ctes(key: str) -> str:
+    """`est` and `raw`: the HyperLogLog raw estimate `e_raw` per `key`
+    from 1024 registers summed as `sp` on the 2^48 grid
+    (`analytics._hll_estimate`); `_HLL_ESTIMATE` finishes it."""
+    return f"""est AS (
+        SELECT {key}, used,
+               CAST(sp + (1024 - used) * 281474976710656 AS DOUBLE) AS s_d
+        FROM agg
+    ), raw AS (
+        SELECT {key}, used, s_d,
+               CAST(0.7213 AS DOUBLE)
+                   / (CAST(1.0 AS DOUBLE)
+                      + CAST(1.079 AS DOUBLE) / CAST(1024.0 AS DOUBLE))
+                   * CAST(1048576.0 AS DOUBLE)
+                   * CAST(281474976710656.0 AS DOUBLE) / s_d AS e_raw
+        FROM est
+    )"""
+
+
+#: Linear counting below 2.5 x 1024, else the raw estimate, on 1e-6.
+_HLL_ESTIMATE = """floor((CASE WHEN e_raw <= 2560.0 AND used < 1024
+               THEN CAST(1024.0 AS DOUBLE)
+                    * ln(CAST(1024.0 AS DOUBLE)
+                         / CAST(1024 - used AS DOUBLE))
+               ELSE e_raw END) * 1e6 + 0.5) / 1e6"""
 
 
 def _std_split_oracle_sql() -> str:
@@ -1528,16 +1741,7 @@ def _banding_sweep_oracle_sql(
 ) -> str:
     """Per-bands re-banding of the shared signature/truth CTEs,
     mirroring `dedup.banding_sweep_report`."""
-    shared = """t AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS l
-        FROM documents WHERE doc_id < 500 AND doc_id % 2 = 0
-    ), sh AS MATERIALIZED (
-        SELECT DISTINCT doc_id,
-               l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle
-        FROM t, UNNEST(range(1, len(l) - 1)) AS u(i)
-        WHERE len(l) >= 3
-    ), sizes AS (
+    shared = f"""{_shingle_ctes(_BANDING_SAMPLE, materialized=True)}, sizes AS (
         SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
     ), common AS (
         SELECT sa.doc_id AS id_a, sb.doc_id AS id_b, count(*) AS c
@@ -1549,18 +1753,7 @@ def _banding_sweep_oracle_sql(
         JOIN sizes za ON za.doc_id = id_a
         JOIN sizes zb ON zb.doc_id = id_b
         WHERE c * 3 >= za.n_sh + zb.n_sh
-    ), sig AS MATERIALIZED (
-        SELECT doc_id,
-               MIN(('0x' || substr(md5('0|' || shingle),  1, 8))::BIGINT) AS h0,
-               MIN(('0x' || substr(md5('0|' || shingle),  9, 8))::BIGINT) AS h1,
-               MIN(('0x' || substr(md5('0|' || shingle), 17, 8))::BIGINT) AS h2,
-               MIN(('0x' || substr(md5('0|' || shingle), 25, 8))::BIGINT) AS h3,
-               MIN(('0x' || substr(md5('1|' || shingle),  1, 8))::BIGINT) AS h4,
-               MIN(('0x' || substr(md5('1|' || shingle),  9, 8))::BIGINT) AS h5,
-               MIN(('0x' || substr(md5('1|' || shingle), 17, 8))::BIGINT) AS h6,
-               MIN(('0x' || substr(md5('1|' || shingle), 25, 8))::BIGINT) AS h7
-        FROM sh GROUP BY doc_id
-    )"""
+    ), {_minhash_sig_cte(materialized=True)}"""
     parts = [shared]
     rows = []
     for b in bands_list:
@@ -3281,7 +3474,7 @@ def oracle_sql() -> dict[str, str]:
         # they cover, rolling register-max, same estimate formula as
         # hll_register_distinct_users — windowed sketch algebra fully
         # value-hashed
-        "hll_rolling_7d_users": """
+        "hll_rolling_7d_users": f"""
             WITH b AS (
                 SELECT (CAST(ts AS DATE) - DATE '2024-01-01') AS day_num,
                        CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
@@ -3290,7 +3483,7 @@ def oracle_sql() -> dict[str, str]:
             ), r AS (
                 SELECT day_num, day, h >> 38 AS bucket,
                        CASE WHEN (h & 274877906943) = 0 THEN 39
-                            ELSE 39 - length(format('{:b}', h & 274877906943))
+                            ELSE 39 - length(format('{{:b}}', h & 274877906943))
                        END AS rho
                 FROM b
             ), days AS (
@@ -3307,25 +3500,9 @@ def oracle_sql() -> dict[str, str]:
                        CAST(SUM(1::BIGINT << CAST(48 - m AS INT)) AS BIGINT) AS sp
                 FROM rolled ro JOIN days d ON d.day_num = ro.day_num
                 GROUP BY 1
-            ), est AS (
-                SELECT day, used,
-                       CAST(sp + (1024 - used) * 281474976710656 AS DOUBLE) AS s_d
-                FROM agg
-            ), raw AS (
-                SELECT day, used, s_d,
-                       CAST(0.7213 AS DOUBLE)
-                           / (CAST(1.0 AS DOUBLE)
-                              + CAST(1.079 AS DOUBLE) / CAST(1024.0 AS DOUBLE))
-                           * CAST(1048576.0 AS DOUBLE)
-                           * CAST(281474976710656.0 AS DOUBLE) / s_d AS e_raw
-                FROM est
-            )
+            ), {_hll_estimate_ctes('day')}
             SELECT day, CAST(used AS BIGINT) AS used_buckets,
-                   floor((CASE WHEN e_raw <= 2560.0 AND used < 1024
-                          THEN CAST(1024.0 AS DOUBLE)
-                               * ln(CAST(1024.0 AS DOUBLE)
-                                    / CAST(1024 - used AS DOUBLE))
-                          ELSE e_raw END) * 1e6 + 0.5) / 1e6 AS est_users_7d
+                   {_HLL_ESTIMATE} AS est_users_7d
             FROM raw ORDER BY day
         """,
         # winsorized robust stats: exact order-stat cut points, clip,
@@ -3447,7 +3624,7 @@ def oracle_sql() -> dict[str, str]:
         # first-principles HLL on md5: registers, harmonic sum,
         # estimate, and the register-max merge are all reproduced in
         # SQL — the whole sketch algebra is value-hashed
-        "hll_register_distinct_users": """
+        "hll_register_distinct_users": f"""
             WITH h AS (
                 SELECT event_type,
                        ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))::BIGINT AS h
@@ -3455,7 +3632,7 @@ def oracle_sql() -> dict[str, str]:
             ), r AS (
                 SELECT event_type, h >> 38 AS bucket,
                        CASE WHEN (h & 274877906943) = 0 THEN 39
-                            ELSE 39 - length(format('{:b}', h & 274877906943))
+                            ELSE 39 - length(format('{{:b}}', h & 274877906943))
                        END AS rho
                 FROM h
             ), regs AS (
@@ -3471,27 +3648,10 @@ def oracle_sql() -> dict[str, str]:
                        CAST(SUM(1::BIGINT << CAST(48 - m AS INT)) AS BIGINT)
                            AS sp
                 FROM allregs GROUP BY 1
-            ), est AS (
-                SELECT event_type, used,
-                       CAST(sp + (1024 - used) * 281474976710656 AS DOUBLE)
-                           AS s_d
-                FROM agg
-            ), raw AS (
-                SELECT event_type, used, s_d,
-                       CAST(0.7213 AS DOUBLE)
-                           / (CAST(1.0 AS DOUBLE)
-                              + CAST(1.079 AS DOUBLE) / CAST(1024.0 AS DOUBLE))
-                           * CAST(1048576.0 AS DOUBLE)
-                           * CAST(281474976710656.0 AS DOUBLE) / s_d AS e_raw
-                FROM est
-            )
+            ), {_hll_estimate_ctes('event_type')}
             SELECT event_type,
                    CAST(used AS BIGINT) AS used_buckets,
-                   floor((CASE WHEN e_raw <= 2560.0 AND used < 1024
-                          THEN CAST(1024.0 AS DOUBLE)
-                               * ln(CAST(1024.0 AS DOUBLE)
-                                    / CAST(1024 - used AS DOUBLE))
-                          ELSE e_raw END) * 1e6 + 0.5) / 1e6 AS est_users
+                   {_HLL_ESTIMATE} AS est_users
             FROM raw ORDER BY event_type
         """,
         # parity oracle for the RocksDB long-state soak: the drained
@@ -3684,15 +3844,8 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY l_partkey
             ORDER BY l_partkey
         """,
-        "doc_skipgram_negatives": """
-            WITH toks AS (
-                SELECT doc_id, i AS pos, ws[i] AS w
-                FROM (
-                    SELECT doc_id,
-                           list_filter(string_split(text, ' '), x -> x <> '') AS ws
-                    FROM documents
-                ), UNNEST(range(1, len(ws) + 1)) AS u(i)
-            ), pairs AS (
+        "doc_skipgram_negatives": f"""
+            WITH {_POSITIONAL_TOKENS_CTE}, pairs AS (
                 SELECT a.w AS w1, b.w AS w2, count(*) AS n_cooc
                 FROM toks a JOIN toks b
                   ON a.doc_id = b.doc_id
@@ -3940,15 +4093,8 @@ def oracle_sql() -> dict[str, str]:
             FROM ranked WHERE rk = 1
             ORDER BY event_type
         """,
-        "events_rolling_median": """
-            WITH daily AS (
-                SELECT event_type,
-                       CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                       (CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-                        / 100.0) / CAST(COUNT(*) AS DOUBLE) AS val
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ), win AS (
+        "events_rolling_median": f"""
+            WITH {_DAILY_VAL_CTE}, win AS (
                 SELECT event_type, day,
                        list(val) OVER (PARTITION BY event_type ORDER BY day
                                        ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS vs
@@ -3964,15 +4110,8 @@ def oracle_sql() -> dict[str, str]:
             FROM win
             ORDER BY event_type, day
         """,
-        "events_ewma_daily": """
-            WITH daily AS (
-                SELECT event_type,
-                       CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                       (CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-                        / 100.0) / CAST(COUNT(*) AS DOUBLE) AS val
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ), series AS (
+        "events_ewma_daily": f"""
+            WITH {_DAILY_VAL_CTE}, series AS (
                 SELECT event_type,
                        list(val ORDER BY day ASC) AS vs,
                        CAST(COUNT(*) AS BIGINT) AS n_days,
@@ -4397,15 +4536,8 @@ def oracle_sql() -> dict[str, str]:
                    floor(c * 1000000.0 + 0.5) / 1000000.0 AS corr
             FROM u ORDER BY col_a, col_b
         """,
-        "doc_containment_pairs": """
-            WITH t AS (
-                SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS l
-                FROM documents
-            ), sh AS (
-                SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle
-                FROM t, UNNEST(range(1, len(l) - 1)) AS u(i)
-                WHERE len(l) >= 3
-            ), sizes AS (
+        "doc_containment_pairs": f"""
+            WITH {_shingle_ctes()}, sizes AS (
                 SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
             ), inter AS (
                 SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
@@ -4418,15 +4550,8 @@ def oracle_sql() -> dict[str, str]:
             WHERE i.common = sa.n_sh
             ORDER BY i.id_a, i.id_b
         """,
-        "doc_shingle_novelty": """
-            WITH t AS (
-                SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS l
-                FROM documents
-            ), sh AS (
-                SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle
-                FROM t, UNNEST(range(1, len(l) - 1)) AS u(i)
-                WHERE len(l) >= 3
-            ), owner AS (
+        "doc_shingle_novelty": f"""
+            WITH {_shingle_ctes()}, owner AS (
                 SELECT shingle, min(doc_id) AS first_doc FROM sh GROUP BY shingle
             ), per_doc AS (
                 SELECT s.doc_id,
@@ -4483,7 +4608,7 @@ def oracle_sql() -> dict[str, str]:
                        / 1000000.0 AS max_abs_err
             FROM coded GROUP BY vec_id ORDER BY vec_id
         """,
-        "dedup_sorted_neighborhood": """
+        "dedup_sorted_neighborhood": f"""
             WITH ranked AS (
                 SELECT doc_id,
                        row_number() OVER (ORDER BY
@@ -4495,14 +4620,7 @@ def oracle_sql() -> dict[str, str]:
                        GREATEST(a.doc_id, b.doc_id) AS id_b
                 FROM ranked a JOIN ranked b
                   ON b.rn > a.rn AND b.rn <= a.rn + 3
-            ), t AS (
-                SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS l
-                FROM documents
-            ), sh AS (
-                SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle
-                FROM t, UNNEST(range(1, len(l) - 1)) AS u(i)
-                WHERE len(l) >= 3
-            ), sizes AS (
+            ), {_shingle_ctes()}, sizes AS (
                 SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
             ), inter AS (
                 SELECT c.id_a, c.id_b, count(*) AS common
@@ -4702,191 +4820,23 @@ def oracle_sql() -> dict[str, str]:
             FROM documents
             GROUP BY md5(lower(trim(text)))
         """,
-        "minhash_signatures": """
-            WITH t AS (
-                SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS l
-                FROM documents
-            ), sh AS (
-                SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle
-                FROM t, UNNEST(range(1, len(l) - 1)) AS u(i)
-                WHERE len(l) >= 3
-            )
-            SELECT doc_id,
-                   -- 4 independent 32-bit hash words per md5 digest
-                   -- (matches operators/dedup.py minhash_signatures)
-                   MIN(('0x' || substr(md5('0|' || shingle),  1, 8))::BIGINT) AS h0,
-                   MIN(('0x' || substr(md5('0|' || shingle),  9, 8))::BIGINT) AS h1,
-                   MIN(('0x' || substr(md5('0|' || shingle), 17, 8))::BIGINT) AS h2,
-                   MIN(('0x' || substr(md5('0|' || shingle), 25, 8))::BIGINT) AS h3,
-                   MIN(('0x' || substr(md5('1|' || shingle),  1, 8))::BIGINT) AS h4,
-                   MIN(('0x' || substr(md5('1|' || shingle),  9, 8))::BIGINT) AS h5,
-                   MIN(('0x' || substr(md5('1|' || shingle), 17, 8))::BIGINT) AS h6,
-                   MIN(('0x' || substr(md5('1|' || shingle), 25, 8))::BIGINT) AS h7
-            FROM sh GROUP BY doc_id
+        "minhash_signatures": f"""
+            WITH {_shingle_ctes()}
+            {_MINHASH_SIG_SELECT}
         """,
-        "dedup_minhash_lsh": """
-            WITH t AS (
-                SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS l
-                FROM documents
-            ), sh AS (
-                SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle
-                FROM t, UNNEST(range(1, len(l) - 1)) AS u(i)
-                WHERE len(l) >= 3
-            ), sig AS (
-                SELECT doc_id,
-                       MIN(('0x' || substr(md5('0|' || shingle),  1, 8))::BIGINT) AS h0,
-                       MIN(('0x' || substr(md5('0|' || shingle),  9, 8))::BIGINT) AS h1,
-                       MIN(('0x' || substr(md5('0|' || shingle), 17, 8))::BIGINT) AS h2,
-                       MIN(('0x' || substr(md5('0|' || shingle), 25, 8))::BIGINT) AS h3,
-                       MIN(('0x' || substr(md5('1|' || shingle),  1, 8))::BIGINT) AS h4,
-                       MIN(('0x' || substr(md5('1|' || shingle),  9, 8))::BIGINT) AS h5,
-                       MIN(('0x' || substr(md5('1|' || shingle), 17, 8))::BIGINT) AS h6,
-                       MIN(('0x' || substr(md5('1|' || shingle), 25, 8))::BIGINT) AS h7
-                FROM sh GROUP BY doc_id
-            ), bb AS (
-                SELECT doc_id, b.band,
-                       md5(CASE b.band
-                           WHEN 0 THEN h0::VARCHAR || '_' || h1::VARCHAR
-                           WHEN 1 THEN h2::VARCHAR || '_' || h3::VARCHAR
-                           WHEN 2 THEN h4::VARCHAR || '_' || h5::VARCHAR
-                           ELSE        h6::VARCHAR || '_' || h7::VARCHAR
-                       END) AS bucket
-                FROM sig, (SELECT unnest(range(4)) AS band) b
-            ), cands AS (
-                SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-                FROM bb a JOIN bb c ON a.band = c.band AND a.bucket = c.bucket
-                WHERE a.doc_id < c.doc_id
-            ), sizes AS (
-                SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-            ), inter AS (
-                SELECT p.id_a, p.id_b, count(*) AS common
-                FROM cands p
-                JOIN sh sa ON sa.doc_id = p.id_a
-                JOIN sh sb ON sb.doc_id = p.id_b AND sb.shingle = sa.shingle
-                GROUP BY p.id_a, p.id_b
-            ), dupes AS (
-                SELECT DISTINCT id_b
-                FROM inter
-                JOIN sizes za ON za.doc_id = id_a
-                JOIN sizes zb ON zb.doc_id = id_b
-                WHERE common::DOUBLE / (za.n_sh + zb.n_sh - common) >= 0.7
-            )
+        "dedup_minhash_lsh": f"""
+            WITH {_shingle_ctes()}, {_minhash_sig_cte()}, {_lsh_cands_ctes()},
+                 {_jaccard_verify_ctes('dupes', 'DISTINCT id_b')}
             SELECT doc_id FROM documents
             WHERE doc_id NOT IN (SELECT id_b FROM dupes)
         """,
-        "dedup_transitive": """
-            WITH RECURSIVE t AS (
-                SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS l
-                FROM documents
-            ), sh AS (
-                SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle
-                FROM t, UNNEST(range(1, len(l) - 1)) AS u(i)
-                WHERE len(l) >= 3
-            ), sig AS (
-                SELECT doc_id,
-                       MIN(('0x' || substr(md5('0|' || shingle),  1, 8))::BIGINT) AS h0,
-                       MIN(('0x' || substr(md5('0|' || shingle),  9, 8))::BIGINT) AS h1,
-                       MIN(('0x' || substr(md5('0|' || shingle), 17, 8))::BIGINT) AS h2,
-                       MIN(('0x' || substr(md5('0|' || shingle), 25, 8))::BIGINT) AS h3,
-                       MIN(('0x' || substr(md5('1|' || shingle),  1, 8))::BIGINT) AS h4,
-                       MIN(('0x' || substr(md5('1|' || shingle),  9, 8))::BIGINT) AS h5,
-                       MIN(('0x' || substr(md5('1|' || shingle), 17, 8))::BIGINT) AS h6,
-                       MIN(('0x' || substr(md5('1|' || shingle), 25, 8))::BIGINT) AS h7
-                FROM sh GROUP BY doc_id
-            ), bb AS (
-                SELECT doc_id, b.band,
-                       md5(CASE b.band
-                           WHEN 0 THEN h0::VARCHAR || '_' || h1::VARCHAR
-                           WHEN 1 THEN h2::VARCHAR || '_' || h3::VARCHAR
-                           WHEN 2 THEN h4::VARCHAR || '_' || h5::VARCHAR
-                           ELSE        h6::VARCHAR || '_' || h7::VARCHAR
-                       END) AS bucket
-                FROM sig, (SELECT unnest(range(4)) AS band) b
-            ), cands AS (
-                SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-                FROM bb a JOIN bb c ON a.band = c.band AND a.bucket = c.bucket
-                WHERE a.doc_id < c.doc_id
-            ), sizes AS (
-                SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-            ), inter AS (
-                SELECT p.id_a, p.id_b, count(*) AS common
-                FROM cands p
-                JOIN sh sa ON sa.doc_id = p.id_a
-                JOIN sh sb ON sb.doc_id = p.id_b AND sb.shingle = sa.shingle
-                GROUP BY p.id_a, p.id_b
-            ), verified AS (
-                SELECT id_a, id_b
-                FROM inter
-                JOIN sizes za ON za.doc_id = id_a
-                JOIN sizes zb ON zb.doc_id = id_b
-                WHERE common::DOUBLE / (za.n_sh + zb.n_sh - common) >= 0.7
-            ), edges AS (
-                SELECT id_a AS src, id_b AS dst FROM verified
-                UNION ALL
-                SELECT id_b, id_a FROM verified
-            ), reach AS (
-                SELECT doc_id AS node, doc_id AS r FROM documents
-                UNION
-                SELECT rc.node, e.dst FROM reach rc JOIN edges e ON e.src = rc.r
-            )
+        "dedup_transitive": f"""
+            WITH RECURSIVE {_DEDUP_COMPONENT_CTES}
             SELECT DISTINCT MIN(r) AS doc_id
             FROM reach GROUP BY node
         """,
-        "dedup_canonical": """
-            WITH RECURSIVE t AS (
-                SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS l
-                FROM documents
-            ), sh AS (
-                SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle
-                FROM t, UNNEST(range(1, len(l) - 1)) AS u(i)
-                WHERE len(l) >= 3
-            ), sig AS (
-                SELECT doc_id,
-                       MIN(('0x' || substr(md5('0|' || shingle),  1, 8))::BIGINT) AS h0,
-                       MIN(('0x' || substr(md5('0|' || shingle),  9, 8))::BIGINT) AS h1,
-                       MIN(('0x' || substr(md5('0|' || shingle), 17, 8))::BIGINT) AS h2,
-                       MIN(('0x' || substr(md5('0|' || shingle), 25, 8))::BIGINT) AS h3,
-                       MIN(('0x' || substr(md5('1|' || shingle),  1, 8))::BIGINT) AS h4,
-                       MIN(('0x' || substr(md5('1|' || shingle),  9, 8))::BIGINT) AS h5,
-                       MIN(('0x' || substr(md5('1|' || shingle), 17, 8))::BIGINT) AS h6,
-                       MIN(('0x' || substr(md5('1|' || shingle), 25, 8))::BIGINT) AS h7
-                FROM sh GROUP BY doc_id
-            ), bb AS (
-                SELECT doc_id, b.band,
-                       md5(CASE b.band
-                           WHEN 0 THEN h0::VARCHAR || '_' || h1::VARCHAR
-                           WHEN 1 THEN h2::VARCHAR || '_' || h3::VARCHAR
-                           WHEN 2 THEN h4::VARCHAR || '_' || h5::VARCHAR
-                           ELSE        h6::VARCHAR || '_' || h7::VARCHAR
-                       END) AS bucket
-                FROM sig, (SELECT unnest(range(4)) AS band) b
-            ), cands AS (
-                SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-                FROM bb a JOIN bb c ON a.band = c.band AND a.bucket = c.bucket
-                WHERE a.doc_id < c.doc_id
-            ), sizes AS (
-                SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-            ), inter AS (
-                SELECT p.id_a, p.id_b, count(*) AS common
-                FROM cands p
-                JOIN sh sa ON sa.doc_id = p.id_a
-                JOIN sh sb ON sb.doc_id = p.id_b AND sb.shingle = sa.shingle
-                GROUP BY p.id_a, p.id_b
-            ), verified AS (
-                SELECT id_a, id_b
-                FROM inter
-                JOIN sizes za ON za.doc_id = id_a
-                JOIN sizes zb ON zb.doc_id = id_b
-                WHERE common::DOUBLE / (za.n_sh + zb.n_sh - common) >= 0.7
-            ), edges AS (
-                SELECT id_a AS src, id_b AS dst FROM verified
-                UNION ALL
-                SELECT id_b, id_a FROM verified
-            ), reach AS (
-                SELECT doc_id AS node, doc_id AS r FROM documents
-                UNION
-                SELECT rc.node, e.dst FROM reach rc JOIN edges e ON e.src = rc.r
-            ), comp AS (
+        "dedup_canonical": f"""
+            WITH RECURSIVE {_DEDUP_COMPONENT_CTES}, comp AS (
                 SELECT node AS doc_id, MIN(r) AS cluster_id
                 FROM reach GROUP BY node
             ), toksq AS (
@@ -4911,66 +4861,16 @@ def oracle_sql() -> dict[str, str]:
             QUALIFY row_number() OVER (PARTITION BY cluster_id
                                        ORDER BY quality DESC, doc_id ASC) = 1
         """,
-        "dedup_incremental": """
-            WITH t AS (
-                SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS l
-                FROM documents
-            ), sh AS (
-                SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle
-                FROM t, UNNEST(range(1, len(l) - 1)) AS u(i)
-                WHERE len(l) >= 3
-            ), sig AS (
-                SELECT doc_id,
-                       MIN(('0x' || substr(md5('0|' || shingle),  1, 8))::BIGINT) AS h0,
-                       MIN(('0x' || substr(md5('0|' || shingle),  9, 8))::BIGINT) AS h1,
-                       MIN(('0x' || substr(md5('0|' || shingle), 17, 8))::BIGINT) AS h2,
-                       MIN(('0x' || substr(md5('0|' || shingle), 25, 8))::BIGINT) AS h3,
-                       MIN(('0x' || substr(md5('1|' || shingle),  1, 8))::BIGINT) AS h4,
-                       MIN(('0x' || substr(md5('1|' || shingle),  9, 8))::BIGINT) AS h5,
-                       MIN(('0x' || substr(md5('1|' || shingle), 17, 8))::BIGINT) AS h6,
-                       MIN(('0x' || substr(md5('1|' || shingle), 25, 8))::BIGINT) AS h7
-                FROM sh GROUP BY doc_id
-            ), bb AS (
-                SELECT doc_id, b.band,
-                       md5(CASE b.band
-                           WHEN 0 THEN h0::VARCHAR || '_' || h1::VARCHAR
-                           WHEN 1 THEN h2::VARCHAR || '_' || h3::VARCHAR
-                           WHEN 2 THEN h4::VARCHAR || '_' || h5::VARCHAR
-                           ELSE        h6::VARCHAR || '_' || h7::VARCHAR
-                       END) AS bucket
-                FROM sig, (SELECT unnest(range(4)) AS band) b
-            ), cands AS (
-                SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-                FROM bb a JOIN bb c ON a.band = c.band AND a.bucket = c.bucket
-                WHERE a.doc_id % 2 = 1 AND c.doc_id % 2 = 0
-            ), sizes AS (
-                SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-            ), inter AS (
-                SELECT p.id_a, p.id_b, count(*) AS common
-                FROM cands p
-                JOIN sh sa ON sa.doc_id = p.id_a
-                JOIN sh sb ON sb.doc_id = p.id_b AND sb.shingle = sa.shingle
-                GROUP BY p.id_a, p.id_b
-            ), dupes AS (
-                SELECT DISTINCT id_a
-                FROM inter
-                JOIN sizes za ON za.doc_id = id_a
-                JOIN sizes zb ON zb.doc_id = id_b
-                WHERE common::DOUBLE / (za.n_sh + zb.n_sh - common) >= 0.7
-            )
+        "dedup_incremental": f"""
+            WITH {_shingle_ctes()}, {_minhash_sig_cte()},
+                 {_lsh_cands_ctes('a.doc_id % 2 = 1 AND c.doc_id % 2 = 0')},
+                 {_jaccard_verify_ctes('dupes', 'DISTINCT id_a')}
             SELECT doc_id FROM documents
             WHERE doc_id % 2 = 1
               AND doc_id NOT IN (SELECT id_a FROM dupes)
         """,
-        "jaccard_pairs": """
-            WITH t AS (
-                SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS l
-                FROM documents
-            ), sh AS (
-                SELECT DISTINCT doc_id, l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle
-                FROM t, UNNEST(range(1, len(l) - 1)) AS u(i)
-                WHERE len(l) >= 3
-            ), sizes AS (
+        "jaccard_pairs": f"""
+            WITH {_shingle_ctes()}, sizes AS (
                 SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
             ), inter AS (
                 SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
@@ -5194,15 +5094,8 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY posts DESC, user_id ASC
             LIMIT 50
         """,
-        "doc_bigram_lm": """
-            WITH toks AS (
-                SELECT doc_id, i AS pos, ws[i] AS w
-                FROM (
-                    SELECT doc_id,
-                           list_filter(string_split(text, ' '), x -> x <> '') AS ws
-                    FROM documents
-                ), UNNEST(range(1, len(ws) + 1)) AS u(i)
-            ), bi AS (
+        "doc_bigram_lm": f"""
+            WITH {_POSITIONAL_TOKENS_CTE}, bi AS (
                 SELECT a.w AS w1, b.w AS w2, count(*) AS n_bigram
                 FROM toks a JOIN toks b
                   ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
@@ -5219,15 +5112,8 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY n_bigram DESC, w1 ASC, w2 ASC
             LIMIT 50
         """,
-        "doc_pmi_collocations": """
-            WITH toks AS (
-                SELECT doc_id, i AS pos, ws[i] AS w
-                FROM (
-                    SELECT doc_id,
-                           list_filter(string_split(text, ' '), x -> x <> '') AS ws
-                    FROM documents
-                ), UNNEST(range(1, len(ws) + 1)) AS u(i)
-            ), bi AS (
+        "doc_pmi_collocations": f"""
+            WITH {_POSITIONAL_TOKENS_CTE}, bi AS (
                 SELECT a.w AS w1, b.w AS w2, count(*) AS n_bigram
                 FROM toks a JOIN toks b
                   ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
@@ -5376,15 +5262,8 @@ def oracle_sql() -> dict[str, str]:
             SELECT event_type, SUM(tm)::DOUBLE / 1e6 AS chi2
             FROM terms GROUP BY event_type ORDER BY event_type
         """,
-        "doc_skipgram_pairs": """
-            WITH toks AS (
-                SELECT doc_id, i AS pos, ws[i] AS w
-                FROM (
-                    SELECT doc_id,
-                           list_filter(string_split(text, ' '), x -> x <> '') AS ws
-                    FROM documents
-                ), UNNEST(range(1, len(ws) + 1)) AS u(i)
-            )
+        "doc_skipgram_pairs": f"""
+            WITH {_POSITIONAL_TOKENS_CTE}
             SELECT a.w AS w1, b.w AS w2, count(*) AS n_cooc
             FROM toks a JOIN toks b
               ON a.doc_id = b.doc_id
@@ -5657,15 +5536,8 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY n_name
             ORDER BY n_name
         """,
-        "doc_lm_score": """
-            WITH toks AS (
-                SELECT doc_id, i AS pos, ws[i] AS w
-                FROM (
-                    SELECT doc_id,
-                           list_filter(string_split(text, ' '), x -> x <> '') AS ws
-                    FROM documents
-                ), UNNEST(range(1, len(ws) + 1)) AS u(i)
-            ), doc_bi AS (
+        "doc_lm_score": f"""
+            WITH {_POSITIONAL_TOKENS_CTE}, doc_bi AS (
                 SELECT a.doc_id, a.w AS w1, b.w AS w2, count(*) AS tf
                 FROM toks a JOIN toks b
                   ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
@@ -5878,15 +5750,8 @@ def oracle_sql() -> dict[str, str]:
              AND c.ts >= p.ts AND c.ts <= p.ts + INTERVAL 1 HOUR
             ORDER BY p.user_id, purchase_ts_s, click_ts_s
         """,
-        "events_pattern_search": """
-            WITH daily AS (
-                SELECT event_type,
-                       CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                       (CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-                        / 100.0) / CAST(COUNT(*) AS DOUBLE) AS val
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ), series AS (
+        "events_pattern_search": f"""
+            WITH {_DAILY_VAL_CTE}, series AS (
                 SELECT event_type,
                        list(val ORDER BY day) AS vs,
                        list(day ORDER BY day) AS days
@@ -5951,11 +5816,8 @@ def oracle_sql() -> dict[str, str]:
              AND c.ts >= p.ts AND c.ts <= p.ts + INTERVAL 1 HOUR
             ORDER BY p.user_id, purchase_ts_s, click_ts_s
         """,
-        "doc_repetition": """
-            WITH t AS (
-                SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS l
-                FROM documents
-            ), b AS (
+        "doc_repetition": f"""
+            WITH {_doc_tokens_cte()}, b AS (
                 SELECT doc_id,
                        len(list_filter(range(1, len(l)), i -> l[i] = l[i+1]))::BIGINT AS adj,
                        list_transform(range(1, len(l)), i -> l[i] || ' ' || l[i+1]) AS g
@@ -5972,11 +5834,8 @@ def oracle_sql() -> dict[str, str]:
             FROM tf GROUP BY doc_id
         """,
         "doc_pii_scrub": _pii_scrub_oracle_sql(),
-        "doc_passage_dedup": """
-            WITH t AS (
-                SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS l
-                FROM documents
-            ), e AS (
+        "doc_passage_dedup": f"""
+            WITH {_doc_tokens_cte()}, e AS (
                 SELECT doc_id, i AS pos,
                        array_to_string(l[(i*16+1):(i*16+16)], ' ') AS chunk
                 FROM t, UNNEST(range(0, (len(l)-1)//16 + 1)) AS u(i)
@@ -6004,11 +5863,8 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT doc_id, n_tokens, (strt // 1024)::BIGINT AS shard FROM s
         """,
-        "doc_winnow": """
-            WITH t AS (
-                SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS l
-                FROM documents
-            ), g AS (
+        "doc_winnow": f"""
+            WITH {_doc_tokens_cte()}, g AS (
                 SELECT doc_id, i - 1 AS pos,
                        ('0x' || substr(md5(l[i] || ' ' || l[i+1] || ' ' || l[i+2]), 1, 8))::BIGINT AS h
                 FROM t, UNNEST(range(1, len(l) - 1)) AS u(i)
@@ -6153,29 +6009,8 @@ def oracle_sql() -> dict[str, str]:
                        AS rows_at_risk
             FROM groups GROUP BY 1 ORDER BY 1
         """,
-        "media_video_neardup": """
-            -- mirrors the stub decode byte-for-byte: duration from the
-            -- payload md5, frame-of-byte = (j*n)//len, fingerprint =
-            -- (sum*31 + count) mod 1000003
-            WITH vids AS (
-                SELECT doc_id, text,
-                       ('0x' || substr(md5(text), 1, 8))::BIGINT AS h,
-                       length(text) AS ln
-                FROM documents WHERE doc_id % 3 = 2
-            ), nf AS (
-                SELECT doc_id, text, ln,
-                       least((1000 + h % 7200000) // 1000, 16) AS n
-                FROM vids
-            ), chars AS (
-                SELECT doc_id, n, ln, i,
-                       unicode(substr(text, CAST(i + 1 AS INT), 1)) AS b
-                FROM nf, UNNEST(range(ln)) AS u(i)
-                WHERE n > 0 AND ln > 0
-            ), perframe AS (
-                SELECT doc_id, (i * n) // ln AS frame_idx,
-                       (SUM(b) * 31 + COUNT(*)) % 1000003 AS fp
-                FROM chars GROUP BY doc_id, n, ln, (i * n) // ln
-            ), s AS (
+        "media_video_neardup": f"""
+            WITH {_MEDIA_FRAME_FP_CTES}, s AS (
                 SELECT DISTINCT doc_id, fp FROM perframe
             )
             SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -6509,14 +6344,8 @@ def oracle_sql() -> dict[str, str]:
                        AS intercept
             FROM fit
         """,
-        "events_stl_strength": """
-            WITH daily AS MATERIALIZED (
-                SELECT event_type, CAST(ts AS DATE) AS day,
-                       CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                            AS BIGINT) // 100 AS x
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ), tr AS (
+        "events_stl_strength": f"""
+            WITH {_DAILY_X_CTE}, tr AS (
                 SELECT event_type, day, x,
                        CAST((SUM(x) OVER w * 1000000)
                             // (COUNT(*) OVER w) AS BIGINT) AS tr_u
@@ -6555,14 +6384,8 @@ def oracle_sql() -> dict[str, str]:
             FROM m WHERE CAST(n * sdd - sd * sd AS DOUBLE) > 0
             ORDER BY event_type
         """,
-        "events_ccf_lag": """
-            WITH daily AS MATERIALIZED (
-                SELECT event_type, CAST(ts AS DATE) AS day,
-                       CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                            AS BIGINT) // 100 AS x
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ), lags AS (
+        "events_ccf_lag": f"""
+            WITH {_DAILY_X_CTE}, lags AS (
                 SELECT CAST(unnest(range(-7, 8)) AS INT) AS lag
             ), j AS (
                 SELECT a.event_type AS type_a, b.event_type AS type_b,
@@ -6669,14 +6492,8 @@ def oracle_sql() -> dict[str, str]:
             LEFT JOIN border br ON p.user_id = br.user_id
             ORDER BY p.user_id
         """,
-        "events_granger_lite": """
-            WITH daily AS MATERIALIZED (
-                SELECT event_type, CAST(ts AS DATE) AS day,
-                       CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                            AS BIGINT) // 100 AS x
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ), eff AS (
+        "events_granger_lite": f"""
+            WITH {_DAILY_X_CTE}, eff AS (
                 SELECT event_type AS effect, day, x AS y FROM daily
             ), effl AS (
                 SELECT event_type AS effect, day + 1 AS day, x AS y1
@@ -6821,14 +6638,8 @@ def oracle_sql() -> dict[str, str]:
             FROM s WHERE n_demands >= 2
             ORDER BY p_brand
         """,
-        "events_binseg_changepoint": """
-            WITH daily AS MATERIALIZED (
-                SELECT event_type, CAST(ts AS DATE) AS day,
-                       CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                            AS BIGINT) // 100 AS x
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ), pre AS (
+        "events_binseg_changepoint": f"""
+            WITH {_DAILY_X_CTE}, pre AS (
                 SELECT event_type, day,
                        SUM(x) OVER (PARTITION BY event_type ORDER BY day
                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -7394,29 +7205,8 @@ def oracle_sql() -> dict[str, str]:
                    floor(corr * corr * 1000000.0 + 0.5) / 1000000.0 AS r2
             FROM k
         """,
-        "events_ks_test": """
-            WITH cells AS (
-                SELECT event_type,
-                       CAST(floor(value * 100 + 0.5) AS BIGINT) AS v,
-                       SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16'
-                                THEN 0 ELSE 1 END) AS ca,
-                       SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16'
-                                THEN 1 ELSE 0 END) AS cb
-                FROM events
-                WHERE value IS NOT NULL AND ts IS NOT NULL
-                GROUP BY 1, 2
-            ), cum AS (
-                SELECT event_type, v,
-                       SUM(ca) OVER (PARTITION BY event_type ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                           AS cuma,
-                       SUM(cb) OVER (PARTITION BY event_type ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                           AS cumb,
-                       SUM(ca) OVER (PARTITION BY event_type) AS na,
-                       SUM(cb) OVER (PARTITION BY event_type) AS nb
-                FROM cells
-            ), dd AS (
+        "events_ks_test": f"""
+            WITH {_HALFSPLIT_CELLS_CTE}, {_cum_cells_cte('v')}, dd AS (
                 SELECT event_type, v, na, nb,
                        abs(cuma * nb - cumb * na) AS diff
                 FROM cum WHERE na > 0 AND nb > 0
@@ -7479,14 +7269,8 @@ def oracle_sql() -> dict[str, str]:
                        / 1000000.0 AS z_score
             FROM e
         """,
-        "events_periodogram": """
-            WITH daily AS MATERIALIZED (
-                SELECT event_type, CAST(ts AS DATE) AS day,
-                       CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                            AS BIGINT) // 100 AS x
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ), cent AS (
+        "events_periodogram": f"""
+            WITH {_DAILY_X_CTE}, cent AS (
                 SELECT event_type,
                        count(*) OVER (PARTITION BY event_type) AS n,
                        SUM(x) OVER (PARTITION BY event_type) AS sx,
@@ -7755,17 +7539,9 @@ def oracle_sql() -> dict[str, str]:
                        / 1000000.0 AS entropy_norm
             FROM s ORDER BY cur_event
         """,
-        "weighted_jaccard_pairs": """
-            WITH t AS (
-                SELECT doc_id,
-                       list_filter(string_split(text, ' '), x -> x <> '') AS l
-                FROM documents
-            ), sh AS MATERIALIZED (
-                SELECT DISTINCT doc_id,
-                       l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle
-                FROM t, UNNEST(range(1, len(l) - 1)) AS u(i)
-                WHERE len(l) >= 3
-            ), nd AS (SELECT count(*) AS nd FROM documents),
+        "weighted_jaccard_pairs": f"""
+            WITH {_shingle_ctes(materialized=True)},
+            nd AS (SELECT count(*) AS nd FROM documents),
             dfq AS (
                 SELECT shingle, CAST(count(*) AS BIGINT) AS df
                 FROM sh GROUP BY 1
@@ -7775,31 +7551,7 @@ def oracle_sql() -> dict[str, str]:
                                      / CAST(df + 1 AS DOUBLE))
                                   * 1000000.0) AS BIGINT) AS w
                 FROM dfq, nd
-            ), sig AS (
-                SELECT doc_id,
-                       MIN(('0x' || substr(md5('0|' || shingle),  1, 8))::BIGINT) AS h0,
-                       MIN(('0x' || substr(md5('0|' || shingle),  9, 8))::BIGINT) AS h1,
-                       MIN(('0x' || substr(md5('0|' || shingle), 17, 8))::BIGINT) AS h2,
-                       MIN(('0x' || substr(md5('0|' || shingle), 25, 8))::BIGINT) AS h3,
-                       MIN(('0x' || substr(md5('1|' || shingle),  1, 8))::BIGINT) AS h4,
-                       MIN(('0x' || substr(md5('1|' || shingle),  9, 8))::BIGINT) AS h5,
-                       MIN(('0x' || substr(md5('1|' || shingle), 17, 8))::BIGINT) AS h6,
-                       MIN(('0x' || substr(md5('1|' || shingle), 25, 8))::BIGINT) AS h7
-                FROM sh GROUP BY doc_id
-            ), bb AS (
-                SELECT doc_id, b.band,
-                       md5(CASE b.band
-                           WHEN 0 THEN h0::VARCHAR || '_' || h1::VARCHAR
-                           WHEN 1 THEN h2::VARCHAR || '_' || h3::VARCHAR
-                           WHEN 2 THEN h4::VARCHAR || '_' || h5::VARCHAR
-                           ELSE        h6::VARCHAR || '_' || h7::VARCHAR
-                       END) AS bucket
-                FROM sig, (SELECT unnest(range(4)) AS band) b
-            ), cands AS MATERIALIZED (
-                SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-                FROM bb a JOIN bb c ON a.band = c.band AND a.bucket = c.bucket
-                WHERE a.doc_id < c.doc_id
-            ), tot AS (
+            ), {_minhash_sig_cte()}, {_lsh_cands_ctes(materialized=True)}, tot AS (
                 SELECT doc_id, CAST(SUM(w.w) AS BIGINT) AS tw
                 FROM sh JOIN w USING (shingle) GROUP BY 1
             ), shared AS (
@@ -8205,17 +7957,8 @@ def oracle_sql() -> dict[str, str]:
                                    AND UNBOUNDED FOLLOWING)
             ORDER BY s_nationkey, rn
         """,
-        "dedup_banding_recall": """
-            WITH t AS (
-                SELECT doc_id,
-                       list_filter(string_split(text, ' '), x -> x <> '') AS l
-                FROM documents WHERE doc_id < 500 AND doc_id % 2 = 0
-            ), sh AS (
-                SELECT DISTINCT doc_id,
-                       l[i] || ' ' || l[i+1] || ' ' || l[i+2] AS shingle
-                FROM t, UNNEST(range(1, len(l) - 1)) AS u(i)
-                WHERE len(l) >= 3
-            ), sizes AS (
+        "dedup_banding_recall": f"""
+            WITH {_shingle_ctes(_BANDING_SAMPLE)}, sizes AS (
                 SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
             ), common AS (
                 SELECT sa.doc_id AS id_a, sb.doc_id AS id_b,
@@ -8229,31 +7972,7 @@ def oracle_sql() -> dict[str, str]:
                 JOIN sizes za ON za.doc_id = id_a
                 JOIN sizes zb ON zb.doc_id = id_b
                 WHERE c * 3 >= za.n_sh + zb.n_sh
-            ), sig AS (
-                SELECT doc_id,
-                       MIN(('0x' || substr(md5('0|' || shingle),  1, 8))::BIGINT) AS h0,
-                       MIN(('0x' || substr(md5('0|' || shingle),  9, 8))::BIGINT) AS h1,
-                       MIN(('0x' || substr(md5('0|' || shingle), 17, 8))::BIGINT) AS h2,
-                       MIN(('0x' || substr(md5('0|' || shingle), 25, 8))::BIGINT) AS h3,
-                       MIN(('0x' || substr(md5('1|' || shingle),  1, 8))::BIGINT) AS h4,
-                       MIN(('0x' || substr(md5('1|' || shingle),  9, 8))::BIGINT) AS h5,
-                       MIN(('0x' || substr(md5('1|' || shingle), 17, 8))::BIGINT) AS h6,
-                       MIN(('0x' || substr(md5('1|' || shingle), 25, 8))::BIGINT) AS h7
-                FROM sh GROUP BY doc_id
-            ), bb AS (
-                SELECT doc_id, b.band,
-                       md5(CASE b.band
-                           WHEN 0 THEN h0::VARCHAR || '_' || h1::VARCHAR
-                           WHEN 1 THEN h2::VARCHAR || '_' || h3::VARCHAR
-                           WHEN 2 THEN h4::VARCHAR || '_' || h5::VARCHAR
-                           ELSE        h6::VARCHAR || '_' || h7::VARCHAR
-                       END) AS bucket
-                FROM sig, (SELECT unnest(range(4)) AS band) b
-            ), cands AS (
-                SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-                FROM bb a JOIN bb c ON a.band = c.band AND a.bucket = c.bucket
-                WHERE a.doc_id < c.doc_id
-            ), hits AS (
+            ), {_minhash_sig_cte()}, {_lsh_cands_ctes()}, hits AS (
                 SELECT 1 FROM cands JOIN truth USING (id_a, id_b)
             ), counts AS (
                 SELECT (SELECT count(*) FROM truth) AS n_true,
@@ -8302,14 +8021,8 @@ def oracle_sql() -> dict[str, str]:
                          * 1000000.0 + 0.5) / 1000000.0 AS silence_ratio
             FROM agg ORDER BY media_id
         """,
-        "events_runs_test": """
-            WITH daily AS MATERIALIZED (
-                SELECT event_type, CAST(ts AS DATE) AS day,
-                       CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                            AS BIGINT) // 100 AS x
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ), moves AS (
+        "events_runs_test": f"""
+            WITH {_DAILY_X_CTE}, moves AS (
                 SELECT event_type, day, up FROM (
                     SELECT event_type, day, x,
                            lag(x) OVER (PARTITION BY event_type
@@ -8355,14 +8068,8 @@ def oracle_sql() -> dict[str, str]:
             FROM s WHERE n_up > 0 AND n_down > 0
             ORDER BY event_type
         """,
-        "events_dow_anova": """
-            WITH daily AS MATERIALIZED (
-                SELECT event_type, CAST(ts AS DATE) AS day,
-                       CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                            AS BIGINT) // 100 AS x
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ), d2 AS (
+        "events_dow_anova": f"""
+            WITH {_DAILY_X_CTE}, d2 AS (
                 SELECT event_type,
                        (day - DATE '1970-01-01') % 7 AS dow, x
                 FROM daily
@@ -8592,14 +8299,8 @@ def oracle_sql() -> dict[str, str]:
                          * 1000000.0 + 0.5) / 1000000.0 AS psi
             FROM terms GROUP BY 1 ORDER BY 1
         """,
-        "events_type_corr": """
-            WITH daily AS MATERIALIZED (
-                SELECT event_type, CAST(ts AS DATE) AS day,
-                       CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                            AS BIGINT) // 100 AS x
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ), stats AS (
+        "events_type_corr": f"""
+            WITH {_DAILY_X_CTE}, stats AS (
                 SELECT a.event_type AS type_a, b.event_type AS type_b,
                        CAST(count(*) AS HUGEINT) AS n,
                        SUM(CAST(a.x AS HUGEINT)) AS sa,
@@ -8898,14 +8599,9 @@ def oracle_sql() -> dict[str, str]:
                          * 1000000.0 + 0.5) / 1000000.0 AS gini
             FROM s ORDER BY 1
         """,
-        "events_acf": """
-            WITH daily AS MATERIALIZED (
-                SELECT event_type, CAST(ts AS DATE) AS day,
-                       CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                            AS BIGINT) // 100 AS x
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ), lags AS (SELECT CAST(range AS INT) AS lag FROM range(1, 8)),
+        "events_acf": f"""
+            WITH {_DAILY_X_CTE},
+            lags AS (SELECT CAST(range AS INT) AS lag FROM range(1, 8)),
             pairs AS (
                 SELECT a.event_type, l.lag, a.x AS xa, b.x AS xb
                 FROM daily a
@@ -8960,14 +8656,8 @@ def oracle_sql() -> dict[str, str]:
             FROM s WHERE n >= 10
             ORDER BY user_id
         """,
-        "events_seasonal_wape": """
-            WITH daily AS MATERIALIZED (
-                SELECT event_type, CAST(ts AS DATE) AS day,
-                       CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                            AS BIGINT) // 100 AS x
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ), fc AS (
+        "events_seasonal_wape": f"""
+            WITH {_DAILY_X_CTE}, fc AS (
                 SELECT event_type, day + 7 AS day, x AS f FROM daily
             )
             SELECT d.event_type, count(*) AS n_days,
@@ -9304,16 +8994,8 @@ def oracle_sql() -> dict[str, str]:
         # SAX word per event type: micro-grid daily means, z-score as
         # exact-int numerator / IEEE sqrt denominator, ORDER BY day
         # string_agg — symbols identical cross-engine
-        "events_sax_daily": """
-            WITH daily AS (
-                SELECT event_type, CAST(ts AS DATE) AS day,
-                       CAST(floor(
-                           CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                                * 10000 AS DOUBLE)
-                           / CAST(count(*) AS DOUBLE) + 0.5) AS BIGINT) AS dm
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ), stats AS (
+        "events_sax_daily": f"""
+            WITH {_DAILY_DM_CTE}, stats AS (
                 SELECT event_type, count(*) AS n,
                        CAST(SUM(dm) AS BIGINT) AS sx,
                        SUM(dm * dm) AS sxx
@@ -9471,16 +9153,8 @@ def oracle_sql() -> dict[str, str]:
         # along anti-diagonals with a recursive CTE (carrying the
         # previous diagonal as gen=0 rows) — exact longs end to end,
         # no FP mirroring needed
-        "events_dtw_distance": """
-            WITH RECURSIVE daily AS (
-                SELECT event_type, CAST(ts AS DATE) AS day,
-                       CAST(floor(
-                           CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                                * 10000 AS DOUBLE)
-                           / CAST(count(*) AS DOUBLE) + 0.5) AS BIGINT) AS dm
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ), ser AS (
+        "events_dtw_distance": f"""
+            WITH RECURSIVE {_DAILY_DM_CTE}, ser AS (
                 SELECT event_type, list(dm ORDER BY day) AS arr
                 FROM daily GROUP BY 1
             ), pairs AS (
@@ -9506,10 +9180,10 @@ def oracle_sql() -> dict[str, str]:
                     JOIN pairs p ON w.type_a = p.type_a
                                 AND w.type_b = p.type_b,
                          UNNEST(CASE WHEN w.gen = 1
-                                THEN [{'g': 1, 'ti': w.i},
-                                      {'g': 1, 'ti': w.i + 1},
-                                      {'g': 0, 'ti': w.i}]
-                                ELSE [{'g': 1, 'ti': w.i + 1}] END) AS t(u)
+                                THEN [{{'g': 1, 'ti': w.i}},
+                                      {{'g': 1, 'ti': w.i + 1}},
+                                      {{'g': 0, 'ti': w.i}}]
+                                ELSE [{{'g': 1, 'ti': w.i + 1}}] END) AS t(u)
                     WHERE (u.g = 0 AND w.lvl + 1 <= p.n + p.m - 2)
                        OR (u.g = 1 AND u.ti <= p.n - 1
                            AND w.lvl + 1 - u.ti >= 0
@@ -9528,16 +9202,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         # R/S Hurst exponent: integer-lattice cumulative deviations,
         # IEEE-exact R/S, milli-floored ln() regression inputs
-        "events_hurst_exponent": """
-            WITH daily AS (
-                SELECT event_type, CAST(ts AS DATE) AS day,
-                       CAST(floor(
-                           CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                                * 10000 AS DOUBLE)
-                           / CAST(count(*) AS DOUBLE) + 0.5) AS BIGINT) AS dm
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ), idx AS (
+        "events_hurst_exponent": f"""
+            WITH {_DAILY_DM_CTE}, idx AS (
                 SELECT event_type, dm,
                        row_number() OVER (PARTITION BY event_type
                                           ORDER BY day) - 1 AS idx
@@ -9644,16 +9310,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         # brute-force matrix profile: exact long squared distances over
         # the window/offset join, argmin tie-broken by smallest index
-        "events_matrix_profile": """
-            WITH daily AS (
-                SELECT event_type, CAST(ts AS DATE) AS day,
-                       CAST(floor(
-                           CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                                * 10000 AS DOUBLE)
-                           / CAST(count(*) AS DOUBLE) + 0.5) AS BIGINT) AS dm
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ), idx AS (
+        "events_matrix_profile": f"""
+            WITH {_DAILY_DM_CTE}, idx AS (
                 SELECT event_type, dm,
                        CAST(row_number() OVER (PARTITION BY event_type
                                                ORDER BY day) - 1 AS BIGINT)
@@ -9763,14 +9421,8 @@ def oracle_sql() -> dict[str, str]:
         # one recursion row per day, carrying (level, trend, the 7-slot
         # seasonal queue, SSE); binary-fraction smoothing constants keep
         # every sequential double op bit-identical cross-engine
-        "events_holt_winters": """
-            WITH RECURSIVE daily AS (
-                SELECT event_type, CAST(ts AS DATE) AS day,
-                       CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                            AS BIGINT) AS cent
-                FROM events WHERE value IS NOT NULL
-                GROUP BY 1, 2
-            ), ser AS (
+        "events_holt_winters": f"""
+            WITH RECURSIVE {_DAILY_CENT_CTE}, ser AS (
                 SELECT event_type, y, len(y) AS n FROM (
                     SELECT event_type, list(cent ORDER BY day) AS y
                     FROM daily GROUP BY 1
@@ -9943,16 +9595,8 @@ def oracle_sql() -> dict[str, str]:
     """
     # V-optimal histogram: six unrolled DP levels over exact segment
     # SSEs, two-step argmin (smallest-s tie-break), joined backtrack
-    _o["events_voptimal_histogram"] = """
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(floor(
-                       CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                            * 10000 AS DOUBLE)
-                       / CAST(count(*) AS DOUBLE) + 0.5) AS BIGINT) AS dm
-            FROM events WHERE value IS NOT NULL
-            GROUP BY 1, 2
-        ), pref AS (
+    _o["events_voptimal_histogram"] = f"""
+        WITH {_DAILY_DM_CTE}, pref AS (
             SELECT event_type,
                    row_number() OVER (PARTITION BY event_type ORDER BY day)
                        AS p,
@@ -10176,14 +9820,8 @@ def oracle_sql() -> dict[str, str]:
     """
     # rolling-origin HW backtest: the recursion re-runs keyed by
     # (event_type, origin) over array PREFIXES; micro-floored errors
-    _o["events_hw_backtest"] = """
-        WITH RECURSIVE daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) AS cent
-            FROM events WHERE value IS NOT NULL
-            GROUP BY 1, 2
-        ), ser AS (
+    _o["events_hw_backtest"] = f"""
+        WITH RECURSIVE {_DAILY_CENT_CTE}, ser AS (
             SELECT event_type, y, len(y) AS n FROM (
                 SELECT event_type, list(cent ORDER BY day) AS y
                 FROM daily GROUP BY 1
@@ -10339,16 +9977,8 @@ def oracle_sql() -> dict[str, str]:
         FROM tot, ga, gb, gc
     """
     # Bollinger: exact integer 7-day window sums; mid/sigma mirrored
-    _o["events_bollinger_bands"] = """
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(floor(
-                       CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                            * 10000 AS DOUBLE)
-                       / CAST(count(*) AS DOUBLE) + 0.5) AS BIGINT) AS dm
-            FROM events WHERE value IS NOT NULL
-            GROUP BY 1, 2
-        ), rolled AS (
+    _o["events_bollinger_bands"] = f"""
+        WITH {_DAILY_DM_CTE}, rolled AS (
             SELECT event_type, day, dm,
                    count(*) OVER w AS w,
                    CAST(SUM(dm) OVER w AS BIGINT) AS sx,
@@ -10492,16 +10122,8 @@ def oracle_sql() -> dict[str, str]:
     # PACF via unrolled Durbin-Levinson: exact-lattice
     # autocovariances, 5-level recursion mirrored expression-for-
     # expression (machine-generated on both sides from one loop)
-    _o["events_pacf"] = """
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(floor(
-                       CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                            * 10000 AS DOUBLE)
-                       / CAST(count(*) AS DOUBLE) + 0.5) AS BIGINT) AS dm
-            FROM events WHERE value IS NOT NULL
-            GROUP BY 1, 2
-        ), st AS (
+    _o["events_pacf"] = f"""
+        WITH {_DAILY_DM_CTE}, st AS (
             SELECT event_type, count(*) AS n,
                    CAST(SUM(dm) AS BIGINT) AS sx
             FROM daily GROUP BY 1
@@ -10931,12 +10553,8 @@ def oracle_sql() -> dict[str, str]:
     # Kalman local-level filter: recursive CTE replays the identical
     # IEEE basic-op recursion one row per step (the Holt-Winters
     # device; Q/R/P0 are exact binary fractions)
-    _o["events_kalman_level"] = """
-        WITH RECURSIVE daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(count(*) AS BIGINT) AS c
-            FROM events GROUP BY 1, 2
-        ), ser AS (
+    _o["events_kalman_level"] = f"""
+        WITH RECURSIVE {_DAILY_C_CTE}, ser AS (
             SELECT event_type, y, len(y) AS n FROM (
                 SELECT event_type, list(c ORDER BY day) AS y
                 FROM daily GROUP BY 1
@@ -10971,13 +10589,8 @@ def oracle_sql() -> dict[str, str]:
     _o["events_harmonic_regression"] = _harmonic_oracle_sql()
     # max drawdown: exact centi-long peak segmentation, deterministic
     # (dd desc, trough, peak) argmax
-    _o["events_max_drawdown"] = """
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) AS cent
-            FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-        ), curve AS (
+    _o["events_max_drawdown"] = f"""
+        WITH {_DAILY_CENT_CTE}, curve AS (
             SELECT event_type, day,
                    CAST(SUM(cent) OVER (PARTITION BY event_type ORDER BY day
                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -11025,12 +10638,8 @@ def oracle_sql() -> dict[str, str]:
     """
     # seeded-Laplace DP counts: dyadic md5 uniform, micro-gridded ln,
     # mirrored sign CASE
-    _o["events_dp_noisy_counts"] = """
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(count(*) AS BIGINT) AS c
-            FROM events GROUP BY 1, 2
-        ), seeded AS (
+    _o["events_dp_noisy_counts"] = f"""
+        WITH {_DAILY_C_CTE}, seeded AS (
             SELECT event_type, day, c,
                    (CAST(('0x' || substr(md5('dp|' || event_type || '|'
                                              || CAST(day AS VARCHAR)), 1, 8))
@@ -11056,12 +10665,8 @@ def oracle_sql() -> dict[str, str]:
     _o["events_circular_stats"] = _circular_oracle_sql()
     # turning-points randomness test: exact integer T, closed-form
     # moments, mirrored z
-    _o["events_turning_points"] = """
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(count(*) AS BIGINT) AS c
-            FROM events GROUP BY 1, 2
-        ), trip AS (
+    _o["events_turning_points"] = f"""
+        WITH {_DAILY_C_CTE}, trip AS (
             SELECT event_type, c,
                    lag(c) OVER (PARTITION BY event_type ORDER BY day) AS prev,
                    lead(c) OVER (PARTITION BY event_type ORDER BY day) AS nxt
@@ -11269,14 +10874,8 @@ def oracle_sql() -> dict[str, str]:
     # the versioned store - same oracle as q1/topology_submit
     _o["repl_session_wordcount"] = _o["q1_wordcount"]
     # Mann-Kendall: exact integer S / tie sums, mirrored var + z
-    _o["events_mann_kendall"] = """
-        WITH daily AS MATERIALIZED (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) // 100 AS x
-            FROM events WHERE value IS NOT NULL
-            GROUP BY 1, 2
-        ), s AS (
+    _o["events_mann_kendall"] = f"""
+        WITH {_DAILY_X_CTE}, s AS (
             SELECT a.event_type,
                    CAST(SUM(CAST(sign(b.x - a.x) AS BIGINT)) AS BIGINT) AS s
             FROM daily a JOIN daily b USING (event_type)
@@ -11317,14 +10916,8 @@ def oracle_sql() -> dict[str, str]:
     """
     # Kruskal-Wallis: doubled midranks (Mann-Whitney device), 1e-6
     # grid on the cross-group sum (chi2-drift device), mirrored H
-    _o["events_kruskal_wallis"] = """
-        WITH daily AS MATERIALIZED (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) // 100 AS x
-            FROM events WHERE value IS NOT NULL
-            GROUP BY 1, 2
-        ), d2 AS (
+    _o["events_kruskal_wallis"] = f"""
+        WITH {_DAILY_X_CTE}, d2 AS (
             SELECT event_type, (day - DATE '1970-01-01') % 7 AS dow, x
             FROM daily
         ), cells AS (
@@ -11381,14 +10974,8 @@ def oracle_sql() -> dict[str, str]:
     """
     # Page-Hinkley: 1e-6-gridded increments so the cumulative sum,
     # running min and PH are exact BIGINT prefix sums; 5-sigma alarm
-    _o["events_page_hinkley"] = """
-        WITH daily AS MATERIALIZED (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) // 100 AS x
-            FROM events WHERE value IS NOT NULL
-            GROUP BY 1, 2
-        ), step1 AS (
+    _o["events_page_hinkley"] = f"""
+        WITH {_DAILY_X_CTE}, step1 AS (
             SELECT event_type, day, x,
                    COUNT(*) OVER w AS t, SUM(x) OVER w AS s
             FROM daily
@@ -11554,14 +11141,8 @@ def oracle_sql() -> dict[str, str]:
     """
     # AR(2) Yule-Walker: division-free centering n*x - S, exact
     # HUGEINT autocovariance sums, mirrored phi / forecast chain
-    _o["events_ar2_yule_walker"] = """
-        WITH daily AS MATERIALIZED (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) // 100 AS x
-            FROM events WHERE value IS NOT NULL
-            GROUP BY 1, 2
-        ), base AS (
+    _o["events_ar2_yule_walker"] = f"""
+        WITH {_DAILY_X_CTE}, base AS (
             SELECT event_type, day, x,
                    COUNT(*) OVER (PARTITION BY event_type) AS n,
                    SUM(CAST(x AS HUGEINT))
@@ -11769,12 +11350,8 @@ def oracle_sql() -> dict[str, str]:
     _o["stream_page_hinkley"] = _o["events_page_hinkley"]
     # index of dispersion on daily counts: exact moments, normal
     # approximation z, mirrored verdict CASE
-    _o["events_dispersion_index"] = """
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(count(*) AS BIGINT) AS c
-            FROM events GROUP BY 1, 2
-        ), agg AS (
+    _o["events_dispersion_index"] = f"""
+        WITH {_DAILY_C_CTE}, agg AS (
             SELECT event_type, CAST(count(*) AS BIGINT) AS n,
                    SUM(CAST(c AS HUGEINT)) AS sc,
                    SUM(CAST(c AS HUGEINT) * c) AS scc
@@ -11811,14 +11388,8 @@ def oracle_sql() -> dict[str, str]:
     """
     # Welch's t: epoch-mod-7 weekend split, exact HUGEINT moments,
     # mirrored t / Welch-Satterthwaite df chain
-    _o["events_welch_ttest"] = """
-        WITH daily AS MATERIALIZED (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) // 100 AS x
-            FROM events WHERE value IS NOT NULL
-            GROUP BY 1, 2
-        ), d2 AS (
+    _o["events_welch_ttest"] = f"""
+        WITH {_DAILY_X_CTE}, d2 AS (
             SELECT event_type, x,
                    CASE WHEN (day - DATE '1970-01-01') % 7 IN (2, 3)
                         THEN 1 ELSE 0 END AS w
@@ -11986,10 +11557,10 @@ def oracle_sql() -> dict[str, str]:
                      * 1000000.0 + 0.5) / 1000000.0 AS row_share
         FROM per ORDER BY lang, lang_pred
     """
-    # family histogram COMPOSES on the transitive-closure oracle:
-    # identical chain through `reach`, histogram tail instead of the
-    # canonical-id pick
-    _family_tail = """
+    # family histogram: dedup_transitive's `_DEDUP_COMPONENT_CTES`,
+    # histogram tail instead of the canonical-id pick
+    _o["dedup_family_histogram"] = f"""
+        WITH RECURSIVE {_DEDUP_COMPONENT_CTES}
         , comp AS (
             SELECT node, MIN(r) AS component FROM reach GROUP BY node
         ), fsizes AS (
@@ -12007,13 +11578,6 @@ def oracle_sql() -> dict[str, str]:
                      * 1000000.0 + 0.5) / 1000000.0 AS corpus_share
         FROM hist, tot ORDER BY fam_size
     """
-    _old_tail = """SELECT DISTINCT MIN(r) AS doc_id
-            FROM reach GROUP BY node
-        """
-    assert _old_tail in _o["dedup_transitive"]
-    _o["dedup_family_histogram"] = _o["dedup_transitive"].replace(
-        _old_tail, _family_tail
-    )
     # modularity over the SAME unrolled LPA labels
     _o["copurchase_modularity"] = _modularity_oracle_sql()
     # watermark lateness: exact epoch-microsecond arithmetic, running
@@ -12179,28 +11743,8 @@ def oracle_sql() -> dict[str, str]:
     # common-denominator integer device), Goodman-Kruskal gamma over
     # the tiny priority x price-band contingency table, discrete-
     # percentile pinball backtest, and per-source Simpson diversity
-    _o["events_cvm_drift"] = """
-        WITH cells AS (
-            SELECT event_type,
-                   CAST(floor(value * 100 + 0.5) AS BIGINT) AS v,
-                   SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16'
-                            THEN 0 ELSE 1 END) AS ca,
-                   SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16'
-                            THEN 1 ELSE 0 END) AS cb
-            FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
-            GROUP BY 1, 2
-        ), cum AS (
-            SELECT event_type, ca + cb AS t,
-                   SUM(ca) OVER (PARTITION BY event_type ORDER BY v
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS cuma,
-                   SUM(cb) OVER (PARTITION BY event_type ORDER BY v
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS cumb,
-                   SUM(ca) OVER (PARTITION BY event_type) AS na,
-                   SUM(cb) OVER (PARTITION BY event_type) AS nb
-            FROM cells
-        ), agg AS (
+    _o["events_cvm_drift"] = f"""
+        WITH {_HALFSPLIT_CELLS_CTE}, {_cum_cells_cte('ca + cb AS t')}, agg AS (
             SELECT event_type, MAX(na) AS na, MAX(nb) AS nb,
                    SUM(CAST(t AS HUGEINT)
                        * (CAST(cuma AS HUGEINT) * nb
@@ -12386,28 +11930,8 @@ def oracle_sql() -> dict[str, str]:
                END AS inv_simpson
         FROM agg ORDER BY source
     """
-    _o["events_anderson_darling"] = """
-        WITH cells AS (
-            SELECT event_type,
-                   CAST(floor(value * 100 + 0.5) AS BIGINT) AS v,
-                   SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16'
-                            THEN 0 ELSE 1 END) AS ca,
-                   SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16'
-                            THEN 1 ELSE 0 END) AS cb
-            FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
-            GROUP BY 1, 2
-        ), cum AS (
-            SELECT event_type, ca + cb AS t,
-                   SUM(ca) OVER (PARTITION BY event_type ORDER BY v
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS cuma,
-                   SUM(cb) OVER (PARTITION BY event_type ORDER BY v
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS cumb,
-                   SUM(ca) OVER (PARTITION BY event_type) AS na,
-                   SUM(cb) OVER (PARTITION BY event_type) AS nb
-            FROM cells
-        ), terms AS (
+    _o["events_anderson_darling"] = f"""
+        WITH {_HALFSPLIT_CELLS_CTE}, {_cum_cells_cte('ca + cb AS t')}, terms AS (
             SELECT event_type, t, na, nb, cuma + cumb AS ct,
                    CAST(CAST(cuma AS HUGEINT) * nb
                         - CAST(cumb AS HUGEINT) * na AS DOUBLE) AS gapd
@@ -12429,17 +11953,8 @@ def oracle_sql() -> dict[str, str]:
                      * 1000000.0 + 0.5) / 1000000.0 AS ad_a2
         FROM micro GROUP BY 1 ORDER BY event_type
     """
-    _o["events_cliffs_delta"] = """
-        WITH cells AS (
-            SELECT event_type,
-                   CAST(floor(value * 100 + 0.5) AS BIGINT) AS v,
-                   SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16'
-                            THEN 0 ELSE 1 END) AS ca,
-                   SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16'
-                            THEN 1 ELSE 0 END) AS cb
-            FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
-            GROUP BY 1, 2
-        ), cum AS (
+    _o["events_cliffs_delta"] = f"""
+        WITH {_HALFSPLIT_CELLS_CTE}, cum AS (
             SELECT event_type, ca, cb,
                    SUM(cb) OVER (PARTITION BY event_type ORDER BY v
                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -12807,29 +12322,9 @@ def oracle_sql() -> dict[str, str]:
                    AS plain_english_share
         FROM agg ORDER BY source
     """
-    _o["media_scene_cuts"] = """
-        -- mirrors the stub decode byte-for-byte (the
-        -- media_video_neardup CTE chain), then a per-video lag
-        -- compare over the sampled-frame fingerprints
-        WITH vids AS (
-            SELECT doc_id, text,
-                   ('0x' || substr(md5(text), 1, 8))::BIGINT AS h,
-                   length(text) AS ln
-            FROM documents WHERE doc_id % 3 = 2
-        ), nf AS (
-            SELECT doc_id, text, ln,
-                   least((1000 + h % 7200000) // 1000, 16) AS n
-            FROM vids
-        ), chars AS (
-            SELECT doc_id, n, ln, i,
-                   unicode(substr(text, CAST(i + 1 AS INT), 1)) AS b
-            FROM nf, UNNEST(range(ln)) AS u(i)
-            WHERE n > 0 AND ln > 0
-        ), perframe AS (
-            SELECT doc_id, (i * n) // ln AS frame_idx,
-                   (SUM(b) * 31 + COUNT(*)) % 1000003 AS fp
-            FROM chars GROUP BY doc_id, n, ln, (i * n) // ln
-        ), lagd AS (
+    _o["media_scene_cuts"] = f"""
+        -- per-video lag compare over the sampled-frame fingerprints
+        WITH {_MEDIA_FRAME_FP_CTES}, lagd AS (
             SELECT doc_id AS media_id, frame_idx, fp,
                    LAG(fp) OVER (PARTITION BY doc_id
                                  ORDER BY frame_idx) AS pfp
@@ -13057,26 +12552,8 @@ def oracle_sql() -> dict[str, str]:
                END AS intrinsic_dim
         FROM agg
     """
-    _o["media_frame_entropy"] = """
-        WITH vids AS (
-            SELECT doc_id, text,
-                   ('0x' || substr(md5(text), 1, 8))::BIGINT AS h,
-                   length(text) AS ln
-            FROM documents WHERE doc_id % 3 = 2
-        ), nf AS (
-            SELECT doc_id, text, ln,
-                   least((1000 + h % 7200000) // 1000, 16) AS n
-            FROM vids
-        ), chars AS (
-            SELECT doc_id, n, ln, i,
-                   unicode(substr(text, CAST(i + 1 AS INT), 1)) AS b
-            FROM nf, UNNEST(range(ln)) AS u(i)
-            WHERE n > 0 AND ln > 0
-        ), perframe AS (
-            SELECT doc_id, (i * n) // ln AS frame_idx,
-                   (SUM(b) * 31 + COUNT(*)) % 1000003 AS fp
-            FROM chars GROUP BY doc_id, n, ln, (i * n) // ln
-        ), fcells AS (
+    _o["media_frame_entropy"] = f"""
+        WITH {_MEDIA_FRAME_FP_CTES}, fcells AS (
             SELECT doc_id AS media_id, fp,
                    CAST(count(*) AS BIGINT) AS c
             FROM perframe GROUP BY 1, 2
@@ -13132,17 +12609,8 @@ def oracle_sql() -> dict[str, str]:
         FROM j, tot ORDER BY source
     """
     # --- round-9 capability wave -----------------------------------
-    _o["events_mood_median"] = """
-        WITH cells AS (
-            SELECT event_type,
-                   CAST(floor(value * 100 + 0.5) AS BIGINT) AS v,
-                   SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16'
-                            THEN 0 ELSE 1 END) AS ca,
-                   SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16'
-                            THEN 1 ELSE 0 END) AS cb
-            FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
-            GROUP BY 1, 2
-        ), cum AS (
+    _o["events_mood_median"] = f"""
+        WITH {_HALFSPLIT_CELLS_CTE}, cum AS (
             SELECT event_type, v,
                    SUM(ca + cb) OVER (PARTITION BY event_type ORDER BY v
                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -13184,17 +12652,8 @@ def oracle_sql() -> dict[str, str]:
     _o["stream_cliffs_delta"] = _o["events_cliffs_delta"]
     _o["stream_mood_median"] = _o["events_mood_median"]
     _o["ivf_nprobe_sweep"] = _ivf_nprobe_sweep_oracle_sql()
-    _o["events_ansari_bradley"] = """
-        WITH cells AS (
-            SELECT event_type,
-                   CAST(floor(value * 100 + 0.5) AS BIGINT) AS v,
-                   SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16'
-                            THEN 0 ELSE 1 END) AS ca,
-                   SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16'
-                            THEN 1 ELSE 0 END) AS cb
-            FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
-            GROUP BY 1, 2
-        ), cum AS (
+    _o["events_ansari_bradley"] = f"""
+        WITH {_HALFSPLIT_CELLS_CTE}, cum AS (
             SELECT event_type, ca, cb, ca + cb AS t,
                    SUM(ca + cb) OVER (PARTITION BY event_type ORDER BY v
                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)

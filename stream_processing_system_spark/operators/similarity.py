@@ -159,23 +159,6 @@ def project_expr(vec_col, mat: list[list[float]]):
     return F.array(*coords)
 
 
-def random_projection(
-    df: DataFrame,
-    out_dim: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    seed: int = 7,
-    out_col: str = "rp",
-) -> DataFrame:
-    """JL random projection dim→out_dim: the standard pre-ANN
-    shrink (store/scan 4× fewer floats; JL preserves pairwise
-    distances within ~1/sqrt(out_dim)). One codegen'd map stage, no
-    shuffle, no Python — at 100 TB this runs at scan speed."""
-    mat = projection_matrix(out_dim, dim, seed)
-    return df.select(F.col(id_col), project_expr(F.col(vec_col), mat).alias(out_col))
-
-
 def rp_topk(
     df: DataFrame,
     query_df: DataFrame,

@@ -17,7 +17,7 @@ Scale notes that apply to every plan here:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from stream_processing_system_spark.functions.scalar import det_round
@@ -356,6 +356,31 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _hll_estimate(m: int) -> Column:
+    """HyperLogLog estimate from `used` (non-empty registers out of `m`)
+    and `_sp` (the sum of 2^(48 - M) over them): the raw estimate, or
+    linear counting at or below 2.5 x 1024 while a register is empty.
+    The harmonic denominator counts each empty register as 2^0, i.e.
+    2^48 on the int64 grid. Same literals and left-assoc order as the
+    oracle's `_hll_estimate_ctes` and `_HLL_ESTIMATE`."""
+    s_d = (
+        F.col("_sp") + (F.lit(m) - F.col("used")) * F.lit(281474976710656)
+    ).cast("double")
+    e_raw = (
+        F.lit(0.7213)
+        / (F.lit(1.0) + F.lit(1.079) / F.lit(1024.0))
+        * F.lit(1048576.0)
+        * F.lit(281474976710656.0)
+        / s_d
+    )
+    linear = F.lit(1024.0) * F.log(
+        F.lit(1024.0) / (F.lit(1024.0) - F.col("used").cast("double"))
+    )
+    return F.when(
+        (e_raw <= F.lit(2560.0)) & (F.col("used") < m), linear
+    ).otherwise(e_raw)
+
+
 def hll_register_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog built from FIRST PRINCIPLES on md5 — every register
     is engine-reproducible, so unlike approx_count_distinct /
@@ -407,31 +432,11 @@ def hll_register_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             "_sp"
         ),
     )
-    # harmonic denominator over ALL m registers: empty ones contribute
-    # 2^0 = 1 each, i.e. 2^48 in the int64 grid
-    s_d = (
-        F.col("_sp") + (F.lit(m) - F.col("used")) * F.lit(281474976710656)
-    ).cast("double")
-    # textual parity with the SQL oracle: same literals, same
-    # left-assoc order
-    e_raw = (
-        F.lit(0.7213)
-        / (F.lit(1.0) + F.lit(1.079) / F.lit(1024.0))
-        * F.lit(1048576.0)
-        * F.lit(281474976710656.0)
-        / s_d
-    )
-    linear = F.lit(1024.0) * F.log(
-        F.lit(1024.0) / (F.lit(1024.0) - F.col("used").cast("double"))
-    )
-    est = F.when(
-        (e_raw <= F.lit(2560.0)) & (F.col("used") < m), linear
-    ).otherwise(e_raw)
     return (
         agg.select(
             "event_type",
             F.col("used").alias("used_buckets"),
-            det_round(est, 6).alias("est_users"),
+            det_round(_hll_estimate(m), 6).alias("est_users"),
         )
         .orderBy("event_type")
     )
@@ -2267,23 +2272,7 @@ def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     types x days), then one per-type fold over at most a few
     thousand doubles — the collect_list holds days, not events.
     """
-    events = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.col("ts").cast("date").cast("string").alias("day")
-    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        events.select("event_type", day, centi.alias("_cv"))
-        .groupBy("event_type", "day")
-        .agg(F.sum("_cv").alias("_cs"), F.count(F.lit(1)).alias("_n"))
-        .select(
-            "event_type",
-            "day",
-            (
-                F.col("_cs").cast("double")
-                / F.lit(100.0)
-                / F.col("_n").cast("double")
-            ).alias("val"),
-        )
-    )
+    daily = _daily_double_means(load_table(spark, sf_dir, "events"))
     series = daily.groupBy("event_type").agg(
         F.transform(
             F.sort_array(F.collect_list(F.struct("day", "val"))),
@@ -2320,23 +2309,7 @@ def events_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile_cont-over-window, computing the same sorted-list pick,
     so both engines run identical IEEE arithmetic).
     """
-    events = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.col("ts").cast("date").cast("string").alias("day")
-    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        events.select("event_type", day, centi.alias("_cv"))
-        .groupBy("event_type", "day")
-        .agg(F.sum("_cv").alias("_cs"), F.count(F.lit(1)).alias("_n"))
-        .select(
-            "event_type",
-            "day",
-            (
-                F.col("_cs").cast("double")
-                / F.lit(100.0)
-                / F.col("_n").cast("double")
-            ).alias("val"),
-        )
-    )
+    daily = _daily_double_means(load_table(spark, sf_dir, "events"))
     w = Window.partitionBy("event_type").orderBy("day").rowsBetween(-6, 0)
     vals = F.sort_array(F.collect_list("val").over(w))
     n = F.size(vals)
@@ -2711,23 +2684,7 @@ def events_pattern_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type-sized, embarrassingly parallel over types.
     """
     m = len(_PATTERN)
-    events = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.col("ts").cast("date").cast("string").alias("day")
-    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        events.select("event_type", day, centi.alias("_cv"))
-        .groupBy("event_type", "day")
-        .agg(F.sum("_cv").alias("_cs"), F.count(F.lit(1)).alias("_n"))
-        .select(
-            "event_type",
-            "day",
-            (
-                F.col("_cs").cast("double")
-                / F.lit(100.0)
-                / F.col("_n").cast("double")
-            ).alias("val"),
-        )
-    )
+    daily = _daily_double_means(load_table(spark, sf_dir, "events"))
     series = daily.groupBy("event_type").agg(
         F.transform(
             F.sort_array(F.collect_list(F.struct("day", "val"))), lambda p: p["val"]
@@ -3471,6 +3428,89 @@ def _daily_whole_units(events: DataFrame) -> DataFrame:
         )
         .groupBy("event_type", "day")
         .agg(F.expr("sum(cy) div 100").alias("x"))
+    )
+
+
+def _cramer3(a, b, c, d, e, f, g, h, i):
+    """Cramer's rule for the symmetric 3x3 system [[a, b, c], [b, d, e],
+    [c, e, f]] x = [g, h, i]: returns (det, det0, det1, det2), so
+    x_k = det_k / det. The same text runs on Columns and on floats, and
+    the SQL oracles spell the same expression trees."""
+    det = a * (d * f - e * e) - b * (b * f - e * c) + c * (b * e - d * c)
+    det0 = g * (d * f - e * e) - b * (h * f - e * i) + c * (h * e - d * i)
+    det1 = a * (h * f - e * i) - g * (b * f - e * c) + c * (b * i - h * c)
+    det2 = a * (d * i - h * e) - b * (b * i - h * c) + g * (b * e - d * c)
+    return det, det0, det1, det2
+
+
+def _daily_counts(events: DataFrame) -> DataFrame:
+    """Daily event count `c` per event_type, NULL values included."""
+    return (
+        events.select("event_type", F.col("ts").cast("date").alias("day"))
+        .groupBy("event_type", "day")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+
+
+def _daily_centi(events: DataFrame) -> DataFrame:
+    """Non-NULL values as centi-unit longs `v` (half up) per
+    (event_type, day): the shared first step of the daily series."""
+    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    return events.where(F.col("value").isNotNull()).select(
+        "event_type", F.col("ts").cast("date").alias("day"), centi.alias("v")
+    )
+
+
+def _daily_centi_sums(events: DataFrame) -> DataFrame:
+    """Daily total value per event_type as exact centi longs `cent`."""
+    return (
+        _daily_centi(events)
+        .groupBy("event_type", "day")
+        .agg(F.sum("v").alias("cent"))
+    )
+
+
+def _daily_centi_means(events: DataFrame) -> DataFrame:
+    """Daily mean value per event_type on the 1e-6 grid: the centi sum
+    times 10^4 over the day's row count, rounded half up to a long
+    `dm` (the oracle's `_DAILY_DM_CTE`)."""
+    return (
+        _daily_centi(events)
+        .groupBy("event_type", "day")
+        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("nd"))
+        .select(
+            "event_type",
+            "day",
+            F.floor(
+                (F.col("s") * F.lit(10000)).cast("double")
+                / F.col("nd").cast("double")
+                + F.lit(0.5)
+            )
+            .cast("long")
+            .alias("dm"),
+        )
+    )
+
+
+def _daily_double_means(events: DataFrame) -> DataFrame:
+    """Daily mean value per event_type as a double `val` (centi sum /
+    100 / row count) keyed by the day's ISO string."""
+    day = F.col("ts").cast("date").cast("string").alias("day")
+    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    return (
+        events.where(F.col("value").isNotNull())
+        .select("event_type", day, centi.alias("_cv"))
+        .groupBy("event_type", "day")
+        .agg(F.sum("_cv").alias("_cs"), F.count(F.lit(1)).alias("_n"))
+        .select(
+            "event_type",
+            "day",
+            (
+                F.col("_cs").cast("double")
+                / F.lit(100.0)
+                / F.col("_n").cast("double")
+            ).alias("val"),
+        )
     )
 
 
@@ -5588,18 +5628,14 @@ def lineitem_ols_2var(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x2") * F.col("y")).alias("s2y"),
         F.sum(F.col("y") * F.col("y")).alias("syy"),
     )
-    # Cramer's rule on the symmetric 3x3 normal matrix
+    # Cramer's rule (`_cramer3`) on the symmetric 3x3 normal matrix
     # [[n,s1,s2],[s1,s11,s12],[s2,s12,s22]] — every operand is an
-    # exact integer cast to double once; the expression text below is
-    # mirrored verbatim in the SQL oracle.
+    # exact integer cast to double once
     a, b, c = F.col("n").cast("double"), F.col("s1").cast("double"), F.col("s2").cast("double")
     d, e, f = F.col("s11").cast("double"), F.col("s12").cast("double"), F.col("s22").cast("double")
     g, h, i = F.col("sy").cast("double"), F.col("s1y").cast("double"), F.col("s2y").cast("double")
     syy = F.col("syy").cast("double")
-    det = a * (d * f - e * e) - b * (b * f - e * c) + c * (b * e - d * c)
-    det0 = g * (d * f - e * e) - b * (h * f - e * i) + c * (h * e - d * i)
-    det1 = a * (h * f - e * i) - g * (b * f - e * c) + c * (b * i - h * c)
-    det2 = a * (d * i - h * e) - b * (b * i - h * c) + g * (b * e - d * c)
+    det, det0, det1, det2 = _cramer3(a, b, c, d, e, f, g, h, i)
     b0, b1, b2 = det0 / det, det1 / det, det2 / det
     sse = syy - (b0 * g + b1 * h + b2 * i)
     sst = syy - g * g / a
@@ -5945,10 +5981,7 @@ def events_granger_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s2y").cast("double"),
     )
     syy = F.col("syy").cast("double")
-    det = a * (d * f - e * e) - b * (b * f - e * c) + c * (b * e - d * c)
-    det0 = g * (d * f - e * e) - b * (h * f - e * i) + c * (h * e - d * i)
-    det1 = a * (h * f - e * i) - g * (b * f - e * c) + c * (b * i - h * c)
-    det2 = a * (d * i - h * e) - b * (b * i - h * c) + g * (b * e - d * c)
+    det, det0, det1, det2 = _cramer3(a, b, c, d, e, f, g, h, i)
     sse_u = syy - (det0 / det * g + det1 / det * h + det2 / det * i)
     den_r = a * d - b * b
     b1r = (a * h - b * g) / den_r
@@ -6072,24 +6105,37 @@ def halfsplit_value_cells(events: DataFrame) -> DataFrame:
     )
 
 
-def ks_from_cells(cells: DataFrame) -> DataFrame:
-    """Shared KS tail over an (event_type, v, ca, cb) exact-centi
-    count frame — factored (the `cvm_from_cells` precedent) so the
-    streaming twin reduces the same drained cell state."""
+def _cell_windows():
+    """(cumulative, total) per-type windows over the cent cells of
+    `halfsplit_value_cells`, ordered by value `v`."""
     w_cum = (
         Window.partitionBy("event_type")
         .orderBy("v")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    w_tot = Window.partitionBy("event_type")
-    cum = cells.select(
+    return w_cum, Window.partitionBy("event_type")
+
+
+def _cum_cells(cells: DataFrame, *keep) -> DataFrame:
+    """`cells` with cumulative first/second-half counts `cuma`/`cumb`
+    up to each value and per-type totals `na`/`nb`, after the
+    caller's `keep` columns."""
+    w_cum, w_tot = _cell_windows()
+    return cells.select(
         "event_type",
-        "v",
+        *keep,
         F.sum("ca").over(w_cum).alias("cuma"),
         F.sum("cb").over(w_cum).alias("cumb"),
         F.sum("ca").over(w_tot).alias("na"),
         F.sum("cb").over(w_tot).alias("nb"),
-    ).select(
+    )
+
+
+def ks_from_cells(cells: DataFrame) -> DataFrame:
+    """Shared KS tail over an (event_type, v, ca, cb) exact-centi
+    count frame — factored (the `cvm_from_cells` precedent) so the
+    streaming twin reduces the same drained cell state."""
+    cum = _cum_cells(cells, "v").select(
         "event_type",
         "v",
         "na",
@@ -6633,10 +6679,7 @@ def events_poisson_glm(
         a, b, c_ = float(r["ma"]), float(r["mb"]), float(r["mc"])
         d, e, f = float(r["md"]), float(r["me"]), float(r["mf"])
         g, h, i = float(r["mg"]), float(r["mh"]), float(r["mi"])
-        det = a * (d * f - e * e) - b * (b * f - e * c_) + c_ * (b * e - d * c_)
-        det0 = g * (d * f - e * e) - b * (h * f - e * i) + c_ * (h * e - d * i)
-        det1 = a * (h * f - e * i) - g * (b * f - e * c_) + c_ * (b * i - h * c_)
-        det2 = a * (d * i - h * e) - b * (b * i - h * c_) + g * (b * e - d * c_)
+        det, det0, det1, det2 = _cramer3(a, b, c_, d, e, f, g, h, i)
         b0 = math.floor(det0 / det * 1e9 + 0.5) / 1e9
         b1 = math.floor(det1 / det * 1e9 + 0.5) / 1e9
         b2 = math.floor(det2 / det * 1e9 + 0.5) / 1e9
@@ -7418,10 +7461,7 @@ def _logit_irls_betas(
         a, b, c_ = float(r["ma"]), float(r["mb"]), float(r["mc"])
         d, e, f = float(r["md"]), float(r["me"]), float(r["mf"])
         g, h, i = float(r["mg"]), float(r["mh"]), float(r["mi"])
-        det = a * (d * f - e * e) - b * (b * f - e * c_) + c_ * (b * e - d * c_)
-        det0 = g * (d * f - e * e) - b * (h * f - e * i) + c_ * (h * e - d * i)
-        det1 = a * (h * f - e * i) - g * (b * f - e * c_) + c_ * (b * i - h * c_)
-        det2 = a * (d * i - h * e) - b * (b * i - h * c_) + g * (b * e - d * c_)
+        det, det0, det1, det2 = _cramer3(a, b, c_, d, e, f, g, h, i)
         b0 = math.floor(det0 / det * 1e9 + 0.5) / 1e9
         b1 = math.floor(det1 / det * 1e9 + 0.5) / 1e9
         b2 = math.floor(det2 / det * 1e9 + 0.5) / 1e9
@@ -7898,27 +7938,11 @@ def hll_rolling_7d_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("_sp"),
         )
     )
-    s_d = (
-        F.col("_sp") + (F.lit(m) - F.col("used")) * F.lit(281474976710656)
-    ).cast("double")
-    e_raw = (
-        F.lit(0.7213)
-        / (F.lit(1.0) + F.lit(1.079) / F.lit(1024.0))
-        * F.lit(1048576.0)
-        * F.lit(281474976710656.0)
-        / s_d
-    )
-    linear = F.lit(1024.0) * F.log(
-        F.lit(1024.0) / (F.lit(1024.0) - F.col("used").cast("double"))
-    )
-    est = F.when(
-        (e_raw <= F.lit(2560.0)) & (F.col("used") < m), linear
-    ).otherwise(e_raw)
     return (
         agg.select(
             "day",
             F.col("used").alias("used_buckets"),
-            det_round(est, 6).alias("est_users_7d"),
+            det_round(_hll_estimate(m), 6).alias("est_users_7d"),
         )
         .orderBy("day")
     )
@@ -8249,26 +8273,7 @@ def events_sax_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     day string-agg mirrored on both sides. Scale: one groupBy to
     daily grain (map-side combinable), one 30-row-per-type reduce -
     the heavy lifting never leaves the first aggregate."""
-    events = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        events.select(
-            "event_type", F.col("ts").cast("date").alias("day"), centi.alias("v")
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("nd"))
-        .select(
-            "event_type",
-            "day",
-            F.floor(
-                (F.col("s") * F.lit(10000)).cast("double")
-                / F.col("nd").cast("double")
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("dm"),
-        )
-    )
+    daily = _daily_centi_means(load_table(spark, sf_dir, "events"))
     return sax_word_from_daily(daily)
 
 
@@ -8552,26 +8557,7 @@ def events_dtw_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the heavy stage is the daily-grain aggregate (map-side
     combinable); the DP itself runs on one ~30-element array per
     type pair - 10 rows of work at ANY corpus size."""
-    events = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        events.select(
-            "event_type", F.col("ts").cast("date").alias("day"), centi.alias("v")
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("nd"))
-        .select(
-            "event_type",
-            "day",
-            F.floor(
-                (F.col("s") * F.lit(10000)).cast("double")
-                / F.col("nd").cast("double")
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("dm"),
-        )
-    )
+    daily = _daily_centi_means(load_table(spark, sf_dir, "events"))
     ser = daily.groupBy("event_type").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct(F.col("day"), F.col("dm")))),
@@ -8646,26 +8632,7 @@ def events_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent int64.
     Scale: the only data-sized stage is the daily-grain aggregate;
     everything after runs on <=30 rows per type."""
-    events = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        events.select(
-            "event_type", F.col("ts").cast("date").alias("day"), centi.alias("v")
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("nd"))
-        .select(
-            "event_type",
-            "day",
-            F.floor(
-                (F.col("s") * F.lit(10000)).cast("double")
-                / F.col("nd").cast("double")
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("dm"),
-        )
-    )
+    daily = _daily_centi_means(load_table(spark, sf_dir, "events"))
     idx = daily.select(
         "event_type",
         "dm",
@@ -8829,26 +8796,7 @@ def events_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     TYPE regardless of corpus size; the data-sized stage is only the
     daily-grain aggregate."""
     w, excl = 7, 4
-    events = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        events.select(
-            "event_type", F.col("ts").cast("date").alias("day"), centi.alias("v")
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("nd"))
-        .select(
-            "event_type",
-            "day",
-            F.floor(
-                (F.col("s") * F.lit(10000)).cast("double")
-                / F.col("nd").cast("double")
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("dm"),
-        )
-    )
+    daily = _daily_centi_means(load_table(spark, sf_dir, "events"))
     idx = daily.select(
         "event_type",
         "dm",
@@ -8924,15 +8872,7 @@ def events_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sequential double arithmetic is bit-identical cross-engine.
     Scale: the data-sized stage is one daily-grain aggregate; the
     fold runs on a 30-element array per type."""
-    events = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        events.select(
-            "event_type", F.col("ts").cast("date").alias("day"), centi.alias("v")
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("v").alias("cent"))
-    )
+    daily = _daily_centi_sums(load_table(spark, sf_dir, "events"))
     return holt_winters_from_daily(daily)
 
 
@@ -9145,26 +9085,7 @@ def events_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical cross-engine. Output per type: pacf_1..pacf_5
     (det_round 6; pacf_1 = rho_1 by construction).
     Scale: daily-grain aggregate, then <=30 rows per type."""
-    events = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        events.select(
-            "event_type", F.col("ts").cast("date").alias("day"), centi.alias("v")
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("nd"))
-        .select(
-            "event_type",
-            "day",
-            F.floor(
-                (F.col("s") * F.lit(10000)).cast("double")
-                / F.col("nd").cast("double")
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("dm"),
-        )
-    )
+    daily = _daily_centi_means(load_table(spark, sf_dir, "events"))
     st = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.sum("dm").alias("sx")
     )
@@ -9263,26 +9184,7 @@ def events_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-multiplications (dm*w - sx vs 2*w*sqrt(...)) expressed on
     the same doubles both engines see. Emits only complete 7-day
     windows. Scale: daily aggregate + a 7-row bounded window."""
-    events = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        events.select(
-            "event_type", F.col("ts").cast("date").alias("day"), centi.alias("v")
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("nd"))
-        .select(
-            "event_type",
-            "day",
-            F.floor(
-                (F.col("s") * F.lit(10000)).cast("double")
-                / F.col("nd").cast("double")
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("dm"),
-        )
-    )
+    daily = _daily_centi_means(load_table(spark, sf_dir, "events"))
     w7 = (
         Window.partitionBy("event_type").orderBy("day").rowsBetween(-6, 0)
     )
@@ -9406,15 +9308,7 @@ def events_hw_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     origin sums (exact int64 reductions).
     Scale: the daily aggregate is the only data-sized stage; the 8
     refits fold over <=28-element arrays per type."""
-    events = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        events.select(
-            "event_type", F.col("ts").cast("date").alias("day"), centi.alias("v")
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("v").alias("cent"))
-    )
+    daily = _daily_centi_sums(load_table(spark, sf_dir, "events"))
     ser = daily.groupBy("event_type").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct(F.col("day"), F.col("cent")))),
@@ -9662,26 +9556,7 @@ def events_voptimal_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the total (all micro^2 units on the daily-mean grid).
     Scale: the daily aggregate sees the data; the DP grid is
     30 x 30 x 6 per type."""
-    events = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        events.select(
-            "event_type", F.col("ts").cast("date").alias("day"), centi.alias("v")
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("nd"))
-        .select(
-            "event_type",
-            "day",
-            F.floor(
-                (F.col("s") * F.lit(10000)).cast("double")
-                / F.col("nd").cast("double")
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("dm"),
-        )
-    )
+    daily = _daily_centi_means(load_table(spark, sf_dir, "events"))
     wh = Window.partitionBy("event_type").orderBy("day")
     pref = daily.select(
         "event_type",
@@ -10903,12 +10778,7 @@ def events_kalman_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential double arithmetic is bit-identical cross-engine.
     Scale: the data-sized stage is one daily-grain count aggregate;
     the fold runs on a ~30-element array per type."""
-    events = load_table(spark, sf_dir, "events")
-    daily = (
-        events.select("event_type", F.col("ts").cast("date").alias("day"))
-        .groupBy("event_type", "day")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    daily = _daily_counts(load_table(spark, sf_dir, "events"))
     return kalman_from_daily(daily)
 
 
@@ -11087,15 +10957,7 @@ def events_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     until the final /100.
     Scale: one daily-grain aggregate, then windows over ~30 rows per
     type; nothing after the first aggregate sees data."""
-    events = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        events.select(
-            "event_type", F.col("ts").cast("date").alias("day"), centi.alias("v")
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("v").alias("cent"))
-    )
+    daily = _daily_centi_sums(load_table(spark, sf_dir, "events"))
     return max_drawdown_from_daily(daily)
 
 
@@ -11183,12 +11045,7 @@ def events_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one count aggregate, then pure per-row expressions."""
     from stream_processing_system_spark.functions.scalar import md5_prefix_long
 
-    events = load_table(spark, sf_dir, "events")
-    daily = (
-        events.select("event_type", F.col("ts").cast("date").alias("day"))
-        .groupBy("event_type", "day")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    daily = _daily_counts(load_table(spark, sf_dir, "events"))
     key = F.concat(F.col("event_type"), F.lit("|"), F.col("day").cast("string"))
     u = (
         md5_prefix_long(key, salt="dp|").cast("double") + F.lit(0.5)
@@ -11321,12 +11178,7 @@ def events_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctly-rounded divisions and one sqrt on identical operands.
     Scale: daily-grain aggregate, then lag/lead windows over ~30
     rows per type."""
-    events = load_table(spark, sf_dir, "events")
-    daily = (
-        events.select("event_type", F.col("ts").cast("date").alias("day"))
-        .groupBy("event_type", "day")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    daily = _daily_counts(load_table(spark, sf_dir, "events"))
     return turning_points_from_daily(daily)
 
 
@@ -12170,12 +12022,7 @@ def events_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts; s², x̄, D and z are fixed-operand-order doubles with
     NULL guards for n < 2 and x̄ = 0. Day-grain → constant-size at
     any data scale."""
-    events = load_table(spark, sf_dir, "events")
-    daily = (
-        events.select("event_type", F.col("ts").cast("date").alias("day"))
-        .groupBy("event_type", "day")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    daily = _daily_counts(load_table(spark, sf_dir, "events"))
     return dispersion_index_from_daily(daily)
 
 
@@ -12802,20 +12649,9 @@ def cvm_from_cells(
     diagnostic so a raise in the streaming twin blames the right
     query (ADVICE r7)."""
     d38 = "decimal(38,0)"
-    w_cum = (
-        Window.partitionBy("event_type")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
+    cum = _cum_cells(cells, (F.col("ca") + F.col("cb")).alias("t")).where(
+        (F.col("na") > 0) & (F.col("nb") > 0)
     )
-    w_tot = Window.partitionBy("event_type")
-    cum = cells.select(
-        "event_type",
-        (F.col("ca") + F.col("cb")).alias("t"),
-        F.sum("ca").over(w_cum).alias("cuma"),
-        F.sum("cb").over(w_cum).alias("cumb"),
-        F.sum("ca").over(w_tot).alias("na"),
-        F.sum("cb").over(w_tot).alias("nb"),
-    ).where((F.col("na") > 0) & (F.col("nb") > 0))
     gap = F.col("cuma").cast(d38) * F.col("nb") - F.col("cumb").cast(
         d38
     ) * F.col("na")
@@ -13160,20 +12996,9 @@ def ad_from_cells(cells: DataFrame) -> DataFrame:
     `ks_from_cells` precedent) so the streaming twin reduces the
     same drained cell-monoid state."""
     d38 = "decimal(38,0)"
-    w_cum = (
-        Window.partitionBy("event_type")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
+    cum = _cum_cells(cells, (F.col("ca") + F.col("cb")).alias("t")).where(
+        (F.col("na") > 0) & (F.col("nb") > 0)
     )
-    w_tot = Window.partitionBy("event_type")
-    cum = cells.select(
-        "event_type",
-        (F.col("ca") + F.col("cb")).alias("t"),
-        F.sum("ca").over(w_cum).alias("cuma"),
-        F.sum("cb").over(w_cum).alias("cumb"),
-        F.sum("ca").over(w_tot).alias("na"),
-        F.sum("cb").over(w_tot).alias("nb"),
-    ).where((F.col("na") > 0) & (F.col("nb") > 0))
     nad = F.col("na").cast("double")
     nbd = F.col("nb").cast("double")
     nd = nad + nbd
@@ -13255,12 +13080,7 @@ def cliffs_from_cells(cells: DataFrame) -> DataFrame:
     `ks_from_cells` / `ad_from_cells` precedent) so the streaming
     twin reduces the same drained cell-monoid state."""
     d38 = "decimal(38,0)"
-    w_cum = (
-        Window.partitionBy("event_type")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_tot = Window.partitionBy("event_type")
+    w_cum, w_tot = _cell_windows()
     # ca(v)·cumB(<v): strictly-below mass = cumb_le − cb at v
     cum = cells.select(
         "event_type",
@@ -14191,12 +14011,7 @@ def mood_from_cells(cells: DataFrame) -> DataFrame:
     precedent) so the streaming twin reduces the same drained
     cell-monoid state."""
     d38 = "decimal(38,0)"
-    w_cum = (
-        Window.partitionBy("event_type")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_tot = Window.partitionBy("event_type")
+    w_cum, w_tot = _cell_windows()
     cum = cells.select(
         "event_type",
         "v",
@@ -14504,12 +14319,7 @@ def events_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows over the cent domain, one per-type reduce."""
     cells = halfsplit_value_cells(load_table(spark, sf_dir, "events"))
     d38 = "decimal(38,0)"
-    w_cum = (
-        Window.partitionBy("event_type")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_tot = Window.partitionBy("event_type")
+    w_cum, w_tot = _cell_windows()
     t = F.col("ca") + F.col("cb")
     cum = cells.select(
         "event_type",

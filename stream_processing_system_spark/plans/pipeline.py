@@ -5,7 +5,6 @@ text_analysis} for the driver contract."""
 from __future__ import annotations
 
 import atexit
-import hashlib
 import os
 import shutil
 import tempfile
@@ -66,6 +65,7 @@ def remove_scratch_caches() -> None:
         _FMT_CACHE,
         _EVO_CACHE,
         _CORRUPT_CACHE,
+        _BUCKETED_CACHE,
     ):
         cache.clear()
 
@@ -711,8 +711,6 @@ def bucketed_revenue_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB. The oracle hash-match proves bucketing changed the
     LAYOUT, never the values.
     """
-    from urllib.parse import urlparse
-
     from stream_processing_system_spark.sources.bucketing import (
         bucketed_join,
         write_bucketed,
@@ -720,16 +718,11 @@ def bucketed_revenue_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tables = _BUCKETED_CACHE.get(sf_dir)
     if tables is None:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+        # external tables under a scratch dir: the warehouse keeps no
+        # copy, and `remove_scratch_caches` deletes the data at exit
+        base = _scratch_dir("bk")
+        tag = os.path.basename(base).removeprefix("spark_graft_bk_")
         tables = (f"orders_bk_{tag}", f"lineitem_bk_{tag}")
-        # the warehouse DIRECTORY outlives the in-memory catalog: a
-        # fresh process would hit LOCATION_ALREADY_EXISTS on
-        # saveAsTable, so drop both the catalog entry and any stale
-        # location before writing
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        for t in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority"
         )
@@ -738,8 +731,9 @@ def bucketed_revenue_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_extendedprice",
             "l_discount",
         )
-        write_bucketed(orders, tables[0], "o_orderkey", n_buckets=8)
-        write_bucketed(li, tables[1], "o_orderkey", n_buckets=8)
+        for df, table in zip((orders, li), tables):
+            path = os.path.join(base, table)
+            write_bucketed(df, table, "o_orderkey", n_buckets=8, path=path)
         _BUCKETED_CACHE[sf_dir] = tables
     joined = bucketed_join(spark, tables[0], tables[1], "o_orderkey")
     revenue = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(

@@ -24,8 +24,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def get_spark(
     app_name: str = "stream_processing_system_spark",

@@ -23,13 +23,16 @@ def write_bucketed(
     bucket_col: str,
     n_buckets: int = 8,
     sort_col: str | None = None,
+    path: str | None = None,
 ) -> None:
-    """Persist df as a bucketed (and optionally sorted) managed
-    table. Sorting within buckets additionally enables sort-merge
-    joins without a sort step."""
+    """Persist df as a bucketed (and optionally sorted) table: managed
+    in the warehouse, or external at `path`. Sorting within buckets
+    additionally enables sort-merge joins without a sort step."""
     writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
     if sort_col is not None:
         writer = writer.sortBy(sort_col)
+    if path is not None:
+        writer = writer.option("path", path)
     writer.saveAsTable(table)
 
 

@@ -27,12 +27,6 @@ TABLES = [
     "embeddings",
 ]
 
-# Constant-size dimension tables: safe to hard-broadcast at ANY
-# scale factor (region=5 rows, nation=25 always). customer/supplier/
-# part scale with SF — their join strategy belongs to AQE, never a
-# hard-coded broadcast hint.
-BROADCAST_DIMS = {"region", "nation"}
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")

@@ -119,6 +119,36 @@ def test_remove_scratch_caches_deletes_fixture_dirs(spark, sf_dir):
     assert os.path.isdir(pipeline._ZORDER_CACHE[sf_dir])
 
 
+def test_remove_scratch_caches_drops_bucketed_tables(spark, sf_dir):
+    """`bucketed_revenue_join` writes its two bucketed tables as
+    external tables in a scratch dir: after `remove_scratch_caches`
+    neither table's data is left, in the warehouse or anywhere else,
+    and the next call rebuilds the same rows."""
+    import os
+    from urllib.parse import urlparse
+
+    from stream_processing_system_spark.plans import pipeline
+
+    expected = pipeline.bucketed_revenue_join(spark, sf_dir).collect()
+    tables = pipeline._BUCKETED_CACHE[sf_dir]
+    locations = [
+        urlparse(
+            spark.sql(f"DESCRIBE TABLE EXTENDED {t}")
+            .where("col_name = 'Location'")
+            .first()["data_type"]
+        ).path
+        for t in tables
+    ]
+    assert all(os.path.isdir(loc) for loc in locations)
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+
+    pipeline.remove_scratch_caches()
+    assert [loc for loc in locations if os.path.exists(loc)] == []
+    assert [t for t in tables if os.path.exists(os.path.join(warehouse, t))] == []
+    assert sf_dir not in pipeline._BUCKETED_CACHE
+    assert pipeline.bucketed_revenue_join(spark, sf_dir).collect() == expected
+
+
 def test_dynamic_partition_overwrite_touches_only_its_partition(spark, tmp_path):
     import os
 

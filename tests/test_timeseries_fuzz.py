@@ -10,7 +10,7 @@ import pytest
 import datetime
 import math
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F  # noqa: F401
 
@@ -261,6 +261,63 @@ def _daily_whole(evs):
     for d, v, t in evs:
         acc[(t, d)] = acc.get((t, d), 0) + math.floor(v * 100 + 0.5)
     return {k: (s // 100 if s >= 0 else -((-s) // 100)) for k, s in acc.items()}
+
+
+#: `events_strategy` rows whose value may also be NULL
+nullable_events_strategy = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=15),
+        st.none() | st.floats(min_value=-100, max_value=100, allow_nan=False),
+        st.sampled_from(["a", "b"]),
+    ),
+    min_size=1,
+    max_size=40,
+)
+
+
+@given(evs=nullable_events_strategy)
+@example(
+    # negatives, a NULL beside values, single-row days, an all-NULL
+    # day, an all-NULL type-day, and 3-row days whose mean rounds up
+    # (s = 2636) and, negative, toward zero (s = -4)
+    evs=[
+        (0, -1.005, "a"),
+        (0, 2.5, "a"),
+        (0, None, "a"),
+        (1, -0.015, "a"),
+        (2, None, "a"),
+        (2, None, "a"),
+        (3, 33.33, "a"),
+        (3, -7.0, "a"),
+        (3, 0.03, "a"),
+        (4, -0.01, "b"),
+        (4, -0.01, "b"),
+        (4, -0.02, "b"),
+        (5, None, "b"),
+    ]
+)
+@SET
+def test_daily_centi_means_matches_integer_replay(spark, evs):
+    """`_daily_centi_means`, the daily-mean builder shared by the sax,
+    dtw, hurst, matrix-profile, pacf, bollinger and v-optimal plans,
+    against integer arithmetic: floor(v*100 + 0.5) per non-NULL row,
+    then floor(s*10000/n + 0.5) per day as an exact integer division.
+    Days and types without a non-NULL value have no row."""
+    from stream_processing_system_spark.plans.analytics import _daily_centi_means
+
+    base = datetime.date(2024, 3, 1)
+    got = {
+        (r["event_type"], (r["day"] - base).days): r["dm"]
+        for r in _daily_centi_means(_frame(spark, evs)).collect()
+    }
+    acc: dict[tuple, list] = {}
+    for d, v, t in evs:
+        if v is not None:
+            acc.setdefault((t, d), []).append(math.floor(v * 100 + 0.5))
+    want = {
+        k: (2 * sum(c) * 10000 + len(c)) // (2 * len(c)) for k, c in acc.items()
+    }
+    assert got == want
 
 
 @given(evs=events_strategy)
