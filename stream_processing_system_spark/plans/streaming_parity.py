@@ -75,6 +75,14 @@ def _state_partitions(spark: SparkSession, input_dir: str):
     return _session_conf(spark, "spark.sql.shuffle.partitions", str(n))
 
 
+#: Spark's rename-based checkpoint manager on a Hadoop `FileSystem`
+#: (see `_drain`).
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
 class _Drop(NamedTuple):
     """One twin's scratch run, as yielded by `_drain`."""
 
@@ -98,8 +106,22 @@ def _drain(spark: SparkSession, prefix: str, *frames: DataFrame, fmt: str = "par
     """The spout and sink side every twin shares: write each frame as a
     `fmt` ("parquet" or "text") file drop under a per-run scratch base,
     read each parquet drop back as a stream with the frame's own
-    schema, and run the body under `_state_partitions`. The base is
-    removed on exit, also when the drain raises.
+    schema, and run the body under `_state_partitions` with
+    `_FS_CHECKPOINT_MANAGER` as the session's checkpoint file manager.
+    The base is removed and both settings are restored on exit, also
+    when the drain raises.
+
+    Why the FileSystem manager: Spark's default FileContext manager
+    renames each checkpoint file (offset and commit logs, state schema
+    files, RocksDB uploads) through `FileContext.rename`, which on a
+    local path without Hadoop's native library forks a `readlink`
+    process per rename; `FileSystem.rename` on a local path is one
+    POSIX rename with no fork. On 4 cores this cut the forked-child
+    CPU of a `crane_stream` pass from about 0.5 s to 0.2 s, and its
+    in-JVM pass CPU by about a fifth (PERFORMANCE.md). Why only here: the
+    checkpoint always lives under the local scratch base, where that
+    rename is atomic. A checkpoint on HDFS or an object store, made
+    outside `_drain`, keeps Spark's default.
 
     The run id keeps the memory-sink query name unique within a
     session (bench runs each query several times). Nothing on disk is
@@ -118,7 +140,11 @@ def _drain(spark: SparkSession, prefix: str, *frames: DataFrame, fmt: str = "par
             frame.write.mode("overwrite").format(fmt).save(d)
             if fmt == "parquet":
                 streams.append(spark.readStream.schema(frame.schema).parquet(d))
-        with _state_partitions(spark, dirs[0]):
+        with _session_conf(
+            spark,
+            "spark.sql.streaming.checkpointFileManagerClass",
+            _FS_CHECKPOINT_MANAGER,
+        ), _state_partitions(spark, dirs[0]):
             yield _Drop(dirs, streams, os.path.join(base, "ckpt"), f"{prefix}_{run}", base)
     finally:
         shutil.rmtree(base, ignore_errors=True)

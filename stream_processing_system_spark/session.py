@@ -16,6 +16,13 @@ for tests and on a 1000-executor cluster unchanged:
 - Streaming state partitions: each availableNow twin in
   `plans/streaming_parity.py` sets its own shuffle.partitions (the
   state-store count) from its file-drop bytes at query start.
+- Streaming checkpoint file manager: no default is set here. Each
+  twin's drain (`_drain`) checkpoints under the local temp dir and
+  switches to Spark's FileSystem-based manager for its lifetime: a
+  local `FileSystem.rename` is one atomic POSIX rename, while the
+  FileContext default forks a `readlink` per rename when Hadoop's
+  native library is missing. A checkpoint on HDFS or an object store
+  keeps Spark's FileContext default.
 """
 
 from __future__ import annotations

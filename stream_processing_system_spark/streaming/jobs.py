@@ -412,7 +412,8 @@ def _epoch_rotated_sink(
     (`os.replace`) only after the new version is fully written, and
     the old version is deleted only after that commit.
     `bolt/bolt.go:286-310`'s END-marker single write is the degenerate
-    one-epoch case of this."""
+    one-epoch case of this. A drop with no files commits no epoch and
+    returns `merge` of an empty batch: no rows, the serving schema."""
     import os
     import shutil
 
@@ -425,7 +426,8 @@ def _epoch_rotated_sink(
 
     def _committed() -> int:
         if os.path.exists(marker):
-            return int(open(marker).read().strip())
+            with open(marker) as f:
+                return int(f.read().strip())
         return -1
 
     def _serving(epoch: int) -> str:
@@ -452,7 +454,11 @@ def _epoch_rotated_sink(
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(_serving(_committed()))
+    last = _committed()
+    if last < 0:
+        # a drop with no files runs no batch: serve the merge of nothing
+        return merge(spark.createDataFrame([], stream.schema), None)
+    return spark.read.parquet(_serving(last))
 
 
 def stream_upsert_totals(

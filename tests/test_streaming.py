@@ -164,6 +164,28 @@ def test_upsert_sink_multi_batch_and_restart_idempotent(spark, tmp_path, sink):
     assert int(open(os.path.join(state_dir, "_committed_epoch")).read()) == committed
 
 
+@pytest.mark.parametrize(
+    "sink, cols",
+    [("upsert", ["user_id", "n_events", "sum_u"]), ("kmv", ["g", "h", "rn"])],
+)
+def test_upsert_sink_on_empty_drop_returns_empty_serving_table(
+    spark, tmp_path, sink, cols
+):
+    """A drop with no files runs no micro-batch and commits no epoch;
+    the sink returns an empty frame with the serving schema instead of
+    reading a serving version that was never written."""
+    input_dir = tmp_path / "in"
+    input_dir.mkdir()
+    run = jobs.stream_upsert_totals if sink == "upsert" else jobs.stream_kmv_sketches
+    serving = run(
+        spark, str(input_dir), str(tmp_path / "ckpt"), str(tmp_path / "state"),
+        name=f"{sink}_empty",
+    )
+    assert serving.columns == cols
+    assert serving.count() == 0
+    assert not os.path.exists(tmp_path / "state" / "_committed_epoch")
+
+
 def test_kmv_merge_associativity_across_batch_splits(spark, tmp_path):
     """The streamed (multi-batch) sketch must equal the batch-built
     sketch bit-for-bit — the associativity property the shared

@@ -49,6 +49,13 @@ def test_stream_running_counts_matches_batch_oracle(spark, sf_dir):
     assert_matches_oracle(df, sf_dir, contract.oracle_sql()["stream_running_counts"])
 
 
+_CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
 def _temp_views(spark) -> set[str]:
     return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
@@ -95,20 +102,80 @@ def test_failed_drain_removes_scratch_and_restores_partitions(
     spark, sf_dir, monkeypatch
 ):
     """A drain that raises still removes its scratch base (drop plus
-    checkpoint) and restores the session's shuffle partitions."""
+    checkpoint) and restores the session's shuffle partitions. Inside
+    the drain the checkpoint file manager is the FileSystem one; on
+    exit it is unset again, or restored when the session had one."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     pattern = os.path.join(tempfile.gettempdir(), "spark_graft_eph_*")
     before = set(glob.glob(pattern))
+    seen = []
 
     def _fail(*args, **kwargs):
+        seen.append(spark.conf.get(_CKPT_MANAGER_KEY))
         raise RuntimeError("drain failed")
 
     monkeypatch.setattr(jobs, "_drain_to_table", _fail)
+    assert spark.conf.get(_CKPT_MANAGER_KEY, None) is None
     with pytest.raises(RuntimeError, match="drain failed"):
         streaming_parity.stream_events_per_hour(spark, sf_dir)
     assert set(glob.glob(pattern)) <= before
     assert spark.conf.get(key) == prev
+    assert spark.conf.get(_CKPT_MANAGER_KEY, None) is None
+
+    spark.conf.set(_CKPT_MANAGER_KEY, _FILE_CONTEXT_MANAGER)
+    try:
+        with pytest.raises(RuntimeError, match="drain failed"):
+            streaming_parity.stream_events_per_hour(spark, sf_dir)
+        assert spark.conf.get(_CKPT_MANAGER_KEY) == _FILE_CONTEXT_MANAGER
+    finally:
+        spark.conf.unset(_CKPT_MANAGER_KEY)
+    assert seen == [streaming_parity._FS_CHECKPOINT_MANAGER] * 2
+
+
+def test_drain_restart_with_fs_checkpoint_manager(spark):
+    """A drained stateful query restarted on the same checkpoint under
+    the FileSystem checkpoint manager reads only the file added since,
+    its totals equal the batch answer over both files, and no
+    half-written `*.tmp` file is left in the checkpoint."""
+    from pyspark.sql import functions as F
+
+    first = spark.range(0, 600).select((F.col("id") % 7).alias("k"))
+    added = spark.range(600, 1000).select((F.col("id") % 7).alias("k"))
+    with streaming_parity._drain(spark, "restart", first) as d:
+        assert (
+            spark.conf.get(_CKPT_MANAGER_KEY) == streaming_parity._FS_CHECKPOINT_MANAGER
+        )
+        counts = d.stream.groupBy("k").count()
+
+        def _run(name):
+            q = (
+                counts.writeStream.outputMode("complete")
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", d.ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            rows = {r["k"]: r["count"] for r in spark.table(name).collect()}
+            spark.catalog.dropTempView(name)
+            return sum(p.numInputRows for p in q.recentProgress), rows
+
+        n1, _ = _run(f"{d.name}_1")
+        added.coalesce(1).write.mode("append").parquet(d.dir)
+        n2, got = _run(f"{d.name}_2")
+        leftovers = [
+            f
+            for _, _, files in os.walk(d.ckpt)
+            for f in files
+            if f.endswith(".tmp")
+        ]
+    both = first.union(added).groupBy("k").count()
+    want = {r["k"]: r["count"] for r in both.collect()}
+    assert (n1, n2) == (600, 400)
+    assert got == want
+    assert leftovers == []
 
 
 def test_stream_wordcount_docs_drains_with_one_state_store(spark, sf_dir):
