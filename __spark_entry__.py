@@ -4806,13 +4806,6 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY event_type
             ORDER BY event_type
         """,
-        "top_users_salted": """
-            SELECT user_id, count(*) AS posts
-            FROM events WHERE value >= 0
-            GROUP BY user_id
-            ORDER BY posts DESC, user_id ASC
-            LIMIT 50
-        """,
         # --- dedup / text pipeline oracles (md5 is byte-identical in
         # Spark and DuckDB, so even hash-based signatures diff-test) ---
         "dedup_exact": """
@@ -5051,48 +5044,9 @@ def oracle_sql() -> dict[str, str]:
                    CAST(MAX(n_bytes) AS BIGINT) AS max_bytes
             FROM m GROUP BY media_type ORDER BY media_type
         """,
-        "stream_wordcount": """
-            WITH clean AS (
-                SELECT text AS line FROM documents
-                WHERE NOT (length(string_split(text, ' ')[1]) > 8
-                           AND substr(string_split(text, ' ')[1], 1, 4) IN ('http', '2008'))
-            ), words AS (
-                SELECT unnest(string_split(line, ' ')) AS word FROM clean
-            )
-            SELECT word, count(*) AS cnt FROM words WHERE word <> ''
-            GROUP BY word
-        """,
-        "stream_host_report": """
-            SELECT user_id, count(*) AS hits,
-                   array_to_string(
-                       list_sort(list(DISTINCT (user_id::VARCHAR || ':' || props))),
-                       ',') AS routes
-            FROM events WHERE event_type = 'click'
-            GROUP BY user_id
-        """,
-        "stream_dedup_exact": """
-            SELECT min(doc_id) AS doc_id
-            FROM documents
-            GROUP BY md5(lower(trim(text)))
-        """,
-        "stream_events_per_hour": """
-            SELECT CAST(epoch(time_bucket(INTERVAL 1 HOUR, ts)) AS BIGINT) AS hour_start,
-                   count(*) AS n,
-                   ROUND(SUM(value), 4) AS sum_value
-            FROM events
-            GROUP BY hour_start
-            ORDER BY hour_start
-        """,
         "stream_running_counts": """
             SELECT text AS key, count(*) AS cnt
             FROM documents GROUP BY text
-        """,
-        "stream_reddit_top_users": """
-            SELECT user_id, count(*) AS posts
-            FROM events WHERE value >= 0
-            GROUP BY user_id
-            ORDER BY posts DESC, user_id ASC
-            LIMIT 50
         """,
         "doc_bigram_lm": f"""
             WITH {_POSITIONAL_TOKENS_CTE}, bi AS (
@@ -5184,30 +5138,6 @@ def oracle_sql() -> dict[str, str]:
               ON a.gh = b.gh AND a.source < b.source
             GROUP BY 1, 2
             ORDER BY n_shared_grams DESC, s1 ASC, s2 ASC
-        """,
-        "stream_ohlc_daily": """
-            WITH base AS (
-                SELECT event_type,
-                       CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                       ts, event_id, value
-                FROM events WHERE value IS NOT NULL
-            ), ranked AS (
-                SELECT *,
-                       row_number() OVER (PARTITION BY event_type, day
-                                          ORDER BY ts ASC, event_id ASC) AS ra,
-                       row_number() OVER (PARTITION BY event_type, day
-                                          ORDER BY ts DESC, event_id DESC) AS rd
-                FROM base
-            )
-            SELECT event_type, day,
-                   MAX(CASE WHEN ra = 1 THEN value END) AS open,
-                   MAX(value) AS high,
-                   MIN(value) AS low,
-                   MAX(CASE WHEN rd = 1 THEN value END) AS close,
-                   count(*) AS n_ticks
-            FROM ranked
-            GROUP BY event_type, day
-            ORDER BY event_type, day
         """,
         "events_ohlc_daily": """
             WITH base AS (
@@ -8710,15 +8640,6 @@ def oracle_sql() -> dict[str, str]:
             WHERE click_ts_s - ts_s <= 7200
             ORDER BY event_id
         """,
-        "stream_upsert_user_totals": """
-            SELECT user_id,
-                   count(*) AS n_events,
-                   sum(coalesce(CAST(floor(value * 10000 + 0.5) AS BIGINT), 0))
-                       / 10000.0 AS sum_value
-            FROM events
-            GROUP BY user_id
-            ORDER BY user_id
-        """,
         "events_downsample_ltob": """
             WITH daily AS (
                 SELECT event_type,
@@ -10333,6 +10254,17 @@ def oracle_sql() -> dict[str, str]:
     _o["topology_submit_wordcount"] = _o["q1_wordcount"]
     _o["stream_spout_wordcount"] = _o["q1_wordcount"]
     _o["crane_sink_roundtrip"] = _o["q2_top_users"]
+    # Same-rows twins: each streaming drain (and the salted top-users
+    # plan) returns exactly its source query's rows, so it shares that
+    # oracle text.
+    _o["stream_wordcount"] = _o["q1_wordcount"]
+    _o["stream_reddit_top_users"] = _o["q2_top_users"]
+    _o["top_users_salted"] = _o["q2_top_users"]
+    _o["stream_host_report"] = _o["q3_host_report"]
+    _o["stream_events_per_hour"] = _o["events_per_hour"]
+    _o["stream_dedup_exact"] = _o["dedup_exact"]
+    _o["stream_ohlc_daily"] = _o["events_ohlc_daily"]
+    _o["stream_upsert_user_totals"] = _o["stream_user_stats"]
     # TPC-H Q12 (derived shipmode: byte-identical md5 pick, same
     # device as the geospatial derive_points oracle)
     _o["lineitem_shipmode_priority"] = """

@@ -88,27 +88,6 @@ def lsh_signature(vec_col, planes: list[list[float]]):
     return out
 
 
-def lsh_signature_udf(planes: list[list[float]]):
-    """Vectorized twin of `lsh_signature`: one Arrow crossing and a
-    single (batch × dim) @ (dim × planes) matmul per batch, vs
-    n_planes interpreted HOF dot products per row. Sign agreement
-    with the expression form (and the SQL oracle) would only break
-    for |dot| < ~1e-13 — not observed at any SF; the differential
-    gate guards it."""
-    from pyspark.sql.functions import pandas_udf
-
-    mat = np.asarray(planes, dtype=np.float64).T  # dim × n_planes
-    powers = (2 ** np.arange(mat.shape[1], dtype=np.int64)).astype(np.int64)
-
-    @pandas_udf("long")
-    def _sig(vecs: pd.Series) -> pd.Series:
-        v = np.asarray(vecs.tolist(), dtype=np.float64)
-        bits = (v @ mat) >= 0
-        return pd.Series(bits @ powers)
-
-    return _sig
-
-
 def lsh_topk(
     df: DataFrame,
     query_df: DataFrame,

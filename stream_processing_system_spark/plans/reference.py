@@ -137,14 +137,11 @@ def crane_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     lossless — the driver-row upgrade of tests/test_sinks.py. The
     parsed frame is eagerly localCheckpoint'ed so the scratch files
     can be removed before the driver collects."""
-    import shutil
-    import tempfile
-
     from stream_processing_system_spark.sources import spout_source
+    from stream_processing_system_spark.sources.scratch import scratch
 
     spout_source.register(spark)
-    out_dir = tempfile.mkdtemp(prefix="spark_graft_crane_sink_")
-    try:
+    with scratch("crane_sink") as out_dir:
         (
             q2_top_users(spark, sf_dir)
             .write.format("crane_sink")
@@ -164,5 +161,3 @@ def crane_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)

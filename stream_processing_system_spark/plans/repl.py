@@ -204,21 +204,18 @@ def repl_session_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame as q1_wordcount, so it shares q1's DuckDB oracle: a
     hash-match proves dispatch, registry submit, store put/get and
     the parquet round-trip, not just the plan q1 calls directly."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as FF
 
+    from stream_processing_system_spark.sources.scratch import scratch
     from stream_processing_system_spark.sources.tables import load_table
 
-    scratch = tempfile.mkdtemp(prefix="spark_graft_repl_wc_")
-    corpus = os.path.join(scratch, "corpus")
-    try:
+    with scratch("repl_wc") as base:
+        corpus = os.path.join(base, "corpus")
         docs = load_table(spark, sf_dir, "documents").select(FF.col("text"))
         docs.write.mode("overwrite").text(corpus)
         repl = CraneRepl(
             spark,
-            os.path.join(scratch, "store"),
+            os.path.join(base, "store"),
             datasets={"wordcount": corpus},
         )
         repl.dispatch("JOIN")
@@ -230,8 +227,6 @@ def repl_session_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
         return repl.store.get(spark, "wordcount_result").localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def main(store_root: str = "/tmp/crane_store", datasets: dict[str, str] | None = None) -> None:

@@ -12,15 +12,13 @@ from __future__ import annotations
 
 import contextlib
 import os
-import shutil
-import tempfile
-import uuid
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stream_processing_system_spark.plans import analytics
+from stream_processing_system_spark.sources.scratch import scratch
 from stream_processing_system_spark.sources.tables import load_table
 from stream_processing_system_spark.streaming import jobs
 
@@ -104,9 +102,9 @@ class _Drop(NamedTuple):
 @contextlib.contextmanager
 def _drain(spark: SparkSession, prefix: str, *frames: DataFrame, fmt: str = "parquet"):
     """The spout and sink side every twin shares: write each frame as a
-    `fmt` ("parquet" or "text") file drop under a per-run scratch base,
-    read each parquet drop back as a stream with the frame's own
-    schema, and run the body under `_state_partitions` with
+    `fmt` ("parquet" or "text") file drop under a private per-run
+    `scratch` base, read each parquet drop back as a stream with the
+    frame's own schema, and run the body under `_state_partitions` with
     `_FS_CHECKPOINT_MANAGER` as the session's checkpoint file manager.
     The base is removed and both settings are restored on exit, also
     when the drain raises.
@@ -123,31 +121,28 @@ def _drain(spark: SparkSession, prefix: str, *frames: DataFrame, fmt: str = "par
     rename is atomic. A checkpoint on HDFS or an object store, made
     outside `_drain`, keeps Spark's default.
 
-    The run id keeps the memory-sink query name unique within a
-    session (bench runs each query several times). Nothing on disk is
-    needed after the block: a memory-sink result lives in the driver,
-    and a result read from the base (a foreachBatch serving table) is
-    materialized inside the block. A drained memory-sink table that a
-    batch tail self-joins is localCheckpointed first, because
-    re-referencing the same MemoryPlan yields conflicting attribute
-    ids."""
-    run = uuid.uuid4().hex[:8]
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_{prefix}_{run}")
-    try:
+    The base's random suffix keeps the memory-sink query name unique
+    within a session (bench runs each query several times). Nothing on
+    disk is needed after the block: a memory-sink result lives in the
+    driver, and a result read from the base (a foreachBatch serving
+    table) is materialized inside the block. A drained memory-sink
+    table that a batch tail self-joins is localCheckpointed first,
+    because re-referencing the same MemoryPlan yields conflicting
+    attribute ids."""
+    with scratch(prefix) as base:
         dirs = [os.path.join(base, f"in{i}") for i in range(len(frames))]
         streams = []
         for frame, d in zip(frames, dirs):
             frame.write.mode("overwrite").format(fmt).save(d)
             if fmt == "parquet":
                 streams.append(spark.readStream.schema(frame.schema).parquet(d))
+        name = os.path.basename(base).removeprefix("spark_graft_")
         with _session_conf(
             spark,
             "spark.sql.streaming.checkpointFileManagerClass",
             _FS_CHECKPOINT_MANAGER,
         ), _state_partitions(spark, dirs[0]):
-            yield _Drop(dirs, streams, os.path.join(base, "ckpt"), f"{prefix}_{run}", base)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+            yield _Drop(dirs, streams, os.path.join(base, "ckpt"), name, base)
 
 
 def stream_wordcount_docs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,6 +17,7 @@ contract) — no framework classes to subclass.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -125,15 +126,11 @@ def topology_submit_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan functions q1 calls directly. The result is eagerly
     localCheckpoint'ed so the scratch input can be removed before
     the driver collects."""
-    import shutil
-    import tempfile
-
+    from stream_processing_system_spark.sources.scratch import scratch
     from stream_processing_system_spark.sources.tables import load_table
 
-    in_dir = tempfile.mkdtemp(prefix="spark_graft_topo_wc_")
-    try:
+    with scratch("topo_wc") as base:
+        in_dir = os.path.join(base, "in")
         docs = load_table(spark, sf_dir, "documents").select(F.col("text"))
         docs.write.mode("overwrite").text(in_dir)
         return submit(spark, "wordcount", in_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(in_dir, ignore_errors=True)

@@ -84,13 +84,13 @@ def test_registered_compaction_reduces_file_count(spark, sf_dir):
     the scanned copy has far fewer files than the 64-file fragmented
     write it was built from."""
     from stream_processing_system_spark.plans.pipeline import (
-        _COMPACT_CACHE,
+        _compacted_events,
         compacted_events_scan,
     )
 
     df = compacted_events_scan(spark, sf_dir)
     assert df.count() == 5
-    compacted = spark.read.parquet(_COMPACT_CACHE[sf_dir])
+    compacted = spark.read.parquet(_compacted_events(spark, sf_dir))
     n_files = len(compacted.inputFiles())
     assert n_files < 16, f"compaction left {n_files} files"
 
@@ -98,39 +98,44 @@ def test_registered_compaction_reduces_file_count(spark, sf_dir):
 def test_remove_scratch_caches_deletes_fixture_dirs(spark, sf_dir):
     """The one-time fixture copies of `plans/pipeline.py` live in
     scratch dirs that `remove_scratch_caches` (run at exit) deletes;
-    it also empties their caches, so the next call rebuilds."""
+    it also empties the fixture memo, so the next call rebuilds."""
     import os
 
     from stream_processing_system_spark.plans import pipeline
+    from stream_processing_system_spark.sources import scratch
 
+    zorder = (pipeline._zorder_events, sf_dir)
+    corrupt = (pipeline._corrupt_jsonl, sf_dir)
     expected = pipeline.zorder_events_scan(spark, sf_dir).collect()
     pipeline.jsonl_corrupt_scan(spark, sf_dir).collect()
     dirs = [
-        pipeline._ZORDER_CACHE[sf_dir],
-        os.path.dirname(pipeline._CORRUPT_CACHE[sf_dir]),
+        scratch._FIXTURES[zorder],
+        os.path.dirname(scratch._FIXTURES[corrupt]),
     ]
     assert all(os.path.isdir(d) for d in dirs)
 
-    pipeline.remove_scratch_caches()
+    scratch.remove_scratch_caches()
     assert [d for d in dirs if os.path.exists(d)] == []
-    assert sf_dir not in pipeline._ZORDER_CACHE
-    assert sf_dir not in pipeline._CORRUPT_CACHE
+    assert zorder not in scratch._FIXTURES
+    assert corrupt not in scratch._FIXTURES
     assert pipeline.zorder_events_scan(spark, sf_dir).collect() == expected
-    assert os.path.isdir(pipeline._ZORDER_CACHE[sf_dir])
+    assert os.path.isdir(scratch._FIXTURES[zorder])
 
 
 def test_remove_scratch_caches_drops_bucketed_tables(spark, sf_dir):
     """`bucketed_revenue_join` writes its two bucketed tables as
-    external tables in a scratch dir: after `remove_scratch_caches`
+    external tables in a fixture dir: after `remove_scratch_caches`
     neither table's data is left, in the warehouse or anywhere else,
     and the next call rebuilds the same rows."""
     import os
     from urllib.parse import urlparse
 
     from stream_processing_system_spark.plans import pipeline
+    from stream_processing_system_spark.sources import scratch
 
+    key = (pipeline._bucketed_tables, sf_dir)
     expected = pipeline.bucketed_revenue_join(spark, sf_dir).collect()
-    tables = pipeline._BUCKETED_CACHE[sf_dir]
+    tables = scratch._FIXTURES[key]
     locations = [
         urlparse(
             spark.sql(f"DESCRIBE TABLE EXTENDED {t}")
@@ -142,10 +147,10 @@ def test_remove_scratch_caches_drops_bucketed_tables(spark, sf_dir):
     assert all(os.path.isdir(loc) for loc in locations)
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
 
-    pipeline.remove_scratch_caches()
+    scratch.remove_scratch_caches()
     assert [loc for loc in locations if os.path.exists(loc)] == []
     assert [t for t in tables if os.path.exists(os.path.join(warehouse, t))] == []
-    assert sf_dir not in pipeline._BUCKETED_CACHE
+    assert key not in scratch._FIXTURES
     assert pipeline.bucketed_revenue_join(spark, sf_dir).collect() == expected
 
 

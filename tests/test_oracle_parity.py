@@ -16,12 +16,11 @@ def test_every_oracle_key_has_a_query():
     assert set(ORACLES) <= set(QUERIES)
 
 
-#: Two pathological-cost rows (~88 s and ~35 s at sf0.001 — the
-#: DuckDB-side unrolled mirrors dominate, not Spark) move to the slow
-#: tier so the default run fits the driver's verify window; both stay
-#: covered by the standalone `python -m tests.oracle` sweeps run and
-#: committed every round, and by `pytest -m slow`.
-_SLOW_ORACLE = {"events_voptimal_histogram", "ivfpq_topk"}
+#: One pathological-cost row (~90 s at sf0.001 — the DuckDB-side
+#: unrolled mirror dominates, not Spark) sits in the slow tier; it stays
+#: covered by the standalone `python -m tests.oracle` sweeps and by
+#: `pytest -m slow`.
+_SLOW_ORACLE = {"events_voptimal_histogram"}
 
 
 @pytest.mark.parametrize(

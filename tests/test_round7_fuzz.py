@@ -9,19 +9,12 @@ boundary that random inputs can land on)."""
 
 from __future__ import annotations
 
-import pytest
-
 import datetime as dt
 import math
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-
-#: slow tier (round 10, VERDICT r9 item 7): independent replay /
-#: property / soak coverage, excluded from the default run so the
-#: driver's verify window fits; run with `pytest -m slow`.
-pytestmark = pytest.mark.slow
 
 SET = settings(
     max_examples=6,

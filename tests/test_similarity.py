@@ -233,27 +233,6 @@ def test_knn_join_split_path_identical_to_unsplit(spark, sf_dir):
     )
 
 
-def test_lsh_signature_udf_matches_expression(spark, sf_dir):
-    from stream_processing_system_spark.operators.similarity import (
-        _hyperplanes,
-        lsh_signature,
-        lsh_signature_udf,
-    )
-
-    embs = load_table(spark, sf_dir, "embeddings")
-    planes = _hyperplanes(64, 8, 42)
-    expr_sig = embs.select("vec_id", lsh_signature(F.col("embedding"), planes).alias("s"))
-    udf_sig = embs.select(
-        "vec_id", lsh_signature_udf(planes)(F.col("embedding")).alias("s")
-    )
-    diff = (
-        expr_sig.alias("a")
-        .join(udf_sig.alias("b"), "vec_id")
-        .where(F.col("a.s") != F.col("b.s"))
-    )
-    assert diff.count() == 0
-
-
 def test_pq_recall_floor_random(spark, sf_dir):
     """PQ (8 sub × 16 codes, ADC + exact re-rank of 100) floor on the
     worst-case random table: mean recall@10 vs exact dot top-10 over

@@ -133,6 +133,17 @@ def test_failed_drain_removes_scratch_and_restores_partitions(
     assert seen == [streaming_parity._FS_CHECKPOINT_MANAGER] * 2
 
 
+def test_drain_scratch_base_is_private(spark):
+    """A drain's scratch base, which holds its file drops and its
+    checkpoint, is mode 0700 while the drain runs."""
+    import stat
+
+    with streaming_parity._drain(spark, "mode", spark.range(0, 10)) as d:
+        assert os.path.dirname(d.dir) == d.base
+        assert stat.S_IMODE(os.stat(d.base).st_mode) == 0o700
+    assert not os.path.exists(d.base)
+
+
 def test_drain_restart_with_fs_checkpoint_manager(spark):
     """A drained stateful query restarted on the same checkpoint under
     the FileSystem checkpoint manager reads only the file added since,

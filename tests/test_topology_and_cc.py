@@ -76,12 +76,6 @@ def test_dedup_transitive_collapses_chain(spark):
     }
     assert kept == {1, 50}
 
-@pytest.mark.parametrize(
-    "cc_path",
-    # distributed: ~42 s of HashMin rounds on the worst-case diameter
-    ["local", pytest.param("distributed", marks=pytest.mark.slow)],
-    indirect=True,
-)
 def test_cc_long_path_converges(spark, cc_path):
     """Regression for the O(diameter) propagation pathology: a
     600-node PATH (worst-case diameter) must fully converge to a
