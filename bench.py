@@ -33,19 +33,7 @@ item 4: a hot 32-core window became round 9's comparison baseline).
 
 Each detail record is stamped with `cpus`, `sf` and `git_sha`; "the
 last committed record" below always means the newest one taken at the
-same core count and scale factor.
-
-`--changed-since` re-measures only queries whose normalized
-optimized-plan fingerprint differs from the last committed
-BENCH_DETAIL record (plus the 20 slowest prior rows and the
-flagship anchors); everything else carries its prior timing forward,
-listed under `carried` in the detail record. Full runs store the
-fingerprints (`plan_hashes`) to seed the next incremental run —
-AFTER the timed loop (round 9 hashed up front, which executed every
-trainer's build phase as an unintended whole-surface warm-up;
-VERDICT r9 item 9). Queries whose build executes Spark jobs are
-classified in `build_executes` and fingerprint by source text, so
-the incremental pass never runs their build either."""
+same core count and scale factor."""
 
 from __future__ import annotations
 
@@ -253,96 +241,6 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _n_jobs(spark) -> int:
-    """Total Spark jobs submitted so far (Java SparkStatusTracker) —
-    the job counter `_plan_hash` uses to DETECT queries whose
-    DataFrame build executes work (trainer collects, fixpoint loops,
-    streaming drains)."""
-    t = spark._jsparkSession.sparkContext().statusTracker()
-    return len(t.getJobIdsForGroup(None))
-
-
-_PKG_DIGEST: str | None = None
-
-
-def _pkg_digest() -> str:
-    """Digest of every package source file. Folded into source-text
-    fingerprints so a build-executing query (whose wrapper source
-    rarely changes) is re-measured whenever ANY package module
-    changed — the wrapper's own source can't see edits to the
-    operator functions it calls."""
-    global _PKG_DIGEST
-    if _PKG_DIGEST is None:
-        import hashlib
-
-        h = hashlib.sha256()
-        root = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "stream_processing_system_spark",
-        )
-        for dirpath, _dirs, files in sorted(os.walk(root)):
-            for f in sorted(files):
-                if f.endswith(".py"):
-                    with open(os.path.join(dirpath, f), "rb") as fh:
-                        h.update(fh.read())
-        _PKG_DIGEST = h.hexdigest()[:16]
-    return _PKG_DIGEST
-
-
-def _src_hash(fn) -> str:
-    import hashlib
-    import inspect
-
-    src = inspect.getsource(fn) + _pkg_digest()
-    return "src:" + hashlib.sha256(src.encode()).hexdigest()[:16]
-
-
-def _plan_hash(fn, name: str, spark, sf_dir: str, skip_build: bool = False):
-    """Stable fingerprint of what a query WOULD execute, for the
-    `--changed-since` mode: the optimized logical plan string with
-    session-scoped noise normalized out (expression ids `#123`,
-    scratch paths, object addresses). Returns (hash, build_ran_jobs).
-
-    Queries whose DataFrame BUILD executes Spark jobs (streaming
-    twins drain their stream; trainers collect codebooks; fixpoint
-    loops run) fingerprint by source text instead — any edit to
-    their function re-measures them — and are RECORDED in the detail
-    file (`build_executes`) so the next run can skip their build
-    entirely (`skip_build=True`): round-9's pre-timing fingerprint
-    pass executed every trainer's build phase as an unintended
-    whole-surface warm-up (VERDICT r9 item 9); now no fingerprint
-    job runs before the timed loop at all (full runs hash AFTER
-    timing behind a clearCache), and incremental runs never build
-    the queries classified as build-executing."""
-    import hashlib
-    import re
-
-    mod = getattr(fn, "__module__", "") or ""
-    if skip_build or name.startswith("stream_") or "streaming" in mod:
-        return _src_hash(fn), False
-    try:
-        j0 = _n_jobs(spark)
-        df = fn(spark, sf_dir)
-        if _n_jobs(spark) > j0:
-            # jobs ran — but a session's FIRST touch of a parquet
-            # table runs a one-off schema/footer job that is not the
-            # query's doing. Rebuild once: only genuinely
-            # build-executing queries (trainer collects, fixpoint
-            # loops) run jobs on EVERY build.
-            j1 = _n_jobs(spark)
-            df = fn(spark, sf_dir)
-            if _n_jobs(spark) > j1:
-                return _src_hash(fn), True
-        p = df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:
-        return _src_hash(fn), False
-    p = re.sub(r"#\d+", "#", p)
-    p = re.sub(r"\b([A-Za-z]+)_\d+\b", r"\1_", p)  # lambda var counters
-    p = re.sub(r"/tmp/\S+", "<tmp>", p)
-    p = re.sub(r"@[0-9a-f]{6,}", "@", p)
-    return "plan:" + hashlib.sha256(p.encode()).hexdigest()[:16], False
-
-
 def _latest_detail(repo_root: str, cpus: int, sf):
     """Most recent committed BENCH_DETAIL_r{N}.json taken at the same
     core count and scale factor, or None. Records without a `cpus`
@@ -412,8 +310,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     queries = contract.queries()
 
-    changed_since = "--changed-since" in sys.argv[1:]
-    arg_names = [a for a in sys.argv[1:] if not a.startswith("--")]
+    arg_names = sys.argv[1:]
     # Default: every registered query — HEADLINE first (the
     # round-2-comparable subset), then everything else in
     # registration order (round-3 ask: no unbenched queries).
@@ -422,55 +319,10 @@ def main() -> None:
     )
 
     repo_root = os.path.dirname(os.path.abspath(__file__))
-    plan_hashes: dict[str, str] = {}
-    build_executes: set[str] = set()
-    carried: dict[str, float] = {}
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     prev = _latest_detail(repo_root, cpus, sf_val) or {}
     prev_timings_all = prev.get("queries", {})
-    if changed_since and not arg_names:
-        # Re-measure only queries whose (normalized) optimized plan
-        # changed since the last committed detail record, plus the
-        # 20 slowest prior rows (the regression-sensitive tail) and
-        # the flagship anchors; everything else carries its prior
-        # timing forward, marked in the detail record. Full signal
-        # at roughly half the wall (VERDICT r8 item 8). Queries the
-        # last record classified as build-executing are fingerprinted
-        # by source WITHOUT building them — this pass runs zero
-        # Spark jobs for them (VERDICT r9 item 9).
-        prev_hashes = prev.get("plan_hashes", {})
-        prev_build_exec = set(prev.get("build_executes", []))
-        for n in names:
-            plan_hashes[n], ran = _plan_hash(
-                queries[n], n, spark, sf_dir,
-                skip_build=n in prev_build_exec,
-            )
-            if ran or n in prev_build_exec:
-                build_executes.add(n)
-        slow20 = set(
-            sorted(prev_timings_all, key=prev_timings_all.get, reverse=True)[:20]
-        )
-        anchors = {
-            "q1_wordcount", "q2_top_users", "q3_host_report",
-            "pricing_summary", "ivf_index_topk", "pq_topk",
-        }
-        remeasure = {
-            n
-            for n in names
-            if n not in prev_timings_all
-            or prev_hashes.get(n) != plan_hashes[n]
-            or n in slow20
-            or n in anchors
-        }
-        carried = {
-            n: prev_timings_all[n] for n in names if n not in remeasure
-        }
-        names = [n for n in names if n in remeasure]
-    # Full-surface runs fingerprint AFTER the timed loop (see below):
-    # round-9 hashed up front, which executed every trainer's build
-    # phase before timing — an unintended whole-surface warm-up
-    # (VERDICT r9 item 9). Nothing runs before this warm-up now.
     force(queries["pricing_summary"](spark, sf_dir))  # warm-up
     # The persisted IVF index is built once per process (train +
     # assign + partitioned write — the vector-DB-load analogue);
@@ -534,7 +386,6 @@ def main() -> None:
             if prev_t and timings[name] > 1.5 * prev_t:
                 timings[name] = round(min(timings[name], sample(name)), 3)
                 resampled.append(name)
-    timings.update(carried)
 
     headline = set(HEADLINE)
     flagships = [
@@ -544,16 +395,6 @@ def main() -> None:
     ]
     print(json.dumps({"queries": timings, "sf": sf_val}), flush=True)
     if not arg_names:  # full-surface run: persist the record
-        if not changed_since:
-            # fingerprint AFTER timing: clearCache() first restores
-            # fresh-session plan state (cached relations otherwise
-            # splice InMemoryRelation nodes into ~95 of 414 plans and
-            # spuriously "change" them for the next incremental run)
-            spark.catalog.clearCache()
-            for n in names:
-                plan_hashes[n], ran = _plan_hash(queries[n], n, spark, sf_dir)
-                if ran:
-                    build_executes.add(n)
         _write_detail(
             repo_root,
             {
@@ -562,7 +403,6 @@ def main() -> None:
                 "git_sha": _git_sha(repo_root),
                 "n_queries": len(timings),
                 "n_measured": n_measured,
-                "carried": sorted(carried),
                 "ivf_index_build_sec": ivf_build,
                 "pq_codebook_build_sec": pq_build,
                 "calibration_q1_samples": calibration,
@@ -570,8 +410,6 @@ def main() -> None:
                 "calibration_q1_min": cal_min,
                 "hot_window": hot_window,
                 "hot_resampled": sorted(resampled),
-                "plan_hashes": plan_hashes,
-                "build_executes": sorted(build_executes),
                 "queries": timings,
             },
         )

@@ -1813,7 +1813,8 @@ def twonn_intrinsic_dim(
     ≤ dim·4.4e12 at unit scale — in-range to dim ~10⁶, and < 2⁵³ to
     dim ~2·10³ so the double casts below are exact too; the
     decimal(38,0) lane this replaced spent ~3× the scan in
-    BigDecimal allocations (5.9 s → see OPTIMIZATION_r09.md).
+    BigDecimal allocations (5.9 s; measured in OPTIMIZATION_r09.md,
+    read it with `git show e9ec005:OPTIMIZATION_r09.md`).
     Zero-distance PAIRS are dropped (the `d2 > 0` filter), so a
     probe whose nearest neighbor is an exact duplicate still ranks
     its nearest NON-duplicate neighbors — a deliberate convention

@@ -3443,6 +3443,47 @@ def _cramer3(a, b, c, d, e, f, g, h, i):
     return det, det0, det1, det2
 
 
+def _irls3(frame: DataFrame, x1, x2, link, b0: float, iters: int):
+    """`iters` fixed IRLS rounds for η = β₀ + β₁·x1 + β₂·x2 over
+    `frame`; `link(eta)` returns the round's working weight `w` and
+    weighted response `wz` as Columns. Cross-engine reproducible:
+    each per-row weighted moment is floored onto a 1e-6 integer grid
+    before an exact DECIMAL(38,0) sum (nine scalars per round, the
+    only driver traffic), the 3×3 normal equations solve by
+    `_cramer3`, and β (the initial intercept `b0` too) is quantized
+    to the 1e-9 grid so the next round's η is bit-identical to the
+    oracle's unrolled CTE chain. Returns (b0, b1, b2)."""
+    import math
+
+    def grid9(x: float) -> float:
+        return math.floor(x * 1e9 + 0.5) / 1e9
+
+    def q(col):
+        return (
+            F.floor(col * F.lit(1e6) + F.lit(0.5))
+            .cast("long")
+            .cast("decimal(38,0)")
+        )
+
+    b0, b1, b2 = grid9(b0), 0.0, 0.0
+    for _ in range(iters):
+        w, wz = link(F.lit(b0) + F.lit(b1) * x1 + F.lit(b2) * x2)
+        r = frame.agg(
+            F.sum(q(w)).alias("ma"),
+            F.sum(q(w * x1)).alias("mb"),
+            F.sum(q(w * x2)).alias("mc"),
+            F.sum(q(w * x1 * x1)).alias("md"),
+            F.sum(q(w * x1 * x2)).alias("me"),
+            F.sum(q(w * x2 * x2)).alias("mf"),
+            F.sum(q(wz)).alias("mg"),
+            F.sum(q(wz * x1)).alias("mh"),
+            F.sum(q(wz * x2)).alias("mi"),
+        ).collect()[0]
+        det, det0, det1, det2 = _cramer3(*(float(v) for v in r))
+        b0, b1, b2 = grid9(det0 / det), grid9(det1 / det), grid9(det2 / det)
+    return b0, b1, b2
+
+
 def _daily_counts(events: DataFrame) -> DataFrame:
     """Daily event count `c` per event_type, NULL values included."""
     return (
@@ -6654,35 +6695,15 @@ def events_poisson_glm(
     )
     tot = sc.agg(F.sum("y").alias("sy"), F.count(F.lit(1)).alias("n")).collect()[0]
     n_obs = int(tot["n"])
-    b0 = math.floor(math.log(tot["sy"] / tot["n"]) * 1e9 + 0.5) / 1e9
-    b1 = b2 = 0.0
-    d38 = "decimal(38,0)"
 
-    def q(col):
-        return F.floor(col * F.lit(1e6) + F.lit(0.5)).cast("long").cast(d38)
-
-    for _ in range(iters):
-        eta = F.lit(b0) + F.lit(b1) * F.col("s") + F.lit(b2) * F.col("c")
+    def log_link(eta):
         mu = F.exp(eta)
-        wz = mu * eta + F.col("y").cast("double") - mu
-        r = sc.agg(
-            F.sum(q(mu)).alias("ma"),
-            F.sum(q(mu * F.col("s"))).alias("mb"),
-            F.sum(q(mu * F.col("c"))).alias("mc"),
-            F.sum(q(mu * F.col("s") * F.col("s"))).alias("md"),
-            F.sum(q(mu * F.col("s") * F.col("c"))).alias("me"),
-            F.sum(q(mu * F.col("c") * F.col("c"))).alias("mf"),
-            F.sum(q(wz)).alias("mg"),
-            F.sum(q(wz * F.col("s"))).alias("mh"),
-            F.sum(q(wz * F.col("c"))).alias("mi"),
-        ).collect()[0]
-        a, b, c_ = float(r["ma"]), float(r["mb"]), float(r["mc"])
-        d, e, f = float(r["md"]), float(r["me"]), float(r["mf"])
-        g, h, i = float(r["mg"]), float(r["mh"]), float(r["mi"])
-        det, det0, det1, det2 = _cramer3(a, b, c_, d, e, f, g, h, i)
-        b0 = math.floor(det0 / det * 1e9 + 0.5) / 1e9
-        b1 = math.floor(det1 / det * 1e9 + 0.5) / 1e9
-        b2 = math.floor(det2 / det * 1e9 + 0.5) / 1e9
+        return mu, mu * eta + F.col("y").cast("double") - mu
+
+    b0, b1, b2 = _irls3(
+        sc, F.col("s"), F.col("c"), log_link,
+        math.log(tot["sy"] / tot["n"]), iters,
+    )
 
     amp = math.sqrt(b1 * b1 + b2 * b2)
     peak = math.atan2(b1, b2) * 24.0 / (2.0 * math.pi)
@@ -7415,14 +7436,10 @@ def _logit_base(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _logit_irls_betas(
     base: DataFrame, iters: int = 3
 ) -> tuple[float, float, float, int]:
-    """IRLS training loop shared by `lineitem_logit_return` and
-    `lineitem_calibration_curve`: per-row weighted moments floored
-    onto a 1e-6 grid before exact DECIMAL(38,0) summation, a
-    textually-mirrored Cramer solve on the driver (nine scalar
-    moments per round — the only driver traffic), and β re-quantized
-    to the 1e-9 grid between rounds so the oracle's unrolled CTE
-    chain sees the identical coefficients. Returns (b0, b1, b2,
-    n_rows)."""
+    """Logistic IRLS (`_irls3` with the logit link) for P(y) on
+    (x1, x2), shared by `lineitem_logit_return`,
+    `lineitem_calibration_curve`, `customer_uplift_two_model` and
+    `customer_ipw_ate`. Returns (b0, b1, b2, n_rows)."""
     import math
 
     tot = base.agg(
@@ -7430,41 +7447,16 @@ def _logit_irls_betas(
     ).collect()[0]
     n_rows = int(tot["n"])
     p0 = tot["sy"] / tot["n"]
-    b0 = math.floor(math.log(p0 / (1.0 - p0)) * 1e9 + 0.5) / 1e9
-    b1 = b2 = 0.0
-    d38 = "decimal(38,0)"
 
-    def q(col):
-        return F.floor(col * F.lit(1e6) + F.lit(0.5)).cast("long").cast(d38)
-
-    for _ in range(iters):
-        eta = (
-            F.lit(b0)
-            + F.lit(b1) * F.col("x1").cast("double")
-            + F.lit(b2) * F.col("x2").cast("double")
-        )
+    def logit_link(eta):
         mu = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
         w = mu * (F.lit(1.0) - mu)
-        wz = w * eta + (F.col("y").cast("double") - mu)
-        x1d, x2d = F.col("x1").cast("double"), F.col("x2").cast("double")
-        r = base.agg(
-            F.sum(q(w)).alias("ma"),
-            F.sum(q(w * x1d)).alias("mb"),
-            F.sum(q(w * x2d)).alias("mc"),
-            F.sum(q(w * x1d * x1d)).alias("md"),
-            F.sum(q(w * x1d * x2d)).alias("me"),
-            F.sum(q(w * x2d * x2d)).alias("mf"),
-            F.sum(q(wz)).alias("mg"),
-            F.sum(q(wz * x1d)).alias("mh"),
-            F.sum(q(wz * x2d)).alias("mi"),
-        ).collect()[0]
-        a, b, c_ = float(r["ma"]), float(r["mb"]), float(r["mc"])
-        d, e, f = float(r["md"]), float(r["me"]), float(r["mf"])
-        g, h, i = float(r["mg"]), float(r["mh"]), float(r["mi"])
-        det, det0, det1, det2 = _cramer3(a, b, c_, d, e, f, g, h, i)
-        b0 = math.floor(det0 / det * 1e9 + 0.5) / 1e9
-        b1 = math.floor(det1 / det * 1e9 + 0.5) / 1e9
-        b2 = math.floor(det2 / det * 1e9 + 0.5) / 1e9
+        return w, w * eta + (F.col("y").cast("double") - mu)
+
+    b0, b1, b2 = _irls3(
+        base, F.col("x1").cast("double"), F.col("x2").cast("double"),
+        logit_link, math.log(p0 / (1.0 - p0)), iters,
+    )
     return b0, b1, b2, n_rows
 
 

@@ -660,10 +660,14 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str, base: str) -> tuple[str, 
     """orders and lineitem written once per sf_dir per process (a
     `fixture`) as tables bucketed by order key. They are external
     tables under the fixture dir, so the warehouse keeps no copy and
-    the data goes with the dir at exit."""
+    the data goes with the dir at exit. The table names depend on
+    sf_dir alone, so a rebuild after `remove_scratch_caches`
+    overwrites the two catalog entries instead of adding two more."""
+    import hashlib
+
     from stream_processing_system_spark.sources.bucketing import write_bucketed
 
-    tag = os.path.basename(base).removeprefix("spark_graft_bk_")
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     tables = (f"orders_bk_{tag}", f"lineitem_bk_{tag}")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"

@@ -249,9 +249,8 @@ def stream_running_counts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_user_stats_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary-state parity: per-user running
     (n_events, sum value) maintained in custom streaming state
-    (transformWithState where the runtime has the TWS runner's
-    protobuf dependency, applyInPandasWithState otherwise — see
-    jobs.stream_user_stats) over an events file-drop. Values are quantized to integer micro-units
+    (applyInPandasWithState, jobs.stream_user_stats) over an events
+    file-drop. Values are quantized to integer micro-units
     JVM-SIDE before the Python stage (order-independent integer sums
     through arbitrary micro-batching), and the drained `update`
     output rolls up with max per key (totals are monotone). Checked
@@ -263,7 +262,7 @@ def stream_user_stats_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("value") * 10000 + 0.5).cast("long"), F.lit(0)
         ).alias("value_u"),
     )
-    with _drain(spark, "tws", events) as d:
+    with _drain(spark, "ustats", events) as d:
         drained = jobs.stream_user_stats(spark, d.stream, d.ckpt, name=d.name)
     return (
         drained.groupBy("user_id")

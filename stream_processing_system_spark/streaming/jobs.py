@@ -20,10 +20,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 from stream_processing_system_spark.plans.reference import nasalog_report, wordcount
 from stream_processing_system_spark.sources.text import (
@@ -281,36 +277,12 @@ def _running_count_fn(key, pdf_iter, state: GroupState):
     yield pd.DataFrame({"key": [key[0]], "cnt": [n]})
 
 
-class _UserStatsProcessor(StatefulProcessor):
-    """Per-key (n_events, sum of integer micro-units) running stats on
-    Spark 4's transformWithState API — typed ValueState instead of
-    applyInPandasWithState's single tuple blob. The quantities are
-    summed as INTEGERS (the caller quantizes JVM-side before the
-    Python stage), so the converged totals are order-independent and
-    the whole custom-state path stays value-hash checkable."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._st = handle.getValueState("stats", "n bigint, sum_u bigint")
-
-    def handleInputRows(self, key, rows, timerValues):
-        prev = self._st.get() if self._st.exists() else None
-        n, sum_u = (int(prev[0]), int(prev[1])) if prev else (0, 0)
-        for pdf in rows:
-            n += len(pdf)
-            sum_u += int(pdf["value_u"].sum())
-        self._st.update((n, sum_u))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "sum_u": [sum_u]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
 def _user_stats_fn(key, pdf_iter, state: GroupState):
-    """applyInPandasWithState twin of _UserStatsProcessor — identical
-    integer-summed semantics, tuple-blob state instead of typed
-    ValueState."""
+    """Per-key (n_events, sum of integer micro-units) running stats.
+    The quantities are summed as INTEGERS (the caller quantizes
+    JVM-side before the Python stage), so the converged totals are
+    order-independent and the custom-state path stays value-hash
+    checkable."""
     n, sum_u = state.get if state.exists else (0, 0)
     for pdf in pdf_iter:
         n += len(pdf)
@@ -319,49 +291,24 @@ def _user_stats_fn(key, pdf_iter, state: GroupState):
     yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "sum_u": [sum_u]})
 
 
-def _tws_available() -> bool:
-    """transformWithState's Python runner speaks protobuf on its state
-    channel; without the `protobuf` package the runner crashes at
-    init, so the capability is detected up front and the job degrades
-    to the 3.x-era API (identical results, different state plumbing)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def stream_user_stats(
     spark: SparkSession,
     events: DataFrame,
     checkpoint_dir: str,
     name: str = "user_stats",
 ) -> DataFrame:
-    """Custom stateful operator, preferring transformWithStateInPandas
-    (the current-generation arbitrary-state API — typed ValueState,
-    timers, TTL) and degrading to applyInPandasWithState where the
-    runtime lacks the TWS runner's protobuf dependency. Both paths
-    maintain the SAME per-key (n_events, integer-micro-unit sum)
-    state and emit converged totals per micro-batch in `update` mode;
-    after an availableNow drain the max per key is the final answer
-    (totals are monotone). Which path ran is irrelevant to the
-    result — both are value-hash checked by the same oracle."""
-    if _tws_available():
-        out = events.groupBy("user_id").transformWithStateInPandas(
-            _UserStatsProcessor(),
-            outputStructType="user_id bigint, n_events bigint, sum_u bigint",
-            outputMode="Update",
-            timeMode="None",
-        )
-    else:
-        out = events.groupBy("user_id").applyInPandasWithState(
-            _user_stats_fn,
-            outputStructType="user_id bigint, n_events bigint, sum_u bigint",
-            stateStructType="n bigint, sum_u bigint",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    """Custom stateful operator on applyInPandasWithState: per-key
+    (n_events, integer-micro-unit sum) state, emitting converged
+    totals per micro-batch in `update` mode; after an availableNow
+    drain the max per key is the final answer (totals are monotone),
+    value-hash checked by the `stream_user_stats` oracle."""
+    out = events.groupBy("user_id").applyInPandasWithState(
+        _user_stats_fn,
+        outputStructType="user_id bigint, n_events bigint, sum_u bigint",
+        stateStructType="n bigint, sum_u bigint",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
     return _drain_to_table(out, name, checkpoint_dir, output_mode="update")
 
 

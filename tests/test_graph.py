@@ -4,6 +4,11 @@ partitionings) that makes them oracle-checkable."""
 
 from __future__ import annotations
 
+import math
+
+import pytest
+from hypothesis import given
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from stream_processing_system_spark.operators.graph import (
@@ -11,6 +16,7 @@ from stream_processing_system_spark.operators.graph import (
     pagerank,
     triangle_counts,
 )
+from tests.helpers import FUZZ
 
 
 def _edges(spark, pairs):
@@ -154,3 +160,91 @@ def test_cheapest_paths_relaxation(spark):
     )
     got = {r["node"]: r["cost"] for r in cheapest_paths(e, rounds=3).collect()}
     assert got == {1: 0, 2: 2, 3: 5, 4: 6}
+
+
+# --- rich club (honest replay on a literal edge list) ------------
+
+
+edge_lists = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=7),
+        st.integers(min_value=0, max_value=7),
+    ),
+    max_size=16,
+)
+
+
+@pytest.mark.slow
+@given(raw=edge_lists)
+@FUZZ
+def test_fuzz_rich_club(spark, raw):
+    from stream_processing_system_spark.operators.graph import rich_club
+
+    edges = sorted({(min(a, b), max(a, b)) for a, b in raw if a != b})
+    if not edges:
+        return
+    df = spark.createDataFrame(edges, "src long, dst long")
+    out = {r["k"]: r for r in rich_club(df).collect()}
+    deg = {}
+    for a, b in edges:
+        deg[a] = deg.get(a, 0) + 1
+        deg[b] = deg.get(b, 0) + 1
+    for k in (1, 2, 4, 8):
+        n_nodes = sum(1 for v in deg.values() if v > k)
+        n_edges = sum(
+            1 for a, b in edges if deg[a] > k and deg[b] > k
+        )
+        row = out[k]
+        assert (row["n_nodes"], row["n_edges"]) == (n_nodes, n_edges)
+        if n_nodes > 1:
+            assert row["phi"] == 2.0 * float(n_edges) / (
+                float(n_nodes) * (float(n_nodes) - 1.0)
+            )
+        else:
+            assert row["phi"] is None
+
+
+# --- Degree power-law alpha (honest replay) ----------------------
+
+
+@pytest.mark.slow
+@given(raw=edge_lists)
+@FUZZ
+def test_fuzz_degree_powerlaw_device(spark, raw):
+    """The MLE device over a literal degree table: replay on the
+    raw degree multiset."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from stream_processing_system_spark.plans.analytics import det_round  # noqa: F401
+
+    edges = sorted({(min(a, b), max(a, b)) for a, b in raw if a != b})
+    if not edges:
+        return
+    deg = Counter()
+    for a, b in edges:
+        deg[a] += 1
+        deg[b] += 1
+    tail = [d for d in deg.values() if d >= 2]
+    # replay the plan's tail expression directly on a degree frame
+    d38 = "decimal(38,0)"
+    cells_df = spark.createDataFrame(
+        list(Counter(tail).items()) or [(0, 0)], "deg long, c long"
+    ).where(F.col("deg") >= 2)
+    lng = F.floor(
+        F.log(F.col("deg").cast("double") / F.lit(2.0)) * F.lit(1e9)
+        + F.lit(0.5)
+    ).cast("long")
+    agg = cells_df.select("c", lng.alias("l")).agg(
+        F.sum("c").alias("n_tail"),
+        F.sum(F.col("c").cast(d38) * F.col("l")).alias("sl"),
+    )
+    row = agg.collect()[0]
+    n_tail = row["n_tail"] or 0
+    assert n_tail == len(tail)
+    sl = sum(
+        math.floor(math.log(d / 2.0) * 1e9 + 0.5) for d in tail
+    )
+    if n_tail:
+        assert int(row["sl"]) == sl

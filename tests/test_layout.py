@@ -126,13 +126,18 @@ def test_remove_scratch_caches_drops_bucketed_tables(spark, sf_dir):
     """`bucketed_revenue_join` writes its two bucketed tables as
     external tables in a fixture dir: after `remove_scratch_caches`
     neither table's data is left, in the warehouse or anywhere else,
-    and the next call rebuilds the same rows."""
+    and the next call rebuilds the same rows under the same two
+    table names, so the catalog gains no stale entries."""
     import os
     from urllib.parse import urlparse
 
     from stream_processing_system_spark.plans import pipeline
     from stream_processing_system_spark.sources import scratch
 
+    def bk_tables():
+        return {t.name for t in spark.catalog.listTables() if "_bk_" in t.name}
+
+    before = bk_tables()
     key = (pipeline._bucketed_tables, sf_dir)
     expected = pipeline.bucketed_revenue_join(spark, sf_dir).collect()
     tables = scratch._FIXTURES[key]
@@ -152,6 +157,10 @@ def test_remove_scratch_caches_drops_bucketed_tables(spark, sf_dir):
     assert [t for t in tables if os.path.exists(os.path.join(warehouse, t))] == []
     assert key not in scratch._FIXTURES
     assert pipeline.bucketed_revenue_join(spark, sf_dir).collect() == expected
+    rebuilt = set(scratch._FIXTURES[key])
+    assert rebuilt == set(tables) and rebuilt <= bk_tables()
+    assert bk_tables() - before == rebuilt - before
+    assert all(spark.table(t).count() > 0 for t in rebuilt)
 
 
 def test_dynamic_partition_overwrite_touches_only_its_partition(spark, tmp_path):

@@ -100,7 +100,8 @@ def test_row_grain_event_type_windows_documented():
                 break
         return name
 
-    # documented row-grain sites (postures in PERFORMANCE.md r7 table)
+    # documented row-grain sites (PERFORMANCE.md, cost classes:
+    # row-grain exceptions)
     allow = {"events_winsorized_stats"}
     offenders = []
     for i, ln in enumerate(lines):
@@ -113,5 +114,6 @@ def test_row_grain_event_type_windows_documented():
     assert not offenders, (
         "undocumented row-grain per-type window(s); either use the "
         "two-phase chunk device or add the function to the allowlist "
-        f"WITH a docstring posture + PERFORMANCE.md row: {offenders}"
+        f"WITH a docstring posture + a PERFORMANCE.md row-grain exception: "
+        f"{offenders}"
     )

@@ -4,6 +4,8 @@ the reference, which has no tests at all (SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 
 from hypothesis import HealthCheck, given, settings
@@ -12,6 +14,7 @@ from pyspark.sql import functions as F
 
 from stream_processing_system_spark.operators import dedup
 from stream_processing_system_spark.plans.reference import top_users, wordcount
+from tests.helpers import py_det_round
 
 # words over a small alphabet, no spaces
 word = st.text(alphabet="abcxyz", min_size=1, max_size=6)
@@ -248,3 +251,53 @@ def test_ab_zstat_detects_planted_lift(spark):
                      columns=["cohort", "cy"])
     )
     assert abs(zstat(same)) < 1e-9
+
+
+def test_trade_balance_conserves(spark, sf_dir):
+    """Cross-nation trade is zero-sum: every flow is one nation's
+    export and another's import, so Σ net_balance must be exactly 0
+    on the ten-thousandths integer grid."""
+    from stream_processing_system_spark.plans.analytics import (
+        nation_trade_balance,
+    )
+
+    rows = nation_trade_balance(spark, sf_dir).collect()
+    assert rows, "non-empty at every SF"
+    assert (
+        math.fsum(r["net_balance"] for r in rows) == 0.0
+        or abs(sum(r["net_balance"] for r in rows)) < 1e-6
+    )
+
+
+def test_dedup_source_shift_invariants(spark, sf_dir):
+    """Structural invariants: keepers ≤ docs per source, shares each
+    sum to 1, and drift sums to ~0."""
+    from stream_processing_system_spark.plans.pipeline import (
+        dedup_source_shift,
+    )
+
+    rows = dedup_source_shift(spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        assert 0 <= r["n_keepers"] <= r["n_docs"]
+    assert abs(sum(r["share_before"] for r in rows) - 1.0) < 1e-4
+    assert abs(sum(r["share_after"] for r in rows) - 1.0) < 1e-4
+    assert abs(sum(r["share_drift"] for r in rows)) < 1e-4
+
+
+def test_frame_entropy_bounds(spark, sf_dir):
+    """0 ≤ H ≤ ln(n_frames), with equality diagnostics: H = 0 iff
+    one distinct fingerprint; H = ln(n) iff all frames distinct."""
+    from stream_processing_system_spark.plans.pipeline import (
+        media_frame_entropy,
+    )
+
+    rows = media_frame_entropy(spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        h = r["frame_entropy_nats"]
+        assert -1e-9 <= h <= math.log(r["n_frames"]) + 1e-6
+        if r["n_distinct"] == 1:
+            assert h == 0.0
+        if r["n_distinct"] == r["n_frames"]:
+            assert abs(h - py_det_round(math.log(r["n_frames"]))) < 2e-6

@@ -6,7 +6,6 @@ differential harness cannot)."""
 
 from __future__ import annotations
 
-import datetime as dt
 import math
 
 import pytest
@@ -18,21 +17,12 @@ from stream_processing_system_spark.plans.analytics import (
     max_drawdown_from_daily,
     turning_points_from_daily,
 )
-
-
-def _daily(spark, series, col="c", typ="long"):
-    rows = [
-        ("a", dt.date(2024, 1, 1) + dt.timedelta(days=i), v)
-        for i, v in enumerate(series)
-    ]
-    return spark.createDataFrame(
-        rows, f"event_type string, day date, {col} {typ}"
-    )
+from tests.helpers import daily_series
 
 
 def test_kalman_matches_python_reference(spark):
     series = [10, 14, 9, 22, 18, 7, 30, 25]
-    out = kalman_from_daily(_daily(spark, series)).collect()[0]
+    out = kalman_from_daily(daily_series(spark, series, col="c")).collect()[0]
     l, p, sse = float(series[0]), 64.0, 0.0
     for v in series[1:]:
         ppred = p + 0.25
@@ -53,7 +43,7 @@ def test_kalman_converges_to_steady_state_gain(spark):
     # P = (1-K)(P+Q) — geometric convergence, so after 40 steps P
     # must sit strictly between the fixed point (~3.88) and P0=64
     # and match the replayed recursion exactly
-    out = kalman_from_daily(_daily(spark, [50] * 40)).collect()[0]
+    out = kalman_from_daily(daily_series(spark, [50] * 40, col="c")).collect()[0]
     assert out["level"] == 50.0 and out["sse"] == 0.0
     p = 64.0
     for _ in range(39):
@@ -68,7 +58,7 @@ def test_max_drawdown_hand_case(spark):
     # (day5): dd = 25 cents = 0.25
     cum = [10, 30, 20, 25, 5, 40]
     cents = [cum[0]] + [cum[i] - cum[i - 1] for i in range(1, len(cum))]
-    out = max_drawdown_from_daily(_daily(spark, cents, col="cent")).collect()
+    out = max_drawdown_from_daily(daily_series(spark, cents, col="cent")).collect()
     assert len(out) == 1
     r = out[0]
     assert r["max_drawdown"] == 0.25
@@ -81,20 +71,22 @@ def test_max_drawdown_ties_pick_earliest_trough(spark):
     # two equal drawdowns (20→10 twice): earliest trough wins
     cum = [20, 10, 25, 15, 30]
     cents = [cum[0]] + [cum[i] - cum[i - 1] for i in range(1, len(cum))]
-    r = max_drawdown_from_daily(_daily(spark, cents, col="cent")).collect()[0]
+    r = max_drawdown_from_daily(daily_series(spark, cents, col="cent")).collect()[0]
     assert r["max_drawdown"] == 0.10
     assert str(r["trough_day"]) == "2024-01-02"
 
 
 def test_monotone_series_has_zero_drawdown(spark):
-    r = max_drawdown_from_daily(_daily(spark, [5, 5, 5], col="cent")).collect()[0]
+    r = max_drawdown_from_daily(daily_series(spark, [5, 5, 5], col="cent")).collect()[0]
     assert r["max_drawdown"] == 0.0
 
 
 def test_turning_points_hand_case(spark):
     # 1 4 2 2 5 3: interior i=2 (4: up-down TP), i=3 (2: down-flat,
     # not strict), i=4 (2: flat-up, not strict), i=5 (5: up-down TP)
-    r = turning_points_from_daily(_daily(spark, [1, 4, 2, 2, 5, 3])).collect()[0]
+    r = turning_points_from_daily(
+        daily_series(spark, [1, 4, 2, 2, 5, 3], col="c")
+    ).collect()[0]
     assert r["t_points"] == 2 and r["n_days"] == 6
     n = 6.0
     e = 2.0 * (n - 2.0) / 3.0
@@ -104,7 +96,9 @@ def test_turning_points_hand_case(spark):
 
 
 def test_turning_points_monotone_is_zero(spark):
-    r = turning_points_from_daily(_daily(spark, [1, 2, 3, 4, 5])).collect()[0]
+    r = turning_points_from_daily(
+        daily_series(spark, [1, 2, 3, 4, 5], col="c")
+    ).collect()[0]
     assert r["t_points"] == 0
 
 

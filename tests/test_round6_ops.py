@@ -8,61 +8,24 @@ from __future__ import annotations
 
 import datetime as dt
 import math
-from collections import Counter
 
 from stream_processing_system_spark.plans.analytics import (
     kruskal_wallis_from_daily,
     mann_kendall_from_daily,
     page_hinkley_from_daily,
 )
-
-EPOCH = dt.date(1970, 1, 1)
-
-
-def _daily(spark, series, typ="a"):
-    rows = [
-        (typ, dt.date(2024, 1, 1) + dt.timedelta(days=i), int(v))
-        for i, v in enumerate(series)
-    ]
-    return spark.createDataFrame(rows, "event_type string, day date, x long")
-
-
-def _det_round(v):
-    return None if v is None else math.floor(v * 1e6 + 0.5) / 1e6
-
-
-def _mk_replay(series):
-    n = len(series)
-    s = 0
-    for i in range(n):
-        for j in range(i + 1, n):
-            d = series[j] - series[i]
-            s += (d > 0) - (d < 0)
-    ties = sum(t * (t - 1) * (2 * t + 5) for t in Counter(series).values())
-    var_s = (
-        float(n) * (float(n) - 1.0) * (2.0 * float(n) + 5.0) - float(ties)
-    ) / 18.0
-    if var_s > 0.0:
-        if s > 0:
-            z = (float(s) - 1.0) / math.sqrt(var_s)
-        elif s < 0:
-            z = (float(s) + 1.0) / math.sqrt(var_s)
-        else:
-            z = 0.0
-    else:
-        z = None
-    if z is not None and z > 1.96:
-        trend = "increasing"
-    elif z is not None and z < -1.96:
-        trend = "decreasing"
-    else:
-        trend = "no_trend"
-    return n, s, _det_round(var_s), _det_round(z), trend
+from tests.helpers import daily_series, py_det_round
+from tests.test_timeseries_fuzz import (
+    _ar2_replay,
+    _kw_replay,
+    _mk_replay,
+    _ph_replay,
+)
 
 
 def test_mann_kendall_trend_with_ties(spark):
     series = [5, 3, 3, 8, 7, 9, 9, 9, 12]
-    out = mann_kendall_from_daily(_daily(spark, series)).collect()[0]
+    out = mann_kendall_from_daily(daily_series(spark, series)).collect()[0]
     n, s, var_s, z, trend = _mk_replay(series)
     assert out["n_days"] == n
     assert out["s_stat"] == s
@@ -73,7 +36,7 @@ def test_mann_kendall_trend_with_ties(spark):
 
 def test_mann_kendall_strict_increase(spark):
     series = list(range(1, 11))
-    out = mann_kendall_from_daily(_daily(spark, series)).collect()[0]
+    out = mann_kendall_from_daily(daily_series(spark, series)).collect()[0]
     n, s, var_s, z, trend = _mk_replay(series)
     assert out["s_stat"] == 45  # all 45 pairs concordant
     assert out["z_score"] == z
@@ -82,43 +45,18 @@ def test_mann_kendall_strict_increase(spark):
 
 def test_mann_kendall_constant_series(spark):
     series = [4, 4, 4, 4, 4]
-    out = mann_kendall_from_daily(_daily(spark, series)).collect()[0]
+    out = mann_kendall_from_daily(daily_series(spark, series)).collect()[0]
     assert out["s_stat"] == 0
     assert out["var_s"] == 0.0
     assert out["z_score"] is None
     assert out["trend"] == "no_trend"
 
 
-def _kw_replay(series):
-    days = [dt.date(2024, 1, 1) + dt.timedelta(days=i) for i in range(len(series))]
-    dows = [(d - EPOCH).days % 7 for d in days]
-    cnt = Counter(series)
-    dr = {}
-    for v in cnt:
-        cb = sum(t for u, t in cnt.items() if u < v)
-        dr[v] = 2 * cb + cnt[v] + 1
-    groups = {}
-    for dow, x in zip(dows, series):
-        ng, s2g = groups.get(dow, (0, 0))
-        groups[dow] = (ng + 1, s2g + dr[x])
-    tsum = sum(
-        math.floor(float(s2g * s2g) / (4.0 * float(ng)) * 1e6 + 0.5)
-        for ng, s2g in groups.values()
-    )
-    n, k = float(len(series)), float(len(groups))
-    ties = sum(t * t * t - t for t in cnt.values())
-    h = 12.0 / (n * (n + 1.0)) * (float(tsum) / 1e6) - 3.0 * (n + 1.0)
-    c = 1.0 - float(ties) / (n * n * n - n)
-    h_corr = h / c if c > 0.0 else None
-    eps2 = (h - k + 1.0) / (n - k) if n > k else None
-    return int(n), int(k), _det_round(h), _det_round(h_corr), _det_round(eps2)
-
-
 def test_kruskal_wallis_two_weeks(spark):
     # 14 consecutive days -> every dow group has exactly 2 members;
     # a strong weekend effect plus one tie pair
     series = [10, 11, 12, 13, 90, 91, 14, 20, 21, 22, 23, 95, 96, 14]
-    out = kruskal_wallis_from_daily(_daily(spark, series)).collect()[0]
+    out = kruskal_wallis_from_daily(daily_series(spark, series)).collect()[0]
     n, k, h, h_corr, eps2 = _kw_replay(series)
     assert out["n_days"] == n
     assert out["n_groups"] == 7
@@ -131,50 +69,18 @@ def test_kruskal_wallis_all_tied(spark):
     # all values identical: every rank is the midrank, H == 0 and the
     # tie correction c == 0 -> h_corrected NULL
     series = [7] * 14
-    out = kruskal_wallis_from_daily(_daily(spark, series)).collect()[0]
+    out = kruskal_wallis_from_daily(daily_series(spark, series)).collect()[0]
     n, k, h, h_corr, eps2 = _kw_replay(series)
     assert out["h_stat"] == h
     assert out["h_corrected"] is None
     assert out["epsilon_sq"] == eps2
 
 
-def _ph_replay(series):
-    days = [dt.date(2024, 1, 1) + dt.timedelta(days=i) for i in range(len(series))]
-    s = t = m = 0
-    mn = None
-    ph = []
-    for x in series:
-        t += 1
-        s += x
-        m += math.floor((float(x) - float(s) / float(t)) * 1e6 + 0.5)
-        mn = m if mn is None else min(mn, m)
-        ph.append(m - mn)
-    n = float(len(series))
-    sx, sxx = float(sum(series)), float(sum(x * x for x in series))
-    mean = sx / n
-    var = max(sxx / n - mean * mean, 0.0)
-    lam = 5.0 * math.sqrt(var)
-    maxph = max(ph)
-    ph_max_day = str(days[ph.index(maxph)])
-    alarm_day = None
-    for d, p in zip(days, ph):
-        if float(p) / 1e6 > lam:
-            alarm_day = str(d)
-            break
-    return (
-        len(series),
-        math.floor(float(maxph) / 1e6 * 1e6 + 0.5) / 1e6,
-        ph_max_day,
-        alarm_day,
-        _det_round(lam),
-    )
-
-
 def test_page_hinkley_level_shift(spark):
     # flat level then an upward shift: PH must climb after the shift
     # and the 5-sigma alarm must fire
     series = [100, 101, 99, 100, 100, 101, 99, 100, 300, 305, 310, 300, 305, 310]
-    out = page_hinkley_from_daily(_daily(spark, series)).collect()[0]
+    out = page_hinkley_from_daily(daily_series(spark, series)).collect()[0]
     n, ph_max, ph_max_day, alarm_day, threshold = _ph_replay(series)
     assert out["n_days"] == n
     assert out["ph_max"] == ph_max
@@ -186,7 +92,7 @@ def test_page_hinkley_level_shift(spark):
 
 def test_page_hinkley_stationary_no_alarm(spark):
     series = [50, 52, 48, 51, 49, 50, 52, 48, 51, 49]
-    out = page_hinkley_from_daily(_daily(spark, series)).collect()[0]
+    out = page_hinkley_from_daily(daily_series(spark, series)).collect()[0]
     n, ph_max, ph_max_day, alarm_day, threshold = _ph_replay(series)
     assert out["ph_max"] == ph_max
     assert out["alarm_day"] is None
@@ -197,41 +103,10 @@ def test_page_hinkley_constant_series(spark):
     # constant series: every increment is 0, PH stays 0, sigma == 0,
     # and 0 > 0 is false -> no alarm
     series = [5, 5, 5, 5, 5]
-    out = page_hinkley_from_daily(_daily(spark, series)).collect()[0]
+    out = page_hinkley_from_daily(daily_series(spark, series)).collect()[0]
     assert out["ph_max"] == 0.0
     assert out["alarm_day"] is None
     assert out["threshold"] == 0.0
-
-
-def _ar2_replay(series):
-    from stream_processing_system_spark.plans.analytics import (  # noqa: F401
-        ar2_yule_walker_from_daily,
-    )
-
-    n = len(series)
-    s = sum(series)
-    nx = [n * x - s for x in series]
-    c0 = sum(v * v for v in nx)
-    c1 = sum(nx[i] * nx[i + 1] for i in range(n - 1))
-    c2 = sum(nx[i] * nx[i + 2] for i in range(n - 2))
-    if float(c0) > 0.0:
-        r1, r2 = float(c1) / float(c0), float(c2) / float(c0)
-    else:
-        r1 = r2 = None
-    phi1 = phi2 = None
-    if r1 is not None and 1.0 - r1 * r1 != 0.0:
-        phi1 = r1 * (1.0 - r2) / (1.0 - r1 * r1)
-        phi2 = (r2 - r1 * r1) / (1.0 - r1 * r1)
-    mean = float(s) / float(n)
-    fc = sig = None
-    if phi1 is not None:
-        fc = (
-            mean
-            + phi1 * (float(series[-1]) - mean)
-            + phi2 * (float(series[-2]) - mean)
-        )
-        sig = 1.0 - phi1 * r1 - phi2 * r2
-    return tuple(_det_round(v) for v in (r1, r2, phi1, phi2, sig, fc))
 
 
 def test_ar2_matches_python_reference(spark):
@@ -240,7 +115,7 @@ def test_ar2_matches_python_reference(spark):
     )
 
     series = [10, 12, 11, 13, 12, 14, 13, 15, 14, 16, 15, 17]
-    out = ar2_yule_walker_from_daily(_daily(spark, series)).collect()[0]
+    out = ar2_yule_walker_from_daily(daily_series(spark, series)).collect()[0]
     r1, r2, phi1, phi2, sig, fc = _ar2_replay(series)
     assert out["n_days"] == len(series)
     assert out["r1"] == r1
@@ -256,7 +131,7 @@ def test_ar2_constant_series_all_null(spark):
         ar2_yule_walker_from_daily,
     )
 
-    out = ar2_yule_walker_from_daily(_daily(spark, [9] * 8)).collect()[0]
+    out = ar2_yule_walker_from_daily(daily_series(spark, [9] * 8)).collect()[0]
     assert out["r1"] is None
     assert out["phi1"] is None
     assert out["forecast_next"] is None
@@ -436,7 +311,7 @@ def test_burrows_delta_hand_case(spark):
             ]
             want[(a, b)] = (
                 len(dzs),
-                _det_round(float(sum(dzs)) / float(len(dzs)) / 1e6),
+                py_det_round(float(sum(dzs)) / float(len(dzs)) / 1e6),
             )
     got = {(r["source_a"], r["source_b"]): r for r in out}
     assert set(got) == set(want)
@@ -465,10 +340,10 @@ def test_dispersion_index_replay(spark):
     s2 = (scc - sc * sc / n) / (n - 1.0)
     disp = s2 / mean
     z = (disp - 1.0) * math.sqrt((n - 1.0) / 2.0)
-    assert out["mean_daily"] == _det_round(mean)
-    assert out["var_daily"] == _det_round(s2)
-    assert out["dispersion"] == _det_round(disp)
-    assert out["z_score"] == _det_round(z)
+    assert out["mean_daily"] == py_det_round(mean)
+    assert out["var_daily"] == py_det_round(s2)
+    assert out["dispersion"] == py_det_round(disp)
+    assert out["z_score"] == py_det_round(z)
     assert out["verdict"] == "overdispersed"
 
 
@@ -480,7 +355,7 @@ def test_welch_ttest_replay(spark):
     # 2024-01-01 is epoch day 19723 -> mod 7 = 4; weekend (dow 2/3)
     # falls on indexes where (19723 + i) % 7 in (2, 3)
     series = [100, 105, 250, 260, 95, 102, 99, 101, 98, 240, 255, 103, 97, 100]
-    daily = _daily(spark, series)
+    daily = daily_series(spark, series)
     out = welch_ttest_from_daily(daily).collect()[0]
     wk, wd = [], []
     for i, v in enumerate(series):
@@ -499,9 +374,9 @@ def test_welch_ttest_replay(spark):
     )
     assert out["n_weekend"] == int(n1)
     assert out["n_weekday"] == int(n2)
-    assert out["mean_weekend"] == _det_round(m1)
-    assert out["t_stat"] == _det_round(t)
-    assert out["welch_df"] == _det_round(df)
+    assert out["mean_weekend"] == py_det_round(m1)
+    assert out["t_stat"] == py_det_round(t)
+    assert out["welch_df"] == py_det_round(df)
 
 
 def test_ipw_ate_sanity(spark, sf_dir):
@@ -782,6 +657,6 @@ def test_ca_trend_replay(spark, sf_dir):
     z = t / math.sqrt(var) if var > 0.0 else None
     assert out["n_orders"] == nn
     assert out["n_urgent"] == rr
-    assert out["urgent_share"] == _det_round(p)
-    assert out["t_stat"] == _det_round(t)
-    assert out["z_score"] == _det_round(z)
+    assert out["urgent_share"] == py_det_round(p)
+    assert out["t_stat"] == py_det_round(t)
+    assert out["z_score"] == py_det_round(z)

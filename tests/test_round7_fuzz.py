@@ -12,19 +12,10 @@ from __future__ import annotations
 import datetime as dt
 import math
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given
 from hypothesis import strategies as st
 
-
-SET = settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-
-
-def _det_round(x, k=6):
-    return math.floor(x * 10**k + 0.5) / 10**k
+from tests.helpers import FUZZ, py_det_round
 
 
 # --- CvM ---------------------------------------------------------
@@ -46,14 +37,14 @@ def _cvm_replay(vals_a, vals_b):
         gap = cuma * nb - cumb * na
         s += (ca + cb) * gap * gap
     n = float(na) + float(nb)
-    return _det_round(float(s) / (float(na) * float(nb) * n * n))
+    return py_det_round(float(s) / (float(na) * float(nb) * n * n))
 
 
 cents = st.lists(st.integers(min_value=-3, max_value=5), max_size=12)
 
 
 @given(a=cents, b=cents)
-@SET
+@FUZZ
 def test_fuzz_cvm(spark, a, b):
     from stream_processing_system_spark.plans.analytics import (
         cvm_from_cells,
@@ -88,7 +79,7 @@ def _gamma_replay(cells):
                     c += n1 * n2
                 elif b2 < b1:
                     d += n1 * n2
-    gamma = _det_round((c - d) / (c + d)) if c + d > 0 else None
+    gamma = py_det_round((c - d) / (c + d)) if c + d > 0 else None
     return c, d, gamma
 
 
@@ -102,7 +93,7 @@ def _gamma_replay(cells):
         max_size=30,
     )
 )
-@SET
+@FUZZ
 def test_fuzz_gk_gamma(spark, data, tmp_path_factory):
     import os
 
@@ -158,8 +149,8 @@ def _pinball_replay(train, ev):
     return (
         f50,
         f90,
-        _det_round(float(l50x2) / 2.0 / ne / 100.0),
-        _det_round(float(l90x10) / 10.0 / ne / 100.0),
+        py_det_round(float(l50x2) / 2.0 / ne / 100.0),
+        py_det_round(float(l90x10) / 10.0 / ne / 100.0),
     )
 
 
@@ -167,7 +158,7 @@ def _pinball_replay(train, ev):
     train=st.lists(st.integers(min_value=-9, max_value=9), max_size=15),
     ev=st.lists(st.integers(min_value=-9, max_value=9), max_size=10),
 )
-@SET
+@FUZZ
 def test_fuzz_pinball(spark, train, ev, tmp_path_factory):
     import os
 
@@ -215,7 +206,7 @@ def test_fuzz_pinball(spark, train, ev, tmp_path_factory):
         max_size=6,
     )
 )
-@SET
+@FUZZ
 def test_fuzz_simpson(spark, docs):
     from stream_processing_system_spark.operators.text_analysis import (
         simpson_diversity,
@@ -239,9 +230,9 @@ def test_fuzz_simpson(spark, docs):
     assert out[0]["vocab"] == len(counts)
     if n > 1:
         lam = float(ss) / (float(n) * (float(n) - 1.0))
-        assert out[0]["simpson"] == _det_round(lam)
+        assert out[0]["simpson"] == py_det_round(lam)
         if lam > 0:
-            assert out[0]["inv_simpson"] == _det_round(1.0 / lam)
+            assert out[0]["inv_simpson"] == py_det_round(1.0 / lam)
         else:
             assert out[0]["inv_simpson"] is None
     else:
@@ -260,7 +251,7 @@ def test_fuzz_simpson(spark, docs):
         max_size=14,
     )
 )
-@SET
+@FUZZ
 def test_fuzz_neighbor_jaccard(spark, edges):
     from stream_processing_system_spark.operators.graph import (
         neighbor_jaccard,
@@ -310,7 +301,7 @@ def test_fuzz_neighbor_jaccard(spark, edges):
         st.integers(min_value=1, max_value=500), min_size=1, max_size=12
     )
 )
-@SET
+@FUZZ
 def test_fuzz_theil(spark, revs, tmp_path_factory):
     import os
 
@@ -341,7 +332,7 @@ def test_fuzz_theil(spark, revs, tmp_path_factory):
     nn = len(units)
     assert out["n_suppliers"] == nn
     assert out["total_revenue"] == float(rr) / 1e4
-    assert out["top_share"] == _det_round(float(max(units)) / float(rr))
+    assert out["top_share"] == py_det_round(float(max(units)) / float(rr))
     t = sum(
         math.floor(
             (float(u) / float(rr))
@@ -352,4 +343,4 @@ def test_fuzz_theil(spark, revs, tmp_path_factory):
         for u in units
     )
     # grid absorbs libm ulp except at floor boundaries: compare to 2e-6
-    assert abs(out["theil"] - _det_round(float(t) / 1e12)) <= 2e-6
+    assert abs(out["theil"] - py_det_round(float(t) / 1e12)) <= 2e-6

@@ -7,17 +7,7 @@ import os
 
 import pytest
 
-
-def _write_events(spark, tmp_path, rows, name):
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long,"
-        " event_type string, value double, props string",
-    )
-    sf = str(tmp_path / name)
-    os.makedirs(sf, exist_ok=True)
-    df.write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
-    return sf
+from tests.helpers import write_events
 
 
 def test_partition_checksums_null_user_parity(spark, tmp_path):
@@ -37,7 +27,7 @@ def test_partition_checksums_null_user_parity(spark, tmp_path):
         (2, base, None, "click", None, "{}"),
         (3, base, 9, "click", 2.5, "{}"),
     ]
-    sf = _write_events(spark, tmp_path, rows, "nullpar")
+    sf = write_events(spark, rows, str(tmp_path / "nullpar"))
     got = events_partition_checksums(spark, sf).collect()
     con = duckdb.connect()
     con.execute(
@@ -51,7 +41,7 @@ def test_partition_checksums_null_user_parity(spark, tmp_path):
         tuple(w) for w in want
     ]
     # and the null row genuinely participates: dropping it moves the sum
-    sf2 = _write_events(spark, tmp_path, rows[:1] + rows[2:], "nonull")
+    sf2 = write_events(spark, rows[:1] + rows[2:], str(tmp_path / "nonull"))
     got2 = events_partition_checksums(spark, sf2).collect()
     assert got2[0]["checksum"] != got[0]["checksum"]
 
@@ -73,7 +63,7 @@ def test_watermark_lateness_chunk_boundary(spark, tmp_path):
         (5000, base + datetime.timedelta(hours=11), 1, "click", 1.0, "{}"),
         (5001, base + datetime.timedelta(hours=10), 1, "click", 1.0, "{}"),
     ]
-    sf = _write_events(spark, tmp_path, rows, "chunked")
+    sf = write_events(spark, rows, str(tmp_path / "chunked"))
     out = events_watermark_lateness(spark, sf).collect()[0]
     assert out["n_events"] == 3
     # 5000 is 1h late (not >1h), 5001 is 2h late vs the chunk-0 max
@@ -137,12 +127,12 @@ def test_cvm_drift_hand_case(spark, tmp_path):
     b = datetime.datetime(2024, 1, 20)
     same = [(i, a if i < 20 else b, 1, "click", float(i % 4), "{}")
             for i in range(40)]
-    sf = _write_events(spark, tmp_path, same, "cvm_same")
+    sf = write_events(spark, same, str(tmp_path / "cvm_same"))
     t_same = events_cvm_drift(spark, sf).collect()[0]["cvm_t"]
     shifted = [(i, a, 1, "click", 1.0, "{}") for i in range(20)] + [
         (100 + i, b, 1, "click", 9.0, "{}") for i in range(20)
     ]
-    sf2 = _write_events(spark, tmp_path, shifted, "cvm_shift")
+    sf2 = write_events(spark, shifted, str(tmp_path / "cvm_shift"))
     t_shift = events_cvm_drift(spark, sf2).collect()[0]["cvm_t"]
     assert t_same < 0.05
     assert t_shift > 0.2  # disjoint supports: near the CvM maximum
@@ -194,7 +184,7 @@ def test_pinball_eval_hand_case(spark, tmp_path):
     rows = [(i, a, 1, "click", float(i + 1), "{}") for i in range(10)]
     rows += [(100 + i, b, 1, "click", float(v), "{}")
              for i, v in enumerate([5, 7, 11])]
-    sf = _write_events(spark, tmp_path, rows, "pb")
+    sf = write_events(spark, rows, str(tmp_path / "pb"))
     out = events_pinball_eval(spark, sf).collect()[0]
     assert out["p50_forecast"] == 5.0
     assert out["p90_forecast"] == 9.0

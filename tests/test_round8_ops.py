@@ -11,17 +11,7 @@ import os
 
 import pytest
 
-
-def _write_events(spark, tmp_path, rows, name):
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long,"
-        " event_type string, value double, props string",
-    )
-    sf = str(tmp_path / name)
-    os.makedirs(sf, exist_ok=True)
-    df.write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
-    return sf
+from tests.helpers import write_events
 
 
 _DRIFT_QUERIES = [
@@ -57,7 +47,7 @@ def test_half_split_null_ts_parity(spark, tmp_path, qname):
         (6, late, 6, "view", 90.0, "{}"),
         (7, None, 7, "view", 90.0, "{}"),
     ]
-    sf = _write_events(spark, tmp_path, rows, f"nullts_{qname}")
+    sf = write_events(spark, rows, str(tmp_path / f"nullts_{qname}"))
     got = [tuple(r) for r in entry.queries()[qname](spark, sf).collect()]
     con = duckdb.connect()
     con.execute(
@@ -86,7 +76,7 @@ def test_watermark_chunk_key_is_integral(spark, tmp_path):
         (4095, base + datetime.timedelta(hours=12), 1, "click", 1.0, "{}"),
         (4096, base + datetime.timedelta(hours=9), 1, "click", 1.0, "{}"),
     ]
-    sf = _write_events(spark, tmp_path, rows, "chunkdiv")
+    sf = write_events(spark, rows, str(tmp_path / "chunkdiv"))
     out = events_watermark_lateness(spark, sf).collect()[0]
     assert out["n_events"] == 2
     assert out["n_late_1h"] == 1

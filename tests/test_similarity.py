@@ -3,12 +3,17 @@ variants (LSH / IVF) recall against brute force on real testdata."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
+from hypothesis import given
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from stream_processing_system_spark.operators import similarity
 from stream_processing_system_spark.sources.tables import load_table
+from tests.helpers import FUZZ, py_det_round
 
 
 def _vectors_df(spark):
@@ -173,7 +178,8 @@ def test_ann_recall_floor_clustered(spark):
     """recall@k floors for the ANN family on clustered data (the
     realistic corpus shape — near-duplicate/topic structure). The
     uniform-random embeddings table is the documented worst case
-    (cosine ~N(0, 1/8): nothing is 'near'); see PERFORMANCE.md."""
+    (cosine ~N(0, 1/8): nothing is 'near'); its measured recall is in
+    PERFORMANCE.md's git history (`git show e9ec005:PERFORMANCE.md`)."""
     df = _clustered_df(spark)
     q = df.where(F.col("vec_id") == 200).select("embedding")  # cluster 5
     brute = {r["vec_id"] for r in similarity.cosine_topk(df, q, k=10).collect()}
@@ -393,3 +399,60 @@ def test_ivfpq_recall_vs_brute_force(spark, sf_dir):
     ann = {r["vec_id"] for r in similarity.ivfpq_topk(embs, q, k=10).collect()}
     assert 0 in ann
     assert len(brute & ann) >= 5, f"ivfpq recall too low: {brute & ann}"
+
+
+# --- TwoNN intrinsic dimension (honest replay on literal vectors) -
+
+
+vec_sets = st.lists(
+    st.lists(
+        st.integers(min_value=-3, max_value=3), min_size=3, max_size=3
+    ),
+    min_size=3,
+    max_size=10,
+)
+
+
+@pytest.mark.slow
+@given(vecs=vec_sets)
+@FUZZ
+def test_fuzz_intrinsic_dim(spark, vecs):
+    from stream_processing_system_spark.operators.similarity import (
+        twonn_intrinsic_dim,
+    )
+
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    out = twonn_intrinsic_dim(df, sample_mod=1, max_probes=200).collect()
+    # honest replay: exact integer grid (x*1e6 is exact for small
+    # ints), brute-force two smallest positive squared distances
+    pts = []
+    for i, v in enumerate(vecs):
+        q = [int(round(x * 1e6)) for x in v]
+        pts.append((i, q))
+    lrs = []
+    for pid, pq in pts:
+        d2s = sorted(
+            (
+                sum((a - b) ** 2 for a, b in zip(pq, q)),
+                vid,
+            )
+            for vid, q in pts
+            if vid != pid
+        )
+        d2s = [(d, v) for d, v in d2s if d > 0]
+        if len(d2s) < 2:
+            continue
+        d1, dd2 = d2s[0][0], d2s[1][0]
+        lrs.append(
+            math.floor(math.log(float(dd2) / float(d1)) * 1e9 + 0.5)
+        )
+    assert out[0]["n_probes"] == len(lrs)
+    sl = sum(lrs)
+    if sl > 0:
+        want = py_det_round(2.0 * float(len(lrs)) / (float(sl) / 1e9))
+        assert out[0]["intrinsic_dim"] == want
+    else:
+        assert out[0]["intrinsic_dim"] is None

@@ -1,59 +1,33 @@
-"""Differential fuzz for the round-8 additions: Spark plans vs
-pure-Python replays on randomized tie-heavy inputs — a third
-implementation besides the DuckDB oracle, run BEFORE these queries
-reach a driver window. Cliff's delta and Jonckheere–Terpstra replay
-as HONEST O(n²) pairwise loops (independent of the plans' cumulative
-/ dense-grid devices); Anderson–Darling and the variance ratio
-replay the exact integer devices term-for-term (their cross-cell
-sums are integer-grid exact, so equality is bitwise)."""
+"""Differential fuzz for the two-sample, k-sample and rank tests and
+the distribution fits: Spark plans vs pure-Python replays on
+randomized tie-heavy inputs, a third implementation besides the
+DuckDB oracle. Cliff's delta, Jonckheere–Terpstra and Somers' D
+replay as honest O(n²) pairwise loops (independent of the plans'
+cumulative / dense-grid devices); Anderson–Darling, the variance
+ratio and Theil's U replay the exact integer devices term-for-term
+(their cross-cell sums are integer-grid exact, so equality is
+bitwise)."""
 
 from __future__ import annotations
-
-import pytest
 
 import datetime as dt
 import itertools
 import math
 import os
-import shutil
-import tempfile
 
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import given
 from hypothesis import strategies as st
 
+from stream_processing_system_spark.sources.scratch import scratch
+from tests.helpers import FUZZ, py_det_round, write_events
 
-#: slow tier (round 10, VERDICT r9 item 7): independent replay /
-#: property / soak coverage, excluded from the default run so the
-#: driver's verify window fits; run with `pytest -m slow`.
+#: slow tier: independent replay coverage, excluded from the default
+#: run; run with `pytest -m slow`.
 pytestmark = pytest.mark.slow
-
-SET = settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
 
 _FIRST = dt.datetime(2024, 1, 10, 12)
 _SECOND = dt.datetime(2024, 1, 20, 12)
-_seq = itertools.count()
-
-
-def _det_round(x, k=6):
-    return math.floor(x * 10**k + 0.5) / 10**k
-
-
-def _write_events(spark, rows):
-    """rows: (event_id, ts, value) tuples on one event_type."""
-    df = spark.createDataFrame(
-        [(i, ts, 1, "t", v, "{}") for i, ts, v in rows],
-        "event_id long, ts timestamp, user_id long,"
-        " event_type string, value double, props string",
-    )
-    sf = os.path.join(
-        tempfile.gettempdir(), f"r8fuzz_{os.getpid()}_{next(_seq)}"
-    )
-    df.write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
-    return sf
 
 
 # --- Anderson–Darling --------------------------------------------
@@ -80,28 +54,29 @@ def _ad_replay(cents_a, cents_b):
                * (float(na) + float(nb) - float(ct)))
         )
         s += math.floor(term * 1e9 + 0.5)
-    return _det_round(float(s) / 1e9)
+    return py_det_round(float(s) / 1e9)
 
 
 cents = st.lists(st.integers(min_value=-3, max_value=5), max_size=12)
 
 
 @given(a=cents, b=cents)
-@SET
+@FUZZ
 def test_fuzz_anderson_darling(spark, a, b):
     from stream_processing_system_spark.plans.analytics import (
         events_anderson_darling,
     )
 
     rows = [
-        (i, _FIRST, c / 100.0) for i, c in enumerate(a)
+        (i, _FIRST, 1, "t", c / 100.0, "{}") for i, c in enumerate(a)
     ] + [
-        (1000 + i, _SECOND, c / 100.0) for i, c in enumerate(b)
+        (1000 + i, _SECOND, 1, "t", c / 100.0, "{}")
+        for i, c in enumerate(b)
     ]
     if not rows:
         return
-    sf = _write_events(spark, rows)
-    try:
+    with scratch("fuzz") as sf:
+        write_events(spark, rows, sf)
         out = events_anderson_darling(spark, sf).collect()
         want = _ad_replay(a, b)
         if want is None:
@@ -112,41 +87,38 @@ def test_fuzz_anderson_darling(spark, a, b):
                 len(a),
                 len(b),
             )
-    finally:
-        shutil.rmtree(sf, ignore_errors=True)
 
 
 # --- Cliff's delta (honest O(n²) pairwise) -----------------------
 
 
 @given(a=cents, b=cents)
-@SET
+@FUZZ
 def test_fuzz_cliffs_delta(spark, a, b):
     from stream_processing_system_spark.plans.analytics import (
         events_cliffs_delta,
     )
 
     rows = [
-        (i, _FIRST, c / 100.0) for i, c in enumerate(a)
+        (i, _FIRST, 1, "t", c / 100.0, "{}") for i, c in enumerate(a)
     ] + [
-        (1000 + i, _SECOND, c / 100.0) for i, c in enumerate(b)
+        (1000 + i, _SECOND, 1, "t", c / 100.0, "{}")
+        for i, c in enumerate(b)
     ]
     if not rows:
         return
-    sf = _write_events(spark, rows)
-    try:
+    with scratch("fuzz") as sf:
+        write_events(spark, rows, sf)
         out = events_cliffs_delta(spark, sf).collect()
         if not a or not b:
             assert out == []
             return
         gt = sum(1 for x in a for y in b if x > y)
         lt = sum(1 for x in a for y in b if x < y)
-        want = _det_round(
+        want = py_det_round(
             float(gt - lt) / (float(len(a)) * float(len(b)))
         )
         assert out[0]["cliffs_delta"] == want
-    finally:
-        shutil.rmtree(sf, ignore_errors=True)
 
 
 # --- Variance ratio (exact integer-device replay) ----------------
@@ -158,7 +130,7 @@ daily_counts = st.lists(
 
 
 @given(counts=daily_counts)
-@SET
+@FUZZ
 def test_fuzz_variance_ratio(spark, counts):
     from stream_processing_system_spark.plans.analytics import (
         events_variance_ratio,
@@ -170,10 +142,10 @@ def test_fuzz_variance_ratio(spark, counts):
     for d, c in enumerate(counts):
         ts = dt.datetime(2024, 1, 2) + dt.timedelta(days=d)
         for _ in range(c):
-            rows.append((eid, ts, 1.0))
+            rows.append((eid, ts, 1, "t", 1.0, "{}"))
             eid += 1
-    sf = _write_events(spark, rows)
-    try:
+    with scratch("fuzz") as sf:
+        write_events(spark, rows, sf)
         out = events_variance_ratio(spark, sf).collect()
         t_days = len(counts)
         s = sum(counts)
@@ -189,15 +161,13 @@ def test_fuzz_variance_ratio(spark, counts):
         else:
             assert out[0]["n_k_windows"] == m
             if m > 1 and ss1 > 0:
-                want = _det_round(
+                want = py_det_round(
                     float(ssk) * (float(t_days) - 1.0)
                     / (float(k) * (float(m) - 1.0) * float(ss1))
                 )
                 assert out[0]["vr_k5"] == want
             else:
                 assert out[0]["vr_k5"] is None
-    finally:
-        shutil.rmtree(sf, ignore_errors=True)
 
 
 # --- Jonckheere–Terpstra (honest O(n²) pairwise) -----------------
@@ -214,18 +184,18 @@ obs = st.lists(
 
 
 @given(data=obs)
-@SET
+@FUZZ
 def test_fuzz_jonckheere(spark, data):
     from stream_processing_system_spark.plans.analytics import (
         events_daypart_jonckheere,
     )
 
     rows = [
-        (i, dt.datetime(2024, 1, 10, g * 6, 30), v / 100.0)
+        (i, dt.datetime(2024, 1, 10, g * 6, 30), 1, "t", v / 100.0, "{}")
         for i, (g, v) in enumerate(data)
     ]
-    sf = _write_events(spark, rows)
-    try:
+    with scratch("fuzz") as sf:
+        write_events(spark, rows, sf)
         out = events_daypart_jonckheere(spark, sf).collect()
         jt2 = 0
         for (g1, v1), (g2, v2) in itertools.permutations(data, 2):
@@ -243,15 +213,13 @@ def test_fuzz_jonckheere(spark, data):
         assert out[0]["n_events"] == n
         assert out[0]["jt2"] == jt2
         if var72 > 0:
-            want = _det_round(
+            want = py_det_round(
                 float(2 * jt2 - mu4)
                 / (4.0 * math.sqrt(float(var72) / 72.0))
             )
             assert out[0]["jt_z"] == want
         else:
             assert out[0]["jt_z"] is None
-    finally:
-        shutil.rmtree(sf, ignore_errors=True)
 
 
 # --- Brown–Forsythe (honest replay: sorted-list median) ----------
@@ -268,18 +236,18 @@ bf_obs = st.lists(
 
 
 @given(data=bf_obs)
-@SET
+@FUZZ
 def test_fuzz_brown_forsythe(spark, data):
     from stream_processing_system_spark.plans.analytics import (
         events_brown_forsythe,
     )
 
     rows = [
-        (i, dt.datetime(2024, 1, 10, g * 6, 30), v / 100.0)
+        (i, dt.datetime(2024, 1, 10, g * 6, 30), 1, "t", v / 100.0, "{}")
         for i, (g, v) in enumerate(data)
     ]
-    sf = _write_events(spark, rows)
-    try:
+    with scratch("fuzz") as sf:
+        write_events(spark, rows, sf)
         out = events_brown_forsythe(spark, sf).collect()
         groups = {}
         for g, v in data:
@@ -311,15 +279,13 @@ def test_fuzz_brown_forsythe(spark, data):
         if not ssw > 0:
             assert out == []
             return
-        want = _det_round(
+        want = py_det_round(
             (ssb / (float(k) - 1.0)) / (ssw / (float(n) - float(k)))
         )
         assert len(out) == 1
         assert out[0]["n_events"] == n
         assert out[0]["n_groups"] == k
         assert out[0]["bf_f"] == want
-    finally:
-        shutil.rmtree(sf, ignore_errors=True)
 
 
 # --- Friedman (honest replay: position-sum doubled midranks) -----
@@ -335,7 +301,7 @@ blocks = st.lists(
 
 
 @given(data=blocks)
-@SET
+@FUZZ
 def test_fuzz_friedman(spark, data):
     """data: per-day counts for exactly 3 types. Replay computes
     doubled midranks from sorted POSITIONS (first+last index + 2),
@@ -357,21 +323,13 @@ def test_fuzz_friedman(spark, data):
         ts = dt.datetime(2024, 1, 2) + dt.timedelta(days=d)
         for t, c in zip(types, counts):
             for _ in range(c):
-                rows.append((eid, ts, 1.0, t))
+                rows.append((eid, ts, 1, t, 1.0, "{}"))
                 eid += 1
     # at least one event per type overall so all 3 types register
     if not all(any(cs[j] for cs in data) for j in range(3)):
         return
-    df = spark.createDataFrame(
-        [(i, ts, 1, t, v, "{}") for i, ts, v, t in rows],
-        "event_id long, ts timestamp, user_id long,"
-        " event_type string, value double, props string",
-    )
-    sf = os.path.join(
-        tempfile.gettempdir(), f"r8fuzz_{os.getpid()}_{next(_seq)}"
-    )
-    df.write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
-    try:
+    with scratch("fuzz") as sf:
+        write_events(spark, rows, sf)
         out = events_friedman_type_ranks(spark, sf).collect()
         n = len(data)
         k = 3
@@ -392,14 +350,12 @@ def test_fuzz_friedman(spark, data):
         assert out[0]["n_days"] == n
         assert out[0]["n_types"] == k
         if den4 > 0:
-            want = _det_round(
+            want = py_det_round(
                 (float(k) - 1.0) * float(num4) / float(den4)
             )
             assert out[0]["friedman_chi2"] == want
         else:
             assert out[0]["friedman_chi2"] is None
-    finally:
-        shutil.rmtree(sf, ignore_errors=True)
 
 
 # --- Somers' D (honest O(n²) pairwise) ---------------------------
@@ -416,7 +372,7 @@ orders_obs = st.lists(
 
 
 @given(data=orders_obs)
-@SET
+@FUZZ
 def test_fuzz_somers_d(spark, data):
     from stream_processing_system_spark.plans.analytics import (
         orders_somers_d,
@@ -429,11 +385,8 @@ def test_fuzz_somers_d(spark, data):
         ],
         "o_orderpriority string, o_totalprice double",
     )
-    sf = os.path.join(
-        tempfile.gettempdir(), f"r8fuzz_{os.getpid()}_{next(_seq)}"
-    )
-    df.write.mode("overwrite").parquet(os.path.join(sf, "orders.parquet"))
-    try:
+    with scratch("fuzz") as sf:
+        df.write.mode("overwrite").parquet(os.path.join(sf, "orders.parquet"))
         out = orders_somers_d(spark, sf).collect()
         c = d = ty = 0
         for (p1, b1), (p2, b2) in itertools.permutations(data, 2):
@@ -448,109 +401,10 @@ def test_fuzz_somers_d(spark, data):
         assert (out[0]["concordant"], out[0]["discordant"]) == (c, d)
         assert out[0]["ties_band"] == ty
         if c + d + ty > 0:
-            want = _det_round(float(c - d) / float(c + d + ty))
+            want = py_det_round(float(c - d) / float(c + d + ty))
             assert out[0]["somers_d"] == want
         else:
             assert out[0]["somers_d"] is None
-    finally:
-        shutil.rmtree(sf, ignore_errors=True)
-
-
-# --- rich club (honest replay on a literal edge list) ------------
-
-
-edge_lists = st.lists(
-    st.tuples(
-        st.integers(min_value=0, max_value=7),
-        st.integers(min_value=0, max_value=7),
-    ),
-    max_size=16,
-)
-
-
-@given(raw=edge_lists)
-@SET
-def test_fuzz_rich_club(spark, raw):
-    from stream_processing_system_spark.operators.graph import rich_club
-
-    edges = sorted({(min(a, b), max(a, b)) for a, b in raw if a != b})
-    if not edges:
-        return
-    df = spark.createDataFrame(edges, "src long, dst long")
-    out = {r["k"]: r for r in rich_club(df).collect()}
-    deg = {}
-    for a, b in edges:
-        deg[a] = deg.get(a, 0) + 1
-        deg[b] = deg.get(b, 0) + 1
-    for k in (1, 2, 4, 8):
-        n_nodes = sum(1 for v in deg.values() if v > k)
-        n_edges = sum(
-            1 for a, b in edges if deg[a] > k and deg[b] > k
-        )
-        row = out[k]
-        assert (row["n_nodes"], row["n_edges"]) == (n_nodes, n_edges)
-        if n_nodes > 1:
-            assert row["phi"] == 2.0 * float(n_edges) / (
-                float(n_nodes) * (float(n_nodes) - 1.0)
-            )
-        else:
-            assert row["phi"] is None
-
-
-# --- Flesch reading ease (honest re-count with Python re) --------
-
-
-texts = st.lists(
-    st.text(
-        alphabet="ab e.!? xyzoui",
-        min_size=1,
-        max_size=60,
-    ),
-    min_size=1,
-    max_size=6,
-)
-
-
-@given(docs=texts)
-@SET
-def test_fuzz_flesch(spark, docs):
-    import re
-
-    from stream_processing_system_spark.operators.text_analysis import (
-        flesch_reading_ease,
-    )
-
-    df = spark.createDataFrame(
-        [("s", t) for t in docs], "source string, text string"
-    )
-    out = flesch_reading_ease(df).collect()
-    micros = []
-    for t in docs:
-        words = [w for w in t.split(" ") if w != ""]
-        if not words:
-            continue
-        snt = max(1, len(re.findall(r"[.!?]+", t)))
-        syl = sum(
-            max(1, len(re.findall("[aeiouy]+", w.lower())))
-            for w in words
-        )
-        score = (
-            206.835
-            - 1.015 * (float(len(words)) / float(snt))
-            - 84.6 * (float(syl) / float(len(words)))
-        )
-        micros.append(math.floor(score * 1e6 + 0.5))
-    if not micros:
-        assert out == []
-        return
-    n = len(micros)
-    assert out[0]["n_docs"] == n
-    assert out[0]["avg_flesch"] == _det_round(
-        float(sum(micros)) / (float(n) * 1e6)
-    )
-    assert out[0]["plain_english_share"] == _det_round(
-        float(sum(1 for m in micros if m >= 60_000_000)) / float(n)
-    )
 
 
 # --- Weibull gap fit (device replay on constructed gaps) ---------
@@ -562,7 +416,7 @@ gap_lists = st.lists(
 
 
 @given(gaps=gap_lists)
-@SET
+@FUZZ
 def test_fuzz_gap_weibull(spark, gaps):
     """One user, events spaced exactly `gaps` minutes apart; replay
     mirrors the midrank/Bernard/OLS device."""
@@ -572,12 +426,12 @@ def test_fuzz_gap_weibull(spark, gaps):
 
     rows = []
     t = dt.datetime(2024, 1, 2)
-    rows.append((0, t, 1.0))
+    rows.append((0, t, 1, "t", 1.0, "{}"))
     for i, g in enumerate(gaps):
         t = t + dt.timedelta(minutes=g)
-        rows.append((i + 1, t, 1.0))
-    sf = _write_events(spark, rows)
-    try:
+        rows.append((i + 1, t, 1, "t", 1.0, "{}"))
+    with scratch("fuzz") as sf:
+        write_events(spark, rows, sf)
         out = user_gap_weibull(spark, sf).collect()
         from collections import Counter
 
@@ -607,31 +461,13 @@ def test_fuzz_gap_weibull(spark, gaps):
             b_hat = (float(sy) - k_hat * float(sx)) / (
                 float(w) * 1e9
             )
-            assert out[0]["shape"] == _det_round(k_hat)
-            assert out[0]["scale_minutes"] == _det_round(
+            assert out[0]["shape"] == py_det_round(k_hat)
+            assert out[0]["scale_minutes"] == py_det_round(
                 math.exp(-b_hat / k_hat)
             )
         else:
             assert out[0]["shape"] is None
             assert out[0]["scale_minutes"] is None
-    finally:
-        shutil.rmtree(sf, ignore_errors=True)
-
-
-def test_trade_balance_conserves(spark, sf_dir):
-    """Cross-nation trade is zero-sum: every flow is one nation's
-    export and another's import, so Σ net_balance must be exactly 0
-    on the ten-thousandths integer grid."""
-    from stream_processing_system_spark.plans.analytics import (
-        nation_trade_balance,
-    )
-
-    rows = nation_trade_balance(spark, sf_dir).collect()
-    assert rows, "non-empty at every SF"
-    assert (
-        math.fsum(r["net_balance"] for r in rows) == 0.0
-        or abs(sum(r["net_balance"] for r in rows)) < 1e-6
-    )
 
 
 # --- Gamma MoM fit (honest replay) -------------------------------
@@ -643,7 +479,7 @@ lat_lists = st.lists(
 
 
 @given(lats=lat_lists)
-@SET
+@FUZZ
 def test_fuzz_fulfillment_gamma(spark, lats):
     """One priority class; orders 1:1 with lineitems at the given
     order-to-ship day latencies."""
@@ -665,163 +501,301 @@ def test_fuzz_fulfillment_gamma(spark, lats):
         ],
         "l_orderkey long, l_shipdate date",
     )
-    sf = os.path.join(
-        tempfile.gettempdir(), f"r8fuzz_{os.getpid()}_{next(_seq)}"
-    )
-    odf.write.mode("overwrite").parquet(os.path.join(sf, "orders.parquet"))
-    ldf.write.mode("overwrite").parquet(
-        os.path.join(sf, "lineitem.parquet")
-    )
-    try:
+    with scratch("fuzz") as sf:
+        odf.write.mode("overwrite").parquet(os.path.join(sf, "orders.parquet"))
+        ldf.write.mode("overwrite").parquet(
+            os.path.join(sf, "lineitem.parquet")
+        )
         out = orders_fulfillment_gamma(spark, sf).collect()
         n = len(lats)
         s = sum(lats)
         q = sum(d * d for d in lats)
         var_num = n * q - s * s
         assert out[0]["n_items"] == n
-        assert out[0]["mean_days"] == _det_round(float(s) / float(n))
+        assert out[0]["mean_days"] == py_det_round(float(s) / float(n))
         if n > 1 and var_num > 0:
             mean = float(s) / float(n)
             var = float(var_num) / (float(n) * (float(n) - 1.0))
-            assert out[0]["shape"] == _det_round(mean * mean / var)
-            assert out[0]["scale_days"] == _det_round(var / mean)
+            assert out[0]["shape"] == py_det_round(mean * mean / var)
+            assert out[0]["scale_days"] == py_det_round(var / mean)
         else:
             assert out[0]["shape"] is None
             assert out[0]["scale_days"] is None
-    finally:
-        shutil.rmtree(sf, ignore_errors=True)
 
 
-# --- Degree power-law alpha (honest replay) ----------------------
+# --- Mood's median test (honest replay over raw observations) ----
 
 
-@given(raw=edge_lists)
-@SET
-def test_fuzz_degree_powerlaw_device(spark, raw):
-    """The MLE device over a literal degree table: replay on the
-    raw degree multiset."""
-    from collections import Counter
+def _mood_replay(a, b):
+    na, nb = len(a), len(b)
+    if na == 0 or nb == 0:
+        return None
+    pooled = sorted(a + b)
+    n = na + nb
+    cum = 0
+    med = None
+    for v in sorted(set(pooled)):
+        cum += pooled.count(v)
+        if 2 * cum >= n:
+            med = v
+            break
+    above_a = sum(1 for x in a if x > med)
+    above_b = sum(1 for x in b if x > med)
+    c_, d_ = na - above_a, nb - above_b
+    if above_a + above_b == 0 or c_ + d_ == 0:
+        return None
+    diff = above_a * d_ - above_b * c_
+    chi2 = float(n * diff * diff) / float(
+        na * nb * (above_a + above_b) * (c_ + d_)
+    )
+    return med, above_a + above_b, py_det_round(chi2)
 
-    from pyspark.sql import functions as F
 
-    from stream_processing_system_spark.plans.analytics import det_round  # noqa: F401
+@given(a=cents, b=cents)
+@FUZZ
+def test_fuzz_mood_median(spark, a, b):
+    from stream_processing_system_spark.plans.analytics import (
+        events_mood_median,
+    )
 
-    edges = sorted({(min(a, b), max(a, b)) for a, b in raw if a != b})
-    if not edges:
+    rows = [
+        (i, _FIRST, 1, "t", c / 100.0, "{}") for i, c in enumerate(a)
+    ] + [
+        (1000 + i, _SECOND, 1, "t", c / 100.0, "{}")
+        for i, c in enumerate(b)
+    ]
+    if not rows:
         return
-    deg = Counter()
-    for a, b in edges:
-        deg[a] += 1
-        deg[b] += 1
-    tail = [d for d in deg.values() if d >= 2]
-    # replay the plan's tail expression directly on a degree frame
-    d38 = "decimal(38,0)"
-    cells_df = spark.createDataFrame(
-        list(Counter(tail).items()) or [(0, 0)], "deg long, c long"
-    ).where(F.col("deg") >= 2)
-    lng = F.floor(
-        F.log(F.col("deg").cast("double") / F.lit(2.0)) * F.lit(1e9)
-        + F.lit(0.5)
-    ).cast("long")
-    agg = cells_df.select("c", lng.alias("l")).agg(
-        F.sum("c").alias("n_tail"),
-        F.sum(F.col("c").cast(d38) * F.col("l")).alias("sl"),
-    )
-    row = agg.collect()[0]
-    n_tail = row["n_tail"] or 0
-    assert n_tail == len(tail)
-    sl = sum(
-        math.floor(math.log(d / 2.0) * 1e9 + 0.5) for d in tail
-    )
-    if n_tail:
-        assert int(row["sl"]) == sl
+    with scratch("fuzz") as sf:
+        write_events(spark, rows, sf)
+        out = events_mood_median(spark, sf).collect()
+        want = _mood_replay(a, b)
+        if want is None:
+            assert out == []
+        else:
+            med, n_above, chi2 = want
+            assert out[0]["median_cents"] == med
+            assert out[0]["n_above"] == n_above
+            assert out[0]["mood_chi2"] == chi2
+            assert (out[0]["n_first"], out[0]["n_second"]) == (
+                len(a),
+                len(b),
+            )
 
 
-# --- TwoNN intrinsic dimension (honest replay on literal vectors) -
+# --- Page's L trend test (honest rank replay per day block) ------
 
 
-vec_sets = st.lists(
-    st.lists(
-        st.integers(min_value=-3, max_value=3), min_size=3, max_size=3
+def _page_replay(obs):
+    """obs: list of (day 0-3, part 0-3). Returns (n_days, L, z)."""
+    days = sorted({d for d, _ in obs})
+    if not days:
+        return None
+    l2 = 0
+    for d in days:
+        cells = [
+            sum(1 for dd, g in obs if dd == d and g == j)
+            for j in range(4)
+        ]
+        for j, c in enumerate(cells):
+            smaller = sum(1 for c2 in cells if c2 < c)
+            tied = sum(1 for c2 in cells if c2 == c)
+            r2 = 2 * smaller + tied + 1
+            l2 += (j + 1) * r2
+    n = len(days)
+    page_l = float(l2) / 2.0
+    z = (page_l - 25.0 * float(n)) / math.sqrt(25.0 * float(n) / 3.0)
+    return n, page_l, py_det_round(z)
+
+
+daypart_obs = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=3),
+        st.integers(min_value=0, max_value=3),
     ),
-    min_size=3,
-    max_size=10,
+    min_size=1,
+    max_size=30,
 )
 
 
-@given(vecs=vec_sets)
-@SET
-def test_fuzz_intrinsic_dim(spark, vecs):
-    from stream_processing_system_spark.operators.similarity import (
-        twonn_intrinsic_dim,
+@given(obs=daypart_obs)
+@FUZZ
+def test_fuzz_page_trend(spark, obs):
+    from stream_processing_system_spark.plans.analytics import (
+        events_page_trend,
     )
 
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<double>",
-    )
-    out = twonn_intrinsic_dim(df, sample_mod=1, max_probes=200).collect()
-    # honest replay: exact integer grid (x*1e6 is exact for small
-    # ints), brute-force two smallest positive squared distances
-    pts = []
-    for i, v in enumerate(vecs):
-        q = [int(round(x * 1e6)) for x in v]
-        pts.append((i, q))
-    lrs = []
-    for pid, pq in pts:
-        d2s = sorted(
-            (
-                sum((a - b) ** 2 for a, b in zip(pq, q)),
-                vid,
+    rows = [
+        (i, dt.datetime(2024, 1, 10 + d, 6 * g, 30), 1, "t", 1.0, "{}")
+        for i, (d, g) in enumerate(obs)
+    ]
+    with scratch("fuzz") as sf:
+        write_events(spark, rows, sf)
+        out = events_page_trend(spark, sf).collect()
+        n, page_l, z = _page_replay(obs)
+        assert out[0]["n_days"] == n
+        assert out[0]["page_l"] == page_l
+        assert out[0]["page_z"] == z
+
+
+# --- Theil's U (grid replay term-for-term) -----------------------
+
+
+def _theil_replay(obs):
+    """obs: list of (type, part). Returns (n, mi, u_rows, u_cols)."""
+    if not obs:
+        return None
+    cells = {}
+    for t, g in obs:
+        cells[(t, g)] = cells.get((t, g), 0) + 1
+    ct = {}
+    cg = {}
+    for (t, g), c in cells.items():
+        ct[t] = ct.get(t, 0) + c
+        cg[g] = cg.get(g, 0) + c
+    n = len(obs)
+    si = sum(
+        math.floor(
+            float(c)
+            * (
+                math.log(float(c))
+                + math.log(float(n))
+                - math.log(float(ct[t]))
+                - math.log(float(cg[g]))
             )
-            for vid, q in pts
-            if vid != pid
+            * 1e9
+            + 0.5
         )
-        d2s = [(d, v) for d, v in d2s if d > 0]
-        if len(d2s) < 2:
-            continue
-        d1, dd2 = d2s[0][0], d2s[1][0]
-        lrs.append(
-            math.floor(math.log(float(dd2) / float(d1)) * 1e9 + 0.5)
+        for (t, g), c in cells.items()
+    )
+    sh_ct = sum(
+        math.floor(
+            float(m) * (math.log(float(n)) - math.log(float(m))) * 1e9
+            + 0.5
         )
-    assert out[0]["n_probes"] == len(lrs)
-    sl = sum(lrs)
-    if sl > 0:
-        want = _det_round(2.0 * float(len(lrs)) / (float(sl) / 1e9))
-        assert out[0]["intrinsic_dim"] == want
+        for m in ct.values()
+    )
+    sh_cg = sum(
+        math.floor(
+            float(m) * (math.log(float(n)) - math.log(float(m))) * 1e9
+            + 0.5
+        )
+        for m in cg.values()
+    )
+    mi = py_det_round(float(si) / 1e9 / float(n))
+    u_rows = (
+        py_det_round(float(si) / float(sh_ct)) if sh_ct > 0 else None
+    )
+    u_cols = (
+        py_det_round(float(si) / float(sh_cg)) if sh_cg > 0 else None
+    )
+    return n, mi, u_rows, u_cols
+
+
+type_part_obs = st.lists(
+    st.tuples(
+        st.sampled_from(["x", "y", "z"]),
+        st.integers(min_value=0, max_value=3),
+    ),
+    min_size=1,
+    max_size=30,
+)
+
+
+@given(obs=type_part_obs)
+@FUZZ
+def test_fuzz_theil_u(spark, obs):
+    from stream_processing_system_spark.plans.analytics import (
+        events_theil_u,
+    )
+
+    rows = [
+        (i, dt.datetime(2024, 1, 10, 6 * g, 15), 1, t, 1.0, "{}")
+        for i, (t, g) in enumerate(obs)
+    ]
+    with scratch("fuzz") as sf:
+        write_events(spark, rows, sf)
+        out = events_theil_u(spark, sf).collect()
+        n, mi, u_rows, u_cols = _theil_replay(obs)
+        assert out[0]["n_events"] == n
+        assert out[0]["mi_nats"] == mi
+        assert out[0]["u_type_given_daypart"] == u_rows
+        assert out[0]["u_daypart_given_type"] == u_cols
+
+
+# --- Ansari-Bradley (honest positional replay, no closed forms) --
+
+
+def _ab_replay(a, b):
+    na, nb = len(a), len(b)
+    n = na + nb
+    if na == 0 or nb == 0 or n <= 2:
+        return None
+    pooled = sorted(a + b)
+    sab = 0
+    k = 1
+    for v in sorted(set(pooled)):
+        t = pooled.count(v)
+        ss = sum(min(kk, n + 1 - kk) for kk in range(k, k + t))
+        ca = a.count(v)
+        if ca:
+            sab += math.floor(
+                float(ca) * float(ss) / float(t) * 1e6 + 0.5
+            )
+        k += t
+    ab = float(sab) / 1e6
+    if n % 2 == 0:
+        mu = float(na) * (float(n) + 2.0) / 4.0
+        var = (
+            float(na)
+            * float(nb)
+            * (float(n) + 2.0)
+            * (float(n) - 2.0)
+            / (48.0 * (float(n) - 1.0))
+        )
     else:
-        assert out[0]["intrinsic_dim"] is None
+        mu = (
+            float(na)
+            * (float(n) + 1.0)
+            * (float(n) + 1.0)
+            / (4.0 * float(n))
+        )
+        var = (
+            float(na)
+            * float(nb)
+            * (float(n) + 1.0)
+            * (3.0 + float(n) * float(n))
+            / (48.0 * float(n) * float(n))
+        )
+    return py_det_round(ab), py_det_round((ab - mu) / math.sqrt(var))
 
 
-def test_dedup_source_shift_invariants(spark, sf_dir):
-    """Structural invariants: keepers ≤ docs per source, shares each
-    sum to 1, and drift sums to ~0."""
-    from stream_processing_system_spark.plans.pipeline import (
-        dedup_source_shift,
+@given(a=cents, b=cents)
+@FUZZ
+def test_fuzz_ansari_bradley(spark, a, b):
+    from stream_processing_system_spark.plans.analytics import (
+        events_ansari_bradley,
     )
 
-    rows = dedup_source_shift(spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        assert 0 <= r["n_keepers"] <= r["n_docs"]
-    assert abs(sum(r["share_before"] for r in rows) - 1.0) < 1e-4
-    assert abs(sum(r["share_after"] for r in rows) - 1.0) < 1e-4
-    assert abs(sum(r["share_drift"] for r in rows)) < 1e-4
-
-
-def test_frame_entropy_bounds(spark, sf_dir):
-    """0 ≤ H ≤ ln(n_frames), with equality diagnostics: H = 0 iff
-    one distinct fingerprint; H = ln(n) iff all frames distinct."""
-    from stream_processing_system_spark.plans.pipeline import (
-        media_frame_entropy,
-    )
-
-    rows = media_frame_entropy(spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        h = r["frame_entropy_nats"]
-        assert -1e-9 <= h <= math.log(r["n_frames"]) + 1e-6
-        if r["n_distinct"] == 1:
-            assert h == 0.0
-        if r["n_distinct"] == r["n_frames"]:
-            assert abs(h - _det_round(math.log(r["n_frames"]))) < 2e-6
+    rows = [
+        (i, _FIRST, 1, "t", c / 100.0, "{}") for i, c in enumerate(a)
+    ] + [
+        (1000 + i, _SECOND, 1, "t", c / 100.0, "{}")
+        for i, c in enumerate(b)
+    ]
+    if not rows:
+        return
+    with scratch("fuzz") as sf:
+        write_events(spark, rows, sf)
+        out = events_ansari_bradley(spark, sf).collect()
+        want = _ab_replay(a, b)
+        if want is None:
+            assert out == []
+        else:
+            ab, z = want
+            assert out[0]["ab_stat"] == ab
+            assert out[0]["ab_z"] == z
+            assert (out[0]["n_first"], out[0]["n_second"]) == (
+                len(a),
+                len(b),
+            )

@@ -2,7 +2,14 @@
 
 from __future__ import annotations
 
+import math
+
+import pytest
+from hypothesis import given
+from hypothesis import strategies as st
+
 from stream_processing_system_spark.operators import text_analysis
+from tests.helpers import FUZZ, py_det_round
 
 
 def test_doc_stats_basic(spark):
@@ -217,3 +224,170 @@ def test_token_entropy_known_values(spark):
 
     h = -(0.75 * math.log2(0.75) + 0.25 * math.log2(0.25))
     assert abs(got[4]["entropy"] - h) < 2e-6
+
+
+# --- Flesch reading ease (honest re-count with Python re) --------
+
+
+flesch_texts = st.lists(
+    st.text(
+        alphabet="ab e.!? xyzoui",
+        min_size=1,
+        max_size=60,
+    ),
+    min_size=1,
+    max_size=6,
+)
+
+
+@pytest.mark.slow
+@given(docs=flesch_texts)
+@FUZZ
+def test_fuzz_flesch(spark, docs):
+    import re
+
+    from stream_processing_system_spark.operators.text_analysis import (
+        flesch_reading_ease,
+    )
+
+    df = spark.createDataFrame(
+        [("s", t) for t in docs], "source string, text string"
+    )
+    out = flesch_reading_ease(df).collect()
+    micros = []
+    for t in docs:
+        words = [w for w in t.split(" ") if w != ""]
+        if not words:
+            continue
+        snt = max(1, len(re.findall(r"[.!?]+", t)))
+        syl = sum(
+            max(1, len(re.findall("[aeiouy]+", w.lower())))
+            for w in words
+        )
+        score = (
+            206.835
+            - 1.015 * (float(len(words)) / float(snt))
+            - 84.6 * (float(syl) / float(len(words)))
+        )
+        micros.append(math.floor(score * 1e6 + 0.5))
+    if not micros:
+        assert out == []
+        return
+    n = len(micros)
+    assert out[0]["n_docs"] == n
+    assert out[0]["avg_flesch"] == py_det_round(
+        float(sum(micros)) / (float(n) * 1e6)
+    )
+    assert out[0]["plain_english_share"] == py_det_round(
+        float(sum(1 for m in micros if m >= 60_000_000)) / float(n)
+    )
+
+
+# --- Chao1 / Good-Turing (exact frequency-of-frequencies) --------
+
+
+vocab_texts = st.lists(
+    st.text(alphabet="ab c", min_size=0, max_size=30),
+    min_size=1,
+    max_size=6,
+)
+
+
+@pytest.mark.slow
+@given(docs=vocab_texts)
+@FUZZ
+def test_fuzz_vocab_richness(spark, docs):
+    from stream_processing_system_spark.operators.text_analysis import (
+        vocab_richness,
+    )
+
+    df = spark.createDataFrame(
+        [("s", t) for t in docs], "source string, text string"
+    )
+    out = vocab_richness(df).collect()
+    counts = {}
+    for t in docs:
+        for w in t.split(" "):
+            if w:
+                counts[w] = counts.get(w, 0) + 1
+    if not counts:
+        assert out == []
+        return
+    n = sum(counts.values())
+    vocab = len(counts)
+    f1 = sum(1 for c in counts.values() if c == 1)
+    f2 = sum(1 for c in counts.values() if c == 2)
+    row = out[0]
+    assert (
+        row["n_tokens"],
+        row["vocab"],
+        row["f1_hapax"],
+        row["f2_doubletons"],
+    ) == (n, vocab, f1, f2)
+    assert row["chao1_vocab"] == py_det_round(
+        float(vocab)
+        + float(f1) * (float(f1) - 1.0) / (2.0 * (float(f2) + 1.0))
+    )
+    assert row["gt_unseen_mass"] == py_det_round(float(f1) / float(n))
+
+
+# --- Per-source unigram KL (grid replay term-for-term) -----------
+
+
+src_docs = st.lists(
+    st.tuples(
+        st.sampled_from(["s1", "s2"]),
+        st.text(alphabet="ab c", min_size=0, max_size=30),
+    ),
+    min_size=1,
+    max_size=8,
+)
+
+
+@pytest.mark.slow
+@given(docs=src_docs)
+@FUZZ
+def test_fuzz_source_kl(spark, docs):
+    from stream_processing_system_spark.operators.text_analysis import (
+        source_unigram_kl,
+    )
+
+    df = spark.createDataFrame(
+        list(docs), "source string, text string"
+    )
+    out = {r["source"]: r for r in source_unigram_kl(df).collect()}
+    counts = {}
+    for s, t in docs:
+        for w in t.split(" "):
+            if w:
+                counts[(s, w)] = counts.get((s, w), 0) + 1
+    if not counts:
+        assert out == {}
+        return
+    ns = {}
+    ctok = {}
+    for (s, w), c in counts.items():
+        ns[s] = ns.get(s, 0) + c
+        ctok[w] = ctok.get(w, 0) + c
+    n = sum(ns.values())
+    for s in ns:
+        grid = sum(
+            math.floor(
+                float(c)
+                * (
+                    math.log(float(c))
+                    + math.log(float(n))
+                    - math.log(float(ns[s]))
+                    - math.log(float(ctok[w]))
+                )
+                * 1e9
+                + 0.5
+            )
+            for (ss, w), c in counts.items()
+            if ss == s
+        )
+        assert out[s]["n_tokens"] == ns[s]
+        assert out[s]["kl_vs_corpus"] == py_det_round(
+            float(grid) / 1e9 / float(ns[s])
+        )
+    assert set(out) == set(ns)

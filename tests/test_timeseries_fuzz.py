@@ -1,6 +1,6 @@
 """Differential fuzz for the time-series analytics: the Spark plans
 vs independent pure-Python implementations on randomized event
-frames (a third implementation besides the DuckDB oracle — catches
+frames and daily series (a third implementation besides the DuckDB oracle — catches
 shared misreadings of the spec)."""
 
 from __future__ import annotations
@@ -9,10 +9,13 @@ import pytest
 
 import datetime
 import math
+from collections import Counter
 
-from hypothesis import HealthCheck, example, given, settings
+from hypothesis import example, given
 from hypothesis import strategies as st
 from pyspark.sql import functions as F  # noqa: F401
+
+from tests.helpers import EVENTS_SCHEMA, FUZZ, daily_series, py_det_round
 
 
 #: slow tier (round 10, VERDICT r9 item 7): independent replay /
@@ -20,11 +23,7 @@ from pyspark.sql import functions as F  # noqa: F401
 #: driver's verify window fits; run with `pytest -m slow`.
 pytestmark = pytest.mark.slow
 
-SET = settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
+EPOCH = datetime.date(1970, 1, 1)
 
 #: (day_offset, value) per event; 1-2 types
 events_strategy = st.lists(
@@ -44,10 +43,7 @@ def _frame(spark, tmp_events):
         (i, base + datetime.timedelta(days=d, hours=i % 24), 1, t, v, "{}")
         for i, (d, v, t) in enumerate(tmp_events)
     ]
-    return spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
+    return spark.createDataFrame(rows, EVENTS_SCHEMA)
 
 
 def _daily(tmp_events):
@@ -70,7 +66,7 @@ def _write(spark, df, tmp_path):
 
 
 @given(evs=events_strategy)
-@SET
+@FUZZ
 def test_ewma_matches_python(spark, tmp_path_factory, evs):
     from stream_processing_system_spark.plans.analytics import events_ewma_daily
 
@@ -95,7 +91,7 @@ def test_ewma_matches_python(spark, tmp_path_factory, evs):
 
 
 @given(evs=events_strategy)
-@SET
+@FUZZ
 def test_cusum_matches_python(spark, tmp_path_factory, evs):
     from stream_processing_system_spark.plans.analytics import (
         events_cusum_changepoint,
@@ -128,7 +124,7 @@ def test_cusum_matches_python(spark, tmp_path_factory, evs):
 
 
 @given(evs=events_strategy)
-@SET
+@FUZZ
 def test_rolling_median_matches_python(spark, tmp_path_factory, evs):
     from stream_processing_system_spark.plans.analytics import (
         events_rolling_median,
@@ -296,7 +292,7 @@ nullable_events_strategy = st.lists(
         (5, None, "b"),
     ]
 )
-@SET
+@FUZZ
 def test_daily_centi_means_matches_integer_replay(spark, evs):
     """`_daily_centi_means`, the daily-mean builder shared by the sax,
     dtw, hurst, matrix-profile, pacf, bollinger and v-optimal plans,
@@ -321,7 +317,7 @@ def test_daily_centi_means_matches_integer_replay(spark, evs):
 
 
 @given(evs=events_strategy)
-@SET
+@FUZZ
 def test_acf_matches_python(spark, tmp_path_factory, evs):
     from stream_processing_system_spark.plans.analytics import events_acf
 
@@ -357,7 +353,7 @@ def test_acf_matches_python(spark, tmp_path_factory, evs):
 
 
 @given(evs=events_strategy)
-@SET
+@FUZZ
 def test_burstiness_matches_python(spark, tmp_path_factory, evs):
     from stream_processing_system_spark.plans.analytics import events_burstiness
 
@@ -388,7 +384,7 @@ def test_burstiness_matches_python(spark, tmp_path_factory, evs):
 
 
 @given(evs=events_strategy)
-@SET
+@FUZZ
 def test_seasonal_wape_matches_python(spark, tmp_path_factory, evs):
     from stream_processing_system_spark.plans.analytics import events_seasonal_wape
 
@@ -424,10 +420,7 @@ def _frame_jan(spark, tmp_events):
         (i, base + datetime.timedelta(days=d, hours=i % 24), 1, t, v, "{}")
         for i, (d, v, t) in enumerate(tmp_events)
     ]
-    return spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
+    return spark.createDataFrame(rows, EVENTS_SCHEMA)
 
 
 drift_events = st.lists(
@@ -442,7 +435,7 @@ drift_events = st.lists(
 
 
 @given(evs=drift_events)
-@SET
+@FUZZ
 def test_psi_matches_python(spark, tmp_path_factory, evs):
     from stream_processing_system_spark.plans.analytics import events_psi_drift
 
@@ -478,7 +471,7 @@ def test_psi_matches_python(spark, tmp_path_factory, evs):
 
 
 @given(evs=drift_events)
-@SET
+@FUZZ
 def test_jsd_matches_python(spark, tmp_path_factory, evs):
     from stream_processing_system_spark.plans.analytics import events_type_jsd
 
@@ -504,3 +497,264 @@ def test_jsd_matches_python(spark, tmp_path_factory, evs):
     want = math.floor(tsum / 1e9 * 1e6 + 0.5) / 1e6
     assert row["n_types"] == len(cells)
     assert abs(row["jsd_bits"] - want) < 1e-9
+
+
+# --- day-grain trend / rank / drift statistics ------------------
+
+
+def _mk_replay(series):
+    n = len(series)
+    s = 0
+    for i in range(n):
+        for j in range(i + 1, n):
+            d = series[j] - series[i]
+            s += (d > 0) - (d < 0)
+    ties = sum(t * (t - 1) * (2 * t + 5) for t in Counter(series).values())
+    var_s = (
+        float(n) * (float(n) - 1.0) * (2.0 * float(n) + 5.0) - float(ties)
+    ) / 18.0
+    if var_s > 0.0:
+        if s > 0:
+            z = (float(s) - 1.0) / math.sqrt(var_s)
+        elif s < 0:
+            z = (float(s) + 1.0) / math.sqrt(var_s)
+        else:
+            z = 0.0
+    else:
+        z = None
+    if z is not None and z > 1.96:
+        trend = "increasing"
+    elif z is not None and z < -1.96:
+        trend = "decreasing"
+    else:
+        trend = "no_trend"
+    return n, s, py_det_round(var_s), py_det_round(z), trend
+
+
+def _kw_replay(series):
+    days = [
+        datetime.date(2024, 1, 1) + datetime.timedelta(days=i)
+        for i in range(len(series))
+    ]
+    dows = [(d - EPOCH).days % 7 for d in days]
+    cnt = Counter(series)
+    dr = {}
+    for v in cnt:
+        cb = sum(t for u, t in cnt.items() if u < v)
+        dr[v] = 2 * cb + cnt[v] + 1
+    groups = {}
+    for dow, x in zip(dows, series):
+        ng, s2g = groups.get(dow, (0, 0))
+        groups[dow] = (ng + 1, s2g + dr[x])
+    tsum = sum(
+        math.floor(float(s2g * s2g) / (4.0 * float(ng)) * 1e6 + 0.5)
+        for ng, s2g in groups.values()
+    )
+    n, k = float(len(series)), float(len(groups))
+    ties = sum(t * t * t - t for t in cnt.values())
+    h = 12.0 / (n * (n + 1.0)) * (float(tsum) / 1e6) - 3.0 * (n + 1.0)
+    c = 1.0 - float(ties) / (n * n * n - n)
+    h_corr = h / c if c > 0.0 else None
+    eps2 = (h - k + 1.0) / (n - k) if n > k else None
+    return int(n), int(k), py_det_round(h), py_det_round(h_corr), py_det_round(eps2)
+
+
+def _ph_replay(series):
+    days = [
+        datetime.date(2024, 1, 1) + datetime.timedelta(days=i)
+        for i in range(len(series))
+    ]
+    s = t = m = 0
+    mn = None
+    ph = []
+    for x in series:
+        t += 1
+        s += x
+        m += math.floor((float(x) - float(s) / float(t)) * 1e6 + 0.5)
+        mn = m if mn is None else min(mn, m)
+        ph.append(m - mn)
+    n = float(len(series))
+    sx, sxx = float(sum(series)), float(sum(x * x for x in series))
+    mean = sx / n
+    var = max(sxx / n - mean * mean, 0.0)
+    lam = 5.0 * math.sqrt(var)
+    maxph = max(ph)
+    ph_max_day = str(days[ph.index(maxph)])
+    alarm_day = None
+    for d, p in zip(days, ph):
+        if float(p) / 1e6 > lam:
+            alarm_day = str(d)
+            break
+    return (
+        len(series),
+        math.floor(float(maxph) / 1e6 * 1e6 + 0.5) / 1e6,
+        ph_max_day,
+        alarm_day,
+        py_det_round(lam),
+    )
+
+
+def _ar2_replay(series):
+    from stream_processing_system_spark.plans.analytics import (  # noqa: F401
+        ar2_yule_walker_from_daily,
+    )
+
+    n = len(series)
+    s = sum(series)
+    nx = [n * x - s for x in series]
+    c0 = sum(v * v for v in nx)
+    c1 = sum(nx[i] * nx[i + 1] for i in range(n - 1))
+    c2 = sum(nx[i] * nx[i + 2] for i in range(n - 2))
+    if float(c0) > 0.0:
+        r1, r2 = float(c1) / float(c0), float(c2) / float(c0)
+    else:
+        r1 = r2 = None
+    phi1 = phi2 = None
+    if r1 is not None and 1.0 - r1 * r1 != 0.0:
+        phi1 = r1 * (1.0 - r2) / (1.0 - r1 * r1)
+        phi2 = (r2 - r1 * r1) / (1.0 - r1 * r1)
+    mean = float(s) / float(n)
+    fc = sig = None
+    if phi1 is not None:
+        fc = (
+            mean
+            + phi1 * (float(series[-1]) - mean)
+            + phi2 * (float(series[-2]) - mean)
+        )
+        sig = 1.0 - phi1 * r1 - phi2 * r2
+    return tuple(py_det_round(v) for v in (r1, r2, phi1, phi2, sig, fc))
+
+
+#: small integer series with deliberate tie mass; 3..16 days
+series_strategy = st.lists(
+    st.integers(min_value=-5, max_value=8), min_size=3, max_size=16
+)
+
+
+@given(series=series_strategy)
+@FUZZ
+def test_fuzz_mann_kendall(spark, series):
+    from stream_processing_system_spark.plans.analytics import (
+        mann_kendall_from_daily,
+    )
+
+    out = mann_kendall_from_daily(daily_series(spark, series)).collect()[0]
+    n, s, var_s, z, trend = _mk_replay(series)
+    assert (out["n_days"], out["s_stat"]) == (n, s)
+    assert out["var_s"] == var_s
+    assert out["z_score"] == z
+    assert out["trend"] == trend
+
+
+@given(series=series_strategy)
+@FUZZ
+def test_fuzz_kruskal_wallis(spark, series):
+    from stream_processing_system_spark.plans.analytics import (
+        kruskal_wallis_from_daily,
+    )
+
+    out = kruskal_wallis_from_daily(
+        daily_series(spark, series)
+    ).collect()[0]
+    n, k, h, h_corr, eps2 = _kw_replay(series)
+    assert (out["n_days"], out["n_groups"]) == (n, k)
+    assert out["h_stat"] == h
+    assert out["h_corrected"] == h_corr
+    assert out["epsilon_sq"] == eps2
+
+
+@given(series=series_strategy)
+@FUZZ
+def test_fuzz_page_hinkley(spark, series):
+    from stream_processing_system_spark.plans.analytics import (
+        page_hinkley_from_daily,
+    )
+
+    out = page_hinkley_from_daily(daily_series(spark, series)).collect()[0]
+    n, ph_max, ph_max_day, alarm_day, threshold = _ph_replay(series)
+    assert out["n_days"] == n
+    assert out["ph_max"] == ph_max
+    assert out["ph_max_day"] == ph_max_day
+    assert out["alarm_day"] == alarm_day
+    assert out["threshold"] == threshold
+
+
+@given(series=series_strategy)
+@FUZZ
+def test_fuzz_ar2(spark, series):
+    from stream_processing_system_spark.plans.analytics import (
+        ar2_yule_walker_from_daily,
+    )
+
+    out = ar2_yule_walker_from_daily(
+        daily_series(spark, series)
+    ).collect()[0]
+    r1, r2, phi1, phi2, sig, fc = _ar2_replay(series)
+    assert out["r1"] == r1
+    assert out["r2"] == r2
+    assert out["phi1"] == phi1
+    assert out["phi2"] == phi2
+    assert out["innov_ratio"] == sig
+    assert out["forecast_next"] == fc
+
+
+@given(series=series_strategy)
+@FUZZ
+def test_fuzz_dispersion(spark, series):
+    import math
+
+    from stream_processing_system_spark.plans.analytics import (
+        dispersion_index_from_daily,
+    )
+
+    counts = [abs(v) + 1 for v in series]  # daily counts are >= 1
+    daily = spark.createDataFrame(
+        [
+            ("a", datetime.date(2024, 1, 1) + datetime.timedelta(days=i), int(c))
+            for i, c in enumerate(counts)
+        ],
+        "event_type string, day date, c long",
+    )
+    out = dispersion_index_from_daily(daily).collect()[0]
+    n = float(len(counts))
+    sc, scc = float(sum(counts)), float(sum(c * c for c in counts))
+    mean = sc / n
+    s2 = (scc - sc * sc / n) / (n - 1.0)
+    disp = s2 / mean if mean > 0.0 else None
+    assert out["mean_daily"] == py_det_round(mean)
+    assert out["var_daily"] == py_det_round(s2)
+    assert out["dispersion"] == py_det_round(disp)
+    if disp is not None:
+        z = (disp - 1.0) * math.sqrt((n - 1.0) / 2.0)
+        assert out["z_score"] == py_det_round(z)
+
+
+@given(series=series_strategy)
+@FUZZ
+def test_fuzz_welch(spark, series):
+    import math
+
+    from stream_processing_system_spark.plans.analytics import (
+        welch_ttest_from_daily,
+    )
+
+    out = welch_ttest_from_daily(daily_series(spark, series)).collect()[0]
+    wk, wd = [], []
+    for i, v in enumerate(series):
+        (wk if (19723 + i) % 7 in (2, 3) else wd).append(v)
+    n1, n2 = len(wk), len(wd)
+    assert out["n_weekend"] == n1
+    assert out["n_weekday"] == n2
+    if n1 > 1 and n2 > 1:
+        s1, s2_ = float(sum(wk)), float(sum(wd))
+        q1, q2 = float(sum(v * v for v in wk)), float(
+            sum(v * v for v in wd)
+        )
+        v1 = (q1 - s1 * s1 / n1) / (n1 - 1.0)
+        v2 = (q2 - s2_ * s2_ / n2) / (n2 - 1.0)
+        se2 = v1 / n1 + v2 / n2
+        if se2 > 0.0:
+            t = (s1 / n1 - s2_ / n2) / math.sqrt(se2)
+            assert out["t_stat"] == py_det_round(t)
+        else:
+            assert out["t_stat"] is None
