@@ -31,10 +31,11 @@ def tokenize(col: Column | str, sep: str = " ", drop_empty: bool = True) -> Colu
     return toks
 
 
-def first_token(col: Column | str, sep: str = " ") -> Column:
-    """First token of a line (`bolt/bolt.go:224-229` `words[0]`)."""
+def first_token(col: Column | str) -> Column:
+    """First space-separated token of a line (`bolt/bolt.go:224-229`
+    `words[0]`)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.split(c, sep)[0]
+    return F.split(c, " ")[0]
 
 
 def is_noise_line(col: Column | str) -> Column:
@@ -45,13 +46,13 @@ def is_noise_line(col: Column | str) -> Column:
     return (F.length(tok) > 8) & F.substring(tok, 1, 4).isin("http", "2008")
 
 
-def lenient_int(col: Column | str, default: int = 0) -> Column:
+def lenient_int(col: Column | str) -> Column:
     """X5: lenient string→int. The reference ignores `strconv.Atoi`
     errors, so an unparseable value silently becomes 0 and flows on
     (`bolt/bolt.go:348-351`). `try_cast` + `coalesce` reproduces that
     exactly, without the per-row exception cost of a plain cast."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(c.try_cast("int"), F.lit(default))
+    return F.coalesce(c.try_cast("int"), F.lit(0))
 
 
 def md5_prefix_long(col: Column, salt: str = "") -> Column:
@@ -61,23 +62,6 @@ def md5_prefix_long(col: Column, salt: str = "") -> Column:
     signatures differentially testable against the SQL oracle."""
     salted = F.concat(F.lit(salt), col) if salt else col
     return F.conv(F.substring(F.md5(salted), 1, 8), 16, 10).cast("long")
-
-
-def encode_tuple_json(*cols: str) -> Column:
-    """X6 (encode side): the reference JSON-serializes every tuple for
-    the wire (`spout/spout.go:111-117`). Spark never needs that
-    internally (Tungsten rows), but for external I/O parity:
-    `to_json(struct(...))` emits the same flat JSON object."""
-    return F.to_json(F.struct(*[F.col(c) for c in cols]))
-
-
-def decode_tuple_json(col: Column | str) -> Column:
-    """X6 (decode side): `from_json` into map<string,string> — the
-    reference's `map[string]string` tuple (`bolt/bolt.go:220-221`),
-    parsed once per value in a codegen'd expression instead of on
-    every operator hop."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.from_json(c, "map<string,string>")
 
 
 def det_round(col: Column, digits: int = 6) -> Column:

@@ -1,17 +1,2 @@
-"""Operator library: relational core + training-data-pipeline ops."""
-
-from stream_processing_system_spark.operators.core import (
-    agg_collect_set_sorted,
-    agg_count,
-    agg_sum,
-    flatmap_tokens,
-    topk,
-)
-
-__all__ = [
-    "flatmap_tokens",
-    "agg_count",
-    "agg_sum",
-    "agg_collect_set_sorted",
-    "topk",
-]
+"""Operator library: the count-min sketch plus the training-data-pipeline
+ops (dedup, similarity, graph, curation, ...), one module per family."""

@@ -1,18 +1,12 @@
-"""Relational core operators (SURVEY.md §2.2, §2.4, §2.6).
+"""Count-min sketch (SURVEY.md §2.4 family).
 
-Thin, composable wrappers over DataFrame ops. Each one is a
-*declarative* plan fragment — Catalyst supplies the physical
-behaviors the reference hand-codes:
-
-- partial (map-side) aggregation before the shuffle
-  (reference: `bolt/bolt.go:544-564` hand-rolled combiner;
-  Spark: partial/final HashAggregateExec, automatic),
-- predicate pushdown / column pruning (reference: filters placed in
-  boltc before the network hop, `bolt/bolt.go:222-232`; Spark:
-  optimizer rules),
-- true top-k (reference: full sort + break at k,
-  `bolt/bolt.go:408-430`; Spark: TakeOrderedAndProject — per
-  partition heap of k, no full sort).
+The relational core Crane hand-codes — the combiner, the per-key
+counts and sets, the sorted top-k — is plain DataFrame calls in
+`plans/reference.py`: Catalyst plans partial/final HashAggregate
+(reference: `bolt/bolt.go:544-564` hand-rolled combiner) and
+TakeOrderedAndProject (reference: full sort + break at k,
+`bolt/bolt.go:408-430`) on its own. What Spark lacks as a built-in is
+a mergeable fixed-size frequency sketch, built here.
 """
 
 from __future__ import annotations
@@ -20,67 +14,39 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def flatmap_tokens(
-    df: DataFrame,
-    col: str = "line",
-    out: str = "word",
-    sep: str = " ",
-    drop_empty: bool = True,
-) -> DataFrame:
-    """A7: tokenize-then-flatten (`bolt/bolt.go:547-555` splits each
-    line and iterates tokens). `explode(split(...))` — generates rows
-    inside codegen, no Python."""
-    toks = F.split(F.col(col), sep)
-    if drop_empty:
-        toks = F.filter(toks, lambda t: t != "")
-    return df.select(F.explode(toks).alias(out))
+from stream_processing_system_spark.functions.scalar import md5_prefix_long
 
 
-def agg_count(df: DataFrame, keys: list[str], out: str = "cnt") -> DataFrame:
-    """A3/A4: COUNT(*) GROUP BY keys (`bolt/bolt.go:585-594,609-613`
-    are mutex-guarded `map[string]int` increments on one node; here
-    the shuffle hash-partitions by key so the final aggregate is
-    parallel and lock-free)."""
-    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias(out))
+def cms_bucket(key: Column, j: int, width: int) -> Column:
+    """Row `j`'s counter of a string key: md5 of `"{j}|" || key`,
+    first 8 hex digits, mod `width` (DuckDB's `md5` gives the same
+    hex, so the oracle rebuilds the same cells)."""
+    return F.pmod(md5_prefix_long(F.concat(F.lit(f"{j}|"), key)), F.lit(width))
 
 
-def agg_sum(df: DataFrame, keys: list[str], value: str, out: str = "total") -> DataFrame:
-    """A2: SUM(value) GROUP BY keys (`bolt/bolt.go:566-583`)."""
-    return df.groupBy(*keys).agg(F.sum(value).alias(out))
-
-
-def agg_collect_set_sorted(df: DataFrame, keys: list[str], value: str, out: str = "items") -> DataFrame:
-    """A5: COLLECT_SET(value) GROUP BY keys, sorted for determinism.
-
-    The reference appends to a per-key list after an O(n) membership
-    scan (`bolt/bolt.go:615-624`); `collect_set` is the hash-set
-    equivalent. `array_sort` pins the nondeterministic set order so
-    results are hash-comparable (FIXTURES.md §3). Scale note: per-key
-    set size must be bounded by the domain (here: routes per host);
-    collect_set of an unbounded value space would OOM the reference
-    too — it is the operator's contract, not an implementation limit.
-    """
-    return df.groupBy(*keys).agg(F.array_sort(F.collect_set(value)).alias(out))
-
-
-def round_robin(df: DataFrame, n: int) -> DataFrame:
-    """S4: the reference's spout→boltc round-robin partitioning
-    (`spout/spout.go:198-204` index rotation). `repartition(n)`
-    without columns IS round-robin distribution; normally leave
-    partitioning to Catalyst/AQE — this exists for explicit load
-    balancing before a skew-prone stage."""
-    return df.repartition(n)
-
-
-def topk(df: DataFrame, order: list[Column], k: int) -> DataFrame:
-    """O1+O2: ORDER BY ... LIMIT k (`bolt/bolt.go:398-440` full sort +
-    break at 50). Spark plans this as TakeOrderedAndProject: each
-    partition keeps a k-heap, the driver merges — O(n log k), no full
-    shuffle-sort even at 100 TB. Callers must include a deterministic
-    tie-break column (the reference's tie order is Go-map-random,
-    SURVEY.md §2.6)."""
-    return df.orderBy(*order).limit(k)
+def cms_cells(df: DataFrame, key_col: str, depth: int, width: int) -> DataFrame:
+    """The sketch's counters as `(j, b, n)` rows: each row of `df`
+    explodes to its `depth` cells, and the groupBy partial-aggregates
+    map-side to at most depth×width rows per task. Cell counts are
+    sums, so counters built from batches or micro-batches merge
+    cell-wise into the same sketch."""
+    key = F.col(key_col).cast("string")
+    return (
+        df.select(
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(j).alias("j"), cms_bucket(key, j, width).alias("b")
+                        )
+                        for j in range(depth)
+                    ]
+                )
+            ).alias("c")
+        )
+        .groupBy("c.j", "c.b")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
 
 
 def cms_heavy_hitters(
@@ -97,42 +63,15 @@ def cms_heavy_hitters(
     oracle-checkable member of the sketch family (approx_distinct's
     HLL is engine-internal and only property-testable).
 
-    Scale shape: the sketch build explodes each row to `depth` (row,
-    bucket) cells, but the groupBy partial-aggregates map-side to at
-    most depth×width (=1024 here) rows per task — the shuffle is
+    Scale shape: the sketch build (`cms_cells`) shuffles at most
+    depth×width (=1024 here) rows per task — the shuffle is
     CONSTANT-size no matter the input, the whole point of a sketch.
     The candidate side reuses the keys' distinct shuffle, probes the
     broadcast sketch `depth` times (array lookup, no join), and
     top-k's via TakeOrderedAndProject. At 100 TB the sketch would be
     built once per partition-batch and merged by cell-wise sum —
     the build here IS that merge expressed as one aggregation."""
-    from pyspark.sql import functions as F
-
-    from stream_processing_system_spark.functions.scalar import md5_prefix_long
-
-    key = F.col(key_col).cast("string")
-
-    def bucket(j):
-        return F.pmod(
-            md5_prefix_long(F.concat(F.lit(f"{j}|"), key)), F.lit(width)
-        )
-
-    cells = (
-        df.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"), bucket(j).alias("b")
-                        )
-                        for j in range(depth)
-                    ]
-                )
-            ).alias("c")
-        )
-        .groupBy("c.j", "c.b")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    cells = cms_cells(df, key_col, depth, width)
     # sketch as one broadcast row: depth arrays of width counters
     # (missing cells are 0 via a dense spine built from sequence())
     sketch = (
@@ -143,11 +82,14 @@ def cms_heavy_hitters(
     )
     # probe with the ORIGINAL key column (hash on its string form) so
     # the output keeps the key's type and ordering semantics
+    key = F.col(key_col).cast("string")
     probes = df.select(key_col).distinct().crossJoin(F.broadcast(sketch))
     est = F.least(
         *[
             F.coalesce(
-                F.element_at(F.element_at(F.col("mm"), F.lit(j)), bucket(j)),
+                F.element_at(
+                    F.element_at(F.col("mm"), F.lit(j)), cms_bucket(key, j, width)
+                ),
                 F.lit(0),
             )
             for j in range(depth)
@@ -158,22 +100,3 @@ def cms_heavy_hitters(
         .orderBy(F.col("est").desc(), F.col(key_col).asc())
         .limit(k)
     )
-
-
-def observed(df: DataFrame, name: str, metrics: dict[str, Column]):
-    """Attach single-pass data-quality counters to a plan via
-    `Dataset.observe` — the production habit of metering every scan
-    (null rates, malformed counts, row totals) WITHOUT a second job:
-    the accumulators ride the same stage as the real work, so at
-    100 TB the quality report is free instead of doubling the read.
-
-    Returns (df_with_observation, observation); read
-    `observation.get` AFTER an action has run the plan. The
-    reference has no metrics surface at all (its bolts count only
-    their output tuples); this is the engine-side replacement for
-    eyeballing sink files.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    return df.observe(obs, *[c.alias(n) for n, c in metrics.items()]), obs

@@ -674,6 +674,23 @@ def _verify_jaccard_pairs(
     )
 
 
+def _near_dup_components(
+    df: DataFrame, id_col: str, text_col: str,
+    num_hashes: int, bands: int, threshold: float, shingle_n: int,
+) -> DataFrame:
+    """The near-dup chain the transitive dedups share: MinHash
+    signatures → LSH candidate pairs → exact-Jaccard verify →
+    connected components over the verified pairs. Returns
+    (id_col, component) for every document; a document without a
+    verified near-dup is its own component."""
+    sigs = minhash_signatures(df, id_col, text_col, num_hashes=num_hashes)
+    cands = lsh_candidate_pairs(sigs, id_col, num_hashes=num_hashes, bands=bands)
+    verified = _verify_jaccard_pairs(
+        cands, df, id_col, text_col, threshold, shingle_n
+    )
+    return connected_component_labels(verified, df.select(id_col), id_col)
+
+
 def dedup_transitive(
     df: DataFrame,
     id_col: str,
@@ -688,12 +705,9 @@ def dedup_transitive(
     this collapses the whole chain to min(A,B,C) via connected
     components over the verified-pair graph. Returns kept ids
     (one per component)."""
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes=num_hashes)
-    cands = lsh_candidate_pairs(sigs, id_col, num_hashes=num_hashes, bands=bands)
-    verified = _verify_jaccard_pairs(
-        cands, df, id_col, text_col, threshold, shingle_n
+    comps = _near_dup_components(
+        df, id_col, text_col, num_hashes, bands, threshold, shingle_n
     )
-    comps = connected_component_labels(verified, df.select(id_col), id_col)
     return (
         comps.groupBy("component")
         .agg(F.min(id_col).alias(id_col))
@@ -921,12 +935,9 @@ def dedup_canonical(
     k rows each) to pick the argmax — partition-local, no global
     sort. Singleton docs are their own cluster and keep themselves.
     """
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes=num_hashes)
-    cands = lsh_candidate_pairs(sigs, id_col, num_hashes=num_hashes, bands=bands)
-    verified = _verify_jaccard_pairs(
-        cands, df, id_col, text_col, threshold, shingle_n
+    comps = _near_dup_components(
+        df, id_col, text_col, num_hashes, bands, threshold, shingle_n
     )
-    comps = connected_component_labels(verified, df.select(id_col), id_col)
     scored = comps.join(quality, id_col)
     w = Window.partitionBy("component").orderBy(
         F.col("quality").desc(), F.col(id_col).asc()
@@ -1181,15 +1192,8 @@ def dedup_family_histogram(
     constant-size aggregates on the component labels."""
     from stream_processing_system_spark.functions.scalar import det_round
 
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes=num_hashes)
-    cands = lsh_candidate_pairs(
-        sigs, id_col, num_hashes=num_hashes, bands=bands
-    )
-    verified = _verify_jaccard_pairs(
-        cands, df, id_col, text_col, threshold, shingle_n
-    )
-    comps = connected_component_labels(
-        verified, df.select(id_col), id_col
+    comps = _near_dup_components(
+        df, id_col, text_col, num_hashes, bands, threshold, shingle_n
     )
     sizes = comps.groupBy("component").agg(
         F.count(F.lit(1)).alias("fam_size")

@@ -817,17 +817,6 @@ def embedding_neardup_pairs(
     )
 
 
-def _l2_sq(a, b):
-    """Squared L2 distance between two array<double> columns, as a
-    sequential left-fold (same summation order as DuckDB's
-    list_distance, so cross-engine argmin agrees)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def pq_encode(
     df: DataFrame,
     books: list[list[list[float]]],
@@ -840,14 +829,15 @@ def pq_encode(
     """Argmin-L2 PQ sub-codes as ONE Arrow pass: (id[, extras], sub,
     [svec,] code) against the n_sub×n_codes codebook shipped in the
     task closure — replaces the posexplode ×n_sub + broadcast-join
-    ×n_codes fan-out + interpreted `_l2_sq` fold + min_by exchange
+    ×n_codes fan-out + interpreted squared-L2 fold + min_by exchange
     (guide §2.4/§4.2, the `assign_centroids` lane for the PQ family).
 
-    Bit-exact: each distance replicates `_l2_sq`'s sequential
-    left-fold IEEE order (d=(x−y); acc+=d·d per dimension, vectorized
-    over rows only), and np.argmin picks the FIRST minimum — exactly
-    min_by on (_d, cid). Subvector slices cast float→double, which is
-    exact."""
+    Bit-exact: each distance replicates the oracle's squared-L2 fold
+    (the `d2` expression of `__spark_entry__._pq_topk_oracle_sql`,
+    `(v.svec[i] - c.cvec[i])²` summed over i in index order): d=(x−y);
+    acc+=d·d per dimension, vectorized over rows only. np.argmin picks
+    the FIRST minimum, the oracle's `ORDER BY d2, cid` tie-break.
+    Subvector slices cast float→double, which is exact."""
     import numpy as np
     import pandas as pd
 

@@ -6,10 +6,12 @@ Both are expressed as compositions of existing DataFrame ops
 
 - `asof_join`: the union-sort formulation. Tag both sides, union,
   sort per key by (ts, side), carry the last right-side value forward
-  with last_value(ignorenulls) over an unbounded-preceding window,
-  keep left rows. ONE shuffle on the key — same cost shape as a
-  sort-merge join, no point-in-time loop. Matches DuckDB's native
-  ASOF JOIN semantics (latest right.ts <= left.ts, inclusive), which
+  with last_value(ignorenulls) over an unbounded-preceding window
+  (or, `forward=True`, the next one back with first_value over an
+  unbounded-following window), keep left rows. ONE shuffle on the
+  key — same cost shape as a sort-merge join, no point-in-time loop.
+  Matches DuckDB's native ASOF JOIN semantics (latest right.ts <=
+  left.ts, inclusive; forward: earliest right.ts >= left.ts), which
   is the differential oracle.
 - `interval_count_join`: count right-side events in [left.ts - w,
   left.ts) per key. A naive inequality join is a broadcast
@@ -22,7 +24,7 @@ Both are expressed as compositions of existing DataFrame ops
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -34,11 +36,25 @@ def asof_join(
     right_ts: str = "ts",
     right_cols: list[str] | None = None,
     prefix: str = "r_",
+    forward: bool = False,
+    tolerance_seconds: int | None = None,
 ) -> DataFrame:
     """For every left row, attach the most recent right row with
-    right.ts <= left.ts (same key). Inner semantics: left rows with
-    no prior right row are dropped. Output: all left columns +
-    prefix-renamed right value columns + `{prefix}ts`."""
+    right.ts <= left.ts (same key); with `forward=True`, the EARLIEST
+    right row with right.ts >= left.ts instead (e.g. "next fill after
+    the order", "next click after the purchase"). Inner semantics:
+    left rows with no such right row are dropped, and so are matches
+    more than `tolerance_seconds` away from the left row (like pandas
+    merge_asof's tolerance). Output: all left columns +
+    prefix-renamed right value columns + `{prefix}ts`.
+
+    Backward, right rows sort before left rows at equal ts and
+    last_value(ignorenulls) carries over [UNBOUNDED PRECEDING,
+    CURRENT ROW]; forward mirrors both: left rows sort first and
+    first_value(ignorenulls) looks over [CURRENT ROW, UNBOUNDED
+    FOLLOWING], so either bound stays inclusive. Oracle: DuckDB
+    `ASOF JOIN ... ON l.ts >= r.ts` (forward: `l.ts <= r.ts`, plus
+    an epoch-difference post-filter for the tolerance)."""
     right_cols = right_cols or []
     l = left.select(
         F.col(key).alias("_k"),
@@ -57,29 +73,36 @@ def asof_join(
         *[F.col(c).alias(f"_rv_{c}") for c in right_cols],
         F.col(right_ts).alias("_rts"),
         # value-deterministic tie-break: when several right rows share
-        # (key, ts), last() must carry the SAME one every run — order
+        # (key, ts), the carry must pick the SAME one every run — order
         # ties by a hash of the whole right row, not partition luck
         F.xxhash64(F.struct(*right.columns)).alias("_tie"),
     )
-    # right rows sort before left rows at equal ts → "<=" semantics;
-    # nulls_first on _tie keeps left rows after all equal-ts right rows
-    w = (
-        Window.partitionBy("_k")
-        .orderBy(F.col("_ts").asc(), F.col("_is_left").asc(), F.col("_tie").asc_nulls_last())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    # at equal ts the right rows sort before a left row backward and
+    # after it forward, so both "<=" and ">=" are inclusive
+    if forward:
+        side, tie = F.col("_is_left").desc(), F.col("_tie").asc_nulls_first()
+        frame, carry = (0, Window.unboundedFollowing), F.first
+    else:
+        side, tie = F.col("_is_left").asc(), F.col("_tie").asc_nulls_last()
+        frame, carry = (Window.unboundedPreceding, 0), F.last
+    w = Window.partitionBy("_k").orderBy(F.col("_ts").asc(), side, tie).rowsBetween(*frame)
     carried = r.unionByName(l).select(
         "_is_left",
         "_lrow",
-        F.last("_rts", ignorenulls=True).over(w).alias(f"{prefix}ts"),
+        carry("_rts", ignorenulls=True).over(w).alias(f"{prefix}ts"),
         *[
-            F.last(f"_rv_{c}", ignorenulls=True).over(w).alias(f"{prefix}{c}")
+            carry(f"_rv_{c}", ignorenulls=True).over(w).alias(f"{prefix}{c}")
             for c in right_cols
         ],
     )
     matched = carried.where(
         (F.col("_is_left") == 1) & F.col(f"{prefix}ts").isNotNull()
     )
+    if tolerance_seconds is not None:
+        lts = F.col(f"_lrow.{left_ts}").cast("long")
+        rts = F.col(f"{prefix}ts").cast("long")
+        gap = rts - lts if forward else lts - rts
+        matched = matched.where(gap <= F.lit(int(tolerance_seconds)))
     out_cols = [F.col(f"_lrow.{c}").alias(c) for c in left.columns]
     out_cols += [F.col(f"{prefix}ts")] + [F.col(f"{prefix}{c}") for c in right_cols]
     return matched.select(*out_cols)
@@ -126,87 +149,6 @@ def interval_count_join(
     )
     out_cols = [F.col(f"_lrow.{c}").alias(c) for c in left.columns] + [F.col(out)]
     return hits.select(*out_cols)
-
-
-def asof_join_forward(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_cols: list[str] | None = None,
-    prefix: str = "r_",
-    tolerance_seconds: int | None = None,
-) -> DataFrame:
-    """FORWARD as-of join: for every left row, the EARLIEST right row
-    with right.ts >= left.ts (same key) — the lookahead twin of
-    `asof_join` (e.g. "next fill after the order", "next click after
-    the purchase"). Same union-sort single-shuffle construction with
-    the window mirrored: first_value(ignorenulls) over
-    [CURRENT ROW, UNBOUNDED FOLLOWING], left rows sorted BEFORE
-    equal-ts right rows so ">=" stays inclusive. Optional
-    `tolerance_seconds` drops matches further than the horizon
-    (inner semantics, like pandas merge_asof's tolerance). Oracle:
-    DuckDB `ASOF JOIN ... ON l.ts <= r.ts` (+ an epoch-difference
-    post-filter for the tolerance)."""
-    right_cols = right_cols or []
-    l = left.select(
-        F.col(key).alias("_k"),
-        F.col(left_ts).alias("_ts"),
-        F.lit(1).alias("_is_left"),
-        F.struct(*left.columns).alias("_lrow"),
-        *[
-            F.lit(None).cast(right.schema[c].dataType).alias(f"_rv_{c}")
-            for c in right_cols
-        ],
-        F.lit(None).cast(right.schema[right_ts].dataType).alias("_rts"),
-        F.lit(None).cast("long").alias("_tie"),
-    )
-    r = right.select(
-        F.col(key).alias("_k"),
-        F.col(right_ts).alias("_ts"),
-        F.lit(0).alias("_is_left"),
-        F.lit(None).cast(l.schema["_lrow"].dataType).alias("_lrow"),
-        *[F.col(c).alias(f"_rv_{c}") for c in right_cols],
-        F.col(right_ts).alias("_rts"),
-        # deterministic tie among equal-(key, ts) right rows, as in
-        # the backward join
-        F.xxhash64(F.struct(*right.columns)).alias("_tie"),
-    )
-    # left rows sort before right rows at equal ts → ">=" inclusive;
-    # first() picks the earliest following right row
-    w = (
-        Window.partitionBy("_k")
-        .orderBy(
-            F.col("_ts").asc(),
-            F.col("_is_left").desc(),
-            F.col("_tie").asc_nulls_first(),
-        )
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
-    carried = r.unionByName(l).select(
-        "_is_left",
-        "_lrow",
-        F.first("_rts", ignorenulls=True).over(w).alias(f"{prefix}ts"),
-        *[
-            F.first(f"_rv_{c}", ignorenulls=True).over(w).alias(f"{prefix}{c}")
-            for c in right_cols
-        ],
-    )
-    matched = carried.where(
-        (F.col("_is_left") == 1) & F.col(f"{prefix}ts").isNotNull()
-    )
-    if tolerance_seconds is not None:
-        matched = matched.where(
-            F.col(f"{prefix}ts").cast("long")
-            - F.col(f"_lrow.{left_ts}").cast("long")
-            <= F.lit(int(tolerance_seconds))
-        )
-    out_cols = [F.col(f"_lrow.{c}").alias(c) for c in left.columns]
-    out_cols += [F.col(f"{prefix}ts")] + [
-        F.col(f"{prefix}{c}") for c in right_cols
-    ]
-    return matched.select(*out_cols)
 
 
 def interval_overlap_join(

@@ -801,7 +801,7 @@ def purchase_last_click_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "ts"
     )
     clicks = events.where(F.col("event_type") == "click").select("user_id", "ts")
-    joined = asof_join(purchases, clicks, key="user_id")
+    joined = asof_join(purchases, clicks, key="user_id", forward=False)
     return joined.select(
         "event_id",
         "user_id",
@@ -2942,21 +2942,19 @@ def events_downsample_ltob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def purchase_next_click_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FORWARD as-of join (operators/temporal.asof_join_forward): for
+    """FORWARD as-of join (operators/temporal.asof_join, forward=True): for
     each purchase, the next click by the same user within 2 hours —
     post-purchase engagement attribution. Oracle: DuckDB's native
     forward ASOF JOIN plus the tolerance filter."""
-    from stream_processing_system_spark.operators.temporal import (
-        asof_join_forward,
-    )
+    from stream_processing_system_spark.operators.temporal import asof_join
 
     events = load_table(spark, sf_dir, "events")
     purchases = events.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
     clicks = events.where(F.col("event_type") == "click").select("user_id", "ts")
-    joined = asof_join_forward(
-        purchases, clicks, key="user_id", tolerance_seconds=7200
+    joined = asof_join(
+        purchases, clicks, key="user_id", forward=True, tolerance_seconds=7200
     )
     return joined.select(
         "event_id",

@@ -17,12 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stream_processing_system_spark.functions import is_noise_line
-from stream_processing_system_spark.operators.core import (
-    agg_count,
-    flatmap_tokens,
-    topk,
-)
+from stream_processing_system_spark.functions import is_noise_line, tokenize
 from stream_processing_system_spark.sources.tables import load_table
 from stream_processing_system_spark.sources.text import parse_apache_log
 
@@ -42,9 +37,10 @@ def wordcount(lines: DataFrame, line_col: str = "line") -> DataFrame:
     HashAggregate before the shuffle — same network behavior
     (only (word, partial_count) pairs cross the wire), zero code.
     """
-    clean = lines.where(~is_noise_line(line_col))
-    words = flatmap_tokens(clean, col=line_col, out="word", sep=" ")
-    return agg_count(words, ["word"], out="cnt")
+    words = lines.where(~is_noise_line(line_col)).select(
+        F.explode(tokenize(line_col)).alias("word")
+    )
+    return words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
 
 
 def q1_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -64,9 +60,16 @@ def top_users(df: DataFrame, user_col: str, score_filter, k: int = 50) -> DataFr
     """filter → groupBy(user).count() → orderBy(cnt desc, user asc)
     → limit k. Tie-break on user is added for determinism (the
     reference's tie order is Go-map-random, `bolt/bolt.go:421-440`).
+    Spark plans the sort + limit as TakeOrderedAndProject: each
+    partition keeps a k-heap and the driver merges them, where the
+    reference fully sorts and breaks at k (`bolt/bolt.go:398-440`).
     """
-    counted = agg_count(df.where(score_filter), [user_col], out="posts")
-    return topk(counted, [F.col("posts").desc(), F.col(user_col).asc()], k)
+    counted = (
+        df.where(score_filter)
+        .groupBy(user_col)
+        .agg(F.count(F.lit(1)).alias("posts"))
+    )
+    return counted.orderBy(F.col("posts").desc(), F.col(user_col).asc()).limit(k)
 
 
 def q2_top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -90,8 +93,15 @@ def host_report(df: DataFrame, host_col: str, route_col) -> DataFrame:
 
     One grouped aggregation computing both facts in a single pass,
     like the reference's `NasaLogSecond` (`bolt/bolt.go:605-626`).
-    The route set is sorted and joined to a single string so results
-    are order-insensitively hashable (FIXTURES.md §3).
+    The reference appends to a per-key list after an O(n) membership
+    scan (`bolt/bolt.go:615-624`); `collect_set` is the hash-set
+    equivalent. The route set is sorted and joined to a single string
+    so results are order-insensitively hashable (FIXTURES.md §3).
+
+    Scale bound: the per-key set size is bounded by the domain (routes
+    per host). A collect_set of an unbounded value space would run out
+    of memory in the reference too; it is the operator's contract, not
+    an implementation limit.
     """
     return df.groupBy(host_col).agg(
         F.count(F.lit(1)).alias("hits"),

@@ -33,6 +33,7 @@ from pyspark.sql import Row, SparkSession
 from pyspark.sql import functions as F
 
 from stream_processing_system_spark.plans.topology import REGISTRY
+from stream_processing_system_spark.session import get_spark
 from stream_processing_system_spark.sources.versioned_store import VersionedStore
 
 #: Reference app → bundled dataset path (`appMap`, `client.go:22-25`).
@@ -230,14 +231,10 @@ def repl_session_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def main(store_root: str = "/tmp/crane_store", datasets: dict[str, str] | None = None) -> None:
-    """The stdin loop (`client.go:36-85`). Errors print and the loop
-    continues, matching the reference client's behavior."""
-    spark = (
-        SparkSession.builder.master("local[*]")
-        .appName("crane-repl")
-        .config("spark.sql.shuffle.partitions", "32")
-        .getOrCreate()
-    )
+    """The stdin loop (`client.go:36-85`) on the engine's session
+    (`get_spark`). Errors print and the loop continues, matching the
+    reference client's behavior."""
+    spark = get_spark(app_name="crane-repl")
     repl = CraneRepl(spark, store_root, datasets or {})
     print(f"crane repl — commands: JOIN LIST SELF put get get-versions "
           f"delete ls store {' '.join(sorted(REGISTRY))}")

@@ -483,47 +483,24 @@ def stream_heavy_hitters_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot). Cell-wise counts are mergeable, so micro-batched
     maintenance converges to the batch sketch exactly: same oracle as
     events_heavy_hitters."""
-    from stream_processing_system_spark.functions.scalar import md5_prefix_long
+    from stream_processing_system_spark.operators.core import cms_bucket, cms_cells
 
     depth, width, k = 4, 256, 20
-    events = load_table(spark, sf_dir, "events").select(
-        F.col("user_id"), F.col("user_id").cast("string").alias("_k")
-    )
-
-    def bucket(j, key):
-        return F.pmod(md5_prefix_long(F.concat(F.lit(f"{j}|"), key)), F.lit(width))
-
+    events = load_table(spark, sf_dir, "events").select("user_id")
     with _drain(spark, "hh", events) as d:
-        cells = (
-            d.stream.select(
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(j).alias("j"),
-                                bucket(j, F.col("_k")).alias("b"),
-                            )
-                            for j in range(depth)
-                        ]
-                    )
-                ).alias("c")
-            )
-            .groupBy("c.j", "c.b")
-            .agg(F.count(F.lit(1)).alias("n"))
+        cell_tbl = jobs._drain_to_table(
+            cms_cells(d.stream, "user_id", depth, width), d.name, d.ckpt
         )
-        cell_tbl = jobs._drain_to_table(cells, d.name, d.ckpt)
+    key = F.col("user_id").cast("string")
     probes = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id")
-        .distinct()
+        events.distinct()
         .select(
             "user_id",
             F.explode(
                 F.array(
                     *[
                         F.struct(
-                            F.lit(j).alias("j"),
-                            bucket(j, F.col("user_id").cast("string")).alias("b"),
+                            F.lit(j).alias("j"), cms_bucket(key, j, width).alias("b")
                         )
                         for j in range(depth)
                     ]

@@ -4,15 +4,16 @@ job lifecycle (SURVEY.md §3.1).
 In the reference, a "query" is an app name submitted over TCP
 (`client.go:72-80`); Nimbus turns it into a spout → N×boltc → boltl
 role assignment (`Nimbus.go:628-648`). Here a topology is a
-*declarative value*: source, ordered transforms ("bolts"), optional
-sink. `submit()` just composes the DataFrame chain and hands it to
+*declarative value*: a source and ordered transforms ("bolts").
+`submit()` just composes the DataFrame chain and hands it to
 Catalyst — plan analysis, operator placement, and parallelism are
 the optimizer/scheduler's job, which is the entire point of the
 Spark-first re-design (§3.1 Spark mapping).
 
-The three reference apps ship as prebuilt topologies; users add new
-ones by listing plain DataFrame→DataFrame callables (the boltc
-contract) — no framework classes to subclass.
+The three reference apps ship as prebuilt topologies whose bolts are
+the same plan functions the batch queries run (`plans/reference.py`);
+users add new ones by listing plain DataFrame→DataFrame callables
+(the boltc contract) — no framework classes to subclass.
 """
 
 from __future__ import annotations
@@ -24,8 +25,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stream_processing_system_spark.operators.core import agg_count, flatmap_tokens, topk
-from stream_processing_system_spark.functions import is_noise_line, lenient_int
+from stream_processing_system_spark.functions import lenient_int
+from stream_processing_system_spark.plans.reference import top_users, wordcount
 from stream_processing_system_spark.sources.text import (
     parse_apache_log,
     read_reddit_csv,
@@ -35,53 +36,41 @@ from stream_processing_system_spark.sources.text import (
 
 @dataclass
 class Topology:
-    """source → bolts… → (optional) sink, all declarative."""
+    """source → bolts…, all declarative."""
 
     name: str
     source: Callable[[SparkSession, str], DataFrame]
     bolts: list[Callable[[DataFrame], DataFrame]] = field(default_factory=list)
-    sink: Callable[[DataFrame], None] | None = None
 
     def submit(self, spark: SparkSession, input_path: str) -> DataFrame:
-        """The Nimbus-submit equivalent: build the plan and (if a
-        sink is attached) execute it. Returns the result DataFrame
-        either way so callers can inspect or re-sink it."""
+        """The Nimbus-submit equivalent: build the plan and return the
+        result DataFrame; the caller runs it or writes it to a sink."""
         df = self.source(spark, input_path)
         for bolt in self.bolts:
             df = bolt(df)
-        if self.sink is not None:
-            self.sink(df)
         return df
 
 
 def wordcount_topology() -> Topology:
     """`wordcount <n>` (§2.12 Q1) as a topology value."""
-    return Topology(
-        name="wordcount",
-        source=read_text_lines,
-        bolts=[
-            lambda df: df.where(~is_noise_line("line")),
-            lambda df: flatmap_tokens(df, col="line", out="word"),
-            lambda df: agg_count(df, ["word"], out="cnt"),
-        ],
-    )
+    return Topology(name="wordcount", source=read_text_lines, bolts=[wordcount])
 
 
-def reddit_topology(k: int = 50) -> Topology:
-    """`reddit <n>` (§2.12 Q2)."""
+def reddit_topology() -> Topology:
+    """`reddit <n>` (§2.12 Q2): the top 50 posters among rows whose
+    score parses leniently to >= 0."""
     return Topology(
         name="reddit",
         source=read_reddit_csv,
-        bolts=[
-            lambda df: df.where(lenient_int("score") >= 0),
-            lambda df: agg_count(df, ["username"], out="posts"),
-            lambda df: topk(df, [F.col("posts").desc(), F.col("username").asc()], k),
-        ],
+        bolts=[lambda df: top_users(df, "username", lenient_int("score") >= 0, 50)],
     )
 
 
 def nasalog_topology() -> Topology:
-    """`nasalog <n>` (§2.12 Q3)."""
+    """`nasalog <n>` (§2.12 Q3). Unlike `reference.nasalog_report`,
+    which joins each host's routes into the one string the oracle
+    hashes, this keeps them as the sorted `routes_arr` array that the
+    per-host block sink (K3, `sinks.write_host_report`) writes."""
     return Topology(
         name="nasalog",
         source=read_text_lines,

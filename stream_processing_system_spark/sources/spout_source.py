@@ -18,6 +18,8 @@ anyway. The unnumbered text path stays byte-range-splittable.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -32,6 +34,38 @@ from pyspark.sql.types import StructType
 class _FilePartition(InputPartition):
     def __init__(self, path: str) -> None:
         self.path = path
+
+
+def _required_path(options, fmt: str) -> str:
+    path = options.get("path")
+    if not path:
+        raise ValueError(f"{fmt} requires option 'path'")
+    return path
+
+
+def _spout_files(path: str) -> list[str]:
+    """The spout's input files in sorted order: `path` itself, or the
+    visible files of the directory `path` (names starting with `.` or
+    `_` are Spark and Hadoop bookkeeping)."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(
+        os.path.join(path, f) for f in os.listdir(path) if not f.startswith((".", "_"))
+    )
+
+
+def _numbered_lines(path: str):
+    """NextTuple() loop (`Apps/WordCountSpout.go:31-44`): one
+    `(linenumber, line)` tuple per line of the file, numbered from 1."""
+    with open(path, encoding="utf-8", errors="replace") as fh:
+        for i, raw in enumerate(fh, start=1):
+            yield (i, raw.rstrip("\n"))
+
+
+def _numbered_rows(files: list[str], start: dict, end: dict):
+    """The numbered lines of the files in the offset range [start, end)."""
+    chosen = files[start["n_files"] : end["n_files"]]
+    return iter([row for f in chosen for row in _numbered_lines(f)])
 
 
 class CraneSpoutDataSource(DataSource):
@@ -53,30 +87,13 @@ class CraneSpoutDataSource(DataSource):
 
 class CraneSpoutReader(DataSourceReader):
     def __init__(self, options) -> None:
-        path = options.get("path")
-        if not path:
-            raise ValueError("crane_spout requires option 'path'")
-        self.path = path
+        self.path = _required_path(options, "crane_spout")
 
     def partitions(self):
-        import os
-
-        if os.path.isdir(self.path):
-            files = sorted(
-                os.path.join(self.path, f)
-                for f in os.listdir(self.path)
-                if not f.startswith((".", "_"))
-            )
-        else:
-            files = [self.path]
-        return [_FilePartition(f) for f in files]
+        return [_FilePartition(f) for f in _spout_files(self.path)]
 
     def read(self, partition: _FilePartition):
-        # NextTuple() loop (`Apps/WordCountSpout.go:31-44`): one tuple
-        # per line with its 1-based number.
-        with open(partition.path, encoding="utf-8", errors="replace") as fh:
-            for i, raw in enumerate(fh, start=1):
-                yield (i, raw.rstrip("\n"))
+        return _numbered_lines(partition.path)
 
 
 def register(spark) -> None:
@@ -106,13 +123,9 @@ class CraneSinkDataSource(DataSource):
 
 class CraneSinkWriter(DataSourceWriter):
     def __init__(self, options) -> None:
-        path = options.get("path")
-        if not path:
-            raise ValueError("crane_sink requires option 'path'")
-        self.path = path
+        self.path = _required_path(options, "crane_sink")
 
     def write(self, iterator):
-        import os
         import uuid
 
         os.makedirs(self.path, exist_ok=True)
@@ -144,41 +157,20 @@ class CraneSpoutStreamReader(SimpleDataSourceStreamReader):
     """
 
     def __init__(self, options) -> None:
-        path = options.get("path")
-        if not path:
-            raise ValueError("crane_spout requires option 'path'")
-        self.path = path
-
-    def _files(self):
-        import os
-
-        if os.path.isdir(self.path):
-            return sorted(
-                os.path.join(self.path, f)
-                for f in os.listdir(self.path)
-                if not f.startswith((".", "_"))
-            )
-        return [self.path]
+        self.path = _required_path(options, "crane_spout")
 
     def initialOffset(self):
         return {"n_files": 0}
 
-    def _rows(self, files):
-        out = []
-        for fpath in files:
-            with open(fpath, encoding="utf-8", errors="replace") as fh:
-                for i, raw in enumerate(fh, start=1):
-                    out.append((i, raw.rstrip("\n")))
-        return out
-
     def read(self, start):
-        files = self._files()
-        done = start["n_files"]
-        return iter(self._rows(files[done:])), {"n_files": len(files)}
+        # one listing gives both the rows and the end offset, so a file
+        # that lands meanwhile is neither skipped nor counted unread
+        files = _spout_files(self.path)
+        end = {"n_files": len(files)}
+        return _numbered_rows(files, start, end), end
 
     def readBetweenOffsets(self, start, end):
-        files = self._files()
-        return iter(self._rows(files[start["n_files"] : end["n_files"]]))
+        return _numbered_rows(_spout_files(self.path), start, end)
 
     def commit(self, end) -> None:
         pass

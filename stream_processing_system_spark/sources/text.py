@@ -41,12 +41,7 @@ REDDIT_COLUMNS = {
 }
 
 
-def read_text_lines(
-    spark: SparkSession,
-    path: str,
-    streaming: bool = False,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def read_text_lines(spark: SparkSession, path: str, streaming: bool = False) -> DataFrame:
     """S1: one row per line, column `line: string`.
 
     Line numbers (the reference emits `linenumber`,
@@ -56,14 +51,8 @@ def read_text_lines(
     that does not scale. Numbered-line fidelity lives in
     `sources/spout_source.py`; unique row ids via
     `monotonically_increasing_id()` (unique, not dense).
-
-    `max_files_per_trigger` (streaming only) is the S5 throttle knob:
-    the reference rate-limits its reddit spout with a per-tuple sleep
-    (`spout/spout.go:294`); Spark throttles per micro-batch instead.
     """
     reader = spark.readStream if streaming else spark.read
-    if streaming and max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.text(path).withColumnRenamed("value", "line")
 
 

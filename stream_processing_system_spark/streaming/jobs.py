@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from stream_processing_system_spark.functions import lenient_int
 from stream_processing_system_spark.plans.reference import nasalog_report, wordcount
 from stream_processing_system_spark.sources.text import (
     read_reddit_csv,
@@ -74,7 +75,7 @@ def stream_reddit_top_users(
     split as the reference, where ranking happens once at END
     (`bolt/bolt.go:286-294` poll loop → `:398-419` rank+write)."""
     df = read_reddit_csv(spark, input_dir, streaming=True)
-    filtered = df.where(F.coalesce(F.col("score").try_cast("int"), F.lit(0)) >= 0)
+    filtered = df.where(lenient_int("score") >= 0)
     counts = filtered.groupBy("username").agg(F.count(F.lit(1)).alias("posts"))
     drained = _drain_to_table(counts, name, checkpoint_dir)
     return drained.orderBy(F.col("posts").desc(), F.col("username").asc()).limit(k)
@@ -348,7 +349,10 @@ def _epoch_rotated_sink(
     epoch-rotated parquet serving table and return the final version.
     `merge(batch_df, base)` builds the next serving version from the
     micro-batch and the last committed version (`base` is None before
-    the first commit).
+    the first commit). One file per trigger (`maxFilesPerTrigger`) is
+    the engine's S5 throttled emit: the reference rate-limits its
+    reddit spout with a per-tuple sleep (`spout/spout.go:294`); Spark
+    throttles per micro-batch instead.
 
     Exactly-once: serving versions are directory-rotated
     (`serving_v{epoch}`) and a marker file records the last committed

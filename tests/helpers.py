@@ -50,3 +50,18 @@ def write_events(spark, rows, sf_dir):
         os.path.join(sf_dir, "events.parquet")
     )
     return sf_dir
+
+
+def write_reddit_csv(d):
+    """Write a headerless 13-column reddit CSV (column 10 the score,
+    12 the username) into the directory `d` and return its path as a
+    string: u1 scores 5 and 3, u2 scores 1 and the unparseable "oops",
+    u3 scores -4."""
+    rows = []
+    for user, score in [("u1", "5"), ("u1", "3"), ("u2", "1"), ("u3", "-4"), ("u2", "oops")]:
+        cells = [f"c{i}" for i in range(13)]
+        cells[10], cells[12] = score, user
+        rows.append(",".join(cells))
+    d.mkdir()
+    (d / "a.csv").write_text("\n".join(rows) + "\n")
+    return str(d)

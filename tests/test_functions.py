@@ -4,21 +4,19 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from stream_processing_system_spark.functions.scalar import (
-    decode_tuple_json,
-    encode_tuple_json,
-    md5_prefix_long,
-    tokenize,
-)
-from stream_processing_system_spark.operators.core import round_robin
+from stream_processing_system_spark.functions.scalar import md5_prefix_long, tokenize
 
 
 def test_tuple_json_roundtrip(spark):
+    # X6: Crane's wire tuple is a flat JSON object (`spout/spout.go:111-117`)
+    # decoded into a map[string]string (`bolt/bolt.go:220-221`)
     df = spark.createDataFrame([("h1", "/a", "200")], ["host", "url", "status"])
-    encoded = df.select(encode_tuple_json("host", "url", "status").alias("j"))
+    encoded = df.select(F.to_json(F.struct("host", "url", "status")).alias("j"))
     j = encoded.collect()[0]["j"]
     assert j == '{"host":"h1","url":"/a","status":"200"}'
-    decoded = encoded.select(decode_tuple_json("j").alias("m")).collect()[0]["m"]
+    decoded = encoded.select(
+        F.from_json("j", "map<string,string>").alias("m")
+    ).collect()[0]["m"]
     assert decoded == {"host": "h1", "url": "/a", "status": "200"}
 
 
@@ -39,8 +37,9 @@ def test_tokenize_drops_empty_by_default(spark):
 
 
 def test_round_robin_partition_count(spark):
+    # S4: repartition(n) without columns is round-robin distribution
     df = spark.range(100)
-    assert round_robin(df, 7).rdd.getNumPartitions() == 7
+    assert df.repartition(7).rdd.getNumPartitions() == 7
 
 def test_cms_estimate_never_undercounts(spark, sf_dir):
     """Count-min property: estimate >= exact count for every key, and
@@ -61,21 +60,19 @@ def test_cms_estimate_never_undercounts(spark, sf_dir):
 
 
 def test_observed_scan_metrics_single_pass(spark):
+    # Dataset.observe meters a scan in the same job as the real work
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
-
-    from stream_processing_system_spark.operators.core import observed
 
     df = spark.createDataFrame(
         [(1, "a"), (2, None), (3, "c"), (4, None)], ["id", "v"]
     )
-    metered, obs = observed(
-        df,
-        "scan_quality",
-        {
-            "n_rows": F.count(F.lit(1)),
-            "n_null_v": F.count(F.lit(1)) - F.count("v"),
-            "max_id": F.max("id"),
-        },
+    obs = Observation("scan_quality")
+    metered = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_rows"),
+        (F.count(F.lit(1)) - F.count("v")).alias("n_null_v"),
+        F.max("id").alias("max_id"),
     )
     out = metered.where(F.col("v").isNotNull()).count()  # action drives the plan
     assert out == 2

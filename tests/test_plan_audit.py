@@ -9,7 +9,8 @@ BroadcastNestedLoopJoin is allowed: the repo's crossJoins are
 broadcasts of 1-row/constant-size computed frames (bitmaps, totals,
 anchors), which plan as BNLJ. Arrow-vectorized Python
 (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas) is allowed:
-that is the sanctioned extension surface (operators/udf_surface.py).
+that is the sanctioned extension surface (pandas_udf, mapInPandas,
+applyInPandas; README's §2.11 row).
 """
 
 from __future__ import annotations

@@ -102,3 +102,29 @@ def test_get_of_wide_job_dataset_streams_all_partitions(repl, tmp_path):
     rows = {tuple(ln.split("\t")) for ln in dst.read_text().splitlines()}
     assert len(rows) == 1000
     assert ("7", "14") in rows
+
+
+def test_main_runs_on_the_engine_session(spark, monkeypatch, tmp_path, capsys):
+    # main() takes its session from get_spark (UTC time zone, RocksDB
+    # state store, heap floor), not from a builder of its own.
+    import stream_processing_system_spark.plans.repl as repl_module
+
+    calls = []
+
+    def spy(**kwargs):
+        calls.append(kwargs)
+        return spark
+
+    commands = iter(["LIST"])
+
+    def fake_input(prompt=""):
+        try:
+            return next(commands)
+        except StopIteration:
+            raise EOFError from None
+
+    monkeypatch.setattr(repl_module, "get_spark", spy)
+    monkeypatch.setattr("builtins.input", fake_input)
+    repl_module.main(store_root=str(tmp_path / "store"))
+    assert calls == [{"app_name": "crane-repl"}]
+    assert "members: driver@" in capsys.readouterr().out

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from stream_processing_system_spark.plans.reference import wordcount
 from stream_processing_system_spark.sources.text import read_text_lines
 from stream_processing_system_spark.streaming import jobs
+from tests.helpers import write_reddit_csv
 from tests.test_reference_queries import NASA_LINES
 
 WC_LINES = [
@@ -53,17 +54,9 @@ def test_stream_nasalog_equals_batch(spark, tmp_path):
 
 
 def test_stream_reddit_top_users(spark, tmp_path):
-    # headerless 13-col CSV; cols 10=score, 12=username
-    rows = []
-    for user, score in [("u1", "5"), ("u1", "3"), ("u2", "1"), ("u3", "-4"), ("u2", "oops")]:
-        cells = [f"c{i}" for i in range(13)]
-        cells[10], cells[12] = score, user
-        rows.append(",".join(cells))
-    d = tmp_path / "reddit_in"
-    d.mkdir()
-    (d / "a.csv").write_text("\n".join(rows) + "\n")
+    d = write_reddit_csv(tmp_path / "reddit_in")
     got = jobs.stream_reddit_top_users(
-        spark, str(d), str(tmp_path / "ckpt_reddit"), k=2, name="reddit_stream_t"
+        spark, d, str(tmp_path / "ckpt_reddit"), k=2, name="reddit_stream_t"
     )
     # u3 dropped (score<0); unparseable 'oops'→0 kept (lenient Atoi)
     assert [(r["username"], r["posts"]) for r in got.collect()] == [("u1", 2), ("u2", 2)]

@@ -119,10 +119,6 @@ def test_asof_forward_known_answers(spark):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from stream_processing_system_spark.operators.temporal import (
-        asof_join_forward,
-    )
-
     l = spark.createDataFrame(
         pd.DataFrame({"k": [1, 1, 1, 2], "ts": [10, 20, 100, 5]})
     ).select("k", F.col("ts").cast("timestamp").alias("ts"))
@@ -130,7 +126,7 @@ def test_asof_forward_known_answers(spark):
         pd.DataFrame({"k": [1, 1, 2], "ts": [10, 25, 1], "v": [7, 8, 9]})
     ).select("k", F.col("ts").cast("timestamp").alias("ts"), "v")
 
-    out = asof_join_forward(l, r, key="k", right_cols=["v"])
+    out = asof_join(l, r, key="k", right_cols=["v"], forward=True)
     got = {
         (row["k"], row["ts"].timestamp()): (row["r_ts"].timestamp(), row["r_v"])
         for row in out.collect()
@@ -142,7 +138,9 @@ def test_asof_forward_known_answers(spark):
     # BEFORE the left row -> dropped
     assert (1, 100.0) not in got and (2, 5.0) not in got
 
-    tol = asof_join_forward(l, r, key="k", right_cols=["v"], tolerance_seconds=3)
+    tol = asof_join(
+        l, r, key="k", right_cols=["v"], forward=True, tolerance_seconds=3
+    )
     got_tol = {(row["k"], row["ts"].timestamp()) for row in tol.collect()}
     assert got_tol == {(1, 10.0)}  # 20->25 is 5s away, beyond the horizon
 

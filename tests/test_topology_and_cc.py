@@ -36,6 +36,24 @@ def test_topology_nasalog_submit(spark, tmp_path):
     assert rows == {"burger.letters.com": 1, "pm13.j51.com": 3}
 
 
+def test_topology_reddit_submit(spark, tmp_path):
+    from stream_processing_system_spark.streaming import jobs
+    from tests.helpers import write_reddit_csv
+
+    d = write_reddit_csv(tmp_path / "reddit_in")
+    got = [
+        (r["username"], r["posts"])
+        for r in topology.submit(spark, "reddit", d).collect()
+    ]
+    # u2's unparseable "oops" scores 0 and is kept; u3's -4 is dropped;
+    # u1 and u2 tie at 2 posts and rank by username
+    assert got == [("u1", 2), ("u2", 2)]
+    streamed = jobs.stream_reddit_top_users(
+        spark, d, str(tmp_path / "ckpt"), name="reddit_topology_t"
+    )
+    assert got == [(r["username"], r["posts"]) for r in streamed.collect()]
+
+
 def test_topology_unknown_app(spark):
     with pytest.raises(KeyError, match="unknown app"):
         topology.submit(spark, "nope", "/tmp/x")

@@ -1,4 +1,5 @@
-"""Tests for the extension surface (§2.11 wrappers) and the
+"""Tests for the extension surface (§2.11: the Arrow-batched Spark
+calls that stand in for Crane's spout and bolt contracts) and the
 multimodal plumbing (schema, Arrow batch shape, 1:N expansion)."""
 
 from __future__ import annotations
@@ -6,18 +7,23 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
-from stream_processing_system_spark.operators import multimodal, udf_surface
+from stream_processing_system_spark.operators import multimodal
 from stream_processing_system_spark.sources.tables import load_table
 
 
 def test_spout_from_iterator(spark):
     tuples = [{"word": "a", "n": "1"}, {"word": "b", "n": "2"}]
-    df = udf_surface.spout_from_iterator(spark, iter(tuples), "word string, n string")
+    df = spark.createDataFrame(
+        (tuple(d.values()) for d in tuples), schema="word string, n string"
+    )
     assert {tuple(r) for r in df.collect()} == {("a", "1"), ("b", "2")}
 
 
 def test_scalar_bolt_pandas_udf(spark):
-    upper = udf_surface.scalar_bolt(lambda s: s.str.upper())
+    @F.pandas_udf("string")
+    def upper(s: pd.Series) -> pd.Series:
+        return s.str.upper()
+
     df = spark.createDataFrame([("abc",), ("xy",)], ["t"])
     assert {r[0] for r in df.select(upper("t")).collect()} == {"ABC", "XY"}
 
@@ -25,11 +31,12 @@ def test_scalar_bolt_pandas_udf(spark):
 def test_flatmap_bolt_one_to_n(spark):
     df = spark.createDataFrame([("a b",), ("c",)], ["line"])
 
-    def explode_words(batch: pd.DataFrame):
-        words = [w for line in batch["line"] for w in line.split()]
-        yield pd.DataFrame({"word": words})
+    def explode_words(batches):
+        for batch in batches:
+            words = [w for line in batch["line"] for w in line.split()]
+            yield pd.DataFrame({"word": words})
 
-    out = udf_surface.flatmap_bolt(df, explode_words, "word string")
+    out = df.mapInPandas(explode_words, schema="word string")
     assert sorted(r["word"] for r in out.collect()) == ["a", "b", "c"]
 
 
@@ -39,7 +46,7 @@ def test_stateful_bolt_per_group(spark):
     def spread(pdf: pd.DataFrame) -> pd.DataFrame:
         return pd.DataFrame({"k": [pdf["k"].iloc[0]], "spread": [pdf["v"].max() - pdf["v"].min()]})
 
-    out = udf_surface.stateful_bolt(df, ["k"], spread, "k string, spread double")
+    out = df.groupBy("k").applyInPandas(spread, schema="k string, spread double")
     assert {(r["k"], r["spread"]) for r in out.collect()} == {("k1", 2.0), ("k2", 0.0)}
 
 

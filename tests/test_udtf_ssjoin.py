@@ -4,14 +4,17 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pandas as pd
 from pyspark.sql import functions as F
 
-from stream_processing_system_spark.operators import udf_surface
 from stream_processing_system_spark.streaming import jobs
 
 
 def test_grouped_agg_bolt_udaf(spark):
-    spread = udf_surface.grouped_agg_bolt(lambda s: float(s.max() - s.min()))
+    @F.pandas_udf("double")
+    def spread(s: pd.Series) -> float:
+        return float(s.max() - s.min())
+
     df = spark.createDataFrame([("k", 1.0), ("k", 4.0), ("j", 2.0)], ["k", "v"])
     got = {r["k"]: r["sp"] for r in df.groupBy("k").agg(spread("v").alias("sp")).collect()}
     assert got == {"k": 3.0, "j": 0.0}
@@ -24,7 +27,7 @@ def test_table_bolt_udtf(spark):
                 if w:
                     yield (w,)
 
-    split_udtf = udf_surface.table_bolt(Split, "word: string")
+    split_udtf = F.udtf(Split, returnType="word: string")
     out = split_udtf(F.lit("a b a"))
     assert sorted(r["word"] for r in out.collect()) == ["a", "a", "b"]
 

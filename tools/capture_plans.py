@@ -1,11 +1,10 @@
 """Capture `.explain("formatted")` for the named queries into
-plans/$SPARK_GRAFT_PLANS_DIR (default r10)/<query>_<tag>.txt — the
-before/after plan evidence the optimization rounds commit (the judge
-checks plan claims against these files). Streaming twins execute at
-build time and have no single batch plan; they are skipped with a
-marker file.
+<out_dir>/<query>_<tag>.txt — the before/after plan evidence of a
+change (the committed `plans/r10/` set is one such capture). Streaming
+twins execute at build time and have no single batch plan; they are
+skipped with a marker file.
 
-Run: python tools/capture_plans.py <tag> <query> [<query> ...]
+Run: python tools/capture_plans.py <out_dir> <tag> <query> [<query> ...]
 """
 
 from __future__ import annotations
@@ -19,22 +18,18 @@ import __spark_entry__ as contract
 from stream_processing_system_spark.session import get_spark
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "plans",
-    os.environ.get("SPARK_GRAFT_PLANS_DIR", "r10"),
-)
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
-    os.makedirs(OUT, exist_ok=True)
+    if len(sys.argv) < 4:
+        raise SystemExit(__doc__.split("Run: ")[1])
+    out, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    os.makedirs(out, exist_ok=True)
     spark = get_spark(app_name="capture-plans", cpus=os.cpu_count() or 4)
     spark.sparkContext.setLogLevel("ERROR")
     qs = contract.queries()
     for name in names:
-        path = os.path.join(OUT, f"{name}_{tag}.txt")
+        path = os.path.join(out, f"{name}_{tag}.txt")
         try:
             df = qs[name](spark, SF)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
